@@ -7,7 +7,9 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL-facing registration of graft's native expressions, so `spark.sql`
-  * users get the same codegen'd kernels as the Column API:
+  * users get the same codegen'd kernels as the Column API, plus the
+  * planner strategy for graft's own physical operators (the fused exact
+  * k-NN kernel, [[graft.operators.KnnStrategy]]):
   *
   *   spark.sql("SELECT vector_l2(a, b), vector_cosine(a, b) FROM t")
   *   spark.sql("SELECT topk_by_distance(d, id, 10) FROM t GROUP BY q")
@@ -42,6 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => graft.operators.KnnStrategy)
     register(ext, "vector_l2", 2,
       "euclidean distance between two float/double arrays") {
       args => VectorDistance(args(0), args(1), VectorMetric.L2)

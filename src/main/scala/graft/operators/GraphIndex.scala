@@ -690,23 +690,13 @@ object GraphIndex {
       // leave most cores idle, so running the configs concurrently
       // backfills the scheduler without changing any measured count
       // (hits are deterministic counts, not wall-clock)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(TuneGrid.size)
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val futs = TuneGrid.map { case (rounds, mult) =>
-          scala.concurrent.Future {
-            val b = beamWidth(k) * mult
-            val hits = graphTopkAt(spark, dir, k, metric, rounds, b)
-              .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-              .count()
-            (rounds, b, hits * 1000L / (k * nq))
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+      Overlap.all(TuneGrid.map { case (rounds, mult) => () =>
+        val b = beamWidth(k) * mult
+        val hits = graphTopkAt(spark, dir, k, metric, rounds, b)
+          .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
+          .count()
+        (rounds, b, hits * 1000L / (k * nq))
+      })
     })
 
   /** Materialize one metric's tune grid (Bench line items — the

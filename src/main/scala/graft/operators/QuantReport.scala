@@ -145,13 +145,9 @@ object QuantReport {
       .map { case (t, p) => candOf(t, p) }
       .reduce(_.unionAll(_))
       .localCheckpoint() // one compressed pass per tier; 4 refines ride it
-    val exact = corpus.crossJoin(broadcast(queries))
-      .filter(col("id") =!= col("query_id"))
-      .groupBy(col("query_id"))
-      .agg(VectorFunctions.topKByDistance(
-        VectorFunctions.l2Distance(col("vec"), col("qvec")), col("id"), k).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("nn"))
-      .select(col("query_id"), col("nn.id").as("neighbor_id"), lit(1L).as("hit"))
+    val exact = Knn.knn(queries, corpus.withColumnRenamed("id", "neighbor_id"), k,
+        VectorMetric.L2, excludeSelf = true)
+      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
       .localCheckpoint()
 
     Refines.map { r =>

@@ -3,7 +3,7 @@ import java.nio.file.{Files, Paths}
 
 /** Batch plan capture for the optimization-round deliverables: write
   * `explain("formatted")` for each named query to <outDir>/<key>_<suffix>.txt
-  * in ONE session (ExplainProbe pays a JVM+session spin-up per key).
+  * in ONE session (one JVM and session spin-up for the whole key set).
   *
   *   runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <key1,key2,...|all>
   */
