@@ -6,8 +6,8 @@ package graft
   * per corpus unless `invalidate()` happened to run (the round-14
   * verdict's hygiene finding). Every creator registers its tree root
   * here; one JVM shutdown hook deletes whatever is still registered,
-  * and an explicit invalidate deregisters after its own delete so the
-  * hook never double-deletes.
+  * and an explicit invalidate deletes through [[delete]], which
+  * deregisters so the hook never double-deletes.
   *
   * Retention contract: a registered tree lives until corpus
   * invalidation or JVM exit, whichever comes first — and must not be
@@ -33,8 +33,13 @@ object TempTrees {
     ()
   }
 
-  /** Deregister after an explicit delete (invalidate paths). */
-  def deregister(root: String): Unit = {
+  /** Delete a registered tree now (invalidate paths): its serving
+    * state goes first, then the files, then the shutdown-sweep entry,
+    * so the hook never double-deletes.
+    */
+  def delete(root: String): Unit = {
+    operators.ServingState.drop(root)
+    scala.util.Try(streaming.Streams.deleteTree(java.nio.file.Paths.get(root)))
     registered.remove(root)
     ()
   }

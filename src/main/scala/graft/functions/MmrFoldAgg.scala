@@ -82,19 +82,33 @@ case class MmrFold(
 
   override def createAggregationBuffer(): MmrFoldBuffer = new MmrFoldBuffer
 
+  /** NaN sims are refused here, at the one place every row enters the
+    * fold: `worse` and `math.max` are a total order only on NaN-free
+    * doubles, so a NaN would let the fold silently diverge from the
+    * distributed rounds and the oracle. The engine's cosine never
+    * yields one (a zero-norm vector is at distance 1.0, sim 0.0).
+    */
   override def update(buf: MmrFoldBuffer, input: InternalRow): MmrFoldBuffer = {
     val c = cand.eval(input)
     if (c != null) {
       val sq = simq.eval(input)
-      if (sq != null) buf.addCand(c.asInstanceOf[Long], sq.asInstanceOf[Double])
+      if (sq != null) buf.addCand(c.asInstanceOf[Long], finite(sq, "simq", c))
       else {
         val b = pairB.eval(input); val s = simab.eval(input)
         if (b != null && s != null)
           buf.addPair(c.asInstanceOf[Long], b.asInstanceOf[Long],
-            s.asInstanceOf[Double])
+            finite(s, "simab", c))
       }
     }
     buf
+  }
+
+  private def finite(v: Any, name: String, c: Any): Double = {
+    val d = v.asInstanceOf[Double]
+    if (d.isNaN)
+      throw new IllegalArgumentException(
+        s"mmr_fold: NaN $name for candidate $c; the fold needs NaN-free similarities")
+    d
   }
 
   override def merge(buf: MmrFoldBuffer, other: MmrFoldBuffer): MmrFoldBuffer = {

@@ -5,6 +5,7 @@ import graft.functions.{VectorFunctions, VectorMetric}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Graph-based ANN SERVING + lifecycle — the production index family
   * (HNSW / NSG / DiskANN lineage) over the E37c NN-Descent kNN graph:
@@ -169,15 +170,10 @@ object GraphIndex {
     symMemo.keys.filter(_._1 == dir)
       .foreach(k => symMemo.remove(k).foreach(_.unpersist()))
     tuneMemo.keys.filter(_._1 == dir).foreach(tuneMemo.remove)
-    tunedTreeMemo.remove(dir).foreach { tree =>
-      // the tree lives under the JVM temp dir (tunedGraphTree) — drop
-      // the whole directory (closed-stream walk) so the next call
-      // rebuilds over fresh data, and deregister from the shutdown
-      // sweep so the hook never double-deletes
-      val root = java.nio.file.Paths.get(tree).getParent
-      graft.streaming.Streams.deleteTree(root)
-      graft.TempTrees.deregister(root.toString)
-    }
+    // the tree lives under the JVM temp dir (tunedGraphTree) — drop
+    // the whole directory so the next call rebuilds over fresh data
+    tunedTreeMemo.remove(dir).foreach(tree =>
+      graft.TempTrees.delete(java.nio.file.Paths.get(tree).getParent.toString))
   }
 
   /** Phase 2 of the two-phase build over arbitrary frames (shared by
@@ -1351,9 +1347,7 @@ object GraphIndex {
         .repartition(col("vbucket"))
         .write.mode("overwrite").partitionBy("vbucket")
         .parquet(s"$outPath/_vectors"),
-      () => centroids.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
-        .toDF("cid", "cvec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$outPath/_centroids"),
+      () => IndexLifecycle.writeCentroids(spark, outPath, centroids),
       () => Seq((k, GraphBuckets, metric)).toDF("k", "buckets", "metric")
         .coalesce(1).write.mode("overwrite").parquet(s"$outPath/_meta"))
   }
@@ -1363,21 +1357,20 @@ object GraphIndex {
     * metric column and read as cosine (what they were built as).
     */
   private[graft] def readMeta(spark: SparkSession, indexPath: String): (Int, Int) = {
-    val df = spark.read.parquet(s"$indexPath/_meta")
-    val row = df.head()
-    val k = row.getInt(df.schema.fieldIndex("k"))
-    val metric =
-      if (df.schema.fieldNames.contains("metric"))
-        row.getInt(df.schema.fieldIndex("metric"))
-      else DefaultMetric
-    (k, metric)
+    val row = spark.read.schema("k INT, buckets INT, metric INT")
+      .parquet(s"$indexPath/_meta").head()
+    (row.getInt(0), if (row.isNullAt(2)) DefaultMetric else row.getInt(2))
   }
 
   private[graft] def readEdges(spark: SparkSession, indexPath: String): DataFrame =
     spark.read.parquet(indexPath).select(col("src"), col("dst"), col("dist"))
 
-  private[graft] def readVectors(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(s"$indexPath/_vectors")
+  /** The `_vectors` table; `schema` (the serving state's recorded one)
+    * skips the inference job.
+    */
+  private[graft] def readVectors(spark: SparkSession, indexPath: String,
+                                 schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$indexPath/_vectors")
       .select(col("id"), col("vec"), col("cluster_id"))
 
   /** A half-applied mutation leaves this staging marker; serving and
@@ -1393,10 +1386,13 @@ object GraphIndex {
 
   /** Beam search over LOADED tree frames for an arbitrary (id, vec)
     * query batch — the search step append links through, shared with
-    * the public serving face below. No self-exclusion: callers with
-    * in-corpus query ids get the id itself at rank 1 (distance 0).
+    * the public serving face below. `sym` is the tree's symmetrized
+    * adjacency, PINNED by the caller (round-17, the beamTopk note):
+    * every beam round otherwise re-reads the persisted edge buckets
+    * AND re-pays the union + dedup shuffle. No self-exclusion: callers
+    * with in-corpus query ids get the id itself at rank 1 (distance 0).
     */
-  private def beamSearchLoaded(stored: DataFrame, edges: DataFrame,
+  private def beamSearchLoaded(stored: DataFrame, sym: DataFrame,
                                cents: Array[Array[Float]],
                                queries: DataFrame, k: Int,
                                broadcastProbes: Boolean = false,
@@ -1412,32 +1408,28 @@ object GraphIndex {
         stored.select(col("cluster_id"), col("id").as("neighbor_id"), col("vec")),
         probes, b, metric, broadcastProbes = broadcastProbes)
       .select(col("query_id"), col("neighbor_id").as("cand"))
-    // pin the symmetrized expansion once (round-17, the beamTopk note):
-    // every beam round otherwise re-reads the persisted edge buckets
-    // AND re-pays the union + dedup shuffle
-    val sym = symmetrize(edges).localCheckpoint(true)
-    val out = beamRounds(entry, sym,
+    beamRounds(entry, sym,
       stored.select(col("id"), col("vec").as("cv")), k, b,
       qvecsOpt = Some(queries.select(col("id").as("query_id"), col("vec").as("qv"))),
       metric = metric, sorted = sorted)
-    sym.unpersist() // `out` is checkpointed; the expansion pin can go
-    out
   }
 
   /** Serve a PERSISTED graph tree for an out-of-corpus (id, vec) query
     * batch: coarse entry (`_centroids` + the stored assignment) + the
     * symmetrized beam. The disk twin of [[graphTopk]]'s search step.
+    * The tree opens once per session ([[ServingState]]): its metric,
+    * centroids, `_vectors` schema and pinned symmetrized adjacency are
+    * reused until a mutation or a changed state record, so a warm call
+    * runs only the entry and beam jobs.
     */
   def queryGraphBatch(spark: SparkSession, indexPath: String,
                       queries: DataFrame, k: Int): DataFrame = {
     checkNoHalfApplied(spark, indexPath)
     // the tree's OWN metric — a query can never run under a different
     // metric than the one the graph was descended with
-    val (_, metric) = readMeta(spark, indexPath)
-    beamSearchLoaded(readVectors(spark, indexPath),
-      readEdges(spark, indexPath),
-      IndexLifecycle.loadCentroids(spark, indexPath), queries, k,
-      metric = metric)
+    val st = ServingState.graph(spark, indexPath)
+    beamSearchLoaded(readVectors(spark, indexPath, Some(st.vectorSchema)),
+      st.adjacency, st.centroids, queries, k, metric = st.metric)
   }
 
   /** A26h: `graph_stats` — the A14/A23 stats face for the graph
@@ -1538,7 +1530,8 @@ object GraphIndex {
     * fresh lifecycle state.
     */
   def build(spark: SparkSession, dir: String, indexPath: String,
-            k: Int = 5, metric: Int = DefaultMetric): IndexStatus = {
+            k: Int = 5, metric: Int = DefaultMetric): IndexStatus =
+      ServingState.writing(indexPath) {
     val prev = IndexLifecycle.status(spark, indexPath)
     val graph = refinedGraph(spark, dir, k, metric)
     val (assign, cents) = Ivf.indexFor(spark, dir)
@@ -1571,7 +1564,8 @@ object GraphIndex {
     */
   def append(newVecs: DataFrame, indexPath: String,
              streamBatchId: Option[Long] = None,
-             streamId: Option[String] = None): IndexStatus = {
+             streamId: Option[String] = None): IndexStatus =
+      ServingState.writing(indexPath) {
     val spark = newVecs.sparkSession
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "append requires a built graph (build first)")
@@ -1590,9 +1584,10 @@ object GraphIndex {
     val edges = readEdges(spark, indexPath)
     val cents = IndexLifecycle.loadCentroids(spark, indexPath)
     val queries = nv.select(col("id").as("query_id"), col("vec").as("qv"))
+    val sym = symmetrize(edges).localCheckpoint(true)
     // forward edges: the new vector's top-k among EXISTING nodes (the
     // shared beam core; coarse entry + symmetrized expansion)
-    val forward = beamSearchLoaded(stored, edges, cents, nv, k,
+    val forward = beamSearchLoaded(stored, sym, cents, nv, k,
         broadcastProbes = true, metric = metric,
         // the linker re-joins and re-aggregates this frame — the global
         // (query_id, rank) sort would be a dead exchange per trigger
@@ -1602,6 +1597,7 @@ object GraphIndex {
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"),
         Ivf.distCol(metric, col("qv"), col("cv")).as("dist"))
       .localCheckpoint(true)
+    sym.unpersist() // `forward` is checkpointed; the expansion pin can go
     // reverse edges cap touched nodes at R (their old edges compete)
     val reverse = forward.select(col("dst").as("src"), col("src").as("dst"),
       col("dist"))
@@ -1694,7 +1690,8 @@ object GraphIndex {
     * repair candidates are O(d · deg²) pair rows — batch-sized, never
     * corpus-sized; rewrites touch O(affected buckets).
     */
-  def delete(deleteIds: DataFrame, indexPath: String): IndexStatus = {
+  def delete(deleteIds: DataFrame, indexPath: String): IndexStatus =
+      ServingState.writing(indexPath) {
     val spark = deleteIds.sparkSession
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "delete requires a built graph (build first)")
@@ -1800,7 +1797,8 @@ object GraphIndex {
     * makes the buckets whole. State is never touched. Returns the
     * number of vbuckets rewritten; pinned in GraphSpec.
     */
-  def compact(spark: SparkSession, indexPath: String, maxFiles: Int = 4): Int = {
+  def compact(spark: SparkSession, indexPath: String, maxFiles: Int = 4): Int =
+      ServingState.writing(indexPath) {
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "compact requires a built graph (build first)")
     checkNoHalfApplied(spark, indexPath)
@@ -1894,7 +1892,8 @@ object GraphIndex {
     * against the current contents — appended rows can never silently
     * vanish with the replaced tree.
     */
-  def rebuild(spark: SparkSession, indexPath: String): IndexStatus = {
+  def rebuild(spark: SparkSession, indexPath: String): IndexStatus =
+      ServingState.writing(indexPath) {
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "rebuild requires a built graph")
     // recovery: RECONCILE a crashed mutation's staging dir. append

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index lifecycle state for a persisted IVF index, mirroring the
@@ -216,7 +216,7 @@ object IndexLifecycle {
     */
   def build(vecs: DataFrame, indexPath: String,
             corpusDir: Option[String] = None,
-            kOpt: Option[Int] = None): IndexStatus = {
+            kOpt: Option[Int] = None): IndexStatus = ServingState.writing(indexPath) {
     val spark = vecs.sparkSession
     // every per-corpus session memo must drop on a data change — a new
     // memoized operator family MUST be added here (the full set:
@@ -233,11 +233,7 @@ object IndexLifecycle {
     val v = vecs.cache()
     val n = v.count()
     val dim = if (n == 0) 0 else v.select(size(col("vec"))).head().getInt(0)
-    val centroids = Ivf.writeIndexFrom(v, indexPath, kOpt)
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
-      .toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/_centroids")
+    writeCentroids(spark, indexPath, Ivf.writeIndexFrom(v, indexPath, kOpt))
     val next = IndexStatus("ivf", isBuilt = true, isDirty = false, size = n,
       embeddingDim = dim, builtAt = System.currentTimeMillis(),
       version = prev.version + 1, dirtyCount = 0L, totalVectors = n)
@@ -262,10 +258,10 @@ object IndexLifecycle {
     val v = newVecs.cache()
     val n = v.count()
     val next = s.copy(isDirty = true, dirtyCount = s.dirtyCount + n, size = s.size + n)
-    val cents = loadCentroids(spark, indexPath)
-    // through the persisted hierarchy when the build was two-level
-    landAppend(spark, indexPath,
-      Ivf.assignToQ(v, cents, Ivf.loadHierarchy(spark, indexPath, cents)), next)
+    // the frozen quantizer from the serving state (through the
+    // persisted hierarchy when the build was two-level)
+    val st = ServingState.ivf(spark, indexPath)
+    landAppend(spark, indexPath, Ivf.assignToQ(v, st.centroids, st.hierarchy), next)
     v.unpersist()
     next
   }
@@ -535,7 +531,8 @@ object IndexLifecycle {
     */
   private[operators] def swapRebuilt(spark: SparkSession, indexPath: String,
                                      tmp: Path, entry: IndexStatus,
-                                     beforeSwap: () => Unit = () => ()): Unit = {
+                                     beforeSwap: () => Unit = () => ()): Unit =
+      ServingState.writing(indexPath) {
     val f = fs(spark, indexPath)
     beforeSwap()
     // abort-before-swap: an append/delete that landed AFTER the
@@ -689,15 +686,28 @@ object IndexLifecycle {
     * otherwise silently answer queries minus an entire inverted list.
     */
   def checkNoHalfAppliedMutation(spark: SparkSession, indexPath: String): Unit = {
+    liveLists(spark, indexPath)
+    ()
+  }
+
+  /** [[checkNoHalfAppliedMutation]]'s root listing, returned: the
+    * `cluster_id` of every list directory present (empty when the
+    * index does not exist). Serve paths read their probed lists from
+    * it instead of paying Spark's own listing of every list.
+    */
+  private[operators] def liveLists(spark: SparkSession, indexPath: String): Set[Int] = {
     val f = fs(spark, indexPath)
     val p = new Path(indexPath)
-    if (f.exists(p)) {
-      val leftover = f.listStatus(p)
-        .map(_.getPath.getName)
+    if (!f.exists(p)) Set.empty
+    else {
+      val names = f.listStatus(p).map(_.getPath.getName)
+      val leftover = names
         .filter(n => n.startsWith("_old_cluster_id=") || n == "_append_tmp")
       require(leftover.isEmpty,
         s"index at $indexPath has a half-applied mutation (${leftover.mkString(", ")}); " +
           "a crash interrupted a partition swap or append landing — rebuild the index")
+      names.filter(_.startsWith("cluster_id="))
+        .map(_.stripPrefix("cluster_id=").toInt).toSet
     }
   }
 
@@ -705,18 +715,39 @@ object IndexLifecycle {
     * building session).
     */
   def loadCentroids(spark: SparkSession, indexPath: String): Array[Array[Float]] =
-    spark.read.parquet(s"$indexPath/_centroids")
-      .orderBy("cid").collect()
+    readSidecar(spark, s"$indexPath/_centroids", "cid INT, cvec ARRAY<FLOAT>")
+      .sortBy(_.getInt(0))
       .map(_.getSeq[Float](1).toArray)
 
-  /** Query a lifecycle-managed index with partition-pruned probes
-    * (refusing an index left inconsistent by a crashed mutation).
+  /** Persist an index's coarse centroids as its `_centroids` sidecar
+    * (every tree kind: IVF, IVF-PQ, graph), the table [[loadCentroids]]
+    * reads.
+    */
+  private[operators] def writeCentroids(spark: SparkSession, indexPath: String,
+                                        centroids: Array[Array[Float]]): Unit = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
+      .toDF("cid", "cvec")
+      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/_centroids")
+  }
+
+  /** All rows of a small sidecar table, read under the schema its
+    * writer gives it: one collect job, where schema inference plus a
+    * distributed sort cost four. Sidecar keys are unique, so callers
+    * sort on the driver into the same order. Columns a table predates
+    * read as null.
+    */
+  private[operators] def readSidecar(spark: SparkSession, path: String,
+                                     ddl: String): Array[Row] =
+    spark.read.schema(ddl).parquet(path).collect()
+
+  /** Query a lifecycle-managed index: [[Ivf.queryIndex]], which
+    * refuses an index left inconsistent by a crashed mutation and
+    * serves from the tree's open-once state.
     */
   def query(spark: SparkSession, indexPath: String, queryVec: Array[Float],
-            k: Int, nprobe: Int): DataFrame = {
-    checkNoHalfAppliedMutation(spark, indexPath)
-    Ivf.queryIndex(spark, indexPath, loadCentroids(spark, indexPath), queryVec, k, nprobe)
-  }
+            k: Int, nprobe: Int): DataFrame =
+    Ivf.queryIndex(spark, indexPath, queryVec, k, nprobe)
 
   /** Cluster count for the driver's lifecycle/delete state-machine
     * queries. The transitions are k-independent (pure arithmetic on the

@@ -600,12 +600,22 @@ object Ivf {
   }
 
   /** Persist the inverted lists as parquet PARTITIONED BY cluster_id —
-    * the at-scale index layout (SURVEY §5): a probe filtering on
-    * cluster_id prunes to nprobe directories at planning time, so query
-    * cost is O(probed lists), not O(corpus). IvfSpec asserts the pruned
-    * scan really reads only the probed partitions.
+    * the at-scale index layout (SURVEY §5) — beside the `_centroids`
+    * (and hierarchy) sidecars, so the tree serves on its own.
+    *
+    * Serving ([[queryIndex]], IndexLifecycle.query, Pq.queryIvfPq) is
+    * O(probed lists) for the whole call, not only the scan: a tree
+    * opens once per session ([[ServingState]]: centroids, model and the
+    * list schema, validated per call against the state record and the
+    * sidecar files), and a call reads the nprobe probed `cluster_id=`
+    * directories as explicit paths taken from the root listing its
+    * half-applied-mutation check already makes — no per-call schema
+    * inference, no listing of every list; the scan keeps its
+    * `cluster_id` partition filter. IvfStorageSpec asserts the scan
+    * reads only the probed partitions.
     */
-  def writeIndex(spark: SparkSession, dir: String, outPath: String): Array[Array[Float]] = {
+  def writeIndex(spark: SparkSession, dir: String, outPath: String): Array[Array[Float]] =
+      ServingState.writing(outPath) {
     val n = Tables.embeddingsCount(spark, dir)
     val (assign, centroids) = buildIndex(spark, dir, defaultK(n))
     val vecs = Tables.embeddings(spark, dir)
@@ -618,6 +628,7 @@ object Ivf {
       .repartition(col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id").parquet(outPath)
     writeHierarchy(spark, outPath, hierarchyFor(dir, defaultK(n), VectorMetric.L2))
+    IndexLifecycle.writeCentroids(spark, outPath, centroids)
     centroids
   }
 
@@ -644,22 +655,25 @@ object Ivf {
   }
 
   /** Query a persisted index: top-k within the nprobe nearest lists,
-    * reading ONLY those lists (partition pruning on cluster_id).
+    * reading ONLY those lists. Refuses an index left inconsistent by a
+    * crashed mutation, then serves from the tree's open-once state
+    * ([[ServingState]]): the probed lists are read as explicit
+    * directories from the refusal check's root listing, under the
+    * recorded schema, so a warm call runs only its data job.
     */
-  def queryIndex(spark: SparkSession, indexPath: String,
-                 centroids: Array[Array[Float]], queryVec: Array[Float],
+  def queryIndex(spark: SparkSession, indexPath: String, queryVec: Array[Float],
                  k: Int, nprobe: Int): DataFrame = {
-    val probed = centroids.zipWithIndex
+    val live = IndexLifecycle.liveLists(spark, indexPath)
+    val st = ServingState.ivf(spark, indexPath)
+    val probed = st.centroids.zipWithIndex
       .map { case (c, j) =>
         var acc = 0.0; var i = 0
         while (i < c.length) { val d = c(i) - queryVec(i); acc += d * d; i += 1 }
         (math.sqrt(acc), j)
       }
       .sortBy(identity).take(nprobe).map(_._2)
-    val lists = spark.read.parquet(indexPath)
-      .filter(col("cluster_id").isInCollection(probed.toSeq))
     val dist = VectorFunctions.l2Distance(col("vec"), typedlit(queryVec.toSeq))
-    lists
+    ServingState.probedLists(spark, indexPath, st.listSchema, live, probed.toSeq)
       .select(col("neighbor_id"), dist.as("dist"))
       .orderBy(col("dist"), col("neighbor_id"))
       .limit(k)
@@ -917,10 +931,10 @@ object Ivf {
     val p = new org.apache.hadoop.fs.Path(s"$indexPath/_l1")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else {
-      val l1 = spark.read.parquet(s"$indexPath/_l1")
-        .orderBy("cell").collect().map(_.getSeq[Float](1).toArray)
-      val cellOf = spark.read.parquet(s"$indexPath/_cellof")
-        .orderBy("cid").collect().map(_.getInt(1))
+      val l1 = IndexLifecycle.readSidecar(spark, s"$indexPath/_l1", "cell INT, cvec ARRAY<FLOAT>")
+        .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
+      val cellOf = IndexLifecycle.readSidecar(spark, s"$indexPath/_cellof", "cid INT, cell INT")
+        .sortBy(_.getInt(0)).map(_.getInt(1))
       require(cellOf.length == centroids.length,
         s"hierarchy/_centroids mismatch: ${cellOf.length} vs ${centroids.length}")
       Some(TwoLevelQuantizer(l1, centroids, cellOf))

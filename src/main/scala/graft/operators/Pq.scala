@@ -104,11 +104,8 @@ object Pq {
   private val tunedTrees =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private def deleteTunedTree(p: String): Unit = scala.util.Try {
-    val root = java.nio.file.Paths.get(p).getParent
-    graft.streaming.Streams.deleteTree(root)
-    graft.TempTrees.deregister(root.toString)
-  }
+  private def deleteTunedTree(p: String): Unit =
+    graft.TempTrees.delete(java.nio.file.Paths.get(p).getParent.toString)
 
   private[graft] def tunedTree(spark: SparkSession, dir: String): String =
     tunedTrees.get(dir).getOrElse(synchronized {
@@ -855,8 +852,9 @@ object Pq {
                          selector: DataFrame,
                          refineWith: Option[DataFrame] = None,
                          refine: Int = 4): DataFrame = {
-    IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-    val pm = loadPersistedModel(spark, indexPath)
+    val live = IndexLifecycle.liveLists(spark, indexPath)
+    val st = ServingState.pq(spark, indexPath)
+    val pm = st.model
     require(queryVec.length == pm.dim,
       s"query dim ${queryVec.length} != index dim ${pm.dim}")
     val sel = selector.select(col("id"))
@@ -881,8 +879,8 @@ object Pq {
             pm.centroids.length)
         val probed = probeIds(pm.centroids, metricQuery(queryVec, pm.metric),
           npEff, pm.metric)
-        val pruned = spark.read.parquet(indexPath)
-          .filter(col("cluster_id").isInCollection(probed))
+        val pruned =
+          ServingState.probedLists(spark, indexPath, st.listSchema, live, probed)
         if (pm.residual) {
           val tables = residualAdcTables(pm.centroids, probed, pm.codebooks,
             pm.rotation, metricQuery(queryVec, pm.metric), pm.metric)
@@ -1158,7 +1156,7 @@ object Pq {
     */
   def writeIvfPq(spark: SparkSession, dir: String, outPath: String,
                  m: Int = SubspaceCount, metric: Int = VectorMetric.L2,
-                 opq: Boolean = false): Unit = {
+                 opq: Boolean = false): Unit = ServingState.writing(outPath) {
     val (assign, centroids) = Ivf.indexFor(spark, dir, metric)
     val model = trainResidual(spark, dir, m, metric, opq)
     // overwrite on the base path drops EVERYTHING from a previous build,
@@ -1179,17 +1177,7 @@ object Pq {
         Ivf.sessionHierarchy(spark, dir, metric)),
       () => writeProfile(corpus(spark, dir, metric), assign, centroids,
         outPath))
-    invalidatePersistedModels(outPath)
   }
-
-  /** Drop memoized models for `outPath`: a bare overwrite rewrites
-    * every sidecar WITHOUT touching the lifecycle state file, so the
-    * (path, version, builtAt) memo key does not change and subsequent
-    * queries would serve the prior build's centroids/codebooks against
-    * the new code lists.
-    */
-  private def invalidatePersistedModels(outPath: String): Unit =
-    persistedModels.filterInPlace { case ((p, _, _), _) => p != outPath }
 
   /** Per-cluster residual profile (cluster_id, n, rsum) of a
     * metric-transformed (id, vec) frame against given centroids —
@@ -1250,9 +1238,7 @@ object Pq {
                             centroids: Array[Array[Float]], model: Model,
                             m: Int, metric: Int): Unit = {
     import spark.implicits._
-    centroids.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
-      .toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outPath/_centroids")
+    IndexLifecycle.writeCentroids(spark, outPath, centroids)
     (for {
       mi <- model.codebooks.indices
       c <- model.codebooks(mi).indices
@@ -1279,7 +1265,8 @@ object Pq {
   private[graft] def writeIvfPqFrom(vecsRaw: DataFrame, outPath: String,
                                         m: Int, metric: Int,
                                         opq: Boolean,
-                                        maxDriverK: Int = Ivf.DriverTrainMaxK): Long = {
+                                        maxDriverK: Int = Ivf.DriverTrainMaxK): Long =
+      ServingState.writing(outPath) {
     val spark = vecsRaw.sparkSession
     // cache the metric-transformed frame: Lloyd sampling, the coarse
     // assignment, the codebook sample, and the encode all re-read it
@@ -1299,48 +1286,38 @@ object Pq {
       () => writeSidecars(spark, outPath, centroids, model, m, metric),
       () => Ivf.writeHierarchy(spark, outPath, hier),
       () => writeProfile(v, assign, centroids, outPath))
-    invalidatePersistedModels(outPath)
     v.unpersist()
     n
   }
 
   /** Codebooks of a persisted IVF-PQ index. */
   private[operators] def loadCodebooks(spark: SparkSession,
-                                       indexPath: String): Array[Array[Array[Float]]] = {
-    val cbRows = spark.read.parquet(s"$indexPath/_codebooks")
-      .orderBy("m_idx", "code").collect()
-    cbRows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+                                       indexPath: String): Array[Array[Array[Float]]] =
+    IndexLifecycle.readSidecar(spark, s"$indexPath/_codebooks",
+        "m_idx INT, code INT, cvec ARRAY<FLOAT>")
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)).toArray
-  }
 
-  /** The persisted index's own metric (from `_meta`; indexes written
-    * before the metric sidecar existed default to L2). Selected BY NAME:
-    * reading an ordinal would silently serve the wrong metric if the
-    * `_meta` column order ever changed.
+  /** The `_meta` record of a persisted IVF-PQ index, read once and BY
+    * NAME (an ordinal would silently serve the wrong metric if the
+    * column order ever changed): the subspace count, the index's own
+    * metric, and whether its codes are residuals. Columns an index
+    * predates read as null — metric L2, raw-vector codes that keep
+    * serving through the flat ADC path; an index with no `_meta` at
+    * all reads the same, with m = 0 (unknown).
     */
-  /** The persisted index's subspace count (from `_meta`, by name). */
-  private[operators] def loadM(spark: SparkSession, indexPath: String): Int =
-    spark.read.parquet(s"$indexPath/_meta").select("m").head().getInt(0)
+  private[operators] final case class PqMeta(m: Int, metric: Int, residual: Boolean)
 
-  private[operators] def loadMetric(spark: SparkSession, indexPath: String): Int = {
-    val f = new org.apache.hadoop.fs.Path(s"$indexPath/_meta")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(new org.apache.hadoop.fs.Path(s"$indexPath/_meta"))) VectorMetric.L2
-    else spark.read.parquet(s"$indexPath/_meta").select("metric").head().getInt(0)
-  }
-
-  /** Whether the persisted codes are residuals (from `_meta`, by name;
-    * indexes written before the flag existed are raw-vector codes and
-    * keep serving through the flat ADC path).
-    */
-  private[operators] def loadResidual(spark: SparkSession, indexPath: String): Boolean = {
+  private[operators] def loadMeta(spark: SparkSession, indexPath: String): PqMeta = {
     val p = new org.apache.hadoop.fs.Path(s"$indexPath/_meta")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) false
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      PqMeta(0, VectorMetric.L2, residual = false)
     else {
-      val meta = spark.read.parquet(s"$indexPath/_meta")
-      meta.columns.contains("residual") &&
-        meta.select("residual").head().getBoolean(0)
+      val r = spark.read.schema("m INT, metric INT, residual BOOLEAN")
+        .parquet(p.toString).head()
+      PqMeta(if (r.isNullAt(0)) 0 else r.getInt(0),
+        if (r.isNullAt(1)) VectorMetric.L2 else r.getInt(1),
+        !r.isNullAt(2) && r.getBoolean(2))
     }
   }
 
@@ -1356,9 +1333,9 @@ object Pq {
     val p = new org.apache.hadoop.fs.Path(s"$indexPath/_rotation")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) None
-    else Some(spark.read.parquet(s"$indexPath/_rotation")
-      .select("ridx", "rvec").orderBy("ridx").collect()
-      .map(_.getSeq[Double](1).toArray))
+    else Some(IndexLifecycle.readSidecar(spark, s"$indexPath/_rotation",
+        "ridx INT, rvec ARRAY<DOUBLE>")
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray))
   }
 
   /** The FULL loaded model of a persisted IVF-PQ tree — every sidecar
@@ -1375,34 +1352,21 @@ object Pq {
     def dim: Int = codebooks.length * codebooks(0)(0).length
   }
 
-  private val persistedModels =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), PersistedModel]
-
-  /** Load (and memoize) a persisted index's model sidecars. The model
-    * is FROZEN between rebuilds by the lifecycle contract — append and
-    * delete land rows under the existing quantizers — so the memo keys
-    * on (path, state version, builtAt): a rebuild bumps the version and
-    * the memo self-invalidates, while the per-query serving path stops
-    * paying five sidecar parquet reads + existence checks per call.
-    * Trees without a lifecycle state file (bare writeIvfPq output, the
-    * spec scratch pattern that may overwrite a path in place) are
-    * loaded fresh every time — only stateful indexes memoize.
+  /** Load a persisted index's model sidecars (one collect job each).
+    * Serving and appends take it from [[ServingState]], which loads it
+    * once per build of the tree.
     */
   private[graft] def loadPersistedModel(spark: SparkSession,
-                                            indexPath: String): PersistedModel = {
-    def loadAll() = {
-      val cents = IndexLifecycle.loadCentroids(spark, indexPath)
-      PersistedModel(
-        cents,
-        loadCodebooks(spark, indexPath),
-        loadMetric(spark, indexPath),
-        loadRotation(spark, indexPath),
-        loadResidual(spark, indexPath),
-        Ivf.loadHierarchy(spark, indexPath, cents))
-    }
-    val s = IndexLifecycle.status(spark, indexPath)
-    if (!s.isBuilt) loadAll()
-    else persistedModels.getOrElseUpdate((indexPath, s.version, s.builtAt), loadAll())
+                                        indexPath: String): PersistedModel = {
+    val cents = IndexLifecycle.loadCentroids(spark, indexPath)
+    val meta = loadMeta(spark, indexPath)
+    PersistedModel(
+      cents,
+      loadCodebooks(spark, indexPath),
+      meta.metric,
+      loadRotation(spark, indexPath),
+      meta.residual,
+      Ivf.loadHierarchy(spark, indexPath, cents))
   }
 
   /** Query a persisted IVF-PQ index: probe selection over the loaded
@@ -1442,8 +1406,9 @@ object Pq {
                  refine: Int = 4): DataFrame = {
     // serving an index whose last delete half-applied would silently
     // drop a whole inverted list — refuse, same guard as mutations
-    IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-    val pm = loadPersistedModel(spark, indexPath)
+    val live = IndexLifecycle.liveLists(spark, indexPath)
+    val st = ServingState.pq(spark, indexPath)
+    val pm = st.model
     val centroids = pm.centroids
     val codebooks = pm.codebooks
     val metric = pm.metric
@@ -1464,16 +1429,16 @@ object Pq {
       val ordDf = broadcast(probed.zipWithIndex.toDF("cluster_id", "probe_ord"))
       val adist = PqFunctions.adcDistanceMulti(col("probe_ord"), col("codes"),
         tables, takeSqrt = metric != VectorMetric.Dot)
-      val shortlist = spark.read.parquet(indexPath)
-        .filter(col("cluster_id").isInCollection(probed))
+      val shortlist =
+        ServingState.probedLists(spark, indexPath, st.listSchema, live, probed)
         .join(ordDf, "cluster_id")
         .select(col("id").as("neighbor_id"), adist.as("dist"))
         .orderBy(col("dist"), col("neighbor_id"))
         .limit(k * math.max(1, refine))
       refineTail(shortlist, queryVec, k, refine, metric, refSrc)
     } else {
-      val codesDf = spark.read.parquet(indexPath)
-        .filter(col("cluster_id").isInCollection(probed))
+      val codesDf =
+        ServingState.probedLists(spark, indexPath, st.listSchema, live, probed)
         .select(col("id").as("neighbor_id"), col("codes"))
       adcCore(codesDf, codebooks, queryVec, k, refine, metric,
         refineWith = refSrc, rotation = rotation)

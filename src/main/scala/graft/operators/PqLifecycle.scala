@@ -36,7 +36,7 @@ object PqLifecycle {
     */
   def build(spark: SparkSession, dir: String, indexPath: String,
             m: Int = Pq.SubspaceCount, metric: Int = VectorMetric.L2,
-            opq: Boolean = false): IndexStatus = {
+            opq: Boolean = false): IndexStatus = ServingState.writing(indexPath) {
     val prev = IndexLifecycle.status(spark, indexPath)
     Pq.writeIvfPq(spark, dir, indexPath, m, metric, opq)
     val n = Tables.embeddingsCount(spark, dir)
@@ -94,10 +94,9 @@ object PqLifecycle {
     // (each id keeps its own entry in the map).
     if (streamBatchId.exists(_ <= s.appliedBatchFor(streamId.getOrElse(""))))
       return s
-    // one memoized sidecar load (Pq.loadPersistedModel): the model is
-    // frozen between rebuilds, so a per-trigger caller (D12) stops
-    // re-reading five sidecar trees every micro-batch
-    val pm = Pq.loadPersistedModel(spark, indexPath)
+    // the model is frozen between builds: a per-trigger caller (D12)
+    // takes it from the serving state instead of re-reading the sidecars
+    val pm = ServingState.pq(spark, indexPath).model
     val centroids = pm.centroids
     val codebooks = pm.codebooks
     val metric = pm.metric
@@ -203,13 +202,13 @@ object PqLifecycle {
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "rebuild requires a built index (build first)")
     IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-    val m = Pq.loadM(spark, indexPath)
-    val metric = Pq.loadMetric(spark, indexPath)
+    val meta = Pq.loadMeta(spark, indexPath)
+    require(meta.m > 0, s"rebuild: $indexPath carries no IVF-PQ `_meta` record")
     val opq = Pq.loadRotation(spark, indexPath).isDefined
     val fs = IndexLifecycle.fs(spark, indexPath)
     val tmp = new org.apache.hadoop.fs.Path(s"${indexPath}_rebuild_tmp")
     fs.delete(tmp, true)
-    val n = Pq.writeIvfPqFrom(currentVecs, tmp.toString, m, metric, opq)
+    val n = Pq.writeIvfPqFrom(currentVecs, tmp.toString, meta.m, meta.metric, opq)
     val next = IndexStatus("ivfpq", isBuilt = true, isDirty = false, size = n,
       embeddingDim = s.embeddingDim, builtAt = System.currentTimeMillis(),
       version = s.version + 1, dirtyCount = 0L, totalVectors = n,
@@ -240,7 +239,7 @@ object PqLifecycle {
     val p = new org.apache.hadoop.fs.Path(s"$indexPath/_profile")
     if (!IndexLifecycle.fs(spark, indexPath).exists(p)) false
     else {
-      val metric = Pq.loadMetric(spark, indexPath)
+      val metric = Pq.loadMeta(spark, indexPath).metric
       val centroids = IndexLifecycle.loadCentroids(spark, indexPath)
       val base = spark.read.parquet(s"$indexPath/_profile")
       val cur = Pq

@@ -24,12 +24,12 @@ class IvfStorageSpec extends AnyFunSuite {
   }
 
   test("probe reads only the nprobe partitions (partition pruning) and finds neighbors") {
-    val (path, centroids) = indexPath
+    val (path, _) = indexPath
     val q = Tables.embeddings(spark, sf)
       .filter(org.apache.spark.sql.functions.col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
     val nprobe = 3
-    val res = Ivf.queryIndex(spark, path, centroids, q, k = 5, nprobe = nprobe)
+    val res = Ivf.queryIndex(spark, path, q, k = 5, nprobe = nprobe)
     // pruning: the file scan must touch at most nprobe partition dirs
     val scans = res.queryExecution.executedPlan.collect {
       case s: FileSourceScanExec => s
@@ -37,6 +37,8 @@ class IvfStorageSpec extends AnyFunSuite {
     assert(scans.nonEmpty)
     val partitions = scans.head.relation.location.inputFiles
       .map(_.replaceAll(".*cluster_id=([0-9]+).*", "$1")).distinct
+    assert(partitions.nonEmpty && partitions.length <= nprobe,
+      s"scan read ${partitions.length} list dirs for nprobe = $nprobe")
     val prunedFiles = scans.head.metadata.get("PartitionFilters")
     assert(prunedFiles.exists(_.contains("cluster_id")),
       s"no partition filter in scan metadata: ${scans.head.metadata}")

@@ -224,4 +224,62 @@ class MmrSpec extends AnyFunSuite {
     assert(mmrSim.sum / qs.size <= topkSim.sum / qs.size + 1e-12,
       "MMR must not increase mean pairwise similarity of the selection")
   }
+
+  /** The fold over (query_id, cand, simq) and (query_id, a, b, simab)
+    * rows, picks in rank order per query.
+    */
+  private def foldOf(cv: org.apache.spark.sql.DataFrame, ps: org.apache.spark.sql.DataFrame,
+                     kk: Int, lam: Double): Map[Long, Seq[Long]] = {
+    import org.apache.spark.sql.functions.{col, explode, lit}
+    cv.select(col("query_id"), col("cand"), col("simq"),
+        lit(null).cast("bigint").as("b"), lit(null).cast("double").as("simab"))
+      .unionAll(ps.select(col("query_id"), col("a").as("cand"),
+        lit(null).cast("double").as("simq"), col("b"), col("simab")))
+      .groupBy("query_id")
+      .agg(graft.functions.MmrFoldAgg.mmrFold(
+        col("cand"), col("simq"), col("b"), col("simab"), kk, lam).as("sel"))
+      .select(col("query_id"), explode(col("sel")).as("p"))
+      .select(col("query_id"), col("p.cand"), col("p.rank"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
+  }
+
+  test("MmrFold refuses a NaN simq or simab loudly instead of folding it") {
+    import spark.implicits._
+    val cv = Seq((1L, 1L, 0.9), (1L, 2L, 0.5)).toDF("query_id", "cand", "simq")
+    val ps = Seq((1L, 1L, 2L, 0.3), (1L, 2L, 1L, 0.3)).toDF("query_id", "a", "b", "simab")
+    def causes(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val nanQ = intercept[Exception](foldOf(
+      cv.union(Seq((1L, 3L, Double.NaN)).toDF("query_id", "cand", "simq")), ps, 2, 0.7))
+    assert(causes(nanQ).contains("NaN simq"), causes(nanQ))
+    val nanAb = intercept[Exception](foldOf(
+      cv, ps.union(Seq((1L, 1L, 2L, Double.NaN)).toDF("query_id", "a", "b", "simab")), 2, 0.7))
+    assert(causes(nanAb).contains("NaN simab"), causes(nanAb))
+  }
+
+  test("a zero-norm embedding under cosine is at distance 1.0 and folds as similarity 0.0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.VectorFunctions
+    // query (1, 0); candidate 2 is the zero vector
+    val vs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 0f)), (3L, Seq(0.6f, 0.8f)), (4L, Seq(0f, 1f)))
+      .toDF("cand", "v")
+    val q = Seq(Seq(1f, 0f)).toDF("qv")
+    val dists = vs.crossJoin(q)
+      .select(col("cand"), VectorFunctions.cosineDistance(col("qv"), col("v")).as("d"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(dists(2L) == 1.0, s"zero-norm cosine distance ${dists(2L)}")
+    assert(vs.filter(col("cand") === 2L)
+      .select(VectorFunctions.cosineDistance(col("v"), col("v"))).head().getDouble(0) == 1.0)
+    val cv = vs.crossJoin(q).select(lit(1L).as("query_id"), col("cand"),
+      (lit(1.0) - VectorFunctions.cosineDistance(col("qv"), col("v"))).as("simq"))
+    val ps = vs.as("x").crossJoin(vs.as("y")).filter(col("x.cand") =!= col("y.cand"))
+      .select(lit(1L).as("query_id"), col("x.cand").as("a"), col("y.cand").as("b"),
+        (lit(1.0) - VectorFunctions.cosineDistance(col("x.v"), col("y.v"))).as("simab"))
+    // λ = 0.7: rank 1 is the query's twin (1); rank 2 is 3 (0.7·0.6 −
+    // 0.3·0.6 beats the zero-sim 2 and 4); rank 3 is the zero vector 2,
+    // whose penalty stays 0 where 4 carries sim 0.8 to candidate 3
+    assert(foldOf(cv, ps, 3, 0.7) == Map(1L -> Seq(1L, 3L, 2L)))
+  }
 }

@@ -1,0 +1,118 @@
+package graft
+
+import graft.operators.{GraphIndex, IndexLifecycle, Pq, PqLifecycle, ServingState}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Job ceilings of a WARM point query over each persisted index kind:
+  * once a tree is open, a call runs only its data jobs — no schema
+  * inference, no sidecar reload, no listing of every list, no
+  * re-symmetrised adjacency. A change that brings back per-call
+  * metadata jobs fails here.
+  */
+class ServingJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark = TestSession.spark
+  private lazy val corpusDir = ServingCorpus.create(spark)
+  override def afterAll(): Unit = ServingCorpus.drop(corpusDir)
+
+  private lazy val vecs = Tables.embeddings(spark, corpusDir)
+    .select(col("vec_id").as("id"), col("embedding").as("vec"))
+  private lazy val qvec: Array[Float] =
+    vecs.filter(col("id") === 7L).select("vec").head().getSeq[Float](0).toArray
+
+  /** Jobs `body` starts, counted by job group (the KnnKernelSpec idiom:
+    * listener events arrive in order, so once a later marker job is
+    * seen every job of the body has been seen too).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"serving-jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull + "")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "measured call")
+      try body finally spark.sparkContext.clearJobGroup()
+      val marker = s"$group-marker"
+      spark.sparkContext.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(marker))
+      seen.asScala.count(_ == group)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def withTree(prefix: String)(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(s"$dir/idx") finally graft.streaming.Streams.deleteTree(dir)
+  }
+
+  /** Cold then warm job counts of `call`; the warm answer must equal
+    * the cold one.
+    */
+  private def coldWarm(call: () => Seq[Any]): (Int, Int) = {
+    var cold: Seq[Any] = Nil; var warm: Seq[Any] = Nil
+    val c = jobsOf { cold = call() }
+    val w = jobsOf { warm = call() }
+    assert(warm == cold, "a warm call must answer as the cold one did")
+    info(s"jobs: cold $c, warm $w")
+    (c, w)
+  }
+
+  test("IndexLifecycle.query: a warm call runs at most 2 jobs") {
+    withTree("graft_jobs_ivf") { p =>
+      // more lists than Spark's parallel-listing threshold (32): a
+      // per-call listing of the whole root would be one more job
+      IndexLifecycle.build(vecs, p, kOpt = Some(40))
+      val (_, warm) = coldWarm(() =>
+        IndexLifecycle.query(spark, p, qvec, k = 10, nprobe = 8).collect().toSeq)
+      assert(warm <= 2, s"warm IndexLifecycle.query ran $warm jobs")
+    }
+  }
+
+  test("Pq.queryIvfPq (no refine) over a bare tree: a warm call runs at most 4 jobs") {
+    withTree("graft_jobs_pq") { p =>
+      Pq.writeIvfPq(spark, corpusDir, p)
+      val (_, warm) = coldWarm(() =>
+        Pq.queryIvfPq(spark, p, qvec, k = 10, nprobe = 8, refineWith = None).collect().toSeq)
+      assert(warm <= 4, s"warm Pq.queryIvfPq ran $warm jobs")
+    }
+  }
+
+  test("PqLifecycle.append keeps the tree open: no model reload, the next query stays warm") {
+    withTree("graft_jobs_pq_append") { p =>
+      PqLifecycle.build(spark, corpusDir, p)
+      def batch(from: Long) =
+        vecs.filter(col("id") < 10L).select((col("id") + from).as("id"), col("vec"))
+      def ask() =
+        Pq.queryIvfPq(spark, p, qvec, k = 10, nprobe = 8, refineWith = None).collect().toSeq
+      ServingState.drop(p)
+      val cold = jobsOf(PqLifecycle.append(batch(100000L), p))
+      val warm = jobsOf(PqLifecycle.append(batch(200000L), p))
+      val query = jobsOf(ask())
+      info(s"append jobs: cold $cold, warm $warm; query after append $query")
+      // a model load is at least three collects (centroids, codebooks, `_meta`)
+      assert(warm + 3 <= cold, s"a warm append ran $warm jobs, a cold one $cold")
+      assert(query <= 4, s"the query after an append ran $query jobs")
+    }
+  }
+
+  test("GraphIndex.queryGraphBatch: a warm call runs at most 17 jobs") {
+    withTree("graft_jobs_graph") { p =>
+      GraphIndex.build(spark, corpusDir, p)
+      import spark.implicits._
+      // one out-of-corpus query as a local frame, as a serving client sends it
+      val queries = Seq((-1L, qvec.toSeq)).toDF("id", "vec")
+      val (_, warm) = coldWarm(() =>
+        GraphIndex.queryGraphBatch(spark, p, queries, 10).collect().toSeq)
+      assert(warm <= 17, s"warm queryGraphBatch ran $warm jobs")
+    }
+  }
+}
