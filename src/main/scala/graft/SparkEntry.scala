@@ -34,12 +34,12 @@ object SparkEntry {
     // append / bucket-rewrite delete / disk read-back (round 15: the
     // 4x tier joins the A18b state machine every other serving tier
     // already speaks)
-    "sq8_lifecycle"       -> (Sq8Lifecycle.sq8Lifecycle _),
+    "sq8_lifecycle"       -> ((s, d) => TierLifecycle.fivePhase(s, d, Sq8Codec())),
     // A21b/A22b: the BQ (256x) and PCA tiers on the same shared
     // TierLifecycle seam — every quantized serving tier now speaks
     // the A18b state machine (closes the §9 "persisted faces" item)
-    "bq_lifecycle"        -> (BqLifecycle.bqLifecycle _),
-    "pca_lifecycle"       -> (PcaLifecycle.pcaLifecycle _),
+    "bq_lifecycle"        -> ((s, d) => TierLifecycle.fivePhase(s, d, BqCodec)),
+    "pca_lifecycle"       -> ((s, d) => TierLifecycle.fivePhase(s, d, PcaCodec())),
     // small-files compaction of the persisted lists (row conservation
     // proven by disk read-back; file behavior pinned in the spec)
     "index_compact"       -> (IndexLifecycle.indexCompact _),
@@ -510,9 +510,9 @@ object SparkEntry {
     "index_lifecycle"     -> IndexLifecycle.indexLifecycleOracleSql,
     "index_delete"        -> IndexLifecycle.indexDeleteOracleSql,
     "ivfpq_lifecycle"     -> PqLifecycle.ivfpqLifecycleOracleSql,
-    "sq8_lifecycle"       -> Sq8Lifecycle.sq8LifecycleOracleSql,
-    "bq_lifecycle"        -> BqLifecycle.bqLifecycleOracleSql,
-    "pca_lifecycle"       -> PcaLifecycle.pcaLifecycleOracleSql,
+    "sq8_lifecycle"       -> TierLifecycle.tierLifecycleOracleSql,
+    "bq_lifecycle"        -> TierLifecycle.tierLifecycleOracleSql,
+    "pca_lifecycle"       -> TierLifecycle.tierLifecycleOracleSql,
     "index_compact"       -> IndexLifecycle.indexCompactOracleSql,
     "tier_compact"        -> TierLifecycle.tierCompactOracleSql,
     // E51b: the graph lifecycle's state arithmetic (append dirt,

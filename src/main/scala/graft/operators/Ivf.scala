@@ -53,12 +53,16 @@ object Ivf {
     */
   private[operators] def metricTransform(vecs: DataFrame, metric: Int): DataFrame =
     if (metric != VectorMetric.Cosine) vecs
+    else vecs.select(col("id"), metricVec(col("vec"), metric).as("vec"))
+
+  /** [[metricTransform]] on one vector column, for encoders that take
+    * the representation inline (the persisted SQ8 tier's encode).
+    */
+  private[operators] def metricVec(vec: Column, metric: Int): Column =
+    if (metric != VectorMetric.Cosine) vec
     else {
-      val n2 = sqrt(VectorFunctions.dotProduct(col("vec"), col("vec")))
-      vecs.select(col("id"),
-        when(n2 === 0.0, col("vec"))
-          .otherwise(transform(col("vec"), x => (x / n2).cast("float")))
-          .as("vec"))
+      val n2 = sqrt(VectorFunctions.dotProduct(vec, vec))
+      when(n2 === 0.0, vec).otherwise(transform(vec, x => (x / n2).cast("float")))
     }
 
   /** The corpus REPRESENTATION a metric trains on: cosine has its own

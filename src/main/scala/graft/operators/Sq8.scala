@@ -33,21 +33,6 @@ object Sq8 {
       .foreach(k => encoded.remove(k).foreach(_.unpersist()))
   }
 
-  /** Cosine routes through normalize-then-L2 exactly as in Pq. */
-  private def corpus(spark: SparkSession, dir: String,
-                     metric: Int = VectorMetric.L2): DataFrame = {
-    val raw = Tables.rebalanced(Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("vec")))
-    if (metric != VectorMetric.Cosine) raw
-    else {
-      val n2 = sqrt(graft.functions.VectorFunctions.dotProduct(col("vec"), col("vec")))
-      raw.select(col("id"),
-        when(n2 === 0.0, col("vec"))
-          .otherwise(transform(col("vec"), x => (x / n2).cast("float")))
-          .as("vec"))
-    }
-  }
-
   /** Per-dimension (min, scale) from one corpus aggregation. Memo-keyed
     * on the corpus representation (Ivf.repr): dot shares the raw-corpus
     * model and codes with l2, same contract as Pq.train.
@@ -56,7 +41,7 @@ object Sq8 {
             metric: Int = VectorMetric.L2): Model =
     models.get((dir, Ivf.repr(metric))).getOrElse(synchronized {
       models.getOrElseUpdate((dir, Ivf.repr(metric)),
-        trainFrom(corpus(spark, dir, metric)))
+        trainFrom(Ivf.metricCorpus(spark, dir, metric)))
     })
 
   /** The training aggregation over an EXPLICIT (id, vec) frame — the
@@ -64,7 +49,7 @@ object Sq8 {
     * current logical contents, which no corpus dir names), deliberately
     * un-memoized: the dir-keyed [[train]] wraps it for the session
     * corpus. Cosine callers pass already-normalized vectors (the
-    * corpus()/Ivf.metricTransform representation).
+    * Ivf.metricCorpus representation).
     */
   private[graft] def trainFrom(vecs: DataFrame): Model = {
     val rows = vecs
@@ -90,7 +75,7 @@ object Sq8 {
     encoded.get((dir, Ivf.repr(metric))).getOrElse(synchronized {
       encoded.getOrElseUpdate((dir, Ivf.repr(metric)), {
         val m = train(spark, dir, metric)
-        val df = corpus(spark, dir, metric)
+        val df = Ivf.metricCorpus(spark, dir, metric)
           .select(col("id"),
             graft.functions.Sq8Functions.sq8Encode(col("vec"), m.mins, m.scales)
               .as("codes"))
@@ -99,6 +84,15 @@ object Sq8 {
         df
       })
     })
+
+  /** Driver-side quantize of one query vector through `m` (twin of the
+    * sq8_encode kernel: round, then clamp to 0..255).
+    */
+  private[graft] def encodeQuery(q: Array[Float], m: Model): Array[Byte] =
+    q.indices.map { i =>
+      val c = Math.round((q(i) - m.mins(i)) * m.scales(i)).toInt
+      Math.max(0, Math.min(255, c)).toByte
+    }.toArray
 
   /** Top-k for one query vector, entirely over SQ8 codes (the query
     * quantizes through the same model; Cosine normalizes the query
@@ -109,16 +103,7 @@ object Sq8 {
     val m = train(spark, dir, metric)
     require(queryVec.length == m.mins.length,
       s"query dim ${queryVec.length} != corpus dim ${m.mins.length}")
-    val q0 =
-      if (metric != VectorMetric.Cosine) queryVec
-      else {
-        val n = math.sqrt(queryVec.map(x => x.toDouble * x).sum)
-        if (n == 0.0) queryVec else queryVec.map(x => (x / n).toFloat)
-      }
-    val qCodes: Array[Byte] = q0.indices.map { i =>
-      val q = Math.round((q0(i) - m.mins(i)) * m.scales(i)).toInt
-      Math.max(0, Math.min(255, q)).toByte
-    }.toArray
+    val qCodes = encodeQuery(Pq.metricQuery(queryVec, metric), m)
     val dist = graft.functions.Sq8Functions
       .sq8Distance(lit(qCodes), col("codes"), m.scales)
     encode(spark, dir, metric)

@@ -1,25 +1,31 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.VectorMetric
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The SHARED machinery behind the flat quantized tiers' persisted
-  * lifecycles (SQ8 / BQ / PCA — A19b/A21b/A22b): one bucketing rule,
-  * one build/append state protocol, one four-phase driver-key shape,
-  * so the three tiers cannot drift on the arithmetic (the
-  * dedupSurvivorsOn seam principle applied to lifecycles). Each tier
-  * keeps only what is genuinely its own: the model sidecar format,
-  * the encode expression, and the disk query kernel.
+import scala.collection.immutable.ListMap
+
+/** The persisted flat quantized tiers (SQ8 / BQ / PCA — A19b/A21b/A22b)
+  * behind one lifecycle: build, frozen-model append, bucket-pruned
+  * delete, disk query, rebuild, the lazy-rebuild policy and the
+  * five-phase driver key, each taking the tier's [[TierCodec]]. One
+  * bucketing rule, one state protocol and one landing path, so the
+  * tiers cannot drift on the arithmetic (the dedupSurvivorsOn seam
+  * principle applied to lifecycles); a codec keeps only what is its
+  * own: training, encode, sidecar format and the disk-query distance.
   *
-  * All three layouts are `(cluster_id, id, <codes>)` parquet
+  * All three layouts are `(cluster_id, id, <payload>)` parquet
   * partitioned by `cluster_id = id mod buckets` — these are FLAT scan
   * tiers (no coarse quantizer), so the partition key exists for
   * MUTATION locality, not probe pruning: deletes rewrite only the
   * buckets holding deleted ids (IndexLifecycle.deleteFrom), appends
   * land one file per touched bucket (IndexLifecycle.landAppend).
+  * The reference contract is the lazy/dirty-rebuild index service
+  * (app/services/index_service.py:56-198).
   */
-private[graft] object TierLifecycle {
+object TierLifecycle {
 
   /** Minimum bucket count; the actual count SCALES as
     * max(16, √(n/2)) — the IVF list-count growth — because a fixed 16
@@ -36,115 +42,106 @@ private[graft] object TierLifecycle {
   def bucketOf(c: Column, buckets: Int): Column =
     pmod(c, lit(buckets.toLong)).cast("int")
 
-  /** Land a fresh build: bucket-partition `rows` (id, payload…),
-    * write the lists, run the tier's sidecar writes, then the state —
-    * state LAST, so a crash mid-build leaves an unbuilt status, never
-    * a built status over half a tree.
+  /** Build (version+1) from the session corpus: the codec's memoized
+    * model and codes, landed bucket-partitioned with their sidecars.
     */
-  def landBuild(spark: SparkSession, indexPath: String, kind: String,
-                rows: DataFrame, n: Long, dim: Int, buckets: Int,
-                writeSidecars: () => Unit): IndexStatus = {
+  def build[M](codec: TierCodec[M], spark: SparkSession, dir: String,
+               indexPath: String): IndexStatus = {
+    val (m, rows) = codec.corpus(spark, dir)
     val prev = IndexLifecycle.status(spark, indexPath)
-    rows.select(bucketOf(col("id"), buckets).as("cluster_id") +:
-        rows.columns.map(col): _*)
+    land(codec, m, rows, Tables.embeddingsCount(spark, dir), indexPath,
+      prev.version + 1, ListMap.empty)
+  }
+
+  /** The one landing path of a build and a rebuild: bucket-partition
+    * the encoded `rows` (id, payload), write the lists, the codec's
+    * sidecars, then the state — state LAST, so a crash mid-land leaves
+    * an unbuilt status, never a built status over half a tree.
+    */
+  private def land[M](codec: TierCodec[M], m: M, rows: DataFrame, n: Long,
+                      path: String, version: Int,
+                      streams: ListMap[String, Long])
+      : IndexStatus = {
+    val spark = rows.sparkSession
+    val buckets = bucketsFor(n)
+    rows.select(bucketOf(col("id"), buckets).as("cluster_id"), col("id"),
+        col(codec.payload))
       .repartition(col("cluster_id")) // one file per bucket
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(indexPath)
-    writeSidecars()
-    val next = IndexStatus(kind, isBuilt = true, isDirty = false, size = n,
-      embeddingDim = dim, builtAt = System.currentTimeMillis(),
-      version = prev.version + 1, dirtyCount = 0L, totalVectors = n)
-    IndexLifecycle.writeState(spark, indexPath, next)
+      .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
+    codec.writeSidecars(spark, m, buckets, path)
+    val next = IndexStatus(codec.kind, isBuilt = true, isDirty = false, size = n,
+      embeddingDim = codec.dim(m), builtAt = System.currentTimeMillis(),
+      version = version, dirtyCount = 0L, totalVectors = n,
+      appliedStreams = streams)
+    IndexLifecycle.writeState(spark, path, next)
     next
   }
 
-  /** Incremental add of `n` already-encoded staged rows
-    * (cluster_id, id, payload…): the shared dirt accounting + the
-    * crash-consistent landAppend protocol. The caller encoded against
-    * its FROZEN sidecar model — nothing retrains here.
+  /** Incremental add: encode `newVecs` (id, vec — RAW floats) against
+    * the FROZEN sidecar model (no retrain: drift only degrades the
+    * codes, which the dirty-ratio policy answers with a rebuild) and
+    * land the rows crash-consistently (IndexLifecycle.landAppend).
+    * Growth is dirt against the as-of-build total.
     * `streamBatchId`/`streamId` are the at-least-once replay guard for
     * foreachBatch callers (the PqLifecycle.append contract verbatim):
     * the per-stream watermark is recorded in the SAME state write
     * landAppend does before moving files in, so a replayed batch sees
-    * its own stream's watermark >= batchId and NO-OPs instead of
-    * landing duplicate code rows.
+    * its own stream's watermark >= batchId and NO-OPs before paying
+    * the model load or the encode.
     */
-  def appendStaged(spark: SparkSession, indexPath: String,
-                   staged: DataFrame, n: Long,
-                   streamBatchId: Option[Long] = None,
-                   streamId: Option[String] = None,
-                   stateOpt: Option[IndexStatus] = None): IndexStatus = {
-    // stateOpt = the state the caller's requireMutable already read —
-    // the per-trigger hot path then pays ONE status read + ONE marker
-    // listing per append, matching PqLifecycle.append
-    val s = stateOpt.getOrElse {
-      val s0 = IndexLifecycle.status(spark, indexPath)
-      require(s0.isBuilt, "append requires a built index (build first)")
-      IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-      s0
-    }
+  def append[M](codec: TierCodec[M], newVecs: DataFrame, indexPath: String,
+                streamBatchId: Option[Long] = None,
+                streamId: Option[String] = None): IndexStatus = {
+    val spark = newVecs.sparkSession
+    val s = requireIntact(spark, indexPath, "mutation")
     if (streamBatchId.exists(_ <= s.appliedBatchFor(streamId.getOrElse(""))))
       return s
-    val grown = s.copy(isDirty = true, dirtyCount = s.dirtyCount + n,
-      size = s.size + n)
-    val next = streamBatchId match {
-      case Some(b) => grown.withAppliedBatch(streamId.getOrElse(""), b)
-      case None => grown
-    }
-    IndexLifecycle.landAppend(spark, indexPath, staged, next)
-    next
+    val (m, buckets) = codec.readSidecars(spark, indexPath)
+    val v = newVecs.cache()
+    try {
+      val n = v.count()
+      val grown = s.copy(isDirty = true, dirtyCount = s.dirtyCount + n,
+        size = s.size + n)
+      val next = streamBatchId.fold(grown)(
+        grown.withAppliedBatch(streamId.getOrElse(""), _))
+      IndexLifecycle.landAppend(spark, indexPath, v.select(
+        bucketOf(col("id"), buckets).as("cluster_id"), col("id"),
+        codec.encode(m, col("vec")).as(codec.payload)), next)
+      next
+    } finally v.unpersist()
   }
 
-  /** Loud precondition every tier mutation runs BEFORE touching its
-    * model sidecar: an unbuilt/half-applied tree must fail with the
-    * lifecycle's own message, not an opaque parquet path error from a
-    * missing `_model`.
+  /** The loud precondition every tier operation runs BEFORE touching
+    * its model sidecar (returns the state it read, so a caller pays
+    * ONE status read + ONE marker listing): an unbuilt or half-applied
+    * tree fails with the lifecycle's own message, not an opaque
+    * parquet path error from a missing `_model`. The serve path needs
+    * it too: after a crash between a delete's two swap renames the
+    * bucket's rows live only under an `_old_cluster_id=N` path parquet
+    * readers skip, so a query that skipped this check would silently
+    * answer minus an entire bucket instead of refusing loudly.
     */
-  def requireMutable(spark: SparkSession, indexPath: String): IndexStatus =
-    requirePrecondition(spark, indexPath, "mutation")
-
-  /** The read-only sibling of [[requireMutable]], run by every tier
-    * SERVE path before loadModel/read (the IndexLifecycle.query
-    * contract: 'called by every serve path'): after a crash between a
-    * delete's two swap renames the bucket's rows live only under an
-    * `_old_cluster_id=N` path parquet readers skip, so a query that
-    * skipped this check would silently answer minus an entire bucket
-    * instead of refusing loudly.
-    */
-  def requireServable(spark: SparkSession, indexPath: String): IndexStatus =
-    requirePrecondition(spark, indexPath, "query")
-
-  /** Recovery-then-precondition for the REBUILD path (the GraphIndex
-    * reconcile discipline): a crashed mutation's markers are made
-    * whole in place (IndexLifecycle.recoverMutation) instead of
-    * refused — rebuild is the repair operation, so it must be able to
-    * enter a damaged tree; serve and append/delete keep refusing.
-    */
-  private[operators] def requireRebuildable(spark: SparkSession,
-                                            indexPath: String): IndexStatus = {
-    IndexLifecycle.recoverMutation(spark, indexPath)
-    requirePrecondition(spark, indexPath, "rebuild")
-  }
-
-  /** One implementation of the two preconditions (returns the state it
-    * read, so callers pay ONE status read + ONE marker listing).
-    */
-  private def requirePrecondition(spark: SparkSession, indexPath: String,
-                                  verb: String): IndexStatus = {
+  private def requireIntact(spark: SparkSession, indexPath: String,
+                            verb: String): IndexStatus = {
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, s"$verb requires a built index (build first)")
     IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
     s
   }
 
-  /** Partition-pruned point delete for the modulo-bucketed layouts:
-    * unlike a content-assigned layout (IVF — which list holds a vector
-    * is unknowable without scanning), these tiers COMPUTE each deleted
-    * id's bucket, so the shared deleteFrom scans and rewrites only the
-    * affected partitions. The bucket set is a tiny distinct over the
-    * delete batch (≤ buckets values), never a corpus job.
+  /** Partition-pruned point delete: unlike a content-assigned layout
+    * (IVF — which list holds a vector is unknowable without scanning),
+    * these tiers COMPUTE each deleted id's bucket, so the shared
+    * deleteFrom scans and rewrites only the affected partitions. The
+    * bucket set is a tiny distinct over the delete batch (≤ buckets
+    * values), never a corpus job. Needs only `_meta.buckets`, so no
+    * codec.
     */
-  def deletePruned(deleteIds: DataFrame, indexPath: String,
-                   buckets: Int): IndexStatus = {
+  def delete(deleteIds: DataFrame, indexPath: String): IndexStatus = {
+    val spark = deleteIds.sparkSession
+    requireIntact(spark, indexPath, "mutation")
+    val buckets = IndexLifecycle.readSidecar(spark, s"$indexPath/_meta",
+      "buckets INT").head.getInt(0)
     val hint = deleteIds
       .select(bucketOf(col("id"), buckets).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq
@@ -152,20 +149,46 @@ private[graft] object TierLifecycle {
       bucketHint = Some(hint))
   }
 
-  /** Out-of-band rebuild for a flat tier — the close of the
-    * reference's lazy-rebuild loop (index_service.py:56-198, the
-    * exact policy PqLifecycle.rebuild implements for IVF-PQ) on the
-    * shared seam: when the dirty-ratio policy fires, retrain the
-    * tier's model on the index's CURRENT logical contents, re-encode
-    * every vector under the new model, and land the result as
-    * version+1 with dirt reset. `currentVecs` is the RAW (id, vec)
-    * view of what the index should now hold (the tier's stored codes
-    * are lossy, so a rebuild by definition starts from the primary
-    * store); the caller passes it ALREADY in the tier's training
-    * representation (cosine trees: metric-transformed). `trainEncode`
-    * owns what is genuinely the tier's: train the new model from the
-    * cached contents, return the encoded (id, payload…) rows, the
-    * model dim, and a sidecar writer targeting the STAGED tree.
+  /** Query the PERSISTED tree from disk: the codec's distance over the
+    * stored payloads, bounded top-k. `refineWith` = the caller's raw
+    * (id, vec) primary store stacks the exact re-rank under `metric`
+    * over a k·refine shortlist (the in-session Bq.topK/Pca.topK
+    * two-tier shape) — a codes-only tree by design carries no raw
+    * vectors.
+    */
+  def query[M](codec: TierCodec[M], spark: SparkSession, indexPath: String,
+               queryVec: Array[Float], k: Int,
+               refineWith: Option[DataFrame] = None, refine: Int = 8,
+               metric: Int = VectorMetric.L2): DataFrame = {
+    requireIntact(spark, indexPath, "query")
+    val (m, _) = codec.readSidecars(spark, indexPath)
+    require(queryVec.length == codec.dim(m),
+      s"query dim ${queryVec.length} != index dim ${codec.dim(m)}")
+    val shortlist = spark.read.parquet(indexPath)
+      .select(col("id").as("neighbor_id"), codec.distance(m, queryVec).as("dist"))
+      .orderBy(col("dist"), col("neighbor_id"))
+    refineWith match {
+      case None => shortlist.limit(k)
+      case Some(raw) =>
+        val exact = Ivf.distCol(metric, col("vec"), typedlit(queryVec.toSeq))
+        shortlist.limit(k * math.max(1, refine)).select(col("neighbor_id"))
+          .join(raw.withColumnRenamed("id", "neighbor_id"), "neighbor_id")
+          .select(col("neighbor_id"), exact.as("dist"))
+          .orderBy(col("dist"), col("neighbor_id"))
+          .limit(k)
+    }
+  }
+
+  /** Out-of-band rebuild — the close of the reference's lazy-rebuild
+    * loop (index_service.py:56-198, the exact policy PqLifecycle
+    * .rebuild implements for IVF-PQ): when the dirty-ratio policy
+    * fires, retrain the codec's model on the index's CURRENT logical
+    * contents keeping the tree's persisted parameters (metric, reduced
+    * dim), re-encode every vector under the new model, and land the
+    * result as version+1 with dirt reset. `currentVecs` is the RAW
+    * (id, vec) view of what the index should now hold (the stored
+    * codes are lossy, so a rebuild by definition starts from the
+    * primary store).
     *
     * The bucket count is re-derived from the new size (√(n/2) growth —
     * a rebuild is exactly when the layout gets to re-level itself),
@@ -175,46 +198,36 @@ private[graft] object TierLifecycle {
     * and after the move-aside, loud names on every crash window). The
     * stream watermark map carries over — a rebuild must not reopen
     * replay windows for an ingest stream running against the tier.
+    * `beforeSwap` is the staging-window test seam.
     */
-  def rebuild(currentVecs: DataFrame, indexPath: String, kind: String,
-              trainEncode: (DataFrame, Int, String) => (DataFrame, Int, () => Unit),
-              beforeSwap: () => Unit = () => (),
-              stateOpt: Option[IndexStatus] = None): IndexStatus = {
+  def rebuild[M](codec: TierCodec[M], currentVecs: DataFrame, indexPath: String,
+                 beforeSwap: () => Unit = () => ()): IndexStatus = {
     val spark = currentVecs.sparkSession
-    // stateOpt = the state the caller's requireRebuildable already
-    // read (one precondition pass per rebuild, the appendStaged shape)
-    val s = stateOpt.getOrElse {
-      val s0 = IndexLifecycle.status(spark, indexPath)
-      require(s0.isBuilt, "rebuild requires a built index (build first)")
-      IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-      s0
-    }
-    val fs = IndexLifecycle.fs(spark, indexPath)
+    // recovery-then-precondition (the GraphIndex reconcile discipline):
+    // rebuild is the repair operation, so a crashed mutation's markers
+    // are made whole in place instead of refused; serve, append and
+    // delete keep refusing
+    IndexLifecycle.recoverMutation(spark, indexPath)
+    val s = requireIntact(spark, indexPath, "rebuild")
+    val (old, _) = codec.readSidecars(spark, indexPath)
     val tmp = new org.apache.hadoop.fs.Path(s"${indexPath}_rebuild_tmp")
-    fs.delete(tmp, true)
+    IndexLifecycle.fs(spark, indexPath).delete(tmp, true)
     val v = currentVecs.cache()
-    val n = v.count()
-    val buckets = bucketsFor(n)
-    val (rows, dim, writeSidecars) = trainEncode(v, buckets, tmp.toString)
-    rows.select(bucketOf(col("id"), buckets).as("cluster_id") +:
-        rows.columns.map(col): _*)
-      .repartition(col("cluster_id")) // one file per bucket
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(tmp.toString)
-    writeSidecars()
-    val next = IndexStatus(kind, isBuilt = true, isDirty = false, size = n,
-      embeddingDim = dim, builtAt = System.currentTimeMillis(),
-      version = s.version + 1, dirtyCount = 0L, totalVectors = n,
-      appliedStreams = s.appliedStreams)
-    IndexLifecycle.writeState(spark, tmp.toString, next)
-    v.unpersist()
+    val next =
+      try {
+        val n = v.count()
+        val m = codec.retrain(v, old)
+        val rows = v.select(col("id"), codec.encode(m, col("vec")).as(codec.payload))
+        land(codec, m, rows, n, tmp.toString, s.version + 1, s.appliedStreams)
+      } finally v.unpersist()
     IndexLifecycle.swapRebuilt(spark, indexPath, tmp, s, beforeSwap)
     next
   }
 
   /** The lazy-rebuild policy applied at read time (IndexLifecycle
     * .buildIfNeeded's contract on the tier seam — the reference's
-    * serving flow, index_service.py:88-99): rebuild through the
-    * tier's own `rebuildFn` only when the dirty-ratio policy says so,
+    * serving flow, index_service.py:88-99): [[rebuild]] only when the
+    * dirty-ratio policy says so,
     * otherwise return the current state untouched. Unlike
     * buildIfNeeded (which can BUILD a fresh path), a tier rebuild
     * retrains against an existing tree's metric/shape sidecars, so an
@@ -229,42 +242,41 @@ private[graft] object TierLifecycle {
     * the recovery's own size-drift reconciliation lands as dirt,
     * which this very policy then answers.
     */
-  def rebuildIfNeeded(currentVecs: DataFrame, indexPath: String,
-                      rebuildFn: (DataFrame, String) => IndexStatus,
-                      threshold: Double = IndexLifecycle.RebuildThreshold): IndexStatus = {
+  def rebuildIfNeeded[M](codec: TierCodec[M], currentVecs: DataFrame,
+                         indexPath: String,
+                         threshold: Double = IndexLifecycle.RebuildThreshold)
+      : IndexStatus = {
     val spark = currentVecs.sparkSession
     IndexLifecycle.recoverMutation(spark, indexPath)
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt,
       "rebuildIfNeeded requires a built index (build the tier first)")
-    if (s.shouldRebuild(threshold)) rebuildFn(currentVecs, indexPath) else s
+    if (s.shouldRebuild(threshold)) rebuild(codec, currentVecs, indexPath) else s
   }
 
-  /** The five-phase driver-key body every tier lifecycle shares —
+  /** Driver keys `sq8_lifecycle`, `bq_lifecycle`, `pca_lifecycle`: the
+    * tier's state machine end-to-end as one deterministic table —
     * build, frozen-model append of ceil(0.05·n) re-keyed vectors,
     * delete of every 7th original (crossing the rebuild threshold),
     * disk read-back, and the REBUILD the fired policy asks for
     * (retrain on the current logical contents → version 2, dirt
-    * reset, its own read-back) — so all the tier keys verify against
+    * reset, its own read-back) — so every tier key verifies against
     * the ONE shared oracle ([[tierLifecycleOracleSql]]: phases 1-4
     * are the A18b arithmetic verbatim, phase 5 closes the loop).
     */
-  def fivePhase(spark: SparkSession, dir: String, tmpPrefix: String,
-                build: String => IndexStatus,
-                append: (DataFrame, String) => IndexStatus,
-                delete: (DataFrame, String) => IndexStatus,
-                rebuild: (DataFrame, String) => IndexStatus): DataFrame = {
-    val tmpDir = java.nio.file.Files.createTempDirectory(tmpPrefix)
+  def fivePhase[M](spark: SparkSession, dir: String,
+                   codec: TierCodec[M]): DataFrame = {
+    val tmpDir = java.nio.file.Files.createTempDirectory(s"graft_${codec.kind}_lc")
     val tmp = tmpDir.toString
     try {
       val n = Tables.embeddingsCount(spark, dir)
       val vecs = Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val s1 = build(tmp)
+      val s1 = build(codec, spark, dir, tmp)
       val d = math.ceil(0.05 * n).toLong
       val appended = vecs.filter(col("id") < d)
         .select((col("id") + n).as("id"), col("vec"))
-      val s2 = append(appended, tmp)
+      val s2 = append(codec, appended, tmp)
       val s3 = delete(vecs.filter(col("id") % 7 === 0).select("id"), tmp)
       val s4 = s3.copy(size = spark.read.parquet(tmp).count()) // read-back
       // phase 3 crossed the threshold (should_rebuild fired) — run the
@@ -272,7 +284,7 @@ private[graft] object TierLifecycle {
       // (originals minus deletions, plus the appended arrivals), then
       // prove the re-encoded tree really landed with a disk read-back
       val current = vecs.filter(col("id") % 7 =!= 0).unionAll(appended)
-      val s5 = rebuild(current, tmp)
+      val s5 = rebuild(codec, current, tmp)
         .copy(size = spark.read.parquet(tmp).count()) // read-back
       import spark.implicits._
       Seq(s1, s2, s3, s4, s5).zipWithIndex
@@ -286,7 +298,7 @@ private[graft] object TierLifecycle {
   }
 
   /** The same delete WITHOUT the bucket hint — the full-scan twin
-    * tools/TierProbe measures [[deletePruned]] against (the probe's
+    * tools/TierProbe measures [[delete]] against (the probe's
     * evidence that the hint is the at-scale win, not decoration);
     * production callers always hint.
     */
@@ -314,8 +326,8 @@ private[graft] object TierLifecycle {
     */
   def tierCompact(spark: SparkSession, dir: String): DataFrame =
     IndexLifecycle.compactDemo(spark, dir, "graft_tier_compact",
-      (_, tmp) => { Sq8Lifecycle.build(spark, dir, tmp); () },
-      (batch, tmp) => { Sq8Lifecycle.append(batch, tmp); () })
+      (_, tmp) => { build(Sq8Codec(), spark, dir, tmp); () },
+      (batch, tmp) => { append(Sq8Codec(), batch, tmp); () })
 
   /** Same arithmetic as A20's oracle (same append fractions, same
     * row-conservation shape).

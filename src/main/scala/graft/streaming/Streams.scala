@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.operators.{BqCodec, TierLifecycle}
 import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -1247,14 +1248,15 @@ object Streams {
       |ORDER BY phase""".stripMargin
 
   /** D17's per-trigger sink body: frozen-threshold sign-bit encode of
-    * the micro-batch into the persisted BQ tier (BqLifecycle.append)
-    * under the same per-stream replay watermark as D12 (a replayed
-    * batch NO-OPs before paying the encode). Empty triggers skip.
+    * the micro-batch into the persisted BQ tier (TierLifecycle.append
+    * with BqCodec) under the same per-stream replay watermark as D12
+    * (a replayed batch NO-OPs before paying the encode). Empty
+    * triggers skip.
     */
   private[graft] def bqAppendBatch(indexPath: String, streamId: String)
                                   (batch: DataFrame, batchId: Long): Unit =
     if (!batch.isEmpty) {
-      graft.operators.BqLifecycle.append(batch.select("id", "vec"), indexPath,
+      TierLifecycle.append(BqCodec, batch.select("id", "vec"), indexPath,
         streamBatchId = Some(batchId), streamId = Some(streamId))
       ()
     }
@@ -1276,7 +1278,7 @@ object Streams {
   /** D17 driver entry: `stream_bq_append` — D12's continuous-ingest
     * lifecycle applied to the BQ tier, the tree a 100 TB cluster
     * actually holds in RAM (the bit codes are 0.4% of the raw corpus —
-    * BqLifecycle's own scaladoc argument; this face is how that tree
+    * BqCodec's own scaladoc argument; this face is how that tree
     * stays fresh without rebuild downtime): build the persisted
     * sign-bit tier, stream the arrival set (first ceil(0.2·n) vectors
     * re-keyed past the corpus) through a 3-file landing zone at
@@ -1294,10 +1296,10 @@ object Streams {
     */
   def streamBqAppend(spark: SparkSession, dir: String): DataFrame =
     streamAppendLifecycle(spark, dir, "graft_stream_bq", "index",
-      build = (ss, p) => graft.operators.BqLifecycle.build(ss, dir, p),
+      build = (ss, p) => TierLifecycle.build(BqCodec, ss, dir, p),
       runSink = runBqAppend,
       readBack = (ss, p) => ss.read.parquet(p),
-      rebuildIdx = (_, current, p) => graft.operators.BqLifecycle.rebuild(current, p),
+      rebuildIdx = (_, current, p) => TierLifecycle.rebuild(BqCodec, current, p),
       // mid-stream maintenance: each trigger landed one part-file per
       // touched bucket - compact them away (the D10b precedent);
       // content-neutral, so the phase-3 read-back passing the shared

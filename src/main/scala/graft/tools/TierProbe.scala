@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
-import graft.operators.{IndexLifecycle, Sq8Lifecycle, TierLifecycle}
+import graft.operators.{IndexLifecycle, Sq8Codec, TierLifecycle}
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: the flat-tier mutation claims measured at real row
@@ -37,15 +37,15 @@ object TierProbe {
       val buckets = TierLifecycle.bucketsFor(n.toLong)
       println(s"[tier] corpus n=$n dim=64; buckets=$buckets " +
         f"(${n.toDouble / buckets}%.0f rows/bucket; fixed-16 would be ${n / 16} rows/bucket)")
-      timed(s"sq8 build n=$n") { Sq8Lifecycle.build(spark, dir, path) }
+      timed(s"sq8 build n=$n") { TierLifecycle.build(Sq8Codec(), spark, dir, path) }
       val vecs = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val batch = vecs.filter(col("id") < 1000)
         .select((col("id") + n).as("id"), col("vec"))
-      timed("append 1000 (frozen model)") { Sq8Lifecycle.append(batch, path) }
+      timed("append 1000 (frozen model)") { TierLifecycle.append(Sq8Codec(), batch, path) }
       // every 97th id: ~100 deletes spread over ~min(100, buckets) buckets
       val del1 = spark.range(100).select((col("id") * 97L).as("id"))
-      timed("delete 100 PRUNED (hint)") { Sq8Lifecycle.delete(del1, path) }
+      timed("delete 100 PRUNED (hint)") { TierLifecycle.delete(del1, path) }
       // +1 offset: never ≡ 0 (mod 97), so the two delete sets are
       // provably disjoint — the unpruned leg deletes 100 LIVE rows
       val del2 = spark.range(100).select((col("id") * 97L + 1L).as("id"))
@@ -56,7 +56,7 @@ object TierProbe {
         println(s"[tier]   compact rewrote $k buckets")
       }
       timed("rebuild (retrain + re-encode)") {
-        Sq8Lifecycle.rebuild(vecs, path) }
+        TierLifecycle.rebuild(Sq8Codec(), vecs, path) }
     } finally {
       graft.streaming.Streams.deleteTree(root)
       graft.streaming.Streams.deleteTree(java.nio.file.Paths.get(dir))

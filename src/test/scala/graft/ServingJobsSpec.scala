@@ -1,12 +1,9 @@
 package graft
 
 import graft.operators.{GraphIndex, IndexLifecycle, Pq, PqLifecycle, ServingState}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** Job ceilings of a WARM point query over each persisted index kind:
   * once a tree is open, a call runs only its data jobs — no schema
@@ -24,30 +21,7 @@ class ServingJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val qvec: Array[Float] =
     vecs.filter(col("id") === 7L).select("vec").head().getSeq[Float](0).toArray
 
-  /** Jobs `body` starts, counted by job group (the KnnKernelSpec idiom:
-    * listener events arrive in order, so once a later marker job is
-    * seen every job of the body has been seen too).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"serving-jobs-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull + "")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "measured call")
-      try body finally spark.sparkContext.clearJobGroup()
-      val marker = s"$group-marker"
-      spark.sparkContext.setJobGroup(marker, "marker")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(marker))
-      seen.asScala.count(_ == group)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Unit): Int = TestSession.jobsOf(body)
 
   private def withTree(prefix: String)(f: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)

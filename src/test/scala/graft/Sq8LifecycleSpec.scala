@@ -1,115 +1,29 @@
 package graft
 
-import graft.operators.{Sq8, Sq8Lifecycle}
-import org.apache.spark.sql.functions._
+import graft.functions.VectorMetric
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQ8 persisted-lifecycle contracts (the round-14 verdict task): the
-  * frozen-model append ties with the original build (identical content
-  * → identical codes, no retrain), delete rewrites only the affected
-  * buckets (untouched partitions byte-identical), the sidecar model
-  * round-trips, and the disk query serves the in-session ranking.
+/** SQ8 persisted-lifecycle contracts, the SQ8 rows of the shared
+  * flat-tier contracts (see TierRows): the frozen-model append ties
+  * with the original build (identical content → identical codes, no
+  * retrain), delete rewrites only the affected buckets (untouched
+  * partitions byte-identical), the sidecar model round-trips, and the
+  * driver key's five-phase table matches the shared tier arithmetic.
   */
-class Sq8LifecycleSpec extends AnyFunSuite {
-  lazy val spark = TestSession.spark
-  private val sf = "/root/testdata/sf0.001"
-
-  /** Temp index trees must not outlive the test run. */
-  private def withTree[T](prefix: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir.toString)
-    finally graft.streaming.Streams.deleteTree(dir)
-  }
-
+class Sq8LifecycleSpec extends AnyFunSuite with TierRows {
   test("frozen-model append ties with the original build; disk query serves it") {
-    withTree("graft_sq8lc_append") { path =>
-    val s1 = Sq8Lifecycle.build(spark, sf, path)
-    assert(s1.isBuilt && s1.version == 1 && s1.size == 500 && !s1.isDirty)
-
-    // the sidecar model round-trips exactly (the index carries its
-    // FULL model — append/query never depend on the session memo)
-    val (m, metric, buckets) = Sq8Lifecycle.loadModel(spark, path)
-    val trained = Sq8.train(spark, sf)
-    assert(metric == graft.functions.VectorMetric.L2)
-    assert(buckets == graft.operators.TierLifecycle.bucketsFor(500),
-      "the build's bucket count must persist in _meta")
-    assert(m.mins.toSeq == trained.mins.toSeq && m.scales.toSeq == trained.scales.toSeq,
-      "_model sidecar must round-trip the trained (min, scale) arrays")
-
-    // append a COPY of vector 1 under a fresh id: the frozen model
-    // must encode identical content to byte-identical codes
-    import spark.implicits._
-    val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val s2 = Sq8Lifecycle.append(Seq((9999L, v1.toSeq)).toDF("id", "vec"), path)
-    assert(s2.version == s1.version, "append must not retrain")
-    assert(s2.size == 501 && s2.dirtyCount == 1 && s2.isDirty)
-    val codes = spark.read.parquet(path)
-      .filter(col("id").isin(1L, 9999L))
-      .select(col("id"), col("codes")).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(codes(9999L) == codes(1L),
-      "identical content must encode to byte-identical codes under the frozen model")
-
-    // and the disk query surfaces both copies as the tied top 2
-    val top2 = Sq8Lifecycle.query(spark, path, v1, k = 2)
-      .collect().map(_.getLong(0)).toSet
-    assert(top2 == Set(1L, 9999L), s"appended copy must tie with its original, got $top2")
+    eachTier("append", Seq(sq8Tier)) { (t, path) =>
+      assert(sq8Tier.codec.readSidecars(spark, path)._1.metric == VectorMetric.L2,
+        "the default SQ8 tree must persist the L2 metric in _meta")
+      appendRow(t, path)
     }
   }
 
   test("delete rewrites only the affected buckets; read-back shrinks; no-op for missing ids") {
-    withTree("graft_sq8lc_delete") { path =>
-    val s1 = Sq8Lifecycle.build(spark, sf, path)
-
-    val fsys = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def partitionFiles(): Map[String, Seq[(String, Long)]] =
-      fsys.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cluster_id="))
-        .map { d =>
-          d.getPath.getName ->
-            fsys.listStatus(d.getPath).toSeq
-              .map(f => (f.getPath.getName, f.getModificationTime))
-              .sortBy(_._1)
-        }.toMap
-    val before = partitionFiles()
-    assert(before.size == graft.operators.TierLifecycle.bucketsFor(500),
-      "the build must land one partition per bucket")
-
-    // id 0 lives in bucket 0 (cluster_id = id mod buckets)
-    import spark.implicits._
-    val s2 = Sq8Lifecycle.delete(Seq(0L).toDF("id"), path)
-    assert(s2.size == s1.size - 1 && s2.dirtyCount == 1 && s2.isDirty)
-    assert(s2.version == s1.version, "delete must not retrain")
-    assert(spark.read.parquet(path).filter(col("id") === 0L).count() == 0)
-    assert(spark.read.parquet(path).count() == 499, "read-back must shrink")
-
-    val after = partitionFiles()
-    val untouched = before.keys.filterNot(_ == "cluster_id=0")
-    untouched.foreach { p =>
-      assert(after(p) == before(p), s"partition $p was rewritten by an unrelated delete")
-    }
-
-    // missing ids are a no-op (reference remove_vector returns False)
-    val s3 = Sq8Lifecycle.delete(Seq(424242L).toDF("id"), path)
-    assert(s3.size == s2.size && s3.dirtyCount == s2.dirtyCount)
-    }
+    eachTier("delete", Seq(sq8Tier))(deleteRow)
   }
 
   test("driver key: the five-phase state table matches the shared tier arithmetic") {
-    val rows = Sq8Lifecycle.sq8Lifecycle(spark, sf).collect()
-    assert(rows.length == 5)
-    val n = 500L
-    val d = math.ceil(0.05 * n).toLong
-    val r = (0L until n).count(_ % 7 == 0).toLong
-    val got = rows.map(x => (x.getInt(0), x.getInt(1), x.getBoolean(2),
-      x.getLong(3), x.getLong(4), x.getBoolean(5))).toSeq
-    assert(got == Seq(
-      (1, 1, false, 0L, n, false),
-      (2, 1, true, d, n + d, 1.0 * d / n >= 0.1),
-      (3, 1, true, d + r, n + d - r, 1.0 * (d + r) / n >= 0.1),
-      (4, 1, true, d + r, n + d - r, 1.0 * (d + r) / n >= 0.1),
-      (5, 2, false, 0L, n + d - r, false)))
+    fivePhaseRow(sq8Tier)
   }
 }

@@ -368,7 +368,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("D17 BQ streamed appends: accumulation ties with one batch append; replay no-ops") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{BqLifecycle, IndexLifecycle}
+    import graft.operators.{BqCodec, IndexLifecycle, TierLifecycle}
     val root = java.nio.file.Files.createTempDirectory("graft_d17")
     val idxA = root.resolve("idxA").toString // streamed (sink body)
     val idxB = root.resolve("idxB").toString // one-shot batch twin
@@ -376,8 +376,8 @@ class StreamsSpec extends AnyFunSuite {
       val vecs = graft.Tables.embeddings(spark, sf)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val n = vecs.count()
-      BqLifecycle.build(spark, sf, idxA)
-      BqLifecycle.build(spark, sf, idxB)
+      TierLifecycle.build(BqCodec, spark, sf, idxA)
+      TierLifecycle.build(BqCodec, spark, sf, idxB)
       val b1 = vecs.filter(col("id") < 4).select((col("id") + n).as("id"), col("vec"))
       val b2 = vecs.filter(col("id") === 4).select((col("id") + n).as("id"), col("vec"))
       Streams.bqAppendBatch(idxA, "ckptA")(b1, 0L)
@@ -393,7 +393,7 @@ class StreamsSpec extends AnyFunSuite {
         "a replayed batch landed duplicate code rows")
       // cross-batch accumulation: streamed codes == one batch append
       // of the SAME arrival set (both frozen-threshold encodes)
-      BqLifecycle.append(b1.union(b2), idxB)
+      TierLifecycle.append(BqCodec, b1.union(b2), idxB)
       def codeRows(idx: String) = spark.read.parquet(idx)
         .select(col("cluster_id").cast("int"), col("id"), col("codes"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq))

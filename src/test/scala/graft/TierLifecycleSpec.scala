@@ -1,113 +1,104 @@
 package graft
 
-import graft.operators.{Bq, BqLifecycle, Pca, PcaLifecycle, TierLifecycle}
+import graft.operators.{Bq, BqCodec, IndexLifecycle, PcaCodec, Sq8Codec, TierCodec, TierLifecycle}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BQ/PCA persisted-lifecycle contracts on the shared TierLifecycle
-  * seam (the Sq8LifecycleSpec pins mirrored onto the other two flat
-  * tiers): frozen-model appends tie byte-exactly with the build,
-  * deletes rewrite only the affected buckets, sidecar models
-  * round-trip, and disk queries serve the two-tier shape.
+/** Persisted flat-tier contracts on the shared TierLifecycle seam, as
+  * rows over the three codecs (SQ8, BQ, PCA; see TierRows): frozen-model
+  * appends tie byte-exactly with the build, disk queries serve the
+  * appended copy, deletes rewrite only the affected buckets, sidecar
+  * models round-trip in their pinned format, rebuilds re-encode under
+  * the new model, and failures leave nothing pinned in the session
+  * cache. The SQ8 append/delete/driver-key rows run in Sq8LifecycleSpec.
   */
-class TierLifecycleSpec extends AnyFunSuite {
-  lazy val spark = TestSession.spark
-  private val sf = "/root/testdata/sf0.001"
-
-  /** Temp index trees must not outlive the test run (the TempTrees/
-    * deleteTree hygiene the production code enforces).
-    */
-  private def withTree[T](prefix: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir.toString)
-    finally graft.streaming.Streams.deleteTree(dir)
-  }
+class TierLifecycleSpec extends AnyFunSuite with TierRows {
+  private def causes(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
+      .map(c => Option(c.getMessage).getOrElse("")).toSeq
 
   test("BQ: frozen-threshold append ties byte-exactly; hamming disk query + refine serve it") {
-    withTree("graft_bqlc") { path =>
-    val s1 = BqLifecycle.build(spark, sf, path)
-    assert(s1.isBuilt && s1.version == 1 && s1.size == 500 && !s1.isDirty)
-
-    val (m, buckets) = BqLifecycle.loadModel(spark, path)
-    val trained = Bq.train(spark, sf)
-    assert(m.thresholds.toSeq == trained.thresholds.toSeq,
-      "_model sidecar must round-trip the trained mean thresholds")
-    assert(buckets == TierLifecycle.bucketsFor(500))
-
-    import spark.implicits._
-    val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val s2 = BqLifecycle.append(Seq((9999L, v1.toSeq)).toDF("id", "vec"), path)
-    assert(s2.version == s1.version && s2.size == 501 && s2.dirtyCount == 1)
-    val codes = spark.read.parquet(path).filter(col("id").isin(1L, 9999L))
-      .select(col("id"), col("codes")).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(codes(9999L) == codes(1L),
-      "identical content must sign-encode byte-identically under frozen thresholds")
-
-    // hamming-only disk query: the copy ties with its original at h=0
-    val top2 = BqLifecycle.query(spark, path, v1, k = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(top2.map(_._1).toSet == Set(1L, 9999L) && top2.forall(_._2 == 0.0),
-      s"appended copy must tie at hamming 0, got ${top2.toSeq}")
-    // refined query against the primary store re-ranks exactly
-    val raw = Tables.embeddings(spark, sf)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val refined = BqLifecycle.query(spark, path, v1, k = 2,
-      refineWith = Some(raw)).collect().map(_.getLong(0)).toSet
-    assert(refined.contains(1L), "refine must keep the exact nearest neighbor")
-
-    // delete rewrites only the hit bucket (id 3 -> bucket 3)
-    val fsys = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(bucket: Int) = fsys.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/cluster_id=$bucket")).toSeq
-      .map(f => (f.getPath.getName, f.getModificationTime)).sortBy(_._1)
-    val untouchedBefore = files(5)
-    val s3 = BqLifecycle.delete(Seq(3L).toDF("id"), path)
-    assert(s3.size == s2.size - 1)
-    assert(files(5) == untouchedBefore, "an unrelated bucket was rewritten")
-    assert(spark.read.parquet(path).filter(col("id") === 3L).count() == 0)
-    }
+    eachTier("append", Seq(bqTier))((t, path) => appendRow(t, path))
   }
 
   test("PCA: frozen-basis append projects byte-exactly; reduced disk query + refine serve it") {
-    withTree("graft_pcalc") { path =>
-    val s1 = PcaLifecycle.build(spark, sf, path)
-    assert(s1.isBuilt && s1.version == 1 && s1.size == 500 && !s1.isDirty)
+    eachTier("append", Seq(pcaTier))((t, path) => appendRow(t, path))
+  }
 
-    val (basis, dim, d, _) = PcaLifecycle.loadModel(spark, path)
-    val trained = Pca.train(spark, sf)
-    assert(dim == trained.dim && d == Pca.ReducedDim)
-    assert((0 until d).forall(i => basis(i).toSeq == trained.basis(i).toSeq),
-      "_model sidecar must round-trip the top-d component rows")
+  test("BQ/PCA delete rewrites only the hit bucket; read-back shrinks; missing ids no-op") {
+    eachTier("delete", Seq(bqTier, pcaTier))(deleteRow)
+  }
 
-    import spark.implicits._
-    val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val s2 = PcaLifecycle.append(Seq((9999L, v1.toSeq)).toDF("id", "vec"), path)
-    assert(s2.version == s1.version && s2.size == 501 && s2.dirtyCount == 1)
-    val rvecs = spark.read.parquet(path).filter(col("id").isin(1L, 9999L))
-      .select(col("id"), col("rvec")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(rvecs(9999L) == rvecs(1L),
-      "identical content must project byte-identically under the frozen basis")
+  test("sidecar format: every codec writes the _model/_meta schemas it always has") {
+    eachTier("format") { (t, path) =>
+      def schema(sidecar: String): Seq[String] =
+        spark.read.parquet(s"$path/$sidecar").schema.fields.toSeq
+          .map(f => s"${f.name} ${f.dataType.sql}")
+      assert(schema("_model") == t.model, s"${t.name} _model")
+      assert(schema("_meta") == t.meta, s"${t.name} _meta")
+    }
+  }
 
-    // reduced-space disk query: the copy ties with its original at 0
-    val top2 = PcaLifecycle.query(spark, path, v1, k = 2)
-      .collect().map(_.getLong(0)).toSet
-    assert(top2 == Set(1L, 9999L), s"appended copy must tie, got $top2")
-    val raw = Tables.embeddings(spark, sf)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val refined = PcaLifecycle.query(spark, path, v1, k = 2,
-      refineWith = Some(raw)).collect().map(_.getLong(0)).toSet
-    assert(refined.contains(1L), "refine must keep the exact nearest neighbor")
+  /** Frames distinct per codec, so one codec's leaked cache entry
+    * cannot stand in for the next codec's (cache() dedups by plan).
+    */
+  private def salt(t: Tier[_]): Long = tiers.indexWhere(_.name == t.name).toLong
+
+  test("a failed rebuild leaves nothing cached and the tree serving") {
+    eachTier("failed_rebuild") { (t, path) =>
+      val s0 = IndexLifecycle.status(spark, path)
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      // rebuilding over no contents fails the trainer's own precondition
+      val e = intercept[Exception] {
+        TierLifecycle.rebuild(t.codec, raw.filter(col("id") === -1L - salt(t)), path)
+      }
+      assert(causes(e).exists(_.contains("empty corpus")),
+        s"${t.name}: rebuild over no contents must say so, got ${causes(e)}")
+      assert(spark.sparkContext.getPersistentRDDs.size == cached,
+        s"${t.name}: a failed rebuild left its contents cached")
+      assert(IndexLifecycle.status(spark, path) == s0, s"${t.name}: state moved")
+      assert(TierLifecycle.query(t.codec, spark, path, vecOf(1L), k = 1)
+        .collect().head.getLong(0) == 1L, s"${t.name}: the tree must keep serving")
+    }
+  }
+
+  test("a failed append leaves nothing cached and the tree serving") {
+    eachTier("failed_append") { (t, path) =>
+      import spark.implicits._
+      val s0 = IndexLifecycle.status(spark, path)
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      // a 3-dim vector against a 64-dim model fails the encode kernel
+      val e = intercept[Exception] {
+        TierLifecycle.append(t.codec,
+          Seq((9999L + salt(t), Seq(1f, 2f, 3f))).toDF("id", "vec"), path)
+      }
+      assert(causes(e).exists(_.contains("vector dim 3")),
+        s"${t.name}: a wrong-dim append must fail the encode's dim check, got ${causes(e)}")
+      assert(spark.sparkContext.getPersistentRDDs.size == cached,
+        s"${t.name}: a failed append left its batch cached")
+      assert(IndexLifecycle.status(spark, path) == s0, s"${t.name}: state moved")
+      assert(TierLifecycle.query(t.codec, spark, path, vecOf(1L), k = 1)
+        .collect().head.getLong(0) == 1L, s"${t.name}: the tree must keep serving")
+    }
+  }
+
+  test("a tier disk query reads each sidecar in one job") {
+    // 2 sidecar reads, the tree's schema inference, the top-k; reading
+    // the sidecars with schema inference and a distributed sort took
+    // 8 jobs per query
+    eachTier("jobs") { (t, path) =>
+      val v1 = vecOf(1L)
+      val jobs = TestSession.jobsOf {
+        TierLifecycle.query(t.codec, spark, path, v1, k = 10).collect(); ()
+      }
+      info(s"${t.name} disk query: $jobs jobs")
+      assert(jobs <= 4, s"${t.name} disk query ran $jobs jobs")
     }
   }
 
   test("deletePruned's bucket-hint filter partition-prunes the scan (one file read of 16)") {
     withTree("graft_prune") { path =>
-    graft.operators.Sq8Lifecycle.build(spark, sf, path)
+    TierLifecycle.build(Sq8Codec(), spark, sf, path)
     // the exact filter form deleteFrom applies under a bucket hint
     val df = spark.read.parquet(path)
       .filter(col("cluster_id").isInCollection(Seq(3)))
@@ -130,45 +121,36 @@ class TierLifecycleSpec extends AnyFunSuite {
     // and the pruned delete's semantics match the unpruned contract:
     // deleting a missing id whose bucket exists is still a no-op
     import spark.implicits._
-    val s0 = graft.operators.IndexLifecycle.status(spark, path)
-    val s1 = graft.operators.Sq8Lifecycle.delete(Seq(500003L).toDF("id"), path)
+    val s0 = IndexLifecycle.status(spark, path)
+    val s1 = TierLifecycle.delete(Seq(500003L).toDF("id"), path)
     assert(s1.size == s0.size && s1.dirtyCount == s0.dirtyCount,
       "missing-id delete must stay a no-op under the bucket hint")
     }
   }
 
   test("every tier's disk query refuses a half-applied tree with the lifecycle's message") {
-    import spark.implicits._
-    val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    // (build, query) per tier — the serve-path precondition sweep: a
-    // crash between a delete's two swap renames leaves _old_cluster_id=N,
-    // and the query must refuse loudly, never answer minus a bucket
-    val tiers: Seq[(String, String => Unit, String => Unit)] = Seq(
-      ("sq8",
-        p => { graft.operators.Sq8Lifecycle.build(spark, sf, p); () },
-        p => { graft.operators.Sq8Lifecycle.query(spark, p, v1, 2).collect(); () }),
-      ("bq",
-        p => { BqLifecycle.build(spark, sf, p); () },
-        p => { BqLifecycle.query(spark, p, v1, 2).collect(); () }),
-      ("pca",
-        p => { PcaLifecycle.build(spark, sf, p); () },
-        p => { PcaLifecycle.query(spark, p, v1, 2).collect(); () }))
-    tiers.foreach { case (tier, build, query) =>
-      withTree(s"graft_${tier}_halfapplied") { path =>
-        build(path)
-        java.nio.file.Files.createDirectory(
-          java.nio.file.Paths.get(path, "_old_cluster_id=3"))
-        val e = intercept[IllegalArgumentException] { query(path) }
-        assert(e.getMessage.contains("half-applied mutation"),
-          s"$tier query must refuse with the lifecycle's message, got: ${e.getMessage}")
+    val v1 = vecOf(1L)
+    // the serve-path precondition sweep: a crash between a delete's two
+    // swap renames leaves _old_cluster_id=N, and the query must refuse
+    // loudly, never answer minus a bucket
+    eachTier("halfapplied") { (t, path) =>
+      java.nio.file.Files.createDirectory(
+        java.nio.file.Paths.get(path, "_old_cluster_id=3"))
+      val e = intercept[IllegalArgumentException] {
+        TierLifecycle.query(t.codec, spark, path, v1, 2).collect()
       }
-      // and an unbuilt tree refuses with the lifecycle's message too,
-      // not an opaque parquet path error from the missing _model
-      withTree(s"graft_${tier}_unbuilt") { path =>
-        val e = intercept[IllegalArgumentException] { query(path) }
+      assert(e.getMessage.contains("half-applied mutation"),
+        s"${t.name} query must refuse with the lifecycle's message, got: ${e.getMessage}")
+    }
+    // and an unbuilt tree refuses with the lifecycle's message too,
+    // not an opaque parquet path error from the missing _model
+    tiers.foreach { t =>
+      withTree(s"graft_${t.name}_unbuilt") { path =>
+        val e = intercept[IllegalArgumentException] {
+          TierLifecycle.query(t.codec, spark, path, v1, 2).collect()
+        }
         assert(e.getMessage.contains("build first"),
-          s"$tier query on an unbuilt tree must say 'build first', got: ${e.getMessage}")
+          s"${t.name} query on an unbuilt tree must say 'build first', got: ${e.getMessage}")
       }
     }
   }
@@ -176,15 +158,14 @@ class TierLifecycleSpec extends AnyFunSuite {
   test("tier compact: touched buckets collapse, untouched byte-identical, rows conserved, idempotent") {
     withTree("graft_tier_cp") { path =>
       import spark.implicits._
-      graft.operators.Sq8Lifecycle.build(spark, sf, path)
-      val (_, _, buckets) = graft.operators.Sq8Lifecycle.loadModel(spark, path)
-      val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      TierLifecycle.build(Sq8Codec(), spark, sf, path)
+      val (_, buckets) = Sq8Codec().readSidecars(spark, path)
+      val v1 = vecOf(1L)
       // two appends aimed at bucket 0 only (ids ≡ 0 mod buckets):
       // bucket 0 accumulates part-files, every other bucket untouched
-      graft.operators.Sq8Lifecycle.append(
+      TierLifecycle.append(Sq8Codec(),
         Seq((buckets * 1000L, v1.toSeq)).toDF("id", "vec"), path)
-      graft.operators.Sq8Lifecycle.append(
+      TierLifecycle.append(Sq8Codec(),
         Seq((buckets * 2000L, v1.toSeq)).toDF("id", "vec"), path)
       val fsys = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -196,7 +177,7 @@ class TierLifecycleSpec extends AnyFunSuite {
       val untouchedBefore = files(1)
       val idsBefore = spark.read.parquet(path)
         .select("id").collect().map(_.getLong(0)).sorted.toSeq
-      val n1 = graft.operators.IndexLifecycle.compact(spark, path, maxFiles = 1)
+      val n1 = IndexLifecycle.compact(spark, path, maxFiles = 1)
       assert(n1 == 1, s"only bucket 0 exceeded the threshold, rewrote $n1")
       assert(files(0).size == 1, "the touched bucket must collapse to one file")
       assert(files(1) == untouchedBefore,
@@ -205,28 +186,25 @@ class TierLifecycleSpec extends AnyFunSuite {
         .select("id").collect().map(_.getLong(0)).sorted.toSeq
       assert(idsAfter == idsBefore, "compaction must be content-neutral")
       // idempotent: nothing left over the threshold
-      assert(graft.operators.IndexLifecycle.compact(spark, path, maxFiles = 1) == 0)
+      assert(IndexLifecycle.compact(spark, path, maxFiles = 1) == 0)
     }
   }
 
   test("recoverMutation lands an accounted-but-unmoved append and restores delete asides") {
-    import graft.operators.{IndexLifecycle, Sq8Lifecycle}
     withTree("graft_recover") { path =>
       import spark.implicits._
-      Sq8Lifecycle.build(spark, sf, path)
-      val (m, _, buckets) = Sq8Lifecycle.loadModel(spark, path)
+      val codec = Sq8Codec()
+      TierLifecycle.build(codec, spark, sf, path)
+      val (m, buckets) = codec.readSidecars(spark, path)
       val s0 = IndexLifecycle.status(spark, path)
       // simulate a landAppend crash AFTER the state write (batch 0 of
       // stream "s" accounted, watermark recorded) but BEFORE the
       // move-in: the staged row exists only under _append_tmp
-      val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val v1 = vecOf(1L)
       val newId = 9999L
       Seq((newId, v1.toSeq)).toDF("id", "vec")
-        .select(graft.operators.TierLifecycle.bucketOf(col("id"), buckets)
-            .as("cluster_id"), col("id"),
-          graft.functions.Sq8Functions.sq8Encode(col("vec"), m.mins, m.scales)
-            .as("codes"))
+        .select(TierLifecycle.bucketOf(col("id"), buckets).as("cluster_id"),
+          col("id"), codec.encode(m, col("vec")).as("codes"))
         .repartition(col("cluster_id"))
         .write.mode("overwrite").partitionBy("cluster_id")
         .parquet(s"$path/_append_tmp")
@@ -235,7 +213,7 @@ class TierLifecycleSpec extends AnyFunSuite {
           size = s0.size + 1).withAppliedBatch("s", 0L))
       // serve refuses while damaged
       intercept[IllegalArgumentException] {
-        Sq8Lifecycle.query(spark, path, v1, 1).collect()
+        TierLifecycle.query(codec, spark, path, v1, 1).collect()
       }
       assert(IndexLifecycle.recoverMutation(spark, path),
         "a damaged tree must report repairs")
@@ -244,7 +222,7 @@ class TierLifecycleSpec extends AnyFunSuite {
       assert(spark.read.parquet(path).filter(col("id") === newId).count() == 1)
       val s1 = IndexLifecycle.status(spark, path)
       assert(s1.size == s0.size + 1 && s1.appliedBatchFor("s") == 0L)
-      assert(Sq8Lifecycle.query(spark, path, v1, 1).count() == 1)
+      assert(TierLifecycle.query(codec, spark, path, v1, 1).count() == 1)
 
       // crashed delete/compact swap: aside with MISSING live bucket is
       // the authoritative content — restored, counts intact
@@ -267,41 +245,32 @@ class TierLifecycleSpec extends AnyFunSuite {
   }
 
   test("rebuild enters a damaged tree (recovery-then-rebuild), serve keeps refusing") {
-    import graft.operators.{IndexLifecycle, Sq8Lifecycle}
     withTree("graft_recover_rb") { path =>
-      import spark.implicits._
-      Sq8Lifecycle.build(spark, sf, path)
+      TierLifecycle.build(Sq8Codec(), spark, sf, path)
       java.nio.file.Files.createDirectory(
         java.nio.file.Paths.get(path, "_append_tmp"))
-      val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val v1 = vecOf(1L)
       intercept[IllegalArgumentException] {
-        Sq8Lifecycle.query(spark, path, v1, 1).collect()
+        TierLifecycle.query(Sq8Codec(), spark, path, v1, 1).collect()
       }
-      val vecs = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val s = Sq8Lifecycle.rebuild(vecs, path) // recovers, then rebuilds
+      val s = TierLifecycle.rebuild(Sq8Codec(), raw, path) // recovers, then rebuilds
       assert(s.version == 2 && !s.isDirty)
-      assert(Sq8Lifecycle.query(spark, path, v1, 1)
+      assert(TierLifecycle.query(Sq8Codec(), spark, path, v1, 1)
         .collect().head.getLong(0) == 1L)
     }
   }
 
   test("rebuildIfNeeded: no-op below the dirty threshold, rebuilds above it") {
-    import graft.operators.Sq8Lifecycle
     withTree("graft_rbn") { path =>
-      import spark.implicits._
-      val s1 = Sq8Lifecycle.build(spark, sf, path)
-      val vecs = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val s1 = TierLifecycle.build(Sq8Codec(), spark, sf, path)
       // clean index: the policy must not fire
-      val s2 = Sq8Lifecycle.rebuildIfNeeded(vecs, path)
+      val s2 = TierLifecycle.rebuildIfNeeded(Sq8Codec(), raw, path)
       assert(s2.version == s1.version && !s2.isDirty, "clean index must be a no-op")
       // cross the threshold (delete every 7th: ~14% > 10%) — the
       // policy fires and the rebuild resets the state
-      Sq8Lifecycle.delete(vecs.filter(col("id") % 7 === 0).select("id"), path)
-      val current = vecs.filter(col("id") % 7 =!= 0)
-      val s3 = Sq8Lifecycle.rebuildIfNeeded(current, path)
+      TierLifecycle.delete(raw.filter(col("id") % 7 === 0).select("id"), path)
+      val current = raw.filter(col("id") % 7 =!= 0)
+      val s3 = TierLifecycle.rebuildIfNeeded(Sq8Codec(), current, path)
       assert(s3.version == s1.version + 1 && !s3.isDirty && s3.dirtyCount == 0L)
       assert(spark.read.parquet(path).count() == current.count())
     }
@@ -309,13 +278,10 @@ class TierLifecycleSpec extends AnyFunSuite {
 
   test("BQ persisted refine serves the caller's metric (cosine ≡ in-session Bq.topK)") {
     withTree("graft_bq_metric") { path =>
-      BqLifecycle.build(spark, sf, path)
-      val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 0L)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
-      val raw = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      TierLifecycle.build(BqCodec, spark, sf, path)
+      val q = vecOf(0L)
       val cos = graft.functions.VectorMetric.Cosine
-      val viaDisk = BqLifecycle.query(spark, path, q, k = 5,
+      val viaDisk = TierLifecycle.query(BqCodec, spark, path, q, k = 5,
         refineWith = Some(raw), metric = cos)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val viaSession = Bq.topK(spark, sf, q, k = 5, metric = cos)
@@ -326,97 +292,78 @@ class TierLifecycleSpec extends AnyFunSuite {
   }
 
   test("BQ/PCA driver keys: the shared five-phase arithmetic (rebuild closes the loop)") {
-    val n = 500L
-    val dd = math.ceil(0.05 * n).toLong
-    val r = (0L until n).count(_ % 7 == 0).toLong
-    val want = Seq(
-      (1, 1, false, 0L, n, false),
-      (2, 1, true, dd, n + dd, 1.0 * dd / n >= 0.1),
-      (3, 1, true, dd + r, n + dd - r, 1.0 * (dd + r) / n >= 0.1),
-      (4, 1, true, dd + r, n + dd - r, 1.0 * (dd + r) / n >= 0.1),
-      (5, 2, false, 0L, n + dd - r, false))
-    Seq(BqLifecycle.bqLifecycle(spark, sf), PcaLifecycle.pcaLifecycle(spark, sf))
-      .foreach { df =>
-        val got = df.collect().map(x => (x.getInt(0), x.getInt(1),
-          x.getBoolean(2), x.getLong(3), x.getLong(4), x.getBoolean(5))).toSeq
-        assert(got == want)
-      }
+    Seq(bqTier, pcaTier).foreach(fivePhaseRow)
   }
 
   test("rebuild re-encodes under the NEW model and removes the old/staged trees") {
-    withTree("graft_bq_rebuild") { path =>
+    // current contents = the corpus under a per-dimension affine map
+    // (component i becomes (i+1)·x + 1): every codec's retrained model
+    // MUST move — PCA's included, which a uniform shift or scale would
+    // leave unchanged — so stale-model codes would be detectably wrong
+    val moved = raw.select(col("id"),
+      transform(col("vec"), (x, i) => x * (i + 1).cast("float") + lit(1.0f)).as("vec"))
+    def row[M](t: Tier[M], path: String): Unit = {
       import spark.implicits._
-      val s1 = BqLifecycle.build(spark, sf, path)
-      val (oldModel, _) = BqLifecycle.loadModel(spark, path)
-      // current contents = a SHIFTED corpus (every component +1.0):
-      // the retrained thresholds MUST move, so stale-model codes would
-      // be detectably wrong
-      val shifted = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), x => (x + lit(1.0f))).as("vec"))
-      val s2 = BqLifecycle.rebuild(shifted, path)
-      assert(s2.version == s1.version + 1 && !s2.isDirty && s2.dirtyCount == 0L)
-      val (newModel, _) = BqLifecycle.loadModel(spark, path)
-      assert(newModel.thresholds.toSeq != oldModel.thresholds.toSeq,
-        "rebuild must retrain the thresholds on the current contents")
-      assert(newModel.thresholds.zip(oldModel.thresholds).forall {
-        case (nw, od) => math.abs(nw - (od + 1.0)) < 1e-4 },
-        "the retrained means must track the shifted content")
-      // code coherence: the stored codes are the NEW model's encoding
+      val s1 = IndexLifecycle.status(spark, path)
+      val (oldModel, _) = t.codec.readSidecars(spark, path)
+      val s2 = TierLifecycle.rebuild(t.codec, moved, path)
+      assert(s2.version == s1.version + 1 && !s2.isDirty && s2.dirtyCount == 0L, t.name)
+      val (newModel, _) = t.codec.readSidecars(spark, path)
+      assert(t.flat(newModel) != t.flat(oldModel),
+        s"${t.name}: rebuild must retrain the model on the current contents")
+      val want = t.flat(t.codec.retrain(moved, oldModel))
+      assert(t.flat(newModel).zip(want).forall { case (a, b) => math.abs(a - b) <= 1e-9 } &&
+        t.flat(newModel).size == want.size,
+        s"${t.name}: the persisted model must be the one trained on the current contents")
+      (oldModel, newModel) match {
+        case (od: Bq.Model, nw: Bq.Model) =>
+          assert(nw.thresholds.indices.forall { i =>
+            math.abs(nw.thresholds(i) - ((i + 1) * od.thresholds(i) + 1.0)) < 1e-4 },
+            "BQ's retrained means must track the moved content")
+        case _ =>
+      }
+      // code coherence: the stored payload is the NEW model's encoding
       // of the new contents, byte-for-byte
-      val v0 = shifted.filter(col("id") === 0L)
-        .select(col("vec")).head().getSeq[Float](0).toArray
-      val stored = spark.read.parquet(path).filter(col("id") === 0L)
-        .select(col("codes")).head().getAs[Array[Byte]](0).toSeq
-      assert(stored == Bq.encodeQuery(v0, newModel).toSeq,
-        "stored codes must be the NEW model's encoding")
+      val v0 = moved.filter(col("id") === 0L).select("vec").head().getSeq[Float](0)
+      val expect = Seq((0L, v0)).toDF("id", "vec")
+        .select(col("id"), t.codec.encode(newModel, col("vec")).as(t.codec.payload))
+        .collect().map(r => r.get(1) match {
+          case b: Array[Byte] => b.toSeq
+          case s: scala.collection.Seq[_] => s.toSeq
+        }).head
+      assert(payloads(t, path, 0L)(0L) == expect,
+        s"${t.name}: stored payloads must be the NEW model's encoding")
       // the staged tree and the moved-aside old version are gone
       val fsys = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fsys.exists(new org.apache.hadoop.fs.Path(s"${path}_rebuild_tmp")),
-        "staged tree must not survive the swap")
+        s"${t.name}: staged tree must not survive the swap")
       assert(!fsys.exists(new org.apache.hadoop.fs.Path(s"${path}_old_v1")),
-        "the moved-aside old version must be cleaned up")
+        s"${t.name}: the moved-aside old version must be cleaned up")
       // and the rebuilt tree serves (the refusal sweep's precondition
       // passes — no markers anywhere)
-      assert(BqLifecycle.query(spark, path, v0, k = 1)
-        .collect().head.getLong(0) == 0L)
+      assert(TierLifecycle.query(t.codec, spark, path, v0.toArray, k = 1)
+        .collect().head.getLong(0) == 0L, t.name)
     }
+    eachTier("rebuild")((t, path) => row(t, path))
   }
 
   test("rebuild aborts loudly when a concurrent mutation lands during staging") {
     withTree("graft_sq8_abort") { path =>
       import spark.implicits._
-      graft.operators.Sq8Lifecycle.build(spark, sf, path)
-      val vecs = Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val v9 = Tables.embeddings(spark, sf).filter(col("vec_id") === 9L)
-        .select(col("embedding")).head().getSeq[Float](0).toArray
+      TierLifecycle.build(Sq8Codec(), spark, sf, path)
+      val v9 = vecOf(9L)
       // land a delete inside the staging window via the test seam
       val e = intercept[RuntimeException] {
-        TierLifecycle.rebuild(vecs, path, "sq8",
-          (v, buckets, tmp) => {
-            val m = graft.operators.Sq8.trainFrom(v)
-            (v.select(col("id"),
-              graft.functions.Sq8Functions.sq8Encode(col("vec"), m.mins, m.scales)
-                .as("codes")), m.mins.length, () => {
-              m.mins.indices.map(i => (i, m.mins(i), m.scales(i)))
-                .toDF("pos", "lo", "scale")
-                .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_model")
-              Seq((m.mins.length, graft.functions.VectorMetric.L2, buckets))
-                .toDF("dim", "metric", "buckets")
-                .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_meta")
-            })
-          },
-          beforeSwap = () => {
-            graft.operators.Sq8Lifecycle.delete(Seq(9L).toDF("id"), path); ()
-          })
+        TierLifecycle.rebuild(Sq8Codec(), raw, path, beforeSwap = () => {
+          TierLifecycle.delete(Seq(9L).toDF("id"), path); ()
+        })
       }
       assert(e.getMessage.contains("concurrent mutation"),
         s"got: ${e.getMessage}")
       // the live tree kept the concurrent delete and still serves
       assert(spark.read.parquet(path).filter(col("id") === 9L).count() == 0)
-      assert(graft.operators.Sq8Lifecycle.query(spark, path, v9, k = 1)
+      assert(TierLifecycle.query(Sq8Codec(), spark, path, v9, k = 1)
         .collect().nonEmpty)
     }
   }
