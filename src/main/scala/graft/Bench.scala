@@ -235,7 +235,7 @@ object Bench {
         catch { case _: Throwable => () }
       }
     }
-    // memos are one-time by design (session TrieMap caches) — timed once;
+    // memos are one-time by design (graft.Memo session entries) — timed once;
     // the QUERY set runs SPARK_GRAFT_BENCH_RUNS times (default 3) and each
     // key reports its MEDIAN, with min/max spread alongside, so a single
     // noisy pass on this virtualized disk (measured 2-4× swings between
@@ -301,7 +301,7 @@ object Bench {
       .filter(_.nonEmpty) // errored runs' wall-clock is meaningless
       .map(ss => s"""{"median":${median(ss)},"spread":[${ss.min},${ss.max}]}""")
       .getOrElse("null")
-    // memo lines are SINGLE-SHOT warmers (session TrieMap fills — they
+    // memo lines are SINGLE-SHOT warmers (graft.Memo fills — they
     // cannot re-run under the median-of-3), so their run-to-run noise
     // band is ~2× where query medians are tight; the artifact marks
     // them explicitly so round-over-round tooling excludes them BY

@@ -95,8 +95,6 @@ object Tables {
     }
   }
 
-  private val embCounts = scala.collection.concurrent.TrieMap.empty[String, Long]
-
   /** Memoized embeddings row count per corpus dir — the widening
     * arithmetic in filtered ANN serving needs |corpus| per query, and
     * a per-query count() action is a full scan at 100 TB. Corpus dirs
@@ -104,11 +102,10 @@ object Tables {
     * their own size in lifecycle state/`_profile` instead.
     */
   def embeddingsCount(spark: SparkSession, dir: String): Long =
-    embCounts.getOrElseUpdate(dir, embeddings(spark, dir).count())
+    Memo(dir, "tables.embeddingsCount")(embeddings(spark, dir).count())
 
-  /** Drop the memoized count for `dir` — part of the corpus-change
-    * invalidation set IndexLifecycle.build runs: a stale corpus count
-    * feeds defaultK and the filtered-ANN widening arithmetic.
+  /** Drop the session memos for a corpus dir (every module's, see
+    * [[Memo]]); kept as a `String => Unit` entry point.
     */
-  def invalidate(dir: String): Unit = embCounts.remove(dir)
+  def invalidate(dir: String): Unit = Memo.invalidate(dir)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,31 +67,14 @@ object Autotune {
   def axisFloor(composedPermille: Int): Int =
     math.ceil(math.sqrt(composedPermille / 1000.0) * 1000.0).toInt
 
-  private val sweepMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
-  private val tierMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
-
-  /** Drop the memoized grids for `dir` (unpersisting their checkpointed
-    * blocks) — part of the corpus-change invalidation set
-    * IndexLifecycle.build runs, so an in-session data change can never
-    * serve stale tuning curves.
-    */
-  def invalidate(dir: String): Unit =
-    Seq(sweepMemo, tierMemo).foreach { memo =>
-      memo.keys.filter(_._1 == dir).foreach { key =>
-        memo.remove(key).foreach(_.unpersist())
-      }
-    }
-
   /** The E50 sweep, measured once per (dir, k) and pinned (4 rows). */
   def sweepGrid(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
-    sweepMemo.getOrElseUpdate((dir, k),
+    Memo(dir, "autotune.sweepGrid", k)(
       Dedup.annParamSweep(spark, dir, k).localCheckpoint(true))
 
   /** The A24 tier surface, measured once per (dir, k) (24 rows). */
   def tierGrid(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    tierMemo.getOrElseUpdate((dir, k),
+    Memo(dir, "autotune.tierGrid", k)(
       QuantReport.quantTierReport(spark, dir, k).localCheckpoint(true))
 
   /** Storage bytes per vector of each measured tier — the secondary

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.BpeFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,11 +31,6 @@ object Bpe {
   /** merges in rank order, with the pair's count at merge time. */
   case class Model(merges: Array[(String, String)], counts: Array[Long])
 
-  private val models = scala.collection.concurrent.TrieMap.empty[String, Model]
-
-  /** Data-change hook, same contract as the other per-corpus memos. */
-  def invalidate(dir: String): Unit = { models.remove(dir); () }
-
   /** Bounded word-type frequency table: ONE corpus aggregation, then
     * the top-VocabCap types by (count desc, word asc).
     */
@@ -48,37 +43,35 @@ object Bpe {
       .collect().map(r => (r.getString(0), r.getLong(1)))
 
   def train(spark: SparkSession, dir: String): Model =
-    models.getOrElse(dir, synchronized {
-      models.getOrElseUpdate(dir, {
-        var words: Array[(Array[String], Long)] =
-          wordCounts(spark, dir).map { case (w, n) => (w.map(_.toString).toArray, n) }
-        require(words.nonEmpty, "cannot train BPE on an empty corpus")
-        val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        val mCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var round = 0
-        var exhausted = false
-        while (round < NumMerges && !exhausted) {
-          val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-          words.foreach { case (syms, n) =>
-            var i = 0
-            while (i + 1 < syms.length) {
-              val k = (syms(i), syms(i + 1))
-              pairCounts.update(k, pairCounts.getOrElse(k, 0L) + n)
-              i += 1
-            }
+    Memo(dir, "bpe.model") {
+      var words: Array[(Array[String], Long)] =
+        wordCounts(spark, dir).map { case (w, n) => (w.map(_.toString).toArray, n) }
+      require(words.nonEmpty, "cannot train BPE on an empty corpus")
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      val mCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var round = 0
+      var exhausted = false
+      while (round < NumMerges && !exhausted) {
+        val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+        words.foreach { case (syms, n) =>
+          var i = 0
+          while (i + 1 < syms.length) {
+            val k = (syms(i), syms(i + 1))
+            pairCounts.update(k, pairCounts.getOrElse(k, 0L) + n)
+            i += 1
           }
-          if (pairCounts.isEmpty) exhausted = true
-          else {
-            val ((l, r), c) = pairCounts.toSeq
-              .minBy { case ((a, b), n) => (-n, a, b) }
-            merges += ((l, r)); mCounts += c
-            words = words.map { case (syms, n) => (mergePair(syms, l, r), n) }
-          }
-          round += 1
         }
-        Model(merges.toArray, mCounts.toArray)
-      })
-    })
+        if (pairCounts.isEmpty) exhausted = true
+        else {
+          val ((l, r), c) = pairCounts.toSeq
+            .minBy { case ((a, b), n) => (-n, a, b) }
+          merges += ((l, r)); mCounts += c
+          words = words.map { case (syms, n) => (mergePair(syms, l, r), n) }
+        }
+        round += 1
+      }
+      Model(merges.toArray, mCounts.toArray)
+    }
 
   /** One left-to-right fusing pass of (l, r) over a symbol array —
     * the same rule BpeKernel applies, shared here for training.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.{BqFunctions, VectorMetric}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,15 +31,6 @@ object Bq {
     def nBytes: Int = (dim + 7) / 8
   }
 
-  private val models = scala.collection.concurrent.TrieMap.empty[String, Model]
-  private val encoded = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Data-change hook, same contract as Pq/Sq8.invalidate. */
-  def invalidate(dir: String): Unit = {
-    models.remove(dir)
-    encoded.remove(dir).foreach(_.unpersist())
-  }
-
   private def corpus(spark: SparkSession, dir: String): DataFrame =
     Tables.rebalanced(Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec")))
@@ -52,9 +43,7 @@ object Bq {
     * the true metric).
     */
   def train(spark: SparkSession, dir: String): Model =
-    models.getOrElse(dir, synchronized {
-      models.getOrElseUpdate(dir, trainFrom(corpus(spark, dir)))
-    })
+    Memo(dir, "bq.model")(trainFrom(corpus(spark, dir)))
 
   /** The training aggregation over an EXPLICIT (id, vec) frame — the
     * rebuild path's face, un-memoized (the dir-keyed [[train]] wraps
@@ -71,16 +60,11 @@ object Bq {
 
   /** Corpus as (id, codes binary of ceil(dim/8) bytes), memoized. */
   def encode(spark: SparkSession, dir: String): DataFrame =
-    encoded.getOrElse(dir, synchronized {
-      encoded.getOrElseUpdate(dir, {
-        val m = train(spark, dir)
-        val df = corpus(spark, dir)
-          .select(col("id"), BqFunctions.bqEncode(col("vec"), m.thresholds).as("codes"))
-          .cache()
-        df.count()
-        df
-      })
-    })
+    Memo(dir, "bq.codes") {
+      val m = train(spark, dir)
+      Memo.cached(corpus(spark, dir)
+        .select(col("id"), BqFunctions.bqEncode(col("vec"), m.thresholds).as("codes")))
+    }
 
   /** Driver-side encode of one query vector (twin of the BqEncode
     * kernel, LSB-first bit packing).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.VectorMetric
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -214,18 +214,6 @@ object Coreset {
     admitted.toSeq
   }
 
-  private val thresholdMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Long, Double)]]
-
-  /** Drop the memoized sequential scans for `dir` (the corpus-change
-    * invalidation set — a data change must not serve a stale unroll
-    * count to the D16 oracle generator).
-    */
-  def invalidate(dir: String): Unit = {
-    thresholdMemo.keys.filter(_._1 == dir).foreach(thresholdMemo.remove)
-    ()
-  }
-
   /** The full-corpus sequential threshold scan (id order) — the batch
     * twin D16's streamed drain must equal (StreamsSpec pins it) and
     * the source of the oracle's unroll count. Memoized per
@@ -234,12 +222,12 @@ object Coreset {
   private[graft] def kcenterThresholdPicks(spark: SparkSession, dir: String,
                                            metric: Int = VectorMetric.L2)
       : Seq[(Long, Double)] =
-    thresholdMemo.getOrElseUpdate((dir, metric), {
+    Memo(dir, "coreset.thresholdPicks", metric) {
       val vecs = Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val r = thresholdRadius(spark, dir, metric)
       thresholdAdmit(vecs, Seq.empty, r, metric).map(t => (t._1, t._3))
-    })
+    }
 
   /** D16 oracle: the threshold chain unrolled — the E55 replay (nested
     * once, MATERIALIZED) yields the radius; then J blocks of "least-

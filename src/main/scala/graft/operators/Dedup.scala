@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -192,73 +192,30 @@ object Dedup {
     * the same serve-many-queries memo shape as Ivf.built. At scale the
     * shingle-set table is likewise computed once and persisted.
     */
-  private val shingleSets =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private def shingleSetsFor(spark: SparkSession, dir: String): DataFrame =
-    // synchronized build on miss: TrieMap.getOrElseUpdate may evaluate
-    // the thunk twice under a concurrent first use — the loser's full
-    // corpus pass and cached partitions would leak
-    shingleSets.get(dir).getOrElse(synchronized {
-      shingleSets.getOrElseUpdate(dir, {
-        val s = hashedShingleSets(Tables.documents(spark, dir)).cache()
-        s.count()
-        s
-      })
-    })
-
-  /** Per-corpus memo of E2's document-frequency-ordered prefix table
-    * (doc_id, gs, prefix) — the expensive intermediate both the prefix
-    * join and the verify join-back consume. Memoized ONCE per dir like
-    * the shingle sets: a per-invocation cache() here is a session-long
-    * leak (CacheManager never drops an unreferenced cached plan), which
-    * the median-of-3 bench surfaced as run-over-run degradation —
-    * 264→474→691s pass totals from accumulated storage pressure.
-    */
-  private val orderedPrefixMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Per-corpus memo of E3's minhash signature table (same leak story). */
-  private val minhashSigMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    Memo(dir, "dedup.shingleSets")(Memo.cached(
+      hashedShingleSets(Tables.documents(spark, dir))))
 
   /** Per-(dir, site) memo of the bucket-probe salt decision. The probe
     * is an EAGER action (one windowed aggregation + head()), so before
     * this memo merely constructing a driver-path plan — GRAFT_EXPLAIN
     * audits, repeated invocations, plan-only tests — re-ran the probe
-    * job each call. Raced double-evaluation just repeats the probe
-    * (nothing is cached), so no synchronized block is needed; the On /
-    * parquet variants (memoDir = None) stay unmemoized — their input
-    * frame is caller-owned with no invalidation hook.
+    * job each call. The On / parquet variants (memoDir = None) stay
+    * unmemoized — their input frame is caller-owned with no
+    * invalidation hook.
     */
-  private val saltMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Skew.PairSalts]
-
   private def pairSaltsFor(memoDir: Option[String], site: String,
                            exploded: DataFrame, idCol: String,
-                           bucketCols: Seq[String]): Skew.PairSalts =
-    memoDir match {
-      case Some(d) => saltMemo.getOrElseUpdate((d, site),
-        Skew.recommendPairSaltsFromBuckets(exploded, idCol, bucketCols))
-      case None => Skew.recommendPairSaltsFromBuckets(exploded, idCol, bucketCols)
-    }
-
-  /** Drop the memos for a corpus — call when documents at `dir` change
-    * (IndexLifecycle.build does, via its corpusDir hook).
-    */
-  def invalidate(dir: String): Unit = {
-    shingleSets.remove(dir).foreach(_.unpersist())
-    orderedPrefixMemo.remove(dir).foreach(_.unpersist())
-    jaccardPairsMemo.remove(dir).foreach(_.unpersist())
-    minhashSigMemo.remove(dir).foreach(_.unpersist())
-    docComponentsMemo.remove(dir).foreach(_.unpersist())
-    lshComponentsMemo.remove(dir).foreach(_.unpersist())
-    vecComponentsMemo.remove(dir).foreach(_.unpersist())
-    clusteredComponentsMemo.remove(dir).foreach(_.unpersist())
-    saltMemo.keys.filter(_._1 == dir).foreach(saltMemo.remove)
-    descentMemo.keys.filter(_._1 == dir)
-      .foreach(k => descentMemo.remove(k).foreach(_._1.unpersist()))
+                           bucketCols: Seq[String]): Skew.PairSalts = {
+    def probe = Skew.recommendPairSaltsFromBuckets(exploded, idCol, bucketCols)
+    memoDir.fold(probe)(d => Memo(d, "dedup.salts", site)(probe))
   }
+
+  /** Drop the session memos for a corpus dir (every module's, see
+    * graft.Memo). Kept as a `String => Unit` entry point for callers
+    * that compile against it.
+    */
+  def invalidate(dir: String): Unit = Memo.invalidate(dir)
 
   /** Materialize the shingle-set memo for `dir` — Bench times this as
     * its own line item so E2/E3 numbers measure the pair pipelines, not
@@ -271,7 +228,7 @@ object Dedup {
 
   /** Persist the shingle-set table — the at-scale form of the session
     * memo (SURVEY §5: shared intermediates are computed once and land
-    * as tables; a TrieMap cache only serves one driver). Downstream
+    * as tables; a session memo only serves one driver). Downstream
     * pair pipelines read it back with [[jaccardPairsFromParquet]] and
     * produce byte-identical output to the memo path (DedupSpec).
     */
@@ -300,21 +257,12 @@ object Dedup {
     * join fan-out, and every step is a bounded shuffle at 100 TB.
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    jaccardPairsMemo.get(dir).getOrElse(synchronized {
-      jaccardPairsMemo.getOrElseUpdate(dir, {
-        // memoized VERIFIED pair graph (round-16): the E2 key, the E13
-        // components build and the E49 band sweep's exact contract all
-        // re-ran the prefix self-join + verify per consumer; the
-        // output is O(pairs) skinny, so cache the result, not the work
-        val p = jaccardPairs(shingleSetsFor(spark, dir), JaccardThreshold,
-          memoDir = Some(dir)).cache()
-        p.count()
-        p
-      })
-    })
-
-  private val jaccardPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    // memoized VERIFIED pair graph (round-16): the E2 key, the E13
+    // components build and the E49 band sweep's exact contract all
+    // re-ran the prefix self-join + verify per consumer; the output is
+    // O(pairs) skinny, so cache the result, not the work
+    Memo(dir, "dedup.jaccardPairs")(Memo.cached(jaccardPairs(shingleSetsFor(spark, dir),
+      JaccardThreshold, memoDir = Some(dir))))
 
   def jaccardPairsOn(docs: DataFrame, t: Double = JaccardThreshold): DataFrame =
     jaccardPairsFromSets(hashedShingleSets(docs), t)
@@ -367,16 +315,11 @@ object Dedup {
           slice(col("gs"), lit(1),
             (size(col("gs")) - ceil(size(col("gs")) * decT) + 1).cast("int")).as("prefix"))
     }
-    memoDir match {
-      case Some(d) => orderedPrefixMemo.get(d).getOrElse(synchronized {
-        orderedPrefixMemo.getOrElseUpdate(d, {
-          val o = build().cache()
-          o.count()
-          o
-        })
-      })
-      case None => build()
-    }
+    // memoized ONCE per dir like the shingle sets: a per-invocation
+    // cache() here is a session-long leak (CacheManager never drops an
+    // unreferenced cached plan), which the median-of-3 bench surfaced
+    // as run-over-run degradation — 264→474→691s pass totals
+    memoDir.fold(build())(d => Memo(d, "dedup.orderedPrefix")(Memo.cached(build())))
   }
 
   private def jaccardPairs(sets: DataFrame, t: Double,
@@ -702,25 +645,16 @@ object Dedup {
 
   /** Per-corpus memo of the E2-pair component labels — E13 and E35 both
     * consume them, and the iterative propagation is the expensive step.
-    * Cached + counted like the other memos so [[invalidate]] releases
+    * Cached + counted like the other memos so Memo.invalidate releases
     * the storage deterministically (the per-round localCheckpoint
     * blocks inside componentsFromPairs are released by the
     * ContextCleaner once the memo reference drops). At scale the label
     * table is computed once and persisted, same contract as the
     * shingle memos.
     */
-  private val docComponentsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private def docComponentsFor(spark: SparkSession, dir: String): DataFrame =
-    docComponentsMemo.get(dir).getOrElse(synchronized {
-      docComponentsMemo.getOrElseUpdate(dir, {
-        val c = componentsFromPairs(
-          ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b"))).cache()
-        c.count()
-        c
-      })
-    })
+    Memo(dir, "dedup.docComponents")(Memo.cached(componentsFromPairs(
+      ngramJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))))
 
   /** Per-corpus memo of the LSH-VERIFIED pair component labels (E42's
     * substrate): the same star-contraction closure as the exact E2
@@ -732,18 +666,9 @@ object Dedup {
     * same Jaccard ≥ t check), so LSH components REFINE exact
     * components — the containment DedupSpec pins end-to-end.
     */
-  private val lshComponentsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[operators] def lshComponentsFor(spark: SparkSession, dir: String): DataFrame =
-    lshComponentsMemo.get(dir).getOrElse(synchronized {
-      lshComponentsMemo.getOrElseUpdate(dir, {
-        val c = componentsFromPairs(
-          dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))).cache()
-        c.count()
-        c
-      })
-    })
+    Memo(dir, "dedup.lshComponents")(Memo.cached(componentsFromPairs(
+      dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b")))))
 
   /** Non-canonical members of the LSH-verified near-dup components —
     * the fuzzy pipeline's drop set (tiny: one row per dropped dup).
@@ -762,18 +687,9 @@ object Dedup {
   }
 
   /** Per-corpus memo of the E5-pair (semantic) component labels. */
-  private val vecComponentsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private def vecComponentsFor(spark: SparkSession, dir: String): DataFrame =
-    vecComponentsMemo.get(dir).getOrElse(synchronized {
-      vecComponentsMemo.getOrElseUpdate(dir, {
-        val c = componentsFromPairs(
-          embeddingNeardup(spark, dir).select(col("vec_a"), col("vec_b"))).cache()
-        c.count()
-        c
-      })
-    })
+    Memo(dir, "dedup.vecComponents")(Memo.cached(componentsFromPairs(
+      embeddingNeardup(spark, dir).select(col("vec_a"), col("vec_b")))))
 
   /** Materialize the component-label memos — one Bench line item PER
     * label table (round-7 verdict: a single memo_components line hid
@@ -1034,25 +950,18 @@ object Dedup {
     */
   /** Per-corpus memo of the WITHIN-CLUSTER component labels (E33b's
     * substrate) — same persistable-artifact contract as the exact
-    * labels above, released by [[invalidate]].
+    * labels above, released by Memo.invalidate.
     */
-  private val clusteredComponentsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private def clusteredComponentsFor(spark: SparkSession, dir: String): DataFrame =
-    clusteredComponentsMemo.get(dir).getOrElse(synchronized {
-      clusteredComponentsMemo.getOrElseUpdate(dir, {
-        val sim = lit(1.0) - VectorFunctions.cosineDistance(col("vec"), col("qvec"))
-        val pairs = Ivf.pairStream(spark, dir, Some(1))
-          .filter(col("query_id") < col("neighbor_id"))
-          .select(col("query_id").as("vec_a"), col("neighbor_id").as("vec_b"), sim.as("sim"))
-          .filter(col("sim") >= CosineSimThreshold)
-          .select("vec_a", "vec_b")
-        val c = componentsFromPairs(pairs).cache()
-        c.count()
-        c
-      })
-    })
+    Memo(dir, "dedup.clusteredComponents") {
+      val sim = lit(1.0) - VectorFunctions.cosineDistance(col("vec"), col("qvec"))
+      val pairs = Ivf.pairStream(spark, dir, Some(1))
+        .filter(col("query_id") < col("neighbor_id"))
+        .select(col("query_id").as("vec_a"), col("neighbor_id").as("vec_b"), sim.as("sim"))
+        .filter(col("sim") >= CosineSimThreshold)
+        .select("vec_a", "vec_b")
+      Memo.cached(componentsFromPairs(pairs))
+    }
 
   def semanticPruneClustered(spark: SparkSession, dir: String): DataFrame =
     pruneFromComponents(spark, dir, clusteredComponentsFor(spark, dir))
@@ -1369,16 +1278,9 @@ object Dedup {
     * for the On variants.
     */
   private def sigFor(spark: SparkSession, sets: DataFrame,
-                     memoDir: Option[String]): DataFrame = memoDir match {
-    case Some(d) => minhashSigMemo.get(d).getOrElse(synchronized {
-      minhashSigMemo.getOrElseUpdate(d, {
-        val s = minhashFromSets(sets).cache()
-        s.count()
-        s
-      })
-    })
-    case None => minhashFromSets(sets)
-  }
+                     memoDir: Option[String]): DataFrame =
+    memoDir.fold(minhashFromSets(sets))(d =>
+      Memo(d, "dedup.minhashSig")(Memo.cached(minhashFromSets(sets))))
 
   /** (doc_id, band_id, band_hash) LSH band keys of a signature table —
     * ONE definition shared by E3's self-join and D13's arrival-vs-store
@@ -2021,9 +1923,6 @@ object Dedup {
     */
   val DescentRandomPerIter = 32
 
-  private val descentMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), (DataFrame, Int)]
-
   /** Constant init probe budget: the init scan costs
     * O(N · nprobe · N/nc) = O(nprobe · N^1.5) at nc = √(N/2) — keeping
     * nprobe CONSTANT keeps the whole build sub-quadratic, which is the
@@ -2071,18 +1970,16 @@ object Dedup {
                                   k: Int = 5,
                                   metric: Int = graft.functions.VectorMetric.Cosine)
       : (DataFrame, Int) =
-    descentMemo.get((dir, k, metric)).getOrElse(synchronized {
-      descentMemo.getOrElseUpdate((dir, k, metric), {
-        val vecs = Tables.embeddings(spark, dir)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val n = Tables.embeddingsCount(spark, dir)
-        val nc = Ivf.defaultK(n)
-        val np = math.max(1, math.min(DescentInitNprobe, nc))
-        val init = Ivf.annBatch(spark, dir, k, metric, nprobeOpt = Some(np))
-          .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        descentRounds(vecs, init, n, k, metric)
-      })
-    })
+    Memo(dir, "dedup.descent", (k, metric)) {
+      val vecs = Tables.embeddings(spark, dir)
+        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val n = Tables.embeddingsCount(spark, dir)
+      val nc = Ivf.defaultK(n)
+      val np = math.max(1, math.min(DescentInitNprobe, nc))
+      val init = Ivf.annBatch(spark, dir, k, metric, nprobeOpt = Some(np))
+        .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
+      descentRounds(vecs, init, n, k, metric)
+    }
 
   /** The NN-Descent round loop over an arbitrary (id, vec) corpus and
     * a given (src, dst) init — the [[descentGraph]] body, frame-shaped

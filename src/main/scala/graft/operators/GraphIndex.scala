@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.{VectorFunctions, VectorMetric}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -147,35 +147,6 @@ object GraphIndex {
     */
   val RefineNprobeMult = 4
 
-  private val refinedMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), DataFrame]
-
-  /** Drop the memoized refined graphs, tune grids, and tuned trees
-    * for `dir` (the corpus-change invalidation set
-    * IndexLifecycle.build runs — rides on top of Dedup.invalidate's
-    * descent-memo drop; a data change must not serve a stale grid or
-    * a tree built over the old corpus).
-    *
-    * Ordering contract: the tuned-tree delete removes files a
-    * DataFrame still holding the persisted sidecar/tree MAY lazily
-    * re-read — invalidate must not race in-flight tuned-tree reads in
-    * the same session (the caller quiesces tuned serving before a
-    * corpus swap, exactly as IndexLifecycle.build does: it
-    * invalidates BEFORE building the new corpus' state, never under
-    * live queries).
-    */
-  def invalidate(dir: String): Unit = {
-    refinedMemo.keys.filter(_._1 == dir)
-      .foreach(k => refinedMemo.remove(k).foreach(_.unpersist()))
-    symMemo.keys.filter(_._1 == dir)
-      .foreach(k => symMemo.remove(k).foreach(_.unpersist()))
-    tuneMemo.keys.filter(_._1 == dir).foreach(tuneMemo.remove)
-    // the tree lives under the JVM temp dir (tunedGraphTree) — drop
-    // the whole directory so the next call rebuilds over fresh data
-    tunedTreeMemo.remove(dir).foreach(tree =>
-      graft.TempTrees.delete(java.nio.file.Paths.get(tree).getParent.toString))
-  }
-
   /** Phase 2 of the two-phase build over arbitrary frames (shared by
     * the session memo and the persisted rebuild): pick the worst
     * ⌊n·[[RefinePermille]]/1000⌋ nodes of the converged descent graph
@@ -240,31 +211,29 @@ object GraphIndex {
   private[graft] def refinedGraph(spark: SparkSession, dir: String,
                                   k: Int = 5,
                                   metric: Int = DefaultMetric): DataFrame =
-    refinedMemo.get((dir, k, metric)).getOrElse(synchronized {
-      refinedMemo.getOrElseUpdate((dir, k, metric), {
-        val (g, iters) = Dedup.descentGraph(spark, dir, k, metric)
-        // the convergence gate (measured at 25×, tools/RefineProbe): a
-        // descent that CONVERGED before its iteration cap found a
-        // fixpoint even the exploration schedule stopped improving —
-        // on the clustered corpus that fixpoint IS the exact graph
-        // (substrate 1.000) and phase 2 spent 0.88× of the build
-        // re-confirming it. Refine only when the descent hit the cap
-        // still improving (the structureless regime where the win
-        // lives: sf0.1's 0.742 → 0.824). Deterministic and replayable:
-        // the oracle generator reads the same memoized iteration count.
-        if (iters < Dedup.DescentMaxIters) g
-        else {
-          val n = Tables.embeddingsCount(spark, dir)
-          val vecs = Tables.rebalanced(Tables.embeddings(spark, dir)
-            .select(col("vec_id").as("id"), col("embedding").as("vec")))
-          // the same L2-representation session index the descent init
-          // probed and the oracle's assignCtes replays
-          val (assign, cents) = Ivf.indexFor(spark, dir)
-          refineGraph(g, vecs, assign.select("id", "cluster_id"), cents,
-            n, k, metric)
-        }
-      })
-    })
+    Memo(dir, "graph.refined", (k, metric)) {
+      val (g, iters) = Dedup.descentGraph(spark, dir, k, metric)
+      // the convergence gate (measured at 25×, tools/RefineProbe): a
+      // descent that CONVERGED before its iteration cap found a
+      // fixpoint even the exploration schedule stopped improving —
+      // on the clustered corpus that fixpoint IS the exact graph
+      // (substrate 1.000) and phase 2 spent 0.88× of the build
+      // re-confirming it. Refine only when the descent hit the cap
+      // still improving (the structureless regime where the win
+      // lives: sf0.1's 0.742 → 0.824). Deterministic and replayable:
+      // the oracle generator reads the same memoized iteration count.
+      if (iters < Dedup.DescentMaxIters) g
+      else {
+        val n = Tables.embeddingsCount(spark, dir)
+        val vecs = Tables.rebalanced(Tables.embeddings(spark, dir)
+          .select(col("vec_id").as("id"), col("embedding").as("vec")))
+        // the same L2-representation session index the descent init
+        // probed and the oracle's assignCtes replays
+        val (assign, cents) = Ivf.indexFor(spark, dir)
+        refineGraph(g, vecs, assign.select("id", "cluster_id"), cents,
+          n, k, metric)
+      }
+    }
 
   /** Materialize the refined-graph memo (Bench line item — the
     * serving keys then measure serving, the two-phase build cost is
@@ -360,23 +329,14 @@ object GraphIndex {
     * each re-paid it again. It derives deterministically from the
     * refined-graph memo (a production tree PERSISTS the symmetrized
     * adjacency; the session memo is the established stand-in), is
-    * warmed by the same memo_refined_graph* bench lines, and drops in
-    * [[invalidate]] with the memo it shadows.
+    * warmed by the same memo_refined_graph* bench lines, and drops
+    * with the memo it shadows.
     */
-  private val symMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), DataFrame]
-
   private[graft] def symmetrizedGraph(spark: SparkSession, dir: String,
                                       k: Int = 5,
                                       metric: Int = DefaultMetric): DataFrame =
-    symMemo.get((dir, k, metric)).getOrElse(synchronized {
-      symMemo.getOrElseUpdate((dir, k, metric), {
-        val s = symmetrize(
-          refinedGraph(spark, dir, k, metric).select("src", "dst")).cache()
-        s.count()
-        s
-      })
-    })
+    Memo(dir, "graph.symmetrized", (k, metric))(Memo.cached(
+      symmetrize(refinedGraph(spark, dir, k, metric).select("src", "dst"))))
 
   /** Batch beam search over an edge frame: every corpus vector's
     * top-k via [[BeamRounds]] bounded expansions of the seeded beam
@@ -649,9 +609,6 @@ object GraphIndex {
                                  metric: Int, rounds: Int, b: Int): DataFrame =
     beamTopk(spark, dir, k, metric, rounds = rounds, bOverride = Some(b))
 
-  private val tuneMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Seq[(Int, Int, Long)]]
-
   /** The metrics the graph tier serves (and therefore tunes): the
     * sidecar carries one measured pick per member, so `graph_topk_l2`
     * and `graph_topk_dot` serve a measured operating point exactly
@@ -672,7 +629,7 @@ object GraphIndex {
   private[graft] def graphTuneGrid(spark: SparkSession, dir: String,
                                    k: Int = 5,
                                    metric: Int = DefaultMetric): Seq[(Int, Int, Long)] =
-    tuneMemo.getOrElseUpdate((dir, k, metric), {
+    Memo(dir, "graph.tuneGrid", (k, metric)) {
       val exact = Ivf.exactEdges(spark, dir, k, metric)
         .select("query_id", "neighbor_id")
       val nq = Tables.embeddingsCount(spark, dir)
@@ -693,7 +650,7 @@ object GraphIndex {
           .count()
         (rounds, b, hits * 1000L / (k * nq))
       })
-    })
+    }
 
   /** Materialize one metric's tune grid (Bench line items — the
     * autotune/tuned keys then measure the argmin/serving, the grid
@@ -846,24 +803,15 @@ object GraphIndex {
     }
   }
 
-  private val tunedTreeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The session's tuned graph tree: one persisted build + the
     * sidecar write per corpus (its own bench warmer line, so the
     * serving key measures tuned SERVING — the Pq.tunedTree pattern).
     */
   private[graft] def tunedGraphTree(spark: SparkSession, dir: String): String =
-    tunedTreeMemo.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_graph_tuned")
-      // shutdown-hook sweep: a session cycling corpora leaves no
-      // orphaned trees even when invalidate() never runs
-      graft.TempTrees.register(root.toString)
-      val tmp = root.resolve("g").toString
-      build(spark, dir, tmp)
-      writeGraphAutotune(spark, dir, tmp)
-      tmp
-    })
+    Memo.tree(dir, "graph.tunedTree") { p =>
+      build(spark, dir, p)
+      writeGraphAutotune(spark, dir, p)
+    }
 
   /** Materialize the tuned-tree memo (Bench line item). */
   def warmGraphTunedTree(spark: SparkSession, dir: String): Unit = {

@@ -208,8 +208,8 @@ object IndexLifecycle {
     * fresh state. The swap is the batch twin of the reference's atomic
     * snapshot replacement (index_service.py:270-284). Pass `corpusDir`
     * when `vecs` came from a testdata/sf dir: the rebuild then drops
-    * the session memos (Ivf.built, Dedup.shingleSets) for that dir, so
-    * a data change can never serve stale memoized results afterwards.
+    * every session memo for that dir (graft.Memo.invalidate), so a
+    * data change can never serve stale memoized results afterwards.
     * `kOpt` overrides the √(n/2) cluster-count heuristic — the state
     * machine itself is k-independent, so demo/driver flows use a small
     * fixed k rather than paying two full-k builds.
@@ -218,17 +218,8 @@ object IndexLifecycle {
             corpusDir: Option[String] = None,
             kOpt: Option[Int] = None): IndexStatus = ServingState.writing(indexPath) {
     val spark = vecs.sparkSession
-    // every per-corpus session memo must drop on a data change — a new
-    // memoized operator family MUST be added here (the full set:
-    // IVF assignments, shingle sets, PQ models/codes, SQ8 models/codes,
-    // BQ models/codes, corpus counts, autotune grids, refined graphs +
-    // graph tune grids + tuned graph trees, the kcenter threshold scan)
-    corpusDir.foreach { d =>
-      Ivf.invalidate(d); Dedup.invalidate(d); Pq.invalidate(d); Sq8.invalidate(d)
-      Bq.invalidate(d); Pca.invalidate(d); Bpe.invalidate(d)
-      Tables.invalidate(d); Autotune.invalidate(d); GraphIndex.invalidate(d)
-      Coreset.invalidate(d)
-    }
+    // every per-corpus session memo drops on a data change
+    corpusDir.foreach(graft.Memo.invalidate)
     val prev = status(spark, indexPath)
     val v = vecs.cache()
     val n = v.count()
@@ -735,11 +726,18 @@ object IndexLifecycle {
     * writer gives it: one collect job, where schema inference plus a
     * distributed sort cost four. Sidecar keys are unique, so callers
     * sort on the driver into the same order. Columns a table predates
-    * read as null.
+    * read as null. The part files are listed on the driver and read
+    * as explicit paths: Spark treats the `_`-prefixed sidecar dir
+    * itself as hidden. A sidecar with no part file has no rows.
     */
   private[operators] def readSidecar(spark: SparkSession, path: String,
-                                     ddl: String): Array[Row] =
-    spark.read.schema(ddl).parquet(path).collect()
+                                     ddl: String): Array[Row] = {
+    val parts = fs(spark, path).listStatus(new Path(path)).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .map(_.toString)
+    if (parts.isEmpty) Array.empty
+    else spark.read.schema(ddl).parquet(parts.toIndexedSeq: _*).collect()
+  }
 
   /** Query a lifecycle-managed index: [[Ivf.queryIndex]], which
     * refuses an index left inconsistent by a crashed mutation and

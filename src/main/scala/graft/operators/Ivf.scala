@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.{VectorFunctions, VectorMetric}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,29 +75,13 @@ object Ivf {
   private[operators] def repr(metric: Int): Int =
     if (metric == VectorMetric.Cosine) VectorMetric.Cosine else VectorMetric.L2
 
-  /** Built indexes, keyed by (corpus dir, k, representation): the
-    * reference builds an index once and serves many queries from it
-    * (manager.py's lazy rebuild); the Spark twin memoizes the
-    * assignment DataFrame (cached) + centroids per corpus within a
-    * session. The Cosine variant is the NORMALIZED-corpus index
-    * (unit-vector k-means) that the compressed-domain batch paths
-    * probe; Dot rides the L2 entry (see [[repr]]).
+  /** The two-level hierarchy of the session index, if it is built
+    * (see [[buildIndex]]).
     */
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), (DataFrame, Array[Array[Float]])]
-
-  /** The session index's two-level hierarchy, when the build took the
-    * distributed path (k > DriverTrainMaxK) — side memo to [[built]]
-    * so the persist paths can write it as sidecars without changing
-    * every (assign, centroids) destructuring call site. Absent for
-    * driver-trained indexes (every sf-dir corpus).
-    */
-  private val builtHier =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Option[TwoLevelQuantizer]]
-
   private[operators] def hierarchyFor(dir: String, k: Int,
                                       metric: Int): Option[TwoLevelQuantizer] =
-    builtHier.getOrElse((dir, k, repr(metric)), None)
+    Memo.get[(DataFrame, Array[Array[Float]], Option[TwoLevelQuantizer], DataFrame)](
+      dir, "ivf.built", (k, repr(metric))).flatMap(_._3)
 
   /** The session hierarchy at the DEFAULT cluster count — the memo is
     * keyed by the REQUESTED k (effective centroid count can differ
@@ -109,34 +93,28 @@ object Ivf {
                                           metric: Int): Option[TwoLevelQuantizer] =
     hierarchyFor(dir, defaultK(Tables.embeddingsCount(spark, dir)), metric)
 
+  /** Built indexes, keyed by (corpus dir, k, representation): the
+    * reference builds an index once and serves many queries from it
+    * (manager.py's lazy rebuild); the Spark twin memoizes the
+    * assignment DataFrame (cached) + centroids per corpus within a
+    * session, with the two-level hierarchy when the build took the
+    * distributed path (k > DriverTrainMaxK; absent for driver-trained
+    * indexes — every sf-dir corpus), which the persist paths write as
+    * sidecars. The Cosine variant is the NORMALIZED-corpus index
+    * (unit-vector k-means) that the compressed-domain batch paths
+    * probe; Dot rides the L2 entry (see [[repr]]).
+    */
   private def buildIndex(spark: SparkSession, dir: String, k: Int,
                          metric: Int = VectorMetric.L2)
-      : (DataFrame, Array[Array[Float]]) =
-    // synchronized build on miss: TrieMap.getOrElseUpdate may run the
-    // thunk twice under concurrent first use, wasting a k-means build
-    // and leaking the loser's cached assignment
-    built.get((dir, k, repr(metric))).getOrElse(synchronized {
-      built.getOrElseUpdate((dir, k, repr(metric)), {
-        val vecs = metricCorpus(spark, dir, metric).cache()
-        val (assign, centroids, hier) = kmeansWithQuantizer(vecs, k)
-        builtHier.put((dir, k, repr(metric)), hier)
-        (assign.cache(), centroids)
-      })
-    })
-
-  /** Drop the session memos for a corpus — IndexLifecycle.build calls
-    * this (via its corpusDir hook) so a rebuild after a data change
-    * can never serve a stale memoized index (or a stale exact edge
-    * list derived from one).
-    */
-  def invalidate(dir: String): Unit = {
-    built.keys.filter(_._1 == dir).foreach { k =>
-      built.remove(k).foreach { case (assign, _) => assign.unpersist() }
+      : (DataFrame, Array[Array[Float]]) = {
+    val (assign, centroids, _, _) = Memo(dir, "ivf.built", (k, repr(metric))) {
+      // the cached corpus stays in the entry: the lazily cached
+      // assignment computes from it, and a drop releases both
+      val vecs = metricCorpus(spark, dir, metric).cache()
+      val (a, c, hier) = kmeansWithQuantizer(vecs, k)
+      (a.cache(), c, hier, vecs)
     }
-    builtHier.keys.filter(_._1 == dir).foreach(builtHier.remove)
-    exactEdgeMemo.keys.filter(_._1 == dir).foreach { k =>
-      exactEdgeMemo.remove(k).foreach(_.unpersist())
-    }
+    (assign, centroids)
   }
 
   /** Session memo for the EXACT (probe-all) batch-ANN edge list —
@@ -153,15 +131,11 @@ object Ivf {
     * exact pass" scaladoc claim is true in the physical plan (the four
     * union branches share one InMemoryRelation).
     */
-  private val exactEdgeMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), DataFrame]
-
   def exactEdges(spark: SparkSession, dir: String, k: Int,
                  metric: Int): DataFrame =
-    exactEdgeMemo.get((dir, k, metric)).getOrElse(synchronized {
-      exactEdgeMemo.getOrElseUpdate((dir, k, metric),
-        annBatch(spark, dir, k, metric).cache())
-    })
+    Memo(dir, "ivf.exactEdges", (k, metric)) {
+      annBatch(spark, dir, k, metric).cache()
+    }
 
   /** Materialize the exact-edge memo (Bench line item, same attribution
     * rationale as [[warmIndex]]).
@@ -639,7 +613,7 @@ object Ivf {
   /** Build-and-persist for an arbitrary (id, vec) corpus DataFrame —
     * the lifecycle service's build step (a rebuild must reflect the
     * corpus as-of now, so it never touches the session memo; it clears
-    * it instead via [[invalidate]] when the corpus is a known dir).
+    * it instead via graft.Memo.invalidate when the corpus is a known dir).
     */
   def writeIndexFrom(vecs: DataFrame, outPath: String,
                      kOpt: Option[Int] = None,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.{RotateFunctions, VectorFunctions, VectorMetric}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,16 +39,6 @@ object Pca {
     */
   case class Model(dim: Int, basis: Array[Array[Double]], varExplained: Array[Double])
 
-  private val models = scala.collection.concurrent.TrieMap.empty[String, Model]
-  private val reducedCache = scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
-
-  /** Data-change hook, same contract as Pq/Sq8/Bq.invalidate. */
-  def invalidate(dir: String): Unit = {
-    models.remove(dir)
-    reducedCache.keys.filter(_._1 == dir)
-      .foreach(k => reducedCache.remove(k).foreach(_.unpersist()))
-  }
-
   private def corpus(spark: SparkSession, dir: String): DataFrame =
     Tables.rebalanced(Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec")))
@@ -78,9 +68,7 @@ object Pca {
     * (hash-sample, symmetric eigensolver on a fixed matrix).
     */
   def train(spark: SparkSession, dir: String): Model =
-    models.getOrElse(dir, synchronized {
-      models.getOrElseUpdate(dir, eigOf(trainSample(spark, dir)))
-    })
+    Memo(dir, "pca.model")(eigOf(trainSample(spark, dir)))
 
   /** [[train]] over an EXPLICIT (id, vec) frame — the rebuild path's
     * face, un-memoized (the dir-keyed [[train]] wraps the same
@@ -131,18 +119,13 @@ object Pca {
     * of length d). One codegen'd map (RotateVector + slice), memoized.
     */
   def reduce(spark: SparkSession, dir: String, d: Int = ReducedDim): DataFrame =
-    reducedCache.getOrElse((dir, d), synchronized {
-      reducedCache.getOrElseUpdate((dir, d), {
-        val m = train(spark, dir)
-        require(d >= 1 && d <= m.dim, s"reduced dim $d out of range 1..${m.dim}")
-        val df = corpus(spark, dir)
-          .select(col("id"),
-            slice(RotateFunctions.rotateVector(col("vec"), m.basis), 1, d).as("rvec"))
-          .cache()
-        df.count()
-        df
-      })
-    })
+    Memo(dir, "pca.reduced", d) {
+      val m = train(spark, dir)
+      require(d >= 1 && d <= m.dim, s"reduced dim $d out of range 1..${m.dim}")
+      Memo.cached(corpus(spark, dir)
+        .select(col("id"),
+          slice(RotateFunctions.rotateVector(col("vec"), m.basis), 1, d).as("rvec")))
+    }
 
   /** Driver-side projection of one query (twin of the kernel path). */
   private[graft] def reduceQuery(q: Array[Float], m: Model, d: Int): Array[Float] = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.{PqFunctions, VectorFunctions, VectorMetric}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,57 +70,18 @@ object Pq {
                    codebooks: Array[Array[Array[Float]]],
                    rotation: Option[Array[Array[Double]]] = None)
 
-  private val models =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Boolean), Model]
-  private val encoded =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Boolean), DataFrame]
-  // the RESIDUAL model/codes family (x − coarse_centroid(x) before
-  // encode — the FAISS-standard IVF-PQ composition), memoized apart
-  // from the flat family: same key shape, different training input
-  private val modelsRes =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Boolean), Model]
-  private val encodedRes =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Boolean), DataFrame]
-
-  /** Drop the session memos for a corpus (data-change hook, same
-    * contract as Ivf.invalidate / Dedup.invalidate).
-    */
-  def invalidate(dir: String): Unit = {
-    models.keys.filter(_._1 == dir).foreach(models.remove)
-    encoded.keys.filter(_._1 == dir)
-      .foreach(k => encoded.remove(k).foreach(_.unpersist()))
-    modelsRes.keys.filter(_._1 == dir).foreach(modelsRes.remove)
-    encodedRes.keys.filter(_._1 == dir)
-      .foreach(k => encodedRes.remove(k).foreach(_.unpersist()))
-    tunedTrees.remove(dir).foreach(deleteTunedTree)
-  }
-
   /** Session memo: ONE persisted tuned tree per corpus dir (the
     * `ivfpq_topk_tuned` substrate) — the key line then measures tuned
     * SERVING, not a tree persist per bench pass (the memo-attribution
-    * discipline Bench's warmers exist for). The /tmp tree lives for
-    * the session; invalidate() drops and deletes it on a data change.
+    * discipline Bench's warmers exist for). A temp tree (Memo.tree):
+    * it lives for the session, and a data change drops and deletes it.
     */
-  private val tunedTrees =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def deleteTunedTree(p: String): Unit =
-    graft.TempTrees.delete(java.nio.file.Paths.get(p).getParent.toString)
-
   private[graft] def tunedTree(spark: SparkSession, dir: String): String =
-    tunedTrees.get(dir).getOrElse(synchronized {
-      tunedTrees.getOrElseUpdate(dir, {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_tuned_tree")
-        // a session cycling corpora leaves no orphaned trees: the
-        // shutdown hook sweeps whatever invalidate() hasn't
-        graft.TempTrees.register(tmp.toString)
-        val p = s"$tmp/idx"
-        writeIvfPq(spark, dir, p)
-        Autotune.writeAutotune(spark, dir, p, floor = TunedFloor,
-          tierSet = Some(Autotune.PqFamilyTiers))
-        p
-      })
-    })
+    Memo.tree(dir, "pq.tunedTree") { p =>
+      writeIvfPq(spark, dir, p)
+      Autotune.writeAutotune(spark, dir, p, floor = TunedFloor,
+        tierSet = Some(Autotune.PqFamilyTiers))
+    }
 
   /** Metric-transformed corpus — one definition for the whole
     * quantization family (Ivf.metricCorpus), so the coarse index and
@@ -178,10 +139,8 @@ object Pq {
     */
   def train(spark: SparkSession, dir: String,
             m: Int = SubspaceCount, metric: Int = VectorMetric.L2): Model =
-    models.get((dir, m, Ivf.repr(metric), false)).getOrElse(synchronized {
-      models.getOrElseUpdate((dir, m, Ivf.repr(metric), false),
-        pqFromSample(trainSample(spark, dir, metric, TrainSampleCap), m))
-    })
+    Memo(dir, "pq.model", (m, Ivf.repr(metric), false))(
+      pqFromSample(trainSample(spark, dir, metric, TrainSampleCap), m))
 
   /** Plain-PQ model from a collected training sample (shared by the
     * dir-memoized [[train]] and the from-frame rebuild path).
@@ -252,14 +211,15 @@ object Pq {
   def trainResidual(spark: SparkSession, dir: String,
                     m: Int = SubspaceCount, metric: Int = VectorMetric.L2,
                     opq: Boolean = false): Model =
-    modelsRes.get((dir, m, Ivf.repr(metric), opq)).getOrElse(synchronized {
-      modelsRes.getOrElseUpdate((dir, m, Ivf.repr(metric), opq), {
-        val (_, cents) = Ivf.indexFor(spark, dir, metric)
-        val cap = if (opq) OpqTrainSampleCap else TrainSampleCap
-        val sample = residualize(trainSample(spark, dir, metric, cap), cents)
-        if (opq) opqFromSample(sample, m) else pqFromSample(sample, m)
-      })
-    })
+    // the RESIDUAL family (x − coarse_centroid(x) before encode — the
+    // FAISS-standard IVF-PQ composition) is memoized apart from the
+    // flat family: same params, different training input
+    Memo(dir, "pq.residualModel", (m, Ivf.repr(metric), opq)) {
+      val (_, cents) = Ivf.indexFor(spark, dir, metric)
+      val cap = if (opq) OpqTrainSampleCap else TrainSampleCap
+      val sample = residualize(trainSample(spark, dir, metric, cap), cents)
+      if (opq) opqFromSample(sample, m) else pqFromSample(sample, m)
+    }
 
   /** Residual model over an arbitrary metric-transformed (id, vec)
     * frame against GIVEN centroids — the rebuild path's trainer.
@@ -313,17 +273,13 @@ object Pq {
   def encodeResidual(spark: SparkSession, dir: String,
                      m: Int = SubspaceCount, metric: Int = VectorMetric.L2,
                      opq: Boolean = false): DataFrame =
-    encodedRes.get((dir, m, Ivf.repr(metric), opq)).getOrElse(synchronized {
-      encodedRes.getOrElseUpdate((dir, m, Ivf.repr(metric), opq), {
-        val (assign, cents) = Ivf.indexFor(spark, dir, metric)
-        val model = trainResidual(spark, dir, m, metric, opq)
-        val df = encodeResidualWith(
-          corpus(spark, dir, metric).join(assign.select("id", "cluster_id"), "id"),
-          cents, model).cache()
-        df.count()
-        df
-      })
-    })
+    Memo(dir, "pq.residualCodes", (m, Ivf.repr(metric), opq)) {
+      val (assign, cents) = Ivf.indexFor(spark, dir, metric)
+      val model = trainResidual(spark, dir, m, metric, opq)
+      Memo.cached(encodeResidualWith(
+        corpus(spark, dir, metric).join(assign.select("id", "cluster_id"), "id"),
+        cents, model))
+    }
 
   /** OPQ alternating-minimization budget: the rotation learns on a
     * smaller sample (the d×d Procrustes statistics saturate long before
@@ -347,10 +303,8 @@ object Pq {
     */
   def trainOpq(spark: SparkSession, dir: String,
                m: Int = SubspaceCount, metric: Int = VectorMetric.L2): Model =
-    models.get((dir, m, Ivf.repr(metric), true)).getOrElse(synchronized {
-      models.getOrElseUpdate((dir, m, Ivf.repr(metric), true),
-        opqFromSample(trainSample(spark, dir, metric, OpqTrainSampleCap), m))
-    })
+    Memo(dir, "pq.model", (m, Ivf.repr(metric), true))(
+      opqFromSample(trainSample(spark, dir, metric, OpqTrainSampleCap), m))
 
   /** OPQ model from a collected training sample (shared by the
     * dir-memoized [[trainOpq]] and the from-frame rebuild path).
@@ -448,15 +402,11 @@ object Pq {
   def encode(spark: SparkSession, dir: String,
              m: Int = SubspaceCount, metric: Int = VectorMetric.L2,
              opq: Boolean = false): DataFrame =
-    encoded.get((dir, m, Ivf.repr(metric), opq)).getOrElse(synchronized {
-      encoded.getOrElseUpdate((dir, m, Ivf.repr(metric), opq), {
-        val model = if (opq) trainOpq(spark, dir, m, metric)
-                    else train(spark, dir, m, metric)
-        val df = encodeWith(corpus(spark, dir, metric), model).cache()
-        df.count()
-        df
-      })
-    })
+    Memo(dir, "pq.codes", (m, Ivf.repr(metric), opq)) {
+      val model = if (opq) trainOpq(spark, dir, m, metric)
+                  else train(spark, dir, m, metric)
+      Memo.cached(encodeWith(corpus(spark, dir, metric), model))
+    }
 
   /** Per-query ADC table under a metric: table(m)(c) is subspace m's
     * exact query-to-centroid contribution — squared l2 for the l2

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,25 +24,13 @@ object Sq8 {
 
   import graft.functions.VectorMetric
 
-  private val models = scala.collection.concurrent.TrieMap.empty[(String, Int), Model]
-  private val encoded = scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
-
-  def invalidate(dir: String): Unit = {
-    models.keys.filter(_._1 == dir).foreach(models.remove)
-    encoded.keys.filter(_._1 == dir)
-      .foreach(k => encoded.remove(k).foreach(_.unpersist()))
-  }
-
   /** Per-dimension (min, scale) from one corpus aggregation. Memo-keyed
     * on the corpus representation (Ivf.repr): dot shares the raw-corpus
     * model and codes with l2, same contract as Pq.train.
     */
   def train(spark: SparkSession, dir: String,
             metric: Int = VectorMetric.L2): Model =
-    models.get((dir, Ivf.repr(metric))).getOrElse(synchronized {
-      models.getOrElseUpdate((dir, Ivf.repr(metric)),
-        trainFrom(Ivf.metricCorpus(spark, dir, metric)))
-    })
+    Memo(dir, "sq8.model", Ivf.repr(metric))(trainFrom(Ivf.metricCorpus(spark, dir, metric)))
 
   /** The training aggregation over an EXPLICIT (id, vec) frame — the
     * rebuild path's face (TierLifecycle.rebuild retrains on an index's
@@ -72,18 +60,13 @@ object Sq8 {
     */
   def encode(spark: SparkSession, dir: String,
              metric: Int = VectorMetric.L2): DataFrame =
-    encoded.get((dir, Ivf.repr(metric))).getOrElse(synchronized {
-      encoded.getOrElseUpdate((dir, Ivf.repr(metric)), {
-        val m = train(spark, dir, metric)
-        val df = Ivf.metricCorpus(spark, dir, metric)
-          .select(col("id"),
-            graft.functions.Sq8Functions.sq8Encode(col("vec"), m.mins, m.scales)
-              .as("codes"))
-          .cache()
-        df.count()
-        df
-      })
-    })
+    Memo(dir, "sq8.codes", Ivf.repr(metric)) {
+      val m = train(spark, dir, metric)
+      Memo.cached(Ivf.metricCorpus(spark, dir, metric)
+        .select(col("id"),
+          graft.functions.Sq8Functions.sq8Encode(col("vec"), m.mins, m.scales)
+            .as("codes")))
+    }
 
   /** Driver-side quantize of one query vector through `m` (twin of the
     * sq8_encode kernel: round, then clamp to 0..255).

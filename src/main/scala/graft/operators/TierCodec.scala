@@ -24,6 +24,9 @@ sealed abstract class TierCodec[M] {
   /** The column the encoded rows carry beside `id`. */
   def payload: String
 
+  /** The payload column's type, as DDL. */
+  def payloadType: String
+
   /** The session corpus's memoized model and its encoded
     * (id, payload) rows: a build reuses the in-session tier.
     */
@@ -67,6 +70,7 @@ final case class Sq8Codec(metric: Int = VectorMetric.L2)
   import TierCodec.Sq8Model
   def kind = "sq8"
   def payload = "codes"
+  def payloadType = "BINARY"
 
   def corpus(spark: SparkSession, dir: String): (Sq8Model, DataFrame) =
     (Sq8Model(Sq8.train(spark, dir, metric), metric),
@@ -115,6 +119,7 @@ final case class Sq8Codec(metric: Int = VectorMetric.L2)
 case object BqCodec extends TierCodec[Bq.Model] {
   def kind = "bq"
   def payload = "codes"
+  def payloadType = "BINARY"
 
   def corpus(spark: SparkSession, dir: String): (Bq.Model, DataFrame) =
     (Bq.train(spark, dir), Bq.encode(spark, dir))
@@ -159,6 +164,7 @@ final case class PcaCodec(rdim: Int = Pca.ReducedDim)
   import TierCodec.PcaModel
   def kind = "pca"
   def payload = "rvec"
+  def payloadType = "ARRAY<FLOAT>"
 
   def corpus(spark: SparkSession, dir: String): (PcaModel, DataFrame) =
     (PcaModel(Pca.train(spark, dir), rdim), Pca.reduce(spark, dir, rdim))

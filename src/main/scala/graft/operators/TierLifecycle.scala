@@ -42,6 +42,14 @@ object TierLifecycle {
   def bucketOf(c: Column, buckets: Int): Column =
     pmod(c, lit(buckets.toLong)).cast("int")
 
+  /** The lists' schema, which every writer fixes (ids land as BIGINT),
+    * so a disk query reads it without an inference job.
+    */
+  private def listSchema(codec: TierCodec[_]): String =
+    s"cluster_id INT, id BIGINT, ${codec.payload} ${codec.payloadType}"
+
+  private val longId = col("id").cast("long").as("id")
+
   /** Build (version+1) from the session corpus: the codec's memoized
     * model and codes, landed bucket-partitioned with their sidecars.
     */
@@ -64,7 +72,7 @@ object TierLifecycle {
       : IndexStatus = {
     val spark = rows.sparkSession
     val buckets = bucketsFor(n)
-    rows.select(bucketOf(col("id"), buckets).as("cluster_id"), col("id"),
+    rows.select(bucketOf(col("id"), buckets).as("cluster_id"), longId,
         col(codec.payload))
       .repartition(col("cluster_id")) // one file per bucket
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
@@ -105,7 +113,7 @@ object TierLifecycle {
       val next = streamBatchId.fold(grown)(
         grown.withAppliedBatch(streamId.getOrElse(""), _))
       IndexLifecycle.landAppend(spark, indexPath, v.select(
-        bucketOf(col("id"), buckets).as("cluster_id"), col("id"),
+        bucketOf(col("id"), buckets).as("cluster_id"), longId,
         codec.encode(m, col("vec")).as(codec.payload)), next)
       next
     } finally v.unpersist()
@@ -164,7 +172,7 @@ object TierLifecycle {
     val (m, _) = codec.readSidecars(spark, indexPath)
     require(queryVec.length == codec.dim(m),
       s"query dim ${queryVec.length} != index dim ${codec.dim(m)}")
-    val shortlist = spark.read.parquet(indexPath)
+    val shortlist = spark.read.schema(listSchema(codec)).parquet(indexPath)
       .select(col("id").as("neighbor_id"), codec.distance(m, queryVec).as("dist"))
       .orderBy(col("dist"), col("neighbor_id"))
     refineWith match {

@@ -34,9 +34,13 @@ object DescentJobProbe {
       graft.operators.Ivf.warmIndex(spark, dir, metric)
       // 3 reps with memo invalidation between: the descent memo is
       // one-shot per session, and single-shot walls on this host carry
-      // ±30% noise — the rep list is the honest unit
+      // ±30% noise — the rep list is the honest unit. The invalidation
+      // drops every memo of the dir, so the index is re-warmed before
+      // the measurement starts.
       for (rep <- 1 to 3) {
-        graft.operators.Dedup.invalidate(dir)
+        graft.Memo.invalidate(dir)
+        graft.operators.Ivf.warmIndex(spark, dir)
+        graft.operators.Ivf.warmIndex(spark, dir, metric)
         Thread.sleep(300)
         jobs.set(0)
         val t0 = System.nanoTime()

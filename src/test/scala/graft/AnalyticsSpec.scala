@@ -38,7 +38,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // the batch analog of the reference's RW-lock surface: concurrent
     // readers share one immutable built index; results must be
     // identical and the memo must not build twice
-    Ivf.invalidate(sf)
+    Memo.invalidate(sf)
     val runs = (1 to 4).map { _ =>
       Future(Ivf.ivfQuery(spark, sf, nprobeOpt = Some(Int.MaxValue))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq)

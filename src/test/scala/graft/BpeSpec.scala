@@ -79,7 +79,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("corpus training is deterministic and matches the naive trainer end-to-end") {
     val m1 = Bpe.train(spark, sf)
-    Bpe.invalidate(sf)
+    Memo.invalidate(sf)
     val m2 = Bpe.train(spark, sf)
     assert(m1.merges.toSeq == m2.merges.toSeq && m1.counts.toSeq == m2.counts.toSeq)
     assert(m1.merges.length == Bpe.NumMerges)

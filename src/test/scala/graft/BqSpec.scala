@@ -60,7 +60,7 @@ class BqSpec extends AnyFunSuite {
 
   test("training is deterministic across invalidation; driver query shape; dim guard") {
     val a = Bq.train(spark, sf).thresholds.toSeq
-    Bq.invalidate(sf)
+    Memo.invalidate(sf)
     assert(Bq.train(spark, sf).thresholds.toSeq == a)
     val rows = Bq.bqTopk(spark, sf).collect()
     assert(rows.length == 10 && rows.map(_.getInt(1)).toSeq == (1 to 10))

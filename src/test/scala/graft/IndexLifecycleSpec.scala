@@ -182,7 +182,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
   test("session memo invalidation keeps ivfBuild usable and fresh") {
     val a1 = Ivf.ivfBuild(spark, sf).collect()
-    Ivf.invalidate(sf)
+    Memo.invalidate(sf)
     val a2 = Ivf.ivfBuild(spark, sf).collect()
     assert(a1.map(r => (r.getLong(0), r.getInt(1))).toSeq ==
       a2.map(r => (r.getLong(0), r.getInt(1))).toSeq)

@@ -77,7 +77,7 @@ class PcaSpec extends AnyFunSuite {
 
   test("training is deterministic across invalidation; driver query shape; dim guard") {
     val a = Pca.train(spark, sf).basis.map(_.toSeq).toSeq
-    Pca.invalidate(sf)
+    Memo.invalidate(sf)
     assert(Pca.train(spark, sf).basis.map(_.toSeq).toSeq == a)
     val rows = Pca.pcaTopk(spark, sf).collect()
     assert(rows.length == 10 && rows.map(_.getInt(1)).toSeq == (1 to 10))

@@ -439,23 +439,68 @@ class PqSpec extends AnyFunSuite {
 
   test("training is deterministic across memo invalidation") {
     val a = Pq.train(spark, sf).codebooks.map(_.map(_.toSeq).toSeq).toSeq
-    Pq.invalidate(sf)
+    Memo.invalidate(sf)
     val b = Pq.train(spark, sf).codebooks.map(_.map(_.toSeq).toSeq).toSeq
     assert(a == b)
   }
 
-  test("a corpus-dir rebuild drops the PQ and SQ8 memos (stale-code guard)") {
-    import org.apache.spark.sql.functions.col
-    Pq.encode(spark, sf).count()
-    graft.operators.Sq8.encode(spark, sf).count()
+  test("a corpus-dir rebuild drops every module's memos (stale-code guard)") {
+    import graft.operators._
+    // a copy of the corpus: a memo dir of its own, so the drop costs
+    // the other suites' memos nothing
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_corpus")
+    val src = new java.io.File(sf)
+    src.listFiles().foreach(f => java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    val d = dir.toString
     val path = java.nio.file.Files.createTempDirectory("graft_pq_inval").toString
-    graft.operators.IndexLifecycle.build(
-      Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("id"), col("embedding").as("vec")),
-      path, corpusDir = Some(sf), kOpt = Some(4))
-    // memos rebuilt on next use, identical content (data unchanged)
-    assert(Pq.encode(spark, sf).count() == 500)
-    assert(graft.operators.Sq8.encode(spark, sf).count() == 500)
+    val sc = spark.sparkContext
+    // RDD ids only grow: every RDD the warmers persist is newer than this
+    val mark = sc.emptyRDD[Int].id
+    def pinnedSinceWarm(): Seq[Int] = {
+      // frames a build checkpointed are released once collected; the
+      // cached memo frames must already be unpersisted
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      def pinned = sc.getPersistentRDDs.keys.filter(_ > mark).toSeq.sorted
+      while (pinned.nonEmpty && System.nanoTime() < deadline) { System.gc(); Thread.sleep(200) }
+      pinned
+    }
+    try {
+      // one memo per module, by the name it is kept under
+      val rows: Seq[(String, () => Any)] = Seq(
+        "ivf.built" -> (() => Ivf.warmIndex(spark, d, graft.functions.VectorMetric.Cosine)),
+        "dedup.shingleSets" -> (() => Dedup.warmShingles(spark, d)),
+        "dedup.jaccardPairs" -> (() => Dedup.ngramJaccardPairs(spark, d)),
+        "pq.codes" -> (() => Pq.encode(spark, d)),
+        "sq8.codes" -> (() => Sq8.encode(spark, d)),
+        "bq.codes" -> (() => Bq.encode(spark, d)),
+        "pca.reduced" -> (() => Pca.reduce(spark, d)),
+        "bpe.model" -> (() => Bpe.train(spark, d)),
+        "tables.embeddingsCount" -> (() => Tables.embeddingsCount(spark, d)),
+        "autotune.sweepGrid" -> (() => Autotune.sweepGrid(spark, d)),
+        "coreset.thresholdPicks" -> (() => Coreset.kcenterThresholdPicks(spark, d)),
+        "graph.tunedTree" -> (() => GraphIndex.tunedGraphTree(spark, d)))
+      rows.foreach { case (name, warm) =>
+        warm()
+        assert(Memo.entries(d).exists(_._1 == name), s"$name is not kept under its dir")
+      }
+      val tree = new java.io.File(GraphIndex.tunedGraphTree(spark, d)).getParentFile
+      assert(tree.exists())
+      IndexLifecycle.build(
+        Tables.embeddings(spark, d).select(col("vec_id").as("id"), col("embedding").as("vec")),
+        path, corpusDir = Some(d), kOpt = Some(4))
+      assert(Memo.entries(d).isEmpty, s"memos survived the rebuild: ${Memo.entries(d)}")
+      val pinned = pinnedSinceWarm()
+      assert(pinned.isEmpty, s"the dropped memos still pin persisted RDDs $pinned: " +
+        pinned.map(sc.getPersistentRDDs(_).toDebugString.linesIterator.next()).mkString("; "))
+      assert(!tree.exists(), "the tuned graph tree survived the rebuild")
+      // memos rebuilt on next use, identical content (data unchanged)
+      assert(Pq.encode(spark, d).count() == 500)
+      assert(Sq8.encode(spark, d).count() == 500)
+    } finally {
+      Memo.invalidate(d)
+      graft.streaming.Streams.deleteTree(dir)
+      graft.streaming.Streams.deleteTree(java.nio.file.Paths.get(path))
+    }
   }
 
   test("driver query returns k ranked rows with the compression columns") {

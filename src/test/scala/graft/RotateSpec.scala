@@ -36,7 +36,7 @@ class RotateSpec extends AnyFunSuite {
       assert(math.abs(dot - want) < 1e-6, s"row $i . row $j = $dot")
     }
     // (b) deterministic across memo invalidation
-    Pq.invalidate(sf)
+    Memo.invalidate(sf)
     assert(Pq.trainOpq(spark, sf).rotation.get.map(_.toSeq).toSeq ==
       r.map(_.toSeq).toSeq)
 

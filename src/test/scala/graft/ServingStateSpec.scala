@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.VectorMetric
-import graft.operators.{Dedup, GraphIndex, IndexLifecycle, Ivf, Pq, PqLifecycle, ServingState}
+import graft.operators.{GraphIndex, IndexLifecycle, Ivf, Pq, PqLifecycle, ServingState}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -179,14 +179,14 @@ class ServingStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("temp-tree cleanup drops the serving state of every tree under the root") {
-    val root = java.nio.file.Files.createTempDirectory("graft_serve_tmp").toString
-    TempTrees.register(root)
-    val p = s"$root/idx"
-    Pq.writeIvfPq(spark, corpusDir, p)
+    // a memo dir of its own, so the drop keeps the corpus dir's memos
+    val memoDir = s"$corpusDir#temp-tree"
+    val p = Memo.tree(memoDir, "serve")(Pq.writeIvfPq(spark, corpusDir, _))
+    val root = new java.io.File(p).getParentFile
     Pq.queryIvfPq(spark, p, qvec, k = 5, nprobe = 2).collect()
     assert(held(p))
-    TempTrees.delete(root)
-    assert(!held(p) && !new java.io.File(root).exists())
+    Memo.invalidate(memoDir)
+    assert(!held(p) && !root.exists())
   }
 
   test("a probe landing on a list emptied by a delete ranks the other probed lists") {
@@ -242,8 +242,7 @@ object ServingCorpus {
   }
 
   def drop(dir: String): Unit = {
-    Ivf.invalidate(dir); Dedup.invalidate(dir); Pq.invalidate(dir)
-    GraphIndex.invalidate(dir); Tables.invalidate(dir)
+    Memo.invalidate(dir)
     graft.streaming.Streams.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

@@ -65,7 +65,7 @@ class Sq8Spec extends AnyFunSuite {
 
   test("training is deterministic across invalidation; driver query shape") {
     val a = (Sq8.train(spark, sf).mins.toSeq, Sq8.train(spark, sf).scales.toSeq)
-    Sq8.invalidate(sf)
+    Memo.invalidate(sf)
     val b = (Sq8.train(spark, sf).mins.toSeq, Sq8.train(spark, sf).scales.toSeq)
     assert(a == b)
     val rows = Sq8.sq8Topk(spark, sf).collect()

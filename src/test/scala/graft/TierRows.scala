@@ -12,7 +12,7 @@ trait TierRows { this: AnyFunSuite =>
   lazy val spark = TestSession.spark
   protected val sf = "/root/testdata/sf0.001"
 
-  /** Temp index trees must not outlive the test run (the TempTrees/
+  /** Temp index trees must not outlive the test run (the Memo.tree/
     * deleteTree hygiene the production code enforces).
     */
   protected def withTree[T](prefix: String)(body: String => T): T = {
