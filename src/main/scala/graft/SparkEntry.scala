@@ -220,7 +220,7 @@ object SparkEntry {
     // ×16 widening cap, far from starved) — served by the compressed
     // filtered batch, never an O(N·f) nested loop
     "graph_topk_filtered_midsel" -> ((s, d) => GraphIndex.graphTopkFilteredMidselQuery(s, d)),
-    // E51b: the persisted graph's lifecycle (build / search-then-link
+    // E51b: the persisted graph's lifecycle (build / in-bucket linking
     // appends / dirty-ratio rebuild / read-back), the A18b shape
     "graph_lifecycle" -> ((s, d) => GraphIndex.graphLifecycle(s, d)),
     // E51f: remove_vector on the graph layout — repair-link delete
@@ -401,7 +401,7 @@ object SparkEntry {
     // the accreted buckets, rebuild closing the fired policy)
     "stream_bq_append" -> (Streams.streamBqAppend _),
     // D15: the continuous-ingest lifecycle for the GRAPH index family —
-    // per-trigger search-then-link + dirt + policy-fired re-descent
+    // per-trigger in-bucket linking + dirt + policy-fired rebuild
     "stream_graph_append" -> (Streams.streamGraphAppend _),
     // D16: continuous CORESET maintenance — per-trigger threshold
     // admission (the doubling-algorithm insertion) against a persisted

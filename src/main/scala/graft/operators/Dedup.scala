@@ -1983,9 +1983,10 @@ object Dedup {
 
   /** The NN-Descent round loop over an arbitrary (id, vec) corpus and
     * a given (src, dst) init — the [[descentGraph]] body, frame-shaped
-    * so the persisted-graph REBUILD (GraphIndex.rebuild: current
-    * logical contents, not a corpus dir) runs the same algorithm. `n`
-    * is the dense id-domain size for the exploration schedule.
+    * so it runs over any frame, not only a corpus dir. (The persisted
+    * graph no longer runs it: GraphIndex builds and rebuilds each
+    * bucket's exact graph in one task.) `n` is the dense id-domain
+    * size for the exploration schedule.
     */
   private[graft] def descentRounds(vecs: DataFrame, init: DataFrame,
                                    n: Long, k: Int,

@@ -3,9 +3,13 @@ package graft.operators
 import graft.{Memo, Tables}
 import graft.functions.{VectorFunctions, VectorMetric}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType}
 
 /** Graph-based ANN SERVING + lifecycle — the production index family
   * (HNSW / NSG / DiskANN lineage) over the E37c NN-Descent kNN graph:
@@ -38,24 +42,30 @@ import org.apache.spark.sql.types.StructType
   * rows through joins keyed on query_id/cand — no broadcast of
   * anything corpus-sized, no per-query driver work.
   *
-  * The persisted layout (`writeGraphTree`) is the index every other
-  * family already has: edge lists (src, dst, dist) partitioned by
-  * `src_bucket` (= src mod [[GraphBuckets]] — bounded directory count
-  * at any N, touched-bucket rewrites on mutation), the vectors the
-  * graph links with their coarse assignment (`_vectors` (id, vec,
-  * cluster_id), bucket-partitioned the same way — a graph index
-  * stores its vectors; HNSW does, DiskANN stores compressed ones),
-  * the coarse `_centroids` (the entry structure appends navigate
-  * from), and the shared lifecycle `_state`. Arrivals are
-  * SEARCH-THEN-LINK (the incremental NN-Descent / HNSW-insert step):
-  * each new vector enters at its nearest coarse list's best B, beam-
-  * searches the frozen graph for its k out-edges, reverse edges land
-  * on the touched nodes capped at R = 2k by distance, and ONLY the
-  * affected buckets rewrite through the rename-aside swap discipline
-  * (IndexLifecycle.compact's pattern). Growth is dirt; the
-  * dirty-ratio policy (the reference's should_rebuild arithmetic,
-  * app/services/index_service.py:88-99) decides when the whole graph
-  * re-descends.
+  * The persisted layout (`writeGraphTree`) is PARTITION-LOCAL, the
+  * REPOSE shape (distributed top-k from partition-local indexes plus
+  * one global merge): the corpus splits into [[bucketCount]] buckets
+  * by id (id mod buckets, recorded in `_meta.buckets`), and each
+  * bucket holds its own exact k-NN graph over its own vectors, so an
+  * edge never leaves its bucket. On disk: edge lists (src, dst, dist)
+  * partitioned by `src_bucket`, the vectors with their coarse
+  * assignment (`_vectors` (id, vec, cluster_id) partitioned by
+  * `vbucket` — a graph index stores its vectors; HNSW does, DiskANN
+  * stores compressed ones), the coarse `_centroids` (the entry
+  * structure), `_meta` (k, buckets, metric, layout) and the shared
+  * lifecycle `_state`. Serving ([[queryGraphBatch]]) pins one row per
+  * bucket and runs [[GraphBeamExec]]: each task beam-searches its
+  * bucket in memory for the broadcast query batch, and TopKByDistance
+  * merges at most k rows per (query, bucket). Arrivals LINK INSIDE
+  * THEIR BUCKET: a new vector's k out-edges are its exact top-k among
+  * the bucket's existing vectors, reverse edges land on those members
+  * capped at R = 2k by distance, and ONLY the touched buckets rewrite
+  * through the rename-aside swap discipline (IndexLifecycle.compact's
+  * pattern). Growth is dirt; the dirty-ratio policy (the reference's
+  * should_rebuild arithmetic, app/services/index_service.py:88-99)
+  * decides when the whole tree rebuilds. A tree written before this
+  * layout (no `_meta.layout`) may hold edges across buckets: serving
+  * and every mutation refuse it, and [[rebuild]] converts it.
   */
 object GraphIndex {
 
@@ -95,11 +105,30 @@ object GraphIndex {
     */
   def reverseCap(k: Int): Int = 2 * k
 
-  /** Edge/vector bucket count. Small here; at 100 TB this scales like
-    * any partition count (O(thousands)) — the invariant that matters
-    * is that mutations rewrite O(touched buckets), never the table.
+  /** Fewest buckets a persisted tree splits into. At 100 TB the count
+    * scales like any partition count ([[bucketCount]]) — the invariant
+    * that matters is that mutations rewrite O(touched buckets), never
+    * the table.
     */
   val GraphBuckets = 16
+
+  /** Most rows a bucket holds: one bucket's exact k-NN build is O(M²)
+    * distances and its serving arrays live in one task, so bounding M
+    * bounds one task's time and memory and keeps the build linear in N.
+    */
+  val MaxBucketRows = 2048
+
+  /** Buckets of a tree over `n` vectors: max([[GraphBuckets]],
+    * ⌈n / [[MaxBucketRows]]⌉). A build or rebuild derives it; appends
+    * and deletes keep the count `_meta` records.
+    */
+  def bucketCount(n: Long): Int =
+    math.max(GraphBuckets.toLong, (n + MaxBucketRows - 1) / MaxBucketRows).toInt
+
+  /** `_meta.layout` of a partition-local tree. Trees without it predate
+    * the layout and may hold edges across buckets.
+    */
+  val LocalLayout = 2
 
   /** The family's default metric. Since round 13 the metric is a
     * PER-INDEX invariant plumbed through build/serve/lifecycle (the
@@ -147,8 +176,8 @@ object GraphIndex {
     */
   val RefineNprobeMult = 4
 
-  /** Phase 2 of the two-phase build over arbitrary frames (shared by
-    * the session memo and the persisted rebuild): pick the worst
+  /** Phase 2 of the two-phase build over a descent graph (the session
+    * memo's [[refinedGraph]]): pick the worst
     * ⌊n·[[RefinePermille]]/1000⌋ nodes of the converged descent graph
     * by (max dist DESC, src), rank them EXACTLY within the widened
     * probe budget, and merge per node by the family's (dist, id)
@@ -205,8 +234,9 @@ object GraphIndex {
     * memo) with phase 2's exact refinement merged in — memoized per
     * (dir, k, metric) like the descent graph it extends. E37c's
     * `knn_graph_descent` key deliberately stays the pure descent
-    * contract; every graph-SERVING face (topk, filtered, stats,
-    * build) runs through this.
+    * contract; every session graph-SERVING face (topk, filtered,
+    * stats) runs through this. A persisted tree builds its own
+    * partition-local graphs instead ([[build]]).
     */
   private[graft] def refinedGraph(spark: SparkSession, dir: String,
                                   k: Int = 5,
@@ -316,7 +346,7 @@ object GraphIndex {
   // ------------------------------------------------------------ serving
 
   /** (src, dst) → the symmetrized (undirected) expansion table. */
-  private[graft] def symmetrize(edges: DataFrame): DataFrame =
+  private def symmetrize(edges: DataFrame): DataFrame =
     edges.select("src", "dst")
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .dropDuplicates("src", "dst")
@@ -327,10 +357,8 @@ object GraphIndex {
     * dedup shuffle per job (the eager per-round checkpoints make every
     * round its own job), and the tune grid's four concurrent configs
     * each re-paid it again. It derives deterministically from the
-    * refined-graph memo (a production tree PERSISTS the symmetrized
-    * adjacency; the session memo is the established stand-in), is
-    * warmed by the same memo_refined_graph* bench lines, and drops
-    * with the memo it shadows.
+    * refined-graph memo, is warmed by the same memo_refined_graph*
+    * bench lines, and drops with the memo it shadows.
     */
   private[graft] def symmetrizedGraph(spark: SparkSession, dir: String,
                                       k: Int = 5,
@@ -406,21 +434,17 @@ object GraphIndex {
       .select(col("query_id"), col("p.id").as("cand"), col("p.dist").as("dist"))
   }
 
-  /** The shared round loop: `beam0` (query_id, cand) expands through
-    * `edges` for [[BeamRounds]] rounds, scored against `vecs`
-    * ((id, cv)) on the candidate side and `qvecs` ((query_id, qv) —
-    * defaults to `vecs`, corpus queries) on the query side; returns
-    * the final ranked top-k.
+  /** The session round loop: `beam0` (query_id, cand) expands through
+    * `edges` for [[BeamRounds]] rounds, scored against the corpus
+    * `vecs` ((id, cv)) on both sides; returns the final ranked top-k
+    * in (query_id, rank) order.
     */
   private[graft] def beamRounds(beam0: DataFrame, edges: DataFrame,
-                                    vecs: DataFrame, k: Int, b: Int,
-                                    qvecsOpt: Option[DataFrame] = None,
-                                    metric: Int = DefaultMetric,
-                                    rounds: Int = BeamRounds,
-                                    sorted: Boolean = true): DataFrame = {
+                                vecs: DataFrame, k: Int, b: Int,
+                                metric: Int = DefaultMetric,
+                                rounds: Int = BeamRounds): DataFrame = {
     require(rounds >= 1, s"beamRounds needs at least one round, got $rounds")
-    val qvecs = qvecsOpt.getOrElse(
-      vecs.select(col("id").as("query_id"), col("cv").as("qv")))
+    val qvecs = vecs.select(col("id").as("query_id"), col("cv").as("qv"))
     val e = edges.select(col("src").as("cand"), col("dst"))
     var beam = beam0
     var cur: DataFrame = null
@@ -446,17 +470,12 @@ object GraphIndex {
     val lastFrame = beamRoundFrame(beam, e, qvecs, vecs, b, metric)
     // pin the SMALL ranked output — per-call storage is O(N·k) rows,
     // not O(N·B·rounds)
-    val rankedBase = lastFrame.groupBy("query_id")
+    val ranked = lastFrame.groupBy("query_id")
       .agg(VectorFunctions.topKByDistance(col("dist"), col("cand"), k).as("nn"))
       .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
       .select(col("query_id"), col("nn.id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rank"))
-    // the public serving faces keep their (query_id, rank) output
-    // order; internal consumers that immediately re-join (append's
-    // search-then-link) skip the global sort exchange (round-17 —
-    // same ROWS either way, order is the only difference)
-    val ranked = (if (sorted) rankedBase.orderBy("query_id", "rank")
-                  else rankedBase)
+      .orderBy("query_id", "rank")
       .localCheckpoint(true)
     if (cur != null) cur.unpersist()
     ranked
@@ -792,16 +811,15 @@ object GraphIndex {
                                        metric: Int = DefaultMetric): Option[(Long, Long)] = {
     val p = new Path(s"$indexPath/_autotune_graph")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else {
-      val df = spark.read.parquet(s"$indexPath/_autotune_graph")
-      val rows =
-        if (df.columns.contains("metric")) df.filter(col("metric") === metric)
-        else if (metric == DefaultMetric) df
-        else df.filter(lit(false))
-      rows.select("rounds", "beam").head(1).headOption
-        .map(r => (r.getLong(0), r.getLong(1)))
-    }
+    else IndexLifecycle.readSidecar(spark, p.toString, AutotuneDdl)
+      .find(r => if (r.isNullAt(5)) metric == DefaultMetric else r.getInt(5) == metric)
+      .map(r => (r.getLong(1), r.getLong(2)))
   }
+
+  /** The `_autotune_graph` schema [[writeGraphAutotune]] writes. */
+  private val AutotuneDdl =
+    "floor_permille BIGINT, rounds BIGINT, beam BIGINT, recall_permille BIGINT, " +
+      "cost BIGINT, metric INT"
 
   /** The session's tuned graph tree: one persisted build + the
     * sidecar write per corpus (its own bench warmer line, so the
@@ -1189,8 +1207,11 @@ object GraphIndex {
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def bucketOf(c: org.apache.spark.sql.Column) =
-    pmod(c, lit(GraphBuckets.toLong)).cast("int")
+  private def bucketOf(c: org.apache.spark.sql.Column, nb: Int) =
+    pmod(c, lit(nb.toLong)).cast("int")
+
+  /** The bucket of `id` among `nb`: [[bucketOf]] on the driver and in tasks. */
+  private def bucketOf(id: Long, nb: Int): Int = java.lang.Math.floorMod(id, nb.toLong).toInt
 
   // The ONE bucket-mutation protocol, shared by append / delete /
   // rebuild-recovery so the crash-recovery contract is structural, not
@@ -1251,7 +1272,7 @@ object GraphIndex {
     * directory during recovery: an underscore-prefixed aside is
     * invisible to parquet readers, so an unrestored `_vectors` aside
     * would read as a silently truncated corpus and the bucket would be
-    * LOST with the re-descent (the round-13 review's delete-crash
+    * LOST with the rebuild (the round-13 review's delete-crash
     * hole).
     */
   private def restoreAsides(f: org.apache.hadoop.fs.FileSystem,
@@ -1270,56 +1291,135 @@ object GraphIndex {
       }
   }
 
-  /** Persist a graph tree: bucket-partitioned edge lists at the root,
-    * `_vectors` (id, vec, cluster_id — the coarse assignment the
-    * append entry navigates from) / `_centroids` / `_meta` sidecars.
-    * Content only — the lifecycle state is the caller's (build/rebuild
-    * write it).
+  /** Persist a partition-local graph tree over `vecs` (id, vec) with
+    * the coarse assignment `assign` (id, cluster_id) in `nb` buckets:
+    * each bucket's exact k-NN graph ([[bucketGraphs]]) as the edge
+    * buckets at the root, then the `_vectors`, `_centroids` and `_meta`
+    * sidecars. Content only — the lifecycle state is the caller's
+    * (build/rebuild write it).
     */
-  private def writeGraphTree(spark: SparkSession, edges: DataFrame,
-                             vecsAssigned: DataFrame,
+  private def writeGraphTree(spark: SparkSession, vecs: DataFrame,
+                             assign: DataFrame,
                              centroids: Array[Array[Float]],
-                             outPath: String, k: Int,
-                             metric: Int): Unit = {
+                             outPath: String, k: Int, metric: Int,
+                             nb: Int): Unit = {
     // the edge write overwrite-wipes the ROOT, so it must complete
     // before anything lands in the `_` subdirs; the three subdir
-    // writes after it are independent and overlap (round-17, §2.6)
-    edges.select(col("src"), col("dst"), col("dist"))
-      .withColumn("src_bucket", bucketOf(col("src")))
-      .repartition(col("src_bucket")) // one file per bucket, not task×bucket
+    // writes after it are independent and overlap (round-17, §2.6).
+    // Each bucket is one task, so each edge bucket is one file.
+    bucketGraphs(spark, vecs, nb, k, metric, outPath)
       .write.mode("overwrite").partitionBy("src_bucket").parquet(outPath)
     import spark.implicits._
     overlapJobs(
-      () => vecsAssigned.select(col("id"), col("vec"), col("cluster_id"))
-        .withColumn("vbucket", bucketOf(col("id")))
+      () => vecs.join(assign.select("id", "cluster_id"), "id")
+        .select(col("id"), col("vec").cast("array<float>").as("vec"),
+          col("cluster_id").cast("int").as("cluster_id"))
+        .withColumn("vbucket", bucketOf(col("id"), nb))
         .repartition(col("vbucket"))
         .write.mode("overwrite").partitionBy("vbucket")
         .parquet(s"$outPath/_vectors"),
       () => IndexLifecycle.writeCentroids(spark, outPath, centroids),
-      () => Seq((k, GraphBuckets, metric)).toDF("k", "buckets", "metric")
+      () => Seq((k, nb, metric, LocalLayout)).toDF("k", "buckets", "metric", "layout")
         .coalesce(1).write.mode("overwrite").parquet(s"$outPath/_meta"))
   }
 
-  /** (k, metric) of a persisted tree — the per-index invariants every
-    * serve/mutate path runs under. Legacy `_meta` files predate the
-    * metric column and read as cosine (what they were built as).
+  /** (id, vec, cluster_id) rows of `df` keyed by their bucket; rows
+    * without an id or vector take no part in the graph.
     */
-  private[graft] def readMeta(spark: SparkSession, indexPath: String): (Int, Int) = {
-    val row = spark.read.schema("k INT, buckets INT, metric INT")
-      .parquet(s"$indexPath/_meta").head()
-    (row.getInt(0), if (row.isNullAt(2)) DefaultMetric else row.getInt(2))
+  private def keyedMembers(df: DataFrame, nb: Int): RDD[(Int, (Long, Array[Float], Int))] =
+    df.select(col("id"), col("vec").cast("array<float>"),
+        if (df.columns.contains("cluster_id")) col("cluster_id") else lit(-1))
+      .rdd.flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) None
+        else Some(bucketOf(r.getLong(0), nb) ->
+          ((r.getLong(0), r.getSeq[Float](1).toArray, if (r.isNullAt(2)) -1 else r.getInt(2))))
+      }
+
+  /** Every bucket's exact k-NN graph, one task per bucket, in
+    * [[GraphKernel]]'s arithmetic: rows (src, dst, dist, src_bucket).
+    * Building the frame runs no job.
+    */
+  private def bucketGraphs(spark: SparkSession, vecs: DataFrame, nb: Int,
+                           k: Int, metric: Int, where: String): DataFrame =
+    spark.createDataFrame(
+      keyedMembers(vecs, nb).groupByKey(new HashPartitioner(nb)).flatMap { case (bk, ms) =>
+        GraphKernel.bucketGraph(metric, GraphBucket.assemble(bk, ms, Nil, where), k)
+          .map { case (s, d, dist) => Row(s, d, dist, bk) }
+      },
+      StructType.fromDDL(s"$EdgeDdl, src_bucket INT"))
+
+  /** The schemas the tree's writers give its tables: every read of them
+    * states its schema, so none runs an inference job.
+    */
+  private val MetaDdl = "k INT, buckets INT, metric INT, layout INT"
+  private val EdgeDdl = "src BIGINT, dst BIGINT, dist DOUBLE"
+  private val VectorDdl = "id BIGINT, vec ARRAY<FLOAT>, cluster_id INT"
+
+  /** A persisted tree's `_meta`: k, bucket count, metric and layout.
+    * Legacy files predate the metric (read as cosine, what they were
+    * built as) and the layout (read as 1, before partition-local).
+    */
+  private[graft] final case class TreeMeta(k: Int, buckets: Int, metric: Int, layout: Int)
+
+  private[graft] def readTreeMeta(spark: SparkSession, indexPath: String): TreeMeta = {
+    val row = IndexLifecycle.readSidecar(spark, s"$indexPath/_meta", MetaDdl).headOption
+      .getOrElse(sys.error(s"graph index at $indexPath has no _meta"))
+    def opt(i: Int, default: Int) = if (row.isNullAt(i)) default else row.getInt(i)
+    TreeMeta(row.getInt(0), opt(1, GraphBuckets), opt(2, DefaultMetric), opt(3, 1))
   }
 
-  private[graft] def readEdges(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(indexPath).select(col("src"), col("dst"), col("dist"))
-
-  /** The `_vectors` table; `schema` (the serving state's recorded one)
-    * skips the inference job.
+  /** (k, metric) of a persisted tree — the per-index invariants every
+    * serve/mutate path runs under.
     */
+  private[graft] def readMeta(spark: SparkSession, indexPath: String): (Int, Int) = {
+    val m = readTreeMeta(spark, indexPath)
+    (m.k, m.metric)
+  }
+
+  /** [[readTreeMeta]] of a tree serving and mutating may touch: one
+    * written before the partition-local layout may hold edges across
+    * buckets, which a bucket's beam would silently lose, so it is
+    * refused until a rebuild converts it.
+    */
+  private def localMeta(spark: SparkSession, indexPath: String): TreeMeta = {
+    val m = readTreeMeta(spark, indexPath)
+    if (m.layout != LocalLayout)
+      sys.error(s"graph index at $indexPath predates the partition-local layout " +
+        "(its edges may cross buckets) — rebuild it before serving or mutating")
+    m
+  }
+
+  /** The `prefix=N` bucket directories under `dir` (all, or those in
+    * `only`), listed on the driver: read as explicit paths under their
+    * writers' schema, they cost neither an inference job nor a listing
+    * of the buckets a caller does not need.
+    */
+  private def readBuckets(spark: SparkSession, dir: String, prefix: String,
+                          ddl: String, only: Option[Set[Int]]): DataFrame = {
+    val f = fs(spark, dir)
+    val d = new Path(dir)
+    val paths =
+      if (!f.exists(d)) Seq.empty
+      else f.listStatus(d).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$prefix="))
+        .filter(st => only.forall(_(st.getPath.getName.stripPrefix(s"$prefix=").toInt)))
+        .map(_.getPath.toString).sorted
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
+    else spark.read.schema(ddl).parquet(paths: _*)
+  }
+
+  /** The (src, dst, dist) edge table, or the edges of `only` buckets. */
+  private[graft] def readEdges(spark: SparkSession, indexPath: String,
+                               only: Option[Set[Int]] = None): DataFrame =
+    readBuckets(spark, indexPath, "src_bucket", EdgeDdl, only)
+
+  /** The `_vectors` table, or the vectors of `only` buckets. */
   private[graft] def readVectors(spark: SparkSession, indexPath: String,
-                                 schema: Option[StructType] = None): DataFrame =
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(s"$indexPath/_vectors")
-      .select(col("id"), col("vec"), col("cluster_id"))
+                                 only: Option[Set[Int]] = None): DataFrame =
+    readBuckets(spark, s"$indexPath/_vectors", "vbucket", VectorDdl, only)
+
+  private[graft] val VectorSchema: StructType = StructType.fromDDL(VectorDdl)
 
   /** A half-applied mutation leaves this staging marker; serving and
     * mutating refuse while it exists (recovery = rebuild) — the
@@ -1332,52 +1432,68 @@ object GraphIndex {
         s"($p exists) — rebuild before serving or mutating")
   }
 
-  /** Beam search over LOADED tree frames for an arbitrary (id, vec)
-    * query batch — the search step append links through, shared with
-    * the public serving face below. `sym` is the tree's symmetrized
-    * adjacency, PINNED by the caller (round-17, the beamTopk note):
-    * every beam round otherwise re-reads the persisted edge buckets
-    * AND re-pays the union + dedup shuffle. No self-exclusion: callers
-    * with in-corpus query ids get the id itself at rank 1 (distance 0).
+  /** Open a partition-local tree for serving: one row per bucket (ids,
+    * vectors, coarse lists and the symmetrised in-bucket adjacency, as
+    * arrays), pinned with a local checkpoint, plus its metric, k and
+    * centroids. Refuses a tree of an older layout.
     */
-  private def beamSearchLoaded(stored: DataFrame, sym: DataFrame,
-                               cents: Array[Array[Float]],
-                               queries: DataFrame, k: Int,
-                               broadcastProbes: Boolean = false,
-                               metric: Int = DefaultMetric,
-                               sorted: Boolean = true): DataFrame = {
-    val b = beamWidth(k)
-    val probes = Ivf.probeSelect(
-      queries.select(col("id").as("query_id"), col("vec").as("qvec")),
-      cents, EntryNprobe, metric)
-    // append micro-batches broadcast their probe frame into the stored
-    // scan (point-serving contract); corpus-sized callers shuffle-join
-    val entry = Ivf.probedTopK(
-        stored.select(col("cluster_id"), col("id").as("neighbor_id"), col("vec")),
-        probes, b, metric, broadcastProbes = broadcastProbes)
-      .select(col("query_id"), col("neighbor_id").as("cand"))
-    beamRounds(entry, sym,
-      stored.select(col("id"), col("vec").as("cv")), k, b,
-      qvecsOpt = Some(queries.select(col("id").as("query_id"), col("vec").as("qv"))),
-      metric = metric, sorted = sorted)
+  private[operators] def openState(spark: SparkSession,
+                                   indexPath: String): ServingState.GraphState = {
+    val meta = localMeta(spark, indexPath)
+    val nb = meta.buckets
+    val edges = readEdges(spark, indexPath).select("src", "dst").rdd
+      .map(r => bucketOf(r.getLong(0), nb) -> ((r.getLong(0), r.getLong(1))))
+    val buckets = keyedMembers(readVectors(spark, indexPath), nb)
+      .cogroup(edges, new HashPartitioner(nb))
+      .map { case (bk, (ms, es)) => GraphBucket.assemble(bk, ms, es, indexPath) }
+      .localCheckpoint()
+    buckets.count()
+    ServingState.GraphState(meta.metric, meta.k,
+      IndexLifecycle.loadCentroids(spark, indexPath), buckets)
   }
 
   /** Serve a PERSISTED graph tree for an out-of-corpus (id, vec) query
-    * batch: coarse entry (`_centroids` + the stored assignment) + the
-    * symmetrized beam. The disk twin of [[graphTopk]]'s search step.
-    * The tree opens once per session ([[ServingState]]): its metric,
-    * centroids, `_vectors` schema and pinned symmetrized adjacency are
-    * reused until a mutation or a changed state record, so a warm call
-    * runs only the entry and beam jobs.
+    * batch: every bucket beam-searches its own graph for the batch in
+    * one task ([[GraphBeamExec]]), and the (query_id, rank)-ordered
+    * top-k merges the buckets' answers. The tree opens once per
+    * session ([[ServingState]]), so a warm call reads nothing from
+    * disk and runs two jobs: the beam + merge exchange, and the
+    * ranking. A query id that is also a stored id never returns
+    * itself.
     */
   def queryGraphBatch(spark: SparkSession, indexPath: String,
                       queries: DataFrame, k: Int): DataFrame = {
     checkNoHalfApplied(spark, indexPath)
-    // the tree's OWN metric — a query can never run under a different
-    // metric than the one the graph was descended with
-    val st = ServingState.graph(spark, indexPath)
-    beamSearchLoaded(readVectors(spark, indexPath, Some(st.vectorSchema)),
-      st.adjacency, st.centroids, queries, k, metric = st.metric)
+    serve(ServingState.graph(spark, indexPath), queries, k).drop("dist")
+  }
+
+  /** [[queryGraphBatch]] over an open tree, with the distance column:
+    * (query_id, neighbor_id, rank, dist). Building the frame runs no
+    * job.
+    */
+  private[graft] def serve(st: ServingState.GraphState, queries: DataFrame,
+                           k: Int): DataFrame = {
+    require(k > 0, "k must be positive")
+    val q = queries.select(col("id").cast("bigint").as("query_id"), col("vec").as("qvec"))
+      .queryExecution.analyzed
+    val Seq(queryId, qvec) = q.output
+    require(qvec.dataType match {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+      case _ => false
+    }, s"queryGraphBatch: vec must be array<float> or array<double>, got ${qvec.dataType.simpleString}")
+    val nid = AttributeReference("neighbor_id", LongType, nullable = false)()
+    val dist = AttributeReference("dist", DoubleType, nullable = false)()
+    ColumnBridge.frame(queries.sparkSession,
+        GraphBeam(q, queryId, qvec, nid, dist, st, k, beamWidth(k), BeamRounds))
+      // one partition for the merge: the top-k, its ranking and the
+      // (query_id, rank) order then share this one exchange
+      .repartition(1)
+      .groupBy(col("query_id"))
+      .agg(VectorFunctions.topKByDistance(col("dist"), col("neighbor_id"), k).as("nn"))
+      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
+      .select(col("query_id"), col("nn.id").as("neighbor_id"),
+        (col("pos") + 1).cast("int").as("rank"), col("nn.dist").as("dist"))
+      .orderBy("query_id", "rank")
   }
 
   /** A26h: `graph_stats` — the A14/A23 stats face for the graph
@@ -1440,16 +1556,21 @@ object GraphIndex {
     * probes every list, but only the f survivor rows live in them, so
     * the scan IS the exact filtered ranking. One unified path, no
     * BNLJ branch to go quadratic (the round-12 verdict's filtered-
-    * graph lesson applied to the persisted face).
+    * graph lesson applied to the persisted face). It serves from the
+    * tree's open state ([[ServingState.graph]]): metric, centroids and
+    * the stored vectors are pinned, so a warm call re-reads no sidecar
+    * and no `_vectors` file.
     */
   def queryGraphBatchFiltered(spark: SparkSession, indexPath: String,
                               queries: DataFrame, k: Int,
                               selector: DataFrame): DataFrame = {
     checkNoHalfApplied(spark, indexPath)
-    val (_, metric) = readMeta(spark, indexPath)
+    // the open tree: metric, centroids and the stored vectors, pinned
+    val st = ServingState.graph(spark, indexPath)
+    val metric = st.metric
     val sel = selector.select(col("id"))
-    val stored = readVectors(spark, indexPath)
-    val cents = IndexLifecycle.loadCentroids(spark, indexPath)
+    val stored = st.vectors(spark)
+    val cents = st.centroids
     val n = IndexLifecycle.status(spark, indexPath).size
     val fEst = Pq.estimatedSelectorSize(sel, k.toLong)
     // widen from the IVF SERVING base (nClusters/4, the E6b/A18d
@@ -1473,22 +1594,20 @@ object GraphIndex {
 
   // ---------------------------------------------------------- lifecycle
 
-  /** Build (version+1): the session REFINED graph (two-phase builder)
-    * persisted with its assigned vectors, coarse centroids, and a
-    * fresh lifecycle state.
+  /** Build (version+1): the corpus split into [[bucketCount]] buckets,
+    * each bucket's exact k-NN graph computed in one task, persisted
+    * with the vectors under the session IVF assignment, the coarse
+    * centroids, and a fresh lifecycle state.
     */
   def build(spark: SparkSession, dir: String, indexPath: String,
             k: Int = 5, metric: Int = DefaultMetric): IndexStatus =
       ServingState.writing(indexPath) {
     val prev = IndexLifecycle.status(spark, indexPath)
-    val graph = refinedGraph(spark, dir, k, metric)
     val (assign, cents) = Ivf.indexFor(spark, dir)
     val vecs = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    writeGraphTree(spark, graph,
-      vecs.join(assign.select("id", "cluster_id"), "id"), cents, indexPath, k,
-      metric)
     val n = Tables.embeddingsCount(spark, dir)
+    writeGraphTree(spark, vecs, assign, cents, indexPath, k, metric, bucketCount(n))
     val dim = vecs.select(size(col("vec"))).head().getInt(0)
     val next = IndexStatus("knngraph", isBuilt = true, isDirty = false,
       size = n, embeddingDim = dim, builtAt = System.currentTimeMillis(),
@@ -1497,18 +1616,37 @@ object GraphIndex {
     next
   }
 
-  /** Incremental add — SEARCH-THEN-LINK: each new vector enters the
-    * FROZEN persisted graph at its nearest coarse list's best B (the
-    * same nprobe=1 entry the batch key uses, against `_centroids` +
-    * the `_vectors` cluster assignment), beam-searches for its k
-    * out-edges (symmetrized expansion); reverse edges land on the
-    * touched nodes, whose adjacency re-caps at R = 2k by (dist, id);
-    * only the affected src buckets rewrite (rename-aside swap), new
-    * vectors append into `_vectors` under their coarse assignment.
-    * Within-batch arrivals link against the EXISTING graph only (the
-    * incremental NN-Descent step) — links among themselves come from
-    * the next rebuild, the same freshness trade every incremental
+  /** Forward edges of each arrival in `nv` (id, vec): its exact top-k
+    * among the `stored` members of its own bucket, one task per bucket
+    * ([[GraphKernel]] arithmetic). An arrival whose dimension differs
+    * from its bucket's fails the job with the reference's error.
+    */
+  private def linkForward(spark: SparkSession, stored: DataFrame, nv: DataFrame,
+                          nb: Int, k: Int, metric: Int, where: String): DataFrame =
+    spark.createDataFrame(
+      keyedMembers(stored, nb).cogroup(keyedMembers(nv, nb), new HashPartitioner(nb))
+        .flatMap { case (bk, (ms, arrivals)) =>
+          val b = GraphBucket.assemble(bk, ms, Nil, where)
+          arrivals.iterator.filter(_ => b.size > 0).flatMap { case (id, v, _) =>
+            if (v.length != b.dim) throw KnnExec.dimensionMismatch(b.dim, v.length)
+            GraphKernel.topK(metric, b, v.map(_.toDouble), GraphKernel.norm(v, 0, v.length),
+                k, -1)
+              .sorted.iterator.map { case (d, j) => Row(id, b.ids(j.toInt), d) }
+          }
+        },
+      StructType.fromDDL(EdgeDdl))
+
+  /** Incremental add — LINK INSIDE THE BUCKET: each new vector's k
+    * out-edges are its exact top-k among its bucket's existing vectors
+    * (`_vectors` of the touched buckets only); reverse edges land on
+    * those members, whose adjacency re-caps at R = 2k by (dist, id);
+    * only the touched buckets rewrite (rename-aside swap), and the new
+    * vectors append into `_vectors` under their coarse assignment
+    * (flat argmin over `_centroids`). Within-batch arrivals link
+    * against the EXISTING vectors only — links among themselves come
+    * from the next rebuild, the same freshness trade every incremental
     * graph index makes. Growth is dirt against the as-of-build total.
+    * The bucket count `_meta` records stays until a rebuild.
     */
   def append(newVecs: DataFrame, indexPath: String,
              streamBatchId: Option[Long] = None,
@@ -1524,93 +1662,84 @@ object GraphIndex {
     // landing protocol does below
     if (streamBatchId.exists(_ <= s.appliedBatchFor(streamId.getOrElse(""))))
       return s
-    val (k, metric) = readMeta(spark, indexPath)
-    val nv = newVecs.select(col("id"), col("vec")).cache()
-    val d = nv.count()
-    val stored = readVectors(spark, indexPath)
-    val vecs = stored.select(col("id"), col("vec").as("cv"))
-    val edges = readEdges(spark, indexPath)
-    val cents = IndexLifecycle.loadCentroids(spark, indexPath)
-    val queries = nv.select(col("id").as("query_id"), col("vec").as("qv"))
-    val sym = symmetrize(edges).localCheckpoint(true)
-    // forward edges: the new vector's top-k among EXISTING nodes (the
-    // shared beam core; coarse entry + symmetrized expansion)
-    val forward = beamSearchLoaded(stored, sym, cents, nv, k,
-        broadcastProbes = true, metric = metric,
-        // the linker re-joins and re-aggregates this frame — the global
-        // (query_id, rank) sort would be a dead exchange per trigger
-        sorted = false)
-      .join(queries, "query_id") // re-score carried dist for the edge rows
-      .join(vecs.select(col("id").as("neighbor_id"), col("cv")), "neighbor_id")
-      .select(col("query_id").as("src"), col("neighbor_id").as("dst"),
-        Ivf.distCol(metric, col("qv"), col("cv")).as("dist"))
-      .localCheckpoint(true)
-    sym.unpersist() // `forward` is checkpointed; the expansion pin can go
-    // reverse edges cap touched nodes at R (their old edges compete)
-    val reverse = forward.select(col("dst").as("src"), col("src").as("dst"),
-      col("dist"))
-    val touched = reverse.select("src").distinct()
-    val recapped = edges.join(touched, Seq("src"), "left_semi")
-      .union(reverse)
-      // shared exchange: hash by src serves both the dedup and the
-      // R-cap aggregate (the beamRounds round-16 shape)
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .groupBy("src")
-      .agg(VectorFunctions
-        .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
-      .select(col("src"), explode(col("nn")).as("p"))
-      .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
-    // affected buckets = buckets holding a touched node or a new node
-    val affected = touched.select(bucketOf(col("src")).as("bk"))
-      .union(forward.select(bucketOf(col("src")).as("bk")))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    // new content of the affected buckets: untouched srcs keep their
-    // rows, touched srcs take the recapped adjacency, new srcs their
-    // forward edges
-    val kept = edges
-      .filter(bucketOf(col("src")).isInCollection(affected))
-      .join(touched, Seq("src"), "left_anti")
-    val rewritten = kept.union(recapped).union(forward)
-      .withColumn("src_bucket", bucketOf(col("src")))
-    // stage EVERYTHING, record state, then swap — a crash leaves the
-    // loud marker, never rows the state doesn't account for
-    val tmp = s"$indexPath/_graph_tmp"
-    // the two staged writes land in SIBLING staging dirs and both
-    // complete before the state write, so overlapping them (round-17,
-    // guide §2.6) cannot change the crash-ordering contract — a crash
-    // anywhere in here still leaves the loud marker and no state row
-    overlapJobs(
-      () => rewritten
-        .repartition(col("src_bucket"))
-        .write.mode("overwrite").partitionBy("src_bucket")
-        .parquet(s"$tmp/edges"),
-      // new vectors land with their coarse assignment (flat argmin over
-      // the loaded centroids — the next append's entry navigates them)
-      () => Ivf.assignTo(nv, cents)
-        .select(col("neighbor_id").as("id"), col("vec"), col("cluster_id"))
-        .withColumn("vbucket", bucketOf(col("id")))
-        .repartition(col("vbucket"))
-        .write.mode("overwrite").partitionBy("vbucket")
-        .parquet(s"$tmp/vectors"))
-    val next0 = s.copy(isDirty = true, dirtyCount = s.dirtyCount + d,
-      size = s.size + d)
-    val next = (streamBatchId, streamId) match {
-      case (Some(b), Some(id)) => next0.withAppliedBatch(id, b)
-      case _ => next0
+    val meta = localMeta(spark, indexPath)
+    val (k, metric, nb) = (meta.k, meta.metric, meta.buckets)
+    val nv = newVecs.select(col("id"), col("vec").cast("array<float>").as("vec")).cache()
+    var forward: DataFrame = null
+    try {
+      // the batch size and the buckets it lands in, in one job; edges
+      // never leave a bucket, so these are all the buckets it touches
+      val landed = nv.groupBy(bucketOf(col("id"), nb).as("bk")).count().collect()
+      val d = landed.map(_.getLong(1)).sum
+      val affected = landed.filterNot(_.isNullAt(0)).map(_.getInt(0)).sorted.toSeq
+      val edges = readEdges(spark, indexPath, Some(affected.toSet))
+      val cents = IndexLifecycle.loadCentroids(spark, indexPath)
+      forward = linkForward(spark, readVectors(spark, indexPath, Some(affected.toSet)),
+        nv, nb, k, metric, indexPath).cache()
+      forward.count()
+      // reverse edges cap touched nodes at R (their old edges compete)
+      val reverse = forward.select(col("dst").as("src"), col("src").as("dst"),
+        col("dist"))
+      val touched = reverse.select("src").distinct()
+      val recapped = edges.join(touched, Seq("src"), "left_semi")
+        .union(reverse)
+        // shared exchange: hash by src serves both the dedup and the
+        // R-cap aggregate (the beamRounds round-16 shape)
+        .repartition(col("src"))
+        .dropDuplicates("src", "dst")
+        .groupBy("src")
+        .agg(VectorFunctions
+          .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
+        .select(col("src"), explode(col("nn")).as("p"))
+        .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
+      // new content of the affected buckets: untouched srcs keep their
+      // rows, touched srcs take the recapped adjacency, new srcs their
+      // forward edges
+      val rewritten = edges.join(touched, Seq("src"), "left_anti")
+        .union(recapped).union(forward)
+        .withColumn("src_bucket", bucketOf(col("src"), nb))
+      // stage EVERYTHING, record state, then swap — a crash leaves the
+      // loud marker, never rows the state doesn't account for
+      val tmp = s"$indexPath/_graph_tmp"
+      // the two staged writes land in SIBLING staging dirs and both
+      // complete before the state write, so overlapping them (round-17,
+      // guide §2.6) cannot change the crash-ordering contract — a crash
+      // anywhere in here still leaves the loud marker and no state row
+      overlapJobs(
+        () => rewritten
+          .repartition(col("src_bucket"))
+          .write.mode("overwrite").partitionBy("src_bucket")
+          .parquet(s"$tmp/edges"),
+        // new vectors land with their coarse assignment (flat argmin over
+        // the loaded centroids)
+        () => Ivf.assignTo(nv, cents)
+          .select(col("neighbor_id").as("id"), col("vec"),
+            col("cluster_id").cast("int").as("cluster_id"))
+          .withColumn("vbucket", bucketOf(col("id"), nb))
+          .repartition(col("vbucket"))
+          .write.mode("overwrite").partitionBy("vbucket")
+          .parquet(s"$tmp/vectors"))
+      val next0 = s.copy(isDirty = true, dirtyCount = s.dirtyCount + d,
+        size = s.size + d)
+      val next = (streamBatchId, streamId) match {
+        case (Some(b), Some(id)) => next0.withAppliedBatch(id, b)
+        case _ => next0
+      }
+      IndexLifecycle.writeState(spark, indexPath, next)
+      val f = fs(spark, indexPath)
+      swapBuckets(f, indexPath, s"$tmp/edges", "src_bucket", affected,
+        "graph append")
+      // new vector files land in their live buckets (append-only)
+      moveInFiles(f, s"$tmp/vectors", s"$indexPath/_vectors", "vbucket",
+        "graph append")
+      if (!f.delete(new Path(tmp), true))
+        sys.error(s"graph append: could not clear staging dir $tmp")
+      next
+    } finally {
+      // released on failure too: a failed batch must not stay cached
+      if (forward != null) forward.unpersist()
+      nv.unpersist()
     }
-    IndexLifecycle.writeState(spark, indexPath, next)
-    val f = fs(spark, indexPath)
-    swapBuckets(f, indexPath, s"$tmp/edges", "src_bucket", affected,
-      "graph append")
-    // new vector files land in their live buckets (append-only)
-    moveInFiles(f, s"$tmp/vectors", s"$indexPath/_vectors", "vbucket",
-      "graph append")
-    if (!f.delete(new Path(tmp), true))
-      sys.error(s"graph append: could not clear staging dir $tmp")
-    forward.unpersist()
-    nv.unpersist()
-    next
   }
 
   /** Point delete on the graph layout — the reference's remove_vector
@@ -1624,10 +1753,11 @@ object GraphIndex {
     * out-neighbors as candidates — exactly the paths u lost when v's
     * hop disappeared — scored with the tree's own metric, merged with
     * u's surviving edges, re-capped at R = 2k by (dist, id) (append's
-    * recap convention). Removals are dirt, so the dirty-ratio policy
-    * eventually re-descends around the holes; ids not present are a
-    * no-op (the reference's `return False`), which also makes the
-    * batch idempotent and a crashed delete RETRYABLE: the same staging
+    * recap convention). Edges never leave a bucket, so neither does a
+    * repair. Removals are dirt, so the dirty-ratio policy eventually
+    * rebuilds around the holes; ids not present are a no-op (the
+    * reference's `return False`), which also makes the batch
+    * idempotent and a crashed delete RETRYABLE: the same staging
     * protocol as append (stage → state → swap → clear marker) leaves
     * the loud `_graph_tmp` refusal on a crash, rebuild re-derives a
     * consistent tree from whatever buckets swapped (size re-counted
@@ -1644,94 +1774,99 @@ object GraphIndex {
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "delete requires a built graph (build first)")
     checkNoHalfApplied(spark, indexPath)
-    val (k, metric) = readMeta(spark, indexPath)
+    val meta = localMeta(spark, indexPath)
+    val (k, metric, nb) = (meta.k, meta.metric, meta.buckets)
     val stored = readVectors(spark, indexPath)
     // distinct + present-only: duplicates must not inflate the removed
     // count, and a missing id is a no-op
-    val del = broadcast(
-      deleteIds.select(col("id").as("del_id")).distinct()
-        .join(stored.select(col("id").as("del_id")), Seq("del_id"), "left_semi")
-        .localCheckpoint(true))
-    val d = del.count()
-    if (d == 0) { del.unpersist(); return s }
-    val edges = readEdges(spark, indexPath)
-    val vecs = stored.select(col("id"), col("vec"))
-    // in-neighbors to repair: u → v with v deleted, u surviving
-    val touched = edges.join(del, col("dst") === col("del_id"), "left_semi")
-      .select("src").distinct()
-      .join(del.withColumnRenamed("del_id", "src"), Seq("src"), "left_anti")
-      .localCheckpoint(true)
-    // repair candidates: the deleted hop's surviving out-neighbors
-    val repairs = edges
-      .join(del, col("dst") === col("del_id"), "left_semi") // u → v
-      .join(touched, Seq("src"), "left_semi")
-      .select(col("src").as("u"), col("dst").as("v"))
-      .join(edges.select(col("src").as("v"), col("dst").as("w")), "v")
-      .join(del.withColumnRenamed("del_id", "w"), Seq("w"), "left_anti")
-      .filter(col("w") =!= col("u"))
-      .select(col("u").as("src"), col("w").as("dst"))
-      .dropDuplicates("src", "dst")
-      .join(vecs.select(col("id").as("src"), col("vec").as("va")), "src")
-      .join(vecs.select(col("id").as("dst"), col("vec").as("vb")), "dst")
-      .select(col("src"), col("dst"),
-        Ivf.distCol(metric, col("va"), col("vb")).as("dist"))
-    // touched nodes: surviving edges ∪ repairs, re-capped at R
-    val keptOfTouched = edges.join(touched, Seq("src"), "left_semi")
-      .join(del, col("dst") === col("del_id"), "left_anti")
-    val repaired = keptOfTouched.union(repairs)
-      // shared exchange: hash by src serves both the dedup and the
-      // R-cap aggregate (the beamRounds round-16 shape)
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .groupBy("src")
-      .agg(VectorFunctions
-        .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
-      .select(col("src"), explode(col("nn")).as("p"))
-      .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
-    // affected edge buckets: deleted srcs (out-edges drop) + touched
-    val affected = del.select(bucketOf(col("del_id")).as("bk"))
-      .union(touched.select(bucketOf(col("src")).as("bk")))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val keptVerbatim = edges
-      .filter(bucketOf(col("src")).isInCollection(affected))
-      .join(touched, Seq("src"), "left_anti")
-      .join(del, col("src") === col("del_id"), "left_anti")
-    val rewritten = keptVerbatim.union(repaired)
-      .withColumn("src_bucket", bucketOf(col("src")))
-    val vAffected = del.select(bucketOf(col("del_id")).as("bk"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-    val vRewritten = stored
-      .filter(bucketOf(col("id")).isInCollection(vAffected))
-      .join(del, col("id") === col("del_id"), "left_anti")
-      .withColumn("vbucket", bucketOf(col("id")))
-    // stage → state → swap → clear (append's protocol; `vectors_rw` so
-    // rebuild's crash-recovery reconcile — which moves APPEND-staged
-    // vectors in — can never resurrect rows a delete was removing)
-    val tmp = s"$indexPath/_graph_tmp"
-    // sibling staging dirs, both before the state write — overlapped
-    // (round-17, guide §2.6), same crash-ordering as sequential
-    overlapJobs(
-      () => rewritten
-        .repartition(col("src_bucket"))
-        .write.mode("overwrite").partitionBy("src_bucket")
-        .parquet(s"$tmp/edges"),
-      () => vRewritten
-        .repartition(col("vbucket"))
-        .write.mode("overwrite").partitionBy("vbucket")
-        .parquet(s"$tmp/vectors_rw"))
-    val next = s.copy(isDirty = true, dirtyCount = s.dirtyCount + d,
-      size = s.size - d)
-    IndexLifecycle.writeState(spark, indexPath, next)
-    val f = fs(spark, indexPath)
-    swapBuckets(f, indexPath, s"$tmp/edges", "src_bucket", affected,
-      "graph delete")
-    swapBuckets(f, s"$indexPath/_vectors", s"$tmp/vectors_rw", "vbucket",
-      vAffected, "graph delete")
-    if (!f.delete(new Path(tmp), true))
-      sys.error(s"graph delete: could not clear staging dir $tmp")
-    touched.unpersist()
-    del.unpersist()
-    next
+    val delRows = deleteIds.select(col("id").as("del_id")).distinct()
+      .join(stored.select(col("id").as("del_id")), Seq("del_id"), "left_semi")
+      .cache()
+    var touched: DataFrame = null
+    try {
+      val d = delRows.count()
+      if (d == 0) return s
+      val del = broadcast(delRows)
+      val edges = readEdges(spark, indexPath)
+      val vecs = stored.select(col("id"), col("vec"))
+      // in-neighbors to repair: u → v with v deleted, u surviving
+      touched = edges.join(del, col("dst") === col("del_id"), "left_semi")
+        .select("src").distinct()
+        .join(del.withColumnRenamed("del_id", "src"), Seq("src"), "left_anti")
+        .cache()
+      // repair candidates: the deleted hop's surviving out-neighbors
+      val repairs = edges
+        .join(del, col("dst") === col("del_id"), "left_semi") // u → v
+        .join(touched, Seq("src"), "left_semi")
+        .select(col("src").as("u"), col("dst").as("v"))
+        .join(edges.select(col("src").as("v"), col("dst").as("w")), "v")
+        .join(del.withColumnRenamed("del_id", "w"), Seq("w"), "left_anti")
+        .filter(col("w") =!= col("u"))
+        .select(col("u").as("src"), col("w").as("dst"))
+        .dropDuplicates("src", "dst")
+        .join(vecs.select(col("id").as("src"), col("vec").as("va")), "src")
+        .join(vecs.select(col("id").as("dst"), col("vec").as("vb")), "dst")
+        .select(col("src"), col("dst"),
+          Ivf.distCol(metric, col("va"), col("vb")).as("dist"))
+      // touched nodes: surviving edges ∪ repairs, re-capped at R
+      val keptOfTouched = edges.join(touched, Seq("src"), "left_semi")
+        .join(del, col("dst") === col("del_id"), "left_anti")
+      val repaired = keptOfTouched.union(repairs)
+        // shared exchange: hash by src serves both the dedup and the
+        // R-cap aggregate (the beamRounds round-16 shape)
+        .repartition(col("src"))
+        .dropDuplicates("src", "dst")
+        .groupBy("src")
+        .agg(VectorFunctions
+          .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
+        .select(col("src"), explode(col("nn")).as("p"))
+        .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
+      // affected edge buckets: deleted srcs (out-edges drop) + touched
+      val affected = del.select(bucketOf(col("del_id"), nb).as("bk"))
+        .union(touched.select(bucketOf(col("src"), nb).as("bk")))
+        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+      val keptVerbatim = edges
+        .filter(bucketOf(col("src"), nb).isInCollection(affected))
+        .join(touched, Seq("src"), "left_anti")
+        .join(del, col("src") === col("del_id"), "left_anti")
+      val rewritten = keptVerbatim.union(repaired)
+        .withColumn("src_bucket", bucketOf(col("src"), nb))
+      val vAffected = del.select(bucketOf(col("del_id"), nb).as("bk"))
+        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+      val vRewritten = stored
+        .filter(bucketOf(col("id"), nb).isInCollection(vAffected))
+        .join(del, col("id") === col("del_id"), "left_anti")
+        .withColumn("vbucket", bucketOf(col("id"), nb))
+      // stage → state → swap → clear (append's protocol; `vectors_rw` so
+      // rebuild's crash-recovery reconcile — which moves APPEND-staged
+      // vectors in — can never resurrect rows a delete was removing)
+      val tmp = s"$indexPath/_graph_tmp"
+      // sibling staging dirs, both before the state write — overlapped
+      // (round-17, guide §2.6), same crash-ordering as sequential
+      overlapJobs(
+        () => rewritten
+          .repartition(col("src_bucket"))
+          .write.mode("overwrite").partitionBy("src_bucket")
+          .parquet(s"$tmp/edges"),
+        () => vRewritten
+          .repartition(col("vbucket"))
+          .write.mode("overwrite").partitionBy("vbucket")
+          .parquet(s"$tmp/vectors_rw"))
+      val next = s.copy(isDirty = true, dirtyCount = s.dirtyCount + d,
+        size = s.size - d)
+      IndexLifecycle.writeState(spark, indexPath, next)
+      val f = fs(spark, indexPath)
+      swapBuckets(f, indexPath, s"$tmp/edges", "src_bucket", affected,
+        "graph delete")
+      swapBuckets(f, s"$indexPath/_vectors", s"$tmp/vectors_rw", "vbucket",
+        vAffected, "graph delete")
+      if (!f.delete(new Path(tmp), true))
+        sys.error(s"graph delete: could not clear staging dir $tmp")
+      next
+    } finally {
+      if (touched != null) touched.unpersist()
+      delRows.unpersist()
+    }
   }
 
   /** A20's small-files maintenance pass for the graph tree's ONE
@@ -1750,6 +1885,7 @@ object GraphIndex {
     val s = IndexLifecycle.status(spark, indexPath)
     require(s.isBuilt, "compact requires a built graph (build first)")
     checkNoHalfApplied(spark, indexPath)
+    localMeta(spark, indexPath)
     val f = fs(spark, indexPath)
     val marker = new Path(s"$indexPath/_graph_tmp")
     if (!f.mkdirs(marker))
@@ -1818,18 +1954,20 @@ object GraphIndex {
       |UNION ALL SELECT 4, 1, true, d, CAST(0 AS BIGINT), (1.0*d/n >= 0.1) FROM p
       |ORDER BY phase""".stripMargin
 
-  /** Out-of-band rebuild: re-run NN-Descent over the CURRENT logical
-    * contents (the `_vectors` read-back — appended vectors included,
-    * now linking among themselves too), version+1, dirt reset, staged
-    * tree double-rename swapped in with the live tree serving
-    * throughout. Rebuild IS the recovery path for a half-applied
+  /** Out-of-band rebuild: a fresh coarse quantizer, bucket count and
+    * per-bucket exact graph over the CURRENT logical contents (the
+    * `_vectors` read-back — appended vectors included, now linking
+    * among themselves too), version+1, dirt reset, staged tree
+    * double-rename swapped in with the live tree serving throughout.
+    * It reads a tree of any layout, so it also converts a tree written
+    * before the partition-local layout. Rebuild IS the recovery path for a half-applied
     * mutation (the `_graph_tmp` refusal every serve/mutate call
     * raises): a lingering staging dir is RECONCILED, not discarded —
     * asides from a crashed bucket swap are restored first, and staged
     * vector files the state already accounts for (a crash in append's
     * state-write→move-in window: state size exceeds the on-disk
     * `_vectors` count) move into their live buckets before the
-    * re-descent, so an accounted batch can never vanish with the
+    * rebuild, so an accounted batch can never vanish with the
     * marker; only a staging dir the state does NOT account for is
     * discarded (its rows either never counted or already landed).
     * Edges are always fully re-derived from the reconciled vectors,
@@ -1850,7 +1988,7 @@ object GraphIndex {
     // the staged vector files are exactly the accounted-but-unmoved
     // batch: move them in (a partial move-in completes file-by-file —
     // part names carry a per-job UUID, so no collisions) and let the
-    // re-descent below derive their edges. Only a staging dir the
+    // rebuild below derive their edges. Only a staging dir the
     // state does NOT account for (crash BEFORE the state write, or
     // AFTER the move-in finished) is discarded: its rows either never
     // counted or already live in `_vectors`. Without the reconcile, a
@@ -1864,7 +2002,7 @@ object GraphIndex {
       if (f0.exists(marker)) {
         // FIRST make any crashed bucket swap whole: an unrestored
         // `_vectors` aside is invisible to parquet readers, so both
-        // the reconcile count below and the re-descent would read a
+        // the reconcile count below and the rebuild would read a
         // silently truncated corpus and the bucket would be LOST (a
         // crashed delete's vector swap is the authoritative-data
         // case; edge asides matter only for serving until the swap
@@ -1882,59 +2020,31 @@ object GraphIndex {
           sys.error(s"graph rebuild: could not discard staging dir $marker")
       }
     }
+    // (k, metric) of any layout: a rebuild is how an older tree converts
     val (k, metric) = readMeta(spark, indexPath)
-    val vecs = readVectors(spark, indexPath).select("id", "vec").cache()
-    val n = vecs.count()
-    // init: fresh coarse quantizer over the current contents at the
-    // constant descent probe budget (the sub-quadratic argument).
-    // quantizer training and the id-domain bound are independent jobs
-    // over the same cached frame — overlapped (round-17, guide §2.6)
-    val rb = Tables.rebalanced(vecs)
-    var trained: (DataFrame, Array[Array[Float]], Option[Ivf.TwoLevelQuantizer]) = null
-    var domain = 0L
-    Overlap.unitAll(
-      () => trained = Ivf.kmeansWithQuantizer(rb, Ivf.defaultK(n)),
-      // the exploration schedule needs the dense id-domain bound: ids
-      // are 0..n-1 ∪ appended (re-keyed past the corpus) — max+1 covers
-      () => domain = vecs.agg(max(col("id"))).head().getLong(0) + 1)
-    val (assign, cents, hier) = trained
-    val np = math.max(1, math.min(Dedup.DescentInitNprobe, cents.length))
-    val queries = vecs.select(col("id").as("query_id"), col("vec").as("qvec"))
-    val init = Ivf.probedTopK(Ivf.invertedLists(rb, assign),
-        Ivf.probeSelect(queries, cents, np, metric, hier = hier), k, metric,
-        pairFilter = col("neighbor_id") =!= col("query_id"),
-        broadcastProbes = false)
-      .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-    val (graph0, rbIters) = Dedup.descentRounds(vecs, init, domain, k, metric)
-    // phase 2 over the same frames: the rebuilt tree gets the
-    // two-phase builder, not the bare descent — under the same
-    // convergence gate as the session face (a converged descent's
-    // fixpoint does not pay the refinement pass)
-    val graph =
-      if (rbIters < Dedup.DescentMaxIters) graph0
-      else {
-        val rg = refineGraph(graph0, vecs, assign.select("id", "cluster_id"),
-          cents, n, k, metric)
-        graph0.unpersist()
-        rg
-      }
     val staged = s"$indexPath/_rebuild_tmp"
-    writeGraphTree(spark, graph,
-      vecs.join(assign.select("id", "cluster_id"), "id"), cents, staged, k,
-      metric)
+    val vecs = readVectors(spark, indexPath).select("id", "vec").cache()
+    val n =
+      try {
+        val n = vecs.count()
+        // a fresh coarse quantizer over the current contents, and the
+        // bucket count re-derived from them
+        val (assign, cents, _) =
+          Ivf.kmeansWithQuantizer(Tables.rebalanced(vecs), Ivf.defaultK(n))
+        writeGraphTree(spark, vecs, assign, cents, staged, k, metric, bucketCount(n))
+        n
+      } finally vecs.unpersist() // released on failure too
     val next = IndexStatus("knngraph", isBuilt = true, isDirty = false,
       size = n, embeddingDim = s.embeddingDim,
       builtAt = System.currentTimeMillis(), version = s.version + 1,
       dirtyCount = 0L, totalVectors = n,
       appliedStreams = s.appliedStreams)
     IndexLifecycle.writeState(spark, staged, next)
-    vecs.unpersist()
-    graph.unpersist()
     val f = fs(spark, indexPath)
     val live = new Path(indexPath)
     val aside = new Path(s"$indexPath.__old")
     // abort-before-swap (the PqLifecycle.rebuild contract): a mutation
-    // that landed during the long descent staging would be silently
+    // that landed during the staging would be silently
     // discarded with the replaced tree — check the live state moved
     // neither before the move-aside nor during it
     // appliedStreams included (the PqLifecycle.rebuild tuple): even a
@@ -1968,8 +2078,8 @@ object GraphIndex {
   }
 
   /** Driver query: `graph_lifecycle` — the graph-index state machine
-    * end-to-end: build (the session descent graph persisted), two
-    * search-then-link appends (the second crosses the 0.1 dirty
+    * end-to-end: build (per-bucket exact graphs persisted), two
+    * in-bucket linking appends (the second crosses the 0.1 dirty
     * ratio), the policy-triggered rebuild (version+1, dirt reset,
     * appended vectors now first-class), and a disk read-back proving
     * `_vectors` really grew. Every transition is arithmetic on the

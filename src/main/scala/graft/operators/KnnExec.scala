@@ -30,12 +30,17 @@ case class KnnJoin(
       l: LogicalPlan, r: LogicalPlan): KnnJoin = copy(corpus = l, queries = r)
 }
 
-/** Plans [[KnnJoin]] as [[KnnExec]] (installed by GraftExtensions). */
+/** Plans [[KnnJoin]] as [[KnnExec]] and [[GraphBeam]] as
+  * [[GraphBeamExec]] (installed by GraftExtensions).
+  */
 object KnnStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: KnnJoin =>
       KnnExec(planLater(j.corpus), planLater(j.queries), j.neighborId, j.vec,
         j.queryId, j.qvec, j.dist, j.k, j.metric, j.excludeSelf) :: Nil
+    case g: GraphBeam =>
+      GraphBeamExec(planLater(g.child), g.queryId, g.qvec, g.neighborId, g.dist,
+        g.index, g.k, g.width, g.rounds) :: Nil
     case _ => Nil
   }
 }

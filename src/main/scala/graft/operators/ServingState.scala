@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -14,11 +15,13 @@ import scala.reflect.ClassTag
   *     append path assigns through it);
   *   - IVF-PQ: the full [[Pq.PersistedModel]] (centroids, codebooks,
   *     metric, rotation, residual flag, hierarchy);
-  *   - graph: the tree's metric, the centroids and the symmetrised
-  *     adjacency, pinned as a checkpoint;
-  *   - the schema of each table a query re-reads per call (the list
-  *     root, the graph's `_vectors`), so `spark.read.schema(...)` runs
-  *     no inference job.
+  *   - graph: the tree's metric, k and centroids, and one row per
+  *     bucket of its partition-local layout — ids, vectors, coarse
+  *     lists and the symmetrised in-bucket adjacency, held as arrays
+  *     and pinned with a local checkpoint — so a warm call reads
+  *     nothing from disk; a tree of an older layout refuses to open;
+  *   - the schema of each list root a query re-reads per call, so
+  *     `spark.read.schema(...)` runs no inference job.
   *
   * Entries hold content only — never a file listing or a DataFrame
   * bound to files — so a compaction, which renames files but changes
@@ -40,8 +43,8 @@ import scala.reflect.ClassTag
   * append, delete and compact. A miss runs the same load code a cold
   * call always ran, holding only that path's lock, and also drops the
   * entries of trees no longer on disk, so a tree deleted outside graft
-  * does not keep its pinned adjacency. Dropping a graph entry
-  * unpersists its adjacency, so a mutation must not race in-flight
+  * does not keep its pinned buckets. Dropping a graph entry
+  * unpersists its buckets, so a mutation must not race in-flight
   * queries of the same tree in one session (the contract every session
   * memo here already has).
   */
@@ -53,9 +56,26 @@ private[graft] object ServingState {
 
   final case class PqState(model: Pq.PersistedModel, listSchema: StructType)
 
-  final case class GraphState(metric: Int, centroids: Array[Array[Float]],
-                              vectorSchema: StructType,
-                              adjacency: DataFrame)
+  final case class GraphState(metric: Int, k: Int, centroids: Array[Array[Float]],
+                              buckets: RDD[GraphBucket]) {
+    /** The centroids as one bucket (member i = list i), so the kernel
+      * ranks a query's lists with the arithmetic it ranks members by.
+      */
+    lazy val centroidBucket: GraphBucket = GraphBucket.assemble(-1,
+      centroids.indices.map(c => (c.toLong, centroids(c), c)), Nil, "centroids")
+
+    /** The stored (id, vec, cluster_id) rows, from the pinned buckets.
+      * Building the frame runs no job.
+      */
+    def vectors(spark: SparkSession): DataFrame =
+      spark.createDataFrame(buckets.flatMap { b =>
+        Iterator.range(0, b.size).map(m => Row(b.ids(m),
+          b.vecs.slice(m * b.dim, (m + 1) * b.dim).toSeq, b.clusters(m)))
+      }, GraphIndex.VectorSchema)
+
+    override def toString: String =
+      s"GraphState(metric=$metric, k=$k, ${buckets.getNumPartitions} buckets)"
+  }
 
   private final case class Stamp(state: Any, sidecars: Seq[(String, Long)])
 
@@ -68,7 +88,7 @@ private[graft] object ServingState {
   private def key(path: String): String = new Path(path).toString
 
   private def release(e: Entry): Unit = e.state match {
-    case g: GraphState => g.adjacency.unpersist()
+    case g: GraphState => g.buckets.unpersist()
     case _ => ()
   }
 
@@ -127,13 +147,7 @@ private[graft] object ServingState {
     }
 
   def graph(spark: SparkSession, indexPath: String): GraphState =
-    open(spark, indexPath, identity) {
-      GraphState(GraphIndex.readMeta(spark, indexPath)._2,
-        IndexLifecycle.loadCentroids(spark, indexPath),
-        spark.read.parquet(s"$indexPath/_vectors").schema,
-        GraphIndex.symmetrize(GraphIndex.readEdges(spark, indexPath))
-          .localCheckpoint(true))
-    }
+    open(spark, indexPath, identity)(GraphIndex.openState(spark, indexPath))
 
   /** Drop (and release) every entry at or under `path`. */
   def drop(path: String): Unit = synchronized {

@@ -1313,10 +1313,10 @@ object Streams {
     */
   def streamBqAppendOracleSql: String = streamIndexAppendOracleSql
 
-  /** D15's per-trigger sink body: search-then-link the micro-batch
-    * into the persisted GRAPH index (GraphIndex.append — entry at the
-    * nearest coarse list, beam search for k out-edges, reverse-cap,
-    * touched-bucket rewrite), with the same per-stream replay
+  /** D15's per-trigger sink body: link the micro-batch into the
+    * persisted GRAPH index (GraphIndex.append — each arrival's exact
+    * k out-edges inside its bucket, reverse-cap, touched-bucket
+    * rewrite), with the same per-stream replay
     * watermark discipline as D12 (a replayed batch NO-OPs). Empty
     * triggers skip outright.
     */
@@ -1344,13 +1344,13 @@ object Streams {
 
   /** D15 driver entry: `stream_graph_append` — D12's continuous-ingest
     * lifecycle applied to the GRAPH index family (A26b's layout): build
-    * the persisted descent graph, stream the arrival set (first
+    * the persisted partition-local graph, stream the arrival set (first
     * ceil(0.2·n) vectors re-keyed past the corpus) through a 3-file
     * landing zone at maxFilesPerTrigger=1 — three real micro-batches,
-    * each search-then-linking against the FROZEN graph and rewriting
-    * only its touched buckets, dirt accumulating across triggers under
-    * the per-stream replay watermark — then the fired policy runs the
-    * out-of-band re-descent (version++, dirt reset, arrivals now
+    * each linking inside its buckets against the FROZEN graph and
+    * rewriting only its touched buckets, dirt accumulating across
+    * triggers under the per-stream replay watermark — then the fired
+    * policy runs the out-of-band rebuild (version++, dirt reset, arrivals now
     * linking among themselves) and both read-backs count the
     * `_vectors` tree. Same 5-phase arithmetic as D12, so the key is
     * oracle-checked and batch-split invariant by construction.

@@ -750,4 +750,84 @@ class GraphSpec extends AnyFunSuite {
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
+
+  /** A fresh tree at `tmp/g` over sf0.001, removed after `f`. */
+  private def withBuiltTree(prefix: String)(f: String => Unit): Unit = {
+    val tmpDir = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      GraphIndex.build(spark, sf, s"$tmpDir/g", k)
+      f(s"$tmpDir/g")
+    } finally graft.streaming.Streams.deleteTree(tmpDir)
+  }
+
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+
+  test("a failed append or rebuild leaves nothing cached and the state unmoved") {
+    withBuiltTree("graft_gspec_leak") { tmp =>
+      import spark.implicits._
+      val s0 = IndexLifecycle.status(spark, tmp)
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      // a 3-dim batch against 64-dim buckets fails the linking kernel
+      val e = intercept[Exception] {
+        GraphIndex.append(Seq((99999L, Seq(1f, 2f, 3f))).toDF("id", "vec"), tmp)
+      }
+      assert(causes(e).exists(_.contains("embedding dimension mismatch")),
+        s"a wrong-dim append must fail the dimension check, got ${causes(e)}")
+      assert(spark.sparkContext.getPersistentRDDs.size == cached,
+        "a failed append left its batch cached")
+      assert(IndexLifecycle.status(spark, tmp) == s0, "a failed append moved the state")
+      // rebuilding a tree whose every vector was deleted fails the
+      // quantizer trainer's own precondition
+      GraphIndex.delete(GraphIndex.readVectors(spark, tmp).select("id"), tmp)
+      val s1 = IndexLifecycle.status(spark, tmp)
+      val cached1 = spark.sparkContext.getPersistentRDDs.size
+      val e2 = intercept[Exception](GraphIndex.rebuild(spark, tmp))
+      assert(causes(e2).exists(_.contains("empty corpus")),
+        s"a rebuild over no contents must say so, got ${causes(e2)}")
+      assert(spark.sparkContext.getPersistentRDDs.size == cached1,
+        "a failed rebuild left its contents cached")
+      assert(IndexLifecycle.status(spark, tmp) == s1, "a failed rebuild moved the state")
+    }
+  }
+
+  test("a tree of the pre-partition-local layout is refused until a rebuild converts it") {
+    withBuiltTree("graft_gspec_old") { tmp =>
+      import spark.implicits._
+      val n = Tables.embeddingsCount(spark, sf)
+      val nb = GraphIndex.readTreeMeta(spark, tmp).buckets
+      assert(GraphIndex.readTreeMeta(spark, tmp).layout == GraphIndex.LocalLayout)
+      // the old writer's `_meta` has no layout, and its edges may cross
+      // buckets: add one such edge
+      Seq((k, nb, GraphIndex.DefaultMetric)).toDF("k", "buckets", "metric")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_meta")
+      Seq((0L, 1L, 0.5)).toDF("src", "dst", "dist")
+        .coalesce(1).write.mode("append").parquet(s"$tmp/src_bucket=0")
+      val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 3)
+        .select((col("vec_id") + 2 * n).as("id"), col("embedding").as("vec"))
+      def refused(what: String)(call: => Any): Unit = {
+        val e = intercept[Exception](call)
+        assert(causes(e).exists(_.contains("predates the partition-local layout")),
+          s"$what must refuse an old-layout tree, got ${causes(e)}")
+      }
+      refused("queryGraphBatch")(GraphIndex.queryGraphBatch(spark, tmp, queries, k).collect())
+      refused("queryGraphBatchFiltered")(GraphIndex.queryGraphBatchFiltered(
+        spark, tmp, queries, k, queries.select("id")).collect())
+      refused("append")(GraphIndex.append(queries, tmp))
+      refused("delete")(GraphIndex.delete(Seq(5L).toDF("id"), tmp))
+      refused("compact")(GraphIndex.compact(spark, tmp, maxFiles = 1))
+      // rebuild converts it: the layout recorded, every edge in-bucket
+      val s = GraphIndex.rebuild(spark, tmp)
+      assert(s.size == n)
+      val meta = GraphIndex.readTreeMeta(spark, tmp)
+      assert(meta.layout == GraphIndex.LocalLayout && meta.buckets == GraphIndex.bucketCount(n))
+      val edges = GraphIndex.readEdges(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(edges.nonEmpty && edges.forall { case (a, b) =>
+        java.lang.Math.floorMod(a, meta.buckets.toLong) ==
+          java.lang.Math.floorMod(b, meta.buckets.toLong) }, "an edge crosses buckets")
+      assert(GraphIndex.queryGraphBatch(spark, tmp, queries, k).count() == 3L * k)
+    }
+  }
 }

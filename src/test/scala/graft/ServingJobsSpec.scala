@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class ServingJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSession.spark
   private lazy val corpusDir = ServingCorpus.create(spark)
-  override def afterAll(): Unit = ServingCorpus.drop(corpusDir)
+  override def afterAll(): Unit = {
+    ServingCorpus.drop(corpusDir)
+    graft.streaming.Streams.deleteTree(graphRoot)
+  }
 
   private lazy val vecs = Tables.embeddings(spark, corpusDir)
     .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -78,15 +81,35 @@ class ServingJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("GraphIndex.queryGraphBatch: a warm call runs at most 17 jobs") {
-    withTree("graft_jobs_graph") { p =>
-      GraphIndex.build(spark, corpusDir, p)
-      import spark.implicits._
-      // one out-of-corpus query as a local frame, as a serving client sends it
-      val queries = Seq((-1L, qvec.toSeq)).toDF("id", "vec")
-      val (_, warm) = coldWarm(() =>
-        GraphIndex.queryGraphBatch(spark, p, queries, 10).collect().toSeq)
-      assert(warm <= 17, s"warm queryGraphBatch ran $warm jobs")
-    }
+  /** One graph tree for both serving faces, built on first use. */
+  private lazy val graphRoot = java.nio.file.Files.createTempDirectory("graft_jobs_graph")
+  private lazy val graphTree: String = {
+    val p = s"$graphRoot/idx"
+    GraphIndex.build(spark, corpusDir, p)
+    p
+  }
+  // one out-of-corpus query as a local frame, as a serving client sends it
+  private def graphQuery = {
+    import spark.implicits._
+    Seq((-1L, qvec.toSeq)).toDF("id", "vec")
+  }
+
+  test("GraphIndex.queryGraphBatch: a warm call runs at most 2 jobs") {
+    val p = graphTree
+    val (_, warm) = coldWarm(() =>
+      GraphIndex.queryGraphBatch(spark, p, graphQuery, 10).collect().toSeq)
+    // the beam and merge exchange, then the ranking
+    assert(warm <= 2, s"warm queryGraphBatch ran $warm jobs")
+  }
+
+  test("GraphIndex.queryGraphBatchFiltered: a warm call runs at most 10 jobs") {
+    // serves from the tree's open state: no sidecar re-read, no
+    // `_vectors` inference
+    val p = graphTree
+    val even = vecs.filter(col("id") % 2 === 0).select("id")
+    ServingState.drop(p)
+    val (_, warm) = coldWarm(() =>
+      GraphIndex.queryGraphBatchFiltered(spark, p, graphQuery, 10, even).collect().toSeq)
+    assert(warm <= 10, s"warm queryGraphBatchFiltered ran $warm jobs")
   }
 }
