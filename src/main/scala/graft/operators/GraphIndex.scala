@@ -1213,84 +1213,6 @@ object GraphIndex {
   /** The bucket of `id` among `nb`: [[bucketOf]] on the driver and in tasks. */
   private def bucketOf(id: Long, nb: Int): Int = java.lang.Math.floorMod(id, nb.toLong).toInt
 
-  // The ONE bucket-mutation protocol, shared by append / delete /
-  // rebuild-recovery so the crash-recovery contract is structural, not
-  // three hand-rolled copies coupled by directory-name convention (the
-  // round-13 review finding: delete had to invent its own staging name
-  // to dodge append's, and a crashed vector swap lost a bucket because
-  // recovery only knew append's layout).
-
-  /** Rename-aside replacement of the listed live buckets with their
-    * staged twins: live → `_old_<prefix>=N`, staged in, aside deleted.
-    * A fully-emptied bucket (no staged dir) simply disappears. Loud
-    * failures at every step; a crash mid-swap leaves the `_graph_tmp`
-    * marker (the caller's staging root) plus possibly one aside, which
-    * [[restoreAsides]] makes whole again during rebuild recovery.
-    */
-  private def swapBuckets(f: org.apache.hadoop.fs.FileSystem,
-                          liveDir: String, stagedDir: String,
-                          prefix: String, buckets: Seq[Int],
-                          op: String): Unit =
-    buckets.foreach { bk =>
-      val dst = new Path(s"$liveDir/$prefix=$bk")
-      val src = new Path(s"$stagedDir/$prefix=$bk")
-      val aside = new Path(s"$liveDir/_old_$prefix=$bk")
-      if (f.exists(dst) && !f.rename(dst, aside))
-        sys.error(s"$op: could not move stale bucket $dst aside")
-      if (f.exists(src) && !f.rename(src, dst))
-        sys.error(s"$op: rename $src -> $dst failed; old at $aside")
-      if (f.exists(aside) && !f.delete(aside, true))
-        sys.error(s"$op: could not clean up $aside")
-    }
-
-  /** Append-only move-in: every staged part-file lands in its live
-    * bucket (created if absent). Part names carry a per-job UUID, so a
-    * partially-completed move-in simply resumes file-by-file.
-    */
-  private def moveInFiles(f: org.apache.hadoop.fs.FileSystem,
-                          stagedDir: String, liveDir: String,
-                          prefix: String, op: String): Unit =
-    f.listStatus(new Path(stagedDir))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$prefix="))
-      .foreach { dDir =>
-        val dst = new Path(s"$liveDir/${dDir.getPath.getName}")
-        if (!f.exists(dst) && !f.mkdirs(dst))
-          sys.error(s"$op: could not create $dst")
-        f.listStatus(dDir.getPath)
-          .filter(_.getPath.getName.startsWith("part-"))
-          .foreach { file =>
-            if (!f.rename(file.getPath, new Path(dst, file.getPath.getName)))
-              sys.error(s"$op: rename ${file.getPath} -> $dst failed")
-          }
-      }
-
-  /** Make a crashed [[swapBuckets]] whole: for every `_old_<prefix>=N`
-    * aside, a MISSING live bucket means the crash hit between the two
-    * renames and the aside IS the authoritative content — rename it
-    * back; a present live bucket means the replacement landed and the
-    * aside is stale — delete it. MUST run before any read of the
-    * directory during recovery: an underscore-prefixed aside is
-    * invisible to parquet readers, so an unrestored `_vectors` aside
-    * would read as a silently truncated corpus and the bucket would be
-    * LOST with the rebuild (the round-13 review's delete-crash
-    * hole).
-    */
-  private def restoreAsides(f: org.apache.hadoop.fs.FileSystem,
-                            dir: String, prefix: String, op: String): Unit = {
-    val d = new Path(dir)
-    if (!f.exists(d)) return
-    f.listStatus(d)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"_old_$prefix="))
-      .foreach { st =>
-        val live = new Path(dir, st.getPath.getName.stripPrefix("_old_"))
-        if (f.exists(live)) {
-          if (!f.delete(st.getPath, true))
-            sys.error(s"$op: could not drop stale aside ${st.getPath}")
-        } else if (!f.rename(st.getPath, live))
-          sys.error(s"$op: could not restore aside ${st.getPath} -> $live")
-      }
-  }
-
   /** Persist a partition-local graph tree over `vecs` (id, vec) with
     * the coarse assignment `assign` (id, cluster_id) in `nb` buckets:
     * each bucket's exact k-NN graph ([[bucketGraphs]]) as the edge
@@ -1421,17 +1343,6 @@ object GraphIndex {
 
   private[graft] val VectorSchema: StructType = StructType.fromDDL(VectorDdl)
 
-  /** A half-applied mutation leaves this staging marker; serving and
-    * mutating refuse while it exists (recovery = rebuild) — the
-    * IndexLifecycle `_append_tmp` discipline.
-    */
-  private def checkNoHalfApplied(spark: SparkSession, indexPath: String): Unit = {
-    val p = new Path(s"$indexPath/_graph_tmp")
-    if (fs(spark, indexPath).exists(p))
-      sys.error(s"graph index at $indexPath carries a half-applied mutation " +
-        s"($p exists) — rebuild before serving or mutating")
-  }
-
   /** Open a partition-local tree for serving: one row per bucket (ids,
     * vectors, coarse lists and the symmetrised in-bucket adjacency, as
     * arrays), pinned with a local checkpoint, plus its metric, k and
@@ -1463,7 +1374,7 @@ object GraphIndex {
     */
   def queryGraphBatch(spark: SparkSession, indexPath: String,
                       queries: DataFrame, k: Int): DataFrame = {
-    checkNoHalfApplied(spark, indexPath)
+    BucketSwap.refuseProbe(spark, BucketSwap.graph(indexPath))
     serve(ServingState.graph(spark, indexPath), queries, k).drop("dist")
   }
 
@@ -1564,7 +1475,7 @@ object GraphIndex {
   def queryGraphBatchFiltered(spark: SparkSession, indexPath: String,
                               queries: DataFrame, k: Int,
                               selector: DataFrame): DataFrame = {
-    checkNoHalfApplied(spark, indexPath)
+    BucketSwap.refuseProbe(spark, BucketSwap.graph(indexPath))
     // the open tree: metric, centroids and the stored vectors, pinned
     val st = ServingState.graph(spark, indexPath)
     val metric = st.metric
@@ -1653,92 +1564,67 @@ object GraphIndex {
              streamId: Option[String] = None): IndexStatus =
       ServingState.writing(indexPath) {
     val spark = newVecs.sparkSession
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, "append requires a built graph (build first)")
-    checkNoHalfApplied(spark, indexPath)
-    // at-least-once replay guard (the PqLifecycle.append contract): a
-    // batch the state already accounts for NO-OPs — the watermark is
-    // per stream identity, recorded in the same state write the
-    // landing protocol does below
-    if (streamBatchId.exists(_ <= s.appliedBatchFor(streamId.getOrElse(""))))
-      return s
-    val meta = localMeta(spark, indexPath)
-    val (k, metric, nb) = (meta.k, meta.metric, meta.buckets)
-    val nv = newVecs.select(col("id"), col("vec").cast("array<float>").as("vec")).cache()
-    var forward: DataFrame = null
-    try {
+    val tree = BucketSwap.graph(indexPath)
+    // read after the replay guard: a replayed batch reads nothing
+    lazy val meta = localMeta(spark, indexPath)
+    BucketSwap.append(spark, tree, streamBatchId, streamId)(
+        newVecs.select(col("id"), col("vec").cast("array<float>").as("vec"))) { nv =>
       // the batch size and the buckets it lands in, in one job; edges
       // never leave a bucket, so these are all the buckets it touches
-      val landed = nv.groupBy(bucketOf(col("id"), nb).as("bk")).count().collect()
-      val d = landed.map(_.getLong(1)).sum
-      val affected = landed.filterNot(_.isNullAt(0)).map(_.getInt(0)).sorted.toSeq
+      val landed = nv.groupBy(bucketOf(col("id"), meta.buckets).as("bk")).count().collect()
+      (landed.map(_.getLong(1)).sum, landed.filterNot(_.isNullAt(0)).map(_.getInt(0)).sorted.toSeq)
+    } { (nv, affected, next) =>
+      val (k, metric, nb) = (meta.k, meta.metric, meta.buckets)
       val edges = readEdges(spark, indexPath, Some(affected.toSet))
       val cents = IndexLifecycle.loadCentroids(spark, indexPath)
-      forward = linkForward(spark, readVectors(spark, indexPath, Some(affected.toSet)),
+      val forward = linkForward(spark, readVectors(spark, indexPath, Some(affected.toSet)),
         nv, nb, k, metric, indexPath).cache()
-      forward.count()
-      // reverse edges cap touched nodes at R (their old edges compete)
-      val reverse = forward.select(col("dst").as("src"), col("src").as("dst"),
-        col("dist"))
-      val touched = reverse.select("src").distinct()
-      val recapped = edges.join(touched, Seq("src"), "left_semi")
-        .union(reverse)
-        // shared exchange: hash by src serves both the dedup and the
-        // R-cap aggregate (the beamRounds round-16 shape)
-        .repartition(col("src"))
-        .dropDuplicates("src", "dst")
-        .groupBy("src")
-        .agg(VectorFunctions
-          .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
-        .select(col("src"), explode(col("nn")).as("p"))
-        .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
-      // new content of the affected buckets: untouched srcs keep their
-      // rows, touched srcs take the recapped adjacency, new srcs their
-      // forward edges
-      val rewritten = edges.join(touched, Seq("src"), "left_anti")
-        .union(recapped).union(forward)
-        .withColumn("src_bucket", bucketOf(col("src"), nb))
-      // stage EVERYTHING, record state, then swap — a crash leaves the
-      // loud marker, never rows the state doesn't account for
-      val tmp = s"$indexPath/_graph_tmp"
-      // the two staged writes land in SIBLING staging dirs and both
-      // complete before the state write, so overlapping them (round-17,
-      // guide §2.6) cannot change the crash-ordering contract — a crash
-      // anywhere in here still leaves the loud marker and no state row
-      overlapJobs(
-        () => rewritten
-          .repartition(col("src_bucket"))
-          .write.mode("overwrite").partitionBy("src_bucket")
-          .parquet(s"$tmp/edges"),
-        // new vectors land with their coarse assignment (flat argmin over
-        // the loaded centroids)
-        () => Ivf.assignTo(nv, cents)
-          .select(col("neighbor_id").as("id"), col("vec"),
-            col("cluster_id").cast("int").as("cluster_id"))
-          .withColumn("vbucket", bucketOf(col("id"), nb))
-          .repartition(col("vbucket"))
-          .write.mode("overwrite").partitionBy("vbucket")
-          .parquet(s"$tmp/vectors"))
-      val next0 = s.copy(isDirty = true, dirtyCount = s.dirtyCount + d,
-        size = s.size + d)
-      val next = (streamBatchId, streamId) match {
-        case (Some(b), Some(id)) => next0.withAppliedBatch(id, b)
-        case _ => next0
-      }
-      IndexLifecycle.writeState(spark, indexPath, next)
-      val f = fs(spark, indexPath)
-      swapBuckets(f, indexPath, s"$tmp/edges", "src_bucket", affected,
-        "graph append")
-      // new vector files land in their live buckets (append-only)
-      moveInFiles(f, s"$tmp/vectors", s"$indexPath/_vectors", "vbucket",
-        "graph append")
-      if (!f.delete(new Path(tmp), true))
-        sys.error(s"graph append: could not clear staging dir $tmp")
-      next
-    } finally {
-      // released on failure too: a failed batch must not stay cached
-      if (forward != null) forward.unpersist()
-      nv.unpersist()
+      try {
+        forward.count()
+        // reverse edges cap touched nodes at R (their old edges compete)
+        val reverse = forward.select(col("dst").as("src"), col("src").as("dst"),
+          col("dist"))
+        val touched = reverse.select("src").distinct()
+        val recapped = edges.join(touched, Seq("src"), "left_semi")
+          .union(reverse)
+          // shared exchange: hash by src serves both the dedup and the
+          // R-cap aggregate (the beamRounds round-16 shape)
+          .repartition(col("src"))
+          .dropDuplicates("src", "dst")
+          .groupBy("src")
+          .agg(VectorFunctions
+            .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
+          .select(col("src"), explode(col("nn")).as("p"))
+          .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
+        // new content of the affected buckets: untouched srcs keep their
+        // rows, touched srcs take the recapped adjacency, new srcs their
+        // forward edges
+        val rewritten = edges.join(touched, Seq("src"), "left_anti")
+          .union(recapped).union(forward)
+          .withColumn("src_bucket", bucketOf(col("src"), nb))
+        // stage EVERYTHING, record state, then swap — a crash leaves the
+        // loud marker, never rows the state doesn't account for. The two
+        // staged writes land in sibling dirs and both complete before
+        // the state write, so overlapping them (round-17, guide §2.6)
+        // cannot change the crash-ordering contract
+        val staged = s"${tree.staging}/edges"
+        BucketSwap.stage(spark, tree)(overlapJobs(
+          () => rewritten
+            .repartition(col("src_bucket"))
+            .write.mode("overwrite").partitionBy("src_bucket")
+            .parquet(staged),
+          // new vectors land with their coarse assignment (flat argmin
+          // over the loaded centroids), moved in by the landing
+          () => Ivf.assignTo(nv, cents)
+            .select(col("neighbor_id").as("id"), col("vec"),
+              col("cluster_id").cast("int").as("cluster_id"))
+            .withColumn("vbucket", bucketOf(col("id"), nb))
+            .repartition(col("vbucket"))
+            .write.mode("overwrite").partitionBy("vbucket")
+            .parquet(tree.staged.dir)))
+        BucketSwap.land(spark, tree, Some(next),
+          Seq(BucketSwap.Rewrite(tree.lists, staged, affected)))
+      } finally forward.unpersist() // released on failure too
     }
   }
 
@@ -1763,31 +1649,41 @@ object GraphIndex {
     * consistent tree from whatever buckets swapped (size re-counted
     * from disk), and re-issuing the delete completes the remainder.
     *
-    * Scale shape: one edge-table scan finds the in-neighbors (the same
-    * bounded aggregation IndexLifecycle.delete pays over its lists);
+    * Scale shape: edges never leave a bucket, so every in-neighbor and
+    * repair of a deleted id lives in the id's own bucket — the deleted
+    * ids' bucket set is computed once (a distinct over the batch) and
+    * only those buckets' edges and vectors are read and rewritten;
     * repair candidates are O(d · deg²) pair rows — batch-sized, never
-    * corpus-sized; rewrites touch O(affected buckets).
+    * corpus-sized.
     */
   def delete(deleteIds: DataFrame, indexPath: String): IndexStatus =
       ServingState.writing(indexPath) {
     val spark = deleteIds.sparkSession
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, "delete requires a built graph (build first)")
-    checkNoHalfApplied(spark, indexPath)
+    val tree = BucketSwap.graph(indexPath)
+    val s = BucketSwap.intact(spark, tree, "delete")
     val meta = localMeta(spark, indexPath)
     val (k, metric, nb) = (meta.k, meta.metric, meta.buckets)
-    val stored = readVectors(spark, indexPath)
     // distinct + present-only: duplicates must not inflate the removed
     // count, and a missing id is a no-op
+    // the requested ids' buckets, deduplicated per partition: one job
+    val candidates = deleteIds.select(bucketOf(col("id"), nb)).rdd
+      .mapPartitions(_.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSet.iterator)
+      .collect().toSet
     val delRows = deleteIds.select(col("id").as("del_id")).distinct()
-      .join(stored.select(col("id").as("del_id")), Seq("del_id"), "left_semi")
+      .join(readVectors(spark, indexPath, Some(candidates)).select(col("id").as("del_id")),
+        Seq("del_id"), "left_semi")
       .cache()
     var touched: DataFrame = null
     try {
-      val d = delRows.count()
+      // the batch size and the buckets holding a deleted id, in one job:
+      // the only buckets the delete reads and rewrites
+      val hit = delRows.select(bucketOf(col("del_id"), nb)).rdd.map(_.getInt(0)).countByValue()
+      val d = hit.values.sum
       if (d == 0) return s
+      val affected = hit.keys.toSeq.sorted
       val del = broadcast(delRows)
-      val edges = readEdges(spark, indexPath)
+      val edges = readEdges(spark, indexPath, Some(affected.toSet))
+      val stored = readVectors(spark, indexPath, Some(affected.toSet))
       val vecs = stored.select(col("id"), col("vec"))
       // in-neighbors to repair: u → v with v deleted, u surviving
       touched = edges.join(del, col("dst") === col("del_id"), "left_semi")
@@ -1821,47 +1717,34 @@ object GraphIndex {
           .topKByDistance(col("dist"), col("dst"), reverseCap(k)).as("nn"))
         .select(col("src"), explode(col("nn")).as("p"))
         .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
-      // affected edge buckets: deleted srcs (out-edges drop) + touched
-      val affected = del.select(bucketOf(col("del_id"), nb).as("bk"))
-        .union(touched.select(bucketOf(col("src"), nb).as("bk")))
-        .distinct().collect().map(_.getInt(0)).sorted.toSeq
-      val keptVerbatim = edges
-        .filter(bucketOf(col("src"), nb).isInCollection(affected))
+      val rewritten = edges
         .join(touched, Seq("src"), "left_anti")
         .join(del, col("src") === col("del_id"), "left_anti")
-      val rewritten = keptVerbatim.union(repaired)
+        .union(repaired)
         .withColumn("src_bucket", bucketOf(col("src"), nb))
-      val vAffected = del.select(bucketOf(col("del_id"), nb).as("bk"))
-        .distinct().collect().map(_.getInt(0)).sorted.toSeq
       val vRewritten = stored
-        .filter(bucketOf(col("id"), nb).isInCollection(vAffected))
         .join(del, col("id") === col("del_id"), "left_anti")
         .withColumn("vbucket", bucketOf(col("id"), nb))
       // stage → state → swap → clear (append's protocol; `vectors_rw` so
-      // rebuild's crash-recovery reconcile — which moves APPEND-staged
-      // vectors in — can never resurrect rows a delete was removing)
-      val tmp = s"$indexPath/_graph_tmp"
-      // sibling staging dirs, both before the state write — overlapped
-      // (round-17, guide §2.6), same crash-ordering as sequential
-      overlapJobs(
+      // recovery — which moves APPEND-staged vectors in — can never
+      // resurrect rows a delete was removing); sibling staging dirs,
+      // both before the state write — overlapped (round-17, guide
+      // §2.6), same crash-ordering as sequential
+      val (eStaged, vStaged) = (s"${tree.staging}/edges", s"${tree.staging}/vectors_rw")
+      BucketSwap.stage(spark, tree)(overlapJobs(
         () => rewritten
           .repartition(col("src_bucket"))
           .write.mode("overwrite").partitionBy("src_bucket")
-          .parquet(s"$tmp/edges"),
+          .parquet(eStaged),
         () => vRewritten
           .repartition(col("vbucket"))
           .write.mode("overwrite").partitionBy("vbucket")
-          .parquet(s"$tmp/vectors_rw"))
+          .parquet(vStaged)))
       val next = s.copy(isDirty = true, dirtyCount = s.dirtyCount + d,
         size = s.size - d)
-      IndexLifecycle.writeState(spark, indexPath, next)
-      val f = fs(spark, indexPath)
-      swapBuckets(f, indexPath, s"$tmp/edges", "src_bucket", affected,
-        "graph delete")
-      swapBuckets(f, s"$indexPath/_vectors", s"$tmp/vectors_rw", "vbucket",
-        vAffected, "graph delete")
-      if (!f.delete(new Path(tmp), true))
-        sys.error(s"graph delete: could not clear staging dir $tmp")
+      BucketSwap.land(spark, tree, Some(next), Seq(
+        BucketSwap.Rewrite(tree.lists, eStaged, affected),
+        BucketSwap.Rewrite(tree.rows, vStaged, affected)))
       next
     } finally {
       if (touched != null) touched.unpersist()
@@ -1871,30 +1754,22 @@ object GraphIndex {
 
   /** A20's small-files maintenance pass for the graph tree's ONE
     * accretive layout: `_vectors` accumulates one part-file per
-    * touched vbucket per append (moveInFiles), while the edge buckets
-    * rewrite wholesale (one file per bucket) on every mutation and so
-    * never accumulate. Shared core (IndexLifecycle.compactLayout —
-    * threshold-gated, rename-aside, content-neutral), wrapped in the
-    * family's `_graph_tmp` marker: a crash mid-swap refuses loudly on
-    * every serve/mutate path and rebuild's reconcile (restoreAsides)
-    * makes the buckets whole. State is never touched. Returns the
-    * number of vbuckets rewritten; pinned in GraphSpec.
+    * touched vbucket per append (the landing's move-in), while the edge
+    * buckets rewrite wholesale (one file per bucket) on every mutation
+    * and so never accumulate. Shared core ([[BucketSwap.compact]] —
+    * threshold-gated, staged under the `_graph_tmp` marker, bucket-
+    * swapped, content-neutral, reading the vectors under their writer's
+    * schema): a crash mid-swap refuses loudly on every serve/mutate
+    * path and rebuild's recovery makes the buckets whole. State is
+    * never touched. Returns the number of vbuckets rewritten; pinned in
+    * GraphSpec.
     */
   def compact(spark: SparkSession, indexPath: String, maxFiles: Int = 4): Int =
       ServingState.writing(indexPath) {
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, "compact requires a built graph (build first)")
-    checkNoHalfApplied(spark, indexPath)
+    val tree = BucketSwap.graph(indexPath)
+    BucketSwap.intact(spark, tree, "compact")
     localMeta(spark, indexPath)
-    val f = fs(spark, indexPath)
-    val marker = new Path(s"$indexPath/_graph_tmp")
-    if (!f.mkdirs(marker))
-      sys.error(s"graph compact: could not create staging marker $marker")
-    val nRw = IndexLifecycle.compactLayout(
-      spark, s"$indexPath/_vectors", "vbucket", maxFiles)
-    if (!f.delete(marker, true))
-      sys.error(s"graph compact: could not clear staging marker $marker")
-    nRw
+    BucketSwap.compact(spark, tree, tree.rows, maxFiles, VectorSchema)
   }
 
   /** Driver query: `graph_delete` — the remove_vector contract on the
@@ -1957,124 +1832,50 @@ object GraphIndex {
   /** Out-of-band rebuild: a fresh coarse quantizer, bucket count and
     * per-bucket exact graph over the CURRENT logical contents (the
     * `_vectors` read-back — appended vectors included, now linking
-    * among themselves too), version+1, dirt reset, staged tree
-    * double-rename swapped in with the live tree serving throughout.
-    * It reads a tree of any layout, so it also converts a tree written
-    * before the partition-local layout. Rebuild IS the recovery path for a half-applied
-    * mutation (the `_graph_tmp` refusal every serve/mutate call
-    * raises): a lingering staging dir is RECONCILED, not discarded —
-    * asides from a crashed bucket swap are restored first, and staged
-    * vector files the state already accounts for (a crash in append's
-    * state-write→move-in window: state size exceeds the on-disk
-    * `_vectors` count) move into their live buckets before the
-    * rebuild, so an accounted batch can never vanish with the
-    * marker; only a staging dir the state does NOT account for is
-    * discarded (its rows either never counted or already landed).
-    * Edges are always fully re-derived from the reconciled vectors,
-    * and the marker clears with the swap instead of bricking the
-    * index. A mutation that lands between the contents snapshot and
+    * among themselves too), version+1, dirt reset, through the shared
+    * rebuild skeleton ([[BucketSwap.rebuild]]): the new tree stages at
+    * the sibling `<path>_rebuild_tmp` and the tree swap renames it in,
+    * with the live tree serving throughout. It reads a tree of any
+    * layout, so it also converts a tree written before the
+    * partition-local layout. Rebuild IS the recovery path for a
+    * half-applied mutation (the `_graph_tmp` refusal every
+    * serve/mutate call raises): the skeleton first RECONCILES the
+    * staging dir rather than discarding it — asides from a crashed
+    * bucket swap are restored, and staged vector files the state
+    * already accounts for (a crash in append's state-write→move-in
+    * window: state size − `_vectors` rows == staged rows) move into
+    * their live buckets, so an accounted batch can never vanish with
+    * the marker (its stream's replay NO-OPs against the recorded
+    * watermark). Edges are always fully re-derived from the reconciled
+    * vectors. A mutation that lands between the contents snapshot and
     * the swap aborts the swap loudly (the PqLifecycle.rebuild
     * contract): the staged tree is discarded and the caller re-runs
-    * against the current contents — appended rows can never silently
-    * vanish with the replaced tree.
+    * against the current contents.
     */
   def rebuild(spark: SparkSession, indexPath: String): IndexStatus =
       ServingState.writing(indexPath) {
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, "rebuild requires a built graph")
-    // recovery: RECONCILE a crashed mutation's staging dir. append
-    // stages BOTH trees fully, THEN writes state, THEN moves files in
-    // — so when the state's size exceeds the on-disk `_vectors` count,
-    // the staged vector files are exactly the accounted-but-unmoved
-    // batch: move them in (a partial move-in completes file-by-file —
-    // part names carry a per-job UUID, so no collisions) and let the
-    // rebuild below derive their edges. Only a staging dir the
-    // state does NOT account for (crash BEFORE the state write, or
-    // AFTER the move-in finished) is discarded: its rows either never
-    // counted or already live in `_vectors`. Without the reconcile, a
-    // crash in the state-write→move-in window would lose the batch
-    // silently — the stream's replay NO-OPs against the recorded
-    // watermark and the rebuild re-derives from a `_vectors` tree
-    // missing the rows.
-    locally {
-      val marker = new Path(s"$indexPath/_graph_tmp")
-      val f0 = fs(spark, indexPath)
-      if (f0.exists(marker)) {
-        // FIRST make any crashed bucket swap whole: an unrestored
-        // `_vectors` aside is invisible to parquet readers, so both
-        // the reconcile count below and the rebuild would read a
-        // silently truncated corpus and the bucket would be LOST (a
-        // crashed delete's vector swap is the authoritative-data
-        // case; edge asides matter only for serving until the swap
-        // and are re-derived below either way)
-        restoreAsides(f0, s"$indexPath/_vectors", "vbucket",
-          "graph rebuild recovery")
-        restoreAsides(f0, indexPath, "src_bucket", "graph rebuild recovery")
-        val staged = new Path(s"$indexPath/_graph_tmp/vectors")
-        if (f0.exists(staged) &&
-            s.size > readVectors(spark, indexPath).count()) {
-          moveInFiles(f0, staged.toString, s"$indexPath/_vectors", "vbucket",
-            "graph rebuild recovery")
-        }
-        if (!f0.delete(marker, true))
-          sys.error(s"graph rebuild: could not discard staging dir $marker")
-      }
+    BucketSwap.rebuild(spark, BucketSwap.graph(indexPath)) { (s, staged) =>
+      // (k, metric) of any layout: a rebuild is how an older tree converts
+      val (k, metric) = readMeta(spark, indexPath)
+      val vecs = readVectors(spark, indexPath).select("id", "vec").cache()
+      val n =
+        try {
+          val n = vecs.count()
+          // a fresh coarse quantizer over the current contents, and the
+          // bucket count re-derived from them
+          val (assign, cents, _) =
+            Ivf.kmeansWithQuantizer(Tables.rebalanced(vecs), Ivf.defaultK(n))
+          writeGraphTree(spark, vecs, assign, cents, staged, k, metric, bucketCount(n))
+          n
+        } finally vecs.unpersist() // released on failure too
+      val next = IndexStatus("knngraph", isBuilt = true, isDirty = false,
+        size = n, embeddingDim = s.embeddingDim,
+        builtAt = System.currentTimeMillis(), version = s.version + 1,
+        dirtyCount = 0L, totalVectors = n,
+        appliedStreams = s.appliedStreams)
+      IndexLifecycle.writeState(spark, staged, next)
+      next
     }
-    // (k, metric) of any layout: a rebuild is how an older tree converts
-    val (k, metric) = readMeta(spark, indexPath)
-    val staged = s"$indexPath/_rebuild_tmp"
-    val vecs = readVectors(spark, indexPath).select("id", "vec").cache()
-    val n =
-      try {
-        val n = vecs.count()
-        // a fresh coarse quantizer over the current contents, and the
-        // bucket count re-derived from them
-        val (assign, cents, _) =
-          Ivf.kmeansWithQuantizer(Tables.rebalanced(vecs), Ivf.defaultK(n))
-        writeGraphTree(spark, vecs, assign, cents, staged, k, metric, bucketCount(n))
-        n
-      } finally vecs.unpersist() // released on failure too
-    val next = IndexStatus("knngraph", isBuilt = true, isDirty = false,
-      size = n, embeddingDim = s.embeddingDim,
-      builtAt = System.currentTimeMillis(), version = s.version + 1,
-      dirtyCount = 0L, totalVectors = n,
-      appliedStreams = s.appliedStreams)
-    IndexLifecycle.writeState(spark, staged, next)
-    val f = fs(spark, indexPath)
-    val live = new Path(indexPath)
-    val aside = new Path(s"$indexPath.__old")
-    // abort-before-swap (the PqLifecycle.rebuild contract): a mutation
-    // that landed during the staging would be silently
-    // discarded with the replaced tree — check the live state moved
-    // neither before the move-aside nor during it
-    // appliedStreams included (the PqLifecycle.rebuild tuple): even a
-    // zero-row append moves a watermark, and reverting that silently
-    // would re-open the replay window it closed
-    val live0 = IndexLifecycle.status(spark, indexPath)
-    if ((live0.version, live0.dirtyCount, live0.size, live0.appliedStreams) !=
-        (s.version, s.dirtyCount, s.size, s.appliedStreams)) {
-      f.delete(new Path(staged), true)
-      sys.error("graph rebuild: concurrent mutation landed during staging — " +
-        "staged tree discarded, re-run rebuild against the current contents")
-    }
-    if (!f.rename(live, aside))
-      sys.error(s"graph rebuild: could not move live tree aside")
-    val moved = IndexLifecycle.status(spark, s"$aside")
-    if ((moved.version, moved.dirtyCount, moved.size, moved.appliedStreams) !=
-        (s.version, s.dirtyCount, s.size, s.appliedStreams)) {
-      f.delete(new Path(s"$aside/_rebuild_tmp"), true)
-      if (!f.rename(aside, live))
-        sys.error(s"graph rebuild: could not restore live tree from $aside")
-      sys.error("graph rebuild: concurrent mutation landed between the abort " +
-        "check and the swap — live tree restored, staged tree discarded")
-    }
-    if (!f.rename(new Path(s"$aside/_rebuild_tmp"), live)) {
-      f.rename(aside, live) // restore
-      sys.error(s"graph rebuild: could not move staged tree in")
-    }
-    if (!f.delete(aside, true))
-      sys.error(s"graph rebuild: could not clean up old version $aside")
-    next
   }
 
   /** Driver query: `graph_lifecycle` — the graph-index state machine

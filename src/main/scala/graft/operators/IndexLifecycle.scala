@@ -243,57 +243,21 @@ object IndexLifecycle {
     */
   def append(newVecs: DataFrame, indexPath: String): IndexStatus = {
     val spark = newVecs.sparkSession
-    val s = status(spark, indexPath)
-    require(s.isBuilt, "append requires a built index (build first)")
-    checkNoHalfAppliedMutation(spark, indexPath)
-    val v = newVecs.cache()
-    val n = v.count()
-    val next = s.copy(isDirty = true, dirtyCount = s.dirtyCount + n, size = s.size + n)
+    val tree = BucketSwap.lists(indexPath)
     // the frozen quantizer from the serving state (through the
     // persisted hierarchy when the build was two-level)
-    val st = ServingState.ivf(spark, indexPath)
-    landAppend(spark, indexPath, Ivf.assignToQ(v, st.centroids, st.hierarchy), next)
-    v.unpersist()
-    next
-  }
-
-  /** Crash-consistent append landing (the delete path's rename-aside
-    * discipline applied to growth): stage the cluster_id-keyed `rows`
-    * under `_append_tmp` (an underscore path parquet readers skip),
-    * record the state transition, then move the staged files into their
-    * live lists and clear the staging dir. A crash at any point leaves
-    * either no state change + the `_append_tmp` marker, or the new
-    * state + the marker — never rows being served that size/dirtyCount
-    * don't account for with nothing to detect it;
-    * [[checkNoHalfAppliedMutation]] refuses to serve or re-mutate while
-    * the marker exists (recovery = rebuild). Spark part-file names
-    * carry a per-job UUID, so moved files cannot collide with a list's
-    * existing files.
-    */
-  private[operators] def landAppend(spark: SparkSession, indexPath: String,
-                                    rows: DataFrame, next: IndexStatus): Unit = {
-    val tmp = s"$indexPath/_append_tmp"
-    rows
-      .repartition(col("cluster_id")) // one file per touched list
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-    writeState(spark, indexPath, next)
-    val f = fs(spark, indexPath)
-    val tmpPath = new Path(tmp)
-    f.listStatus(tmpPath)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cluster_id="))
-      .foreach { d =>
-        val dst = new Path(s"$indexPath/${d.getPath.getName}")
-        if (!f.exists(dst) && !f.mkdirs(dst))
-          sys.error(s"append: could not create list dir $dst")
-        f.listStatus(d.getPath)
-          .filter(_.getPath.getName.startsWith("part-"))
-          .foreach { file =>
-            if (!f.rename(file.getPath, new Path(dst, file.getPath.getName)))
-              sys.error(s"append: rename ${file.getPath} -> $dst failed")
-          }
-      }
-    if (!f.delete(tmpPath, true))
-      sys.error(s"append: could not clear staging dir $tmp")
+    lazy val st = ServingState.ivf(spark, indexPath)
+    BucketSwap.append(spark, tree)(newVecs) { v =>
+      // the batch size and its dimensions in one job: the assignment's
+      // distance would silently truncate a vector of another dimension
+      val r = v.agg(count(lit(1)), min(size(col("vec"))), max(size(col("vec")))).head()
+      val dim = st.centroids.head.length
+      require(r.getLong(0) == 0 || (r.getInt(1) == dim && r.getInt(2) == dim),
+        s"append: vector dim ${r.get(1)}..${r.get(2)} != index dim $dim")
+      (r.getLong(0), ())
+    } { (v, _, next) =>
+      BucketSwap.landRows(spark, tree, Ivf.assignToQ(v, st.centroids, st.hierarchy), next)
+    }
   }
 
   /** Driver demo for compact(): build, two appends (each lands its own
@@ -361,57 +325,20 @@ object IndexLifecycle {
     * thousands of tiny files pays a task + footer read per file on
     * every probe (the classic small-files wall). compact() rewrites
     * ONLY the lists whose part-file count exceeds `maxFiles`, one file
-    * per list, through the same rename-aside atomic swap as delete:
-    * rows are preserved exactly, untouched lists keep their very
-    * files, a crash mid-swap leaves the loud `_old_cluster_id=` marker
+    * per list, through the same bucket swap as delete
+    * ([[BucketSwap.compact]]): rows are preserved exactly, untouched
+    * lists keep their very files, a crash mid-swap leaves the marker
     * every serve/mutate path refuses, and state is NOT touched —
     * compaction is content-neutral (no dirt, no size change, no
-    * version bump). Returns the number of lists rewritten.
+    * version bump). The lists are read under the schema their part
+    * files record, so no inference job runs. Returns the number of
+    * lists rewritten.
     */
   def compact(spark: SparkSession, indexPath: String, maxFiles: Int = 4): Int = {
-    val s = status(spark, indexPath)
-    require(s.isBuilt, "compact requires a built index (build first)")
-    checkNoHalfAppliedMutation(spark, indexPath)
-    compactLayout(spark, indexPath, "cluster_id", maxFiles)
-  }
-
-  /** The compaction core over ANY `<partCol>=N`-bucketed parquet tree —
-    * the A20 contract generalized so every accretive bucket layout in
-    * the engine (IVF/IVF-PQ lists and the flat SQ8/BQ/PCA tiers at
-    * `cluster_id=`, the graph's `_vectors` at `vbucket=`) shares ONE
-    * implementation of threshold-gating, the rename-aside swap, and
-    * the `_old_<partCol>=` crash markers. Content-neutral by
-    * construction (rows are read and rewritten, state is never
-    * touched); callers own their family's preconditions.
-    */
-  private[operators] def compactLayout(spark: SparkSession, scanPath: String,
-                                       partCol: String, maxFiles: Int): Int = {
-    val f = fs(spark, scanPath)
-    val affected = f.listStatus(new Path(scanPath))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .filter(d => f.listStatus(d.getPath)
-        .count(_.getPath.getName.startsWith("part-")) > maxFiles)
-      .map(_.getPath.getName.stripPrefix(s"$partCol="))
-      .toSeq
-    if (affected.isEmpty) return 0
-    val tmp = s"$scanPath/_compact_rewrite"
-    spark.read.parquet(scanPath)
-      .filter(col(partCol).cast("string").isInCollection(affected))
-      .repartition(col(partCol)) // one file per rewritten bucket
-      .write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-    affected.foreach { bk =>
-      val dst = new Path(s"$scanPath/$partCol=$bk")
-      val src = new Path(s"$tmp/$partCol=$bk")
-      val aside = new Path(s"$scanPath/_old_$partCol=$bk")
-      if (f.exists(dst) && !f.rename(dst, aside))
-        sys.error(s"compact: could not move stale bucket $dst aside")
-      if (!f.rename(src, dst))
-        sys.error(s"compact: rename $src -> $dst failed; stale bucket kept at $aside")
-      if (f.exists(aside) && !f.delete(aside, true))
-        sys.error(s"compact: could not clean up $aside")
-    }
-    f.delete(new Path(tmp), true)
-    affected.length
+    val tree = BucketSwap.lists(indexPath)
+    BucketSwap.intact(spark, tree, "compact")
+    BucketSwap.compact(spark, tree, tree.lists, maxFiles,
+      BucketSwap.recordedSchema(spark, tree.lists))
   }
 
   /** Lazy rebuild policy: rebuild only when `shouldRebuild` says so,
@@ -457,9 +384,8 @@ object IndexLifecycle {
                                     idCol: String,
                                     bucketHint: Option[Seq[Int]] = None): IndexStatus = {
     val spark = deleteIds.sparkSession
-    val s = status(spark, indexPath)
-    require(s.isBuilt, "delete requires a built index (build first)")
-    checkNoHalfAppliedMutation(spark, indexPath)
+    val tree = BucketSwap.lists(indexPath)
+    val s = BucketSwap.intact(spark, tree, "delete")
     // distinct: duplicate ids in the delete batch must not inflate the
     // removed count (the anti-join itself is idempotent, but size/
     // dirtyCount would silently drift — even below zero on repeats)
@@ -471,236 +397,35 @@ object IndexLifecycle {
       .groupBy("cluster_id").agg(count(lit(1)).as("n"))
       .collect()
     if (hits.isEmpty) return s
-    val affected = hits.map(_.get(0))
+    val affected = hits.map(_.get(0).toString.toInt).toSeq
     val removed = hits.map(_.getLong(1)).sum
-    val tmp = s"$indexPath/_delete_rewrite"
-    lists.filter(col("cluster_id").isInCollection(affected.toSeq))
-      .join(ids, col(idCol) === col("del_id"), "left_anti")
-      .repartition(col("cluster_id")) // one file per rewritten list
-      .write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-    val f = fs(spark, indexPath)
-    affected.foreach { cid =>
-      val dst = new Path(s"$indexPath/cluster_id=$cid")
-      val src = new Path(s"$tmp/cluster_id=$cid")
-      // swap via rename-aside, never delete-then-rename: a crash between
-      // the two steps must leave a loud marker (_old_cluster_id=N, which
-      // parquet readers skip as an underscore path), not a silently
-      // missing inverted list. checkNoHalfAppliedMutation refuses to
-      // serve or re-mutate an index with such a marker present.
-      val aside = new Path(s"$indexPath/_old_cluster_id=$cid")
-      if (f.exists(dst) && !f.rename(dst, aside))
-        sys.error(s"delete: could not move stale list $dst aside")
-      // a fully-deleted list simply disappears (no src dir to swap in)
-      if (f.exists(src) && !f.rename(src, dst))
-        sys.error(s"delete: rename $src -> $dst failed; stale list kept at $aside")
-      if (f.exists(aside) && !f.delete(aside, true))
-        sys.error(s"delete: could not clean up $aside")
+    val staged = s"${tree.staging}/rewrite"
+    BucketSwap.stage(spark, tree) {
+      lists.filter(col("cluster_id").isInCollection(affected))
+        .join(ids, col(idCol) === col("del_id"), "left_anti")
+        .repartition(col("cluster_id")) // one file per rewritten list
+        .write.mode("overwrite").partitionBy("cluster_id").parquet(staged)
     }
-    f.delete(new Path(tmp), true)
+    // a fully-deleted list simply disappears (no staged dir to swap in)
     val next = s.copy(isDirty = true,
       dirtyCount = s.dirtyCount + removed, size = s.size - removed)
-    writeState(spark, indexPath, next)
+    BucketSwap.land(spark, tree, Some(next), Seq(BucketSwap.Rewrite(tree.lists, staged, affected)))
     next
   }
 
-  /** The rebuild SWAP protocol (the reference's atomic snapshot
-    * replacement, index_service.py:270-284, expressed as directory
-    * renames) — shared by every out-of-band rebuild (PqLifecycle for
-    * the IVF-PQ layout, TierLifecycle for the flat SQ8/BQ/PCA tiers),
-    * so the concurrent-mutation guards cannot drift between families.
-    * `tmp` holds the COMPLETE staged tree (lists + sidecars + its
-    * already-written state); `entry` is the live state the caller read
-    * on entry. Two checks narrow the lost-update window: the live
-    * state re-read just before the renames (abort: staged tree
-    * discarded, loud retry error) and a second re-read of the
-    * moved-aside tree right after the first rename (restore: live tree
-    * renamed back, staged discarded). A crash during staging leaves
-    * the live index untouched; a crash between the renames leaves BOTH
-    * complete trees under loud names — never a half-mixed model.
-    * `beforeSwap` is the test seam that lands a mutation inside the
-    * guarded window.
+  /** Make a crashed mutation of a `cluster_id=` tree whole IN PLACE
+    * ([[BucketSwap.recover]]): a crashed tree swap or bucket swap is
+    * undone, an append the state already accounts for (watermark
+    * included) moves in — hand-clearing the marker would lose a
+    * streamed batch forever, since its replay NO-OPs against the
+    * recorded watermark — and the state's size is re-pointed at the
+    * disk. Called automatically at rebuild entry (PqLifecycle.rebuild /
+    * TierLifecycle.rebuild); serve and append/delete keep REFUSING on
+    * the markers, the loud guard. Returns true when anything was
+    * repaired.
     */
-  private[operators] def swapRebuilt(spark: SparkSession, indexPath: String,
-                                     tmp: Path, entry: IndexStatus,
-                                     beforeSwap: () => Unit = () => ()): Unit =
-      ServingState.writing(indexPath) {
-    val f = fs(spark, indexPath)
-    beforeSwap()
-    // abort-before-swap: an append/delete that landed AFTER the
-    // caller's contents snapshot exists only in the live tree —
-    // swapping it away would silently lose those rows (and a carried
-    // stream watermark would even block their replay).
-    val live0 = status(spark, indexPath)
-    if ((live0.version, live0.dirtyCount, live0.size, live0.appliedStreams) !=
-        (entry.version, entry.dirtyCount, entry.size, entry.appliedStreams)) {
-      f.delete(tmp, true)
-      sys.error(s"rebuild: concurrent mutation landed during staging " +
-        s"(entry state $entry, live state $live0) — staged tree discarded, " +
-        "re-run rebuild against the current contents")
-    }
-    val live = new Path(indexPath)
-    val aside = new Path(s"${indexPath}_old_v${entry.version}")
-    if (!f.rename(live, aside))
-      sys.error(s"rebuild: could not move live index $live aside")
-    // second check AFTER the move-aside: a mutation that slipped in
-    // between the abort check and the rename travelled WITH the tree —
-    // restore it and retry rather than deleting it as the old version
-    val moved = status(spark, aside.toString)
-    if ((moved.version, moved.dirtyCount, moved.size, moved.appliedStreams) !=
-        (entry.version, entry.dirtyCount, entry.size, entry.appliedStreams)) {
-      if (!f.rename(aside, live))
-        sys.error(s"rebuild: late mutation detected but could not restore " +
-          s"$aside to $live — recover by hand before serving")
-      f.delete(tmp, true)
-      sys.error("rebuild: concurrent mutation landed between the abort check " +
-        "and the swap — live tree restored, staged tree discarded, re-run " +
-        "rebuild against the current contents")
-    }
-    if (!f.rename(tmp, live))
-      sys.error(s"rebuild: rename $tmp -> $live failed; last good version at $aside")
-    if (!f.delete(aside, true))
-      sys.error(s"rebuild: could not clean up old version $aside")
-  }
-
-  /** Make a crashed mutation whole IN PLACE — the `cluster_id`-layout
-    * twin of the graph family's rebuild reconcile, and the recovery
-    * [[checkNoHalfAppliedMutation]]'s "rebuild the index" message
-    * under-serves for STREAMED appends: a full rebuild from the
-    * primary store is sound for batch callers, but a crashed streamed
-    * append has its batch accounted in the state (watermark included)
-    * with the rows still in staging — hand-clearing the marker would
-    * lose the batch forever (the stream's replay NO-OPs against the
-    * recorded watermark). Repairs, in order:
-    *   1. `_old_cluster_id=` asides (a crash inside a delete's or
-    *      compact's swap): a MISSING live bucket means the crash hit
-    *      between the two renames and the aside IS the authoritative
-    *      content — rename it back; a present live bucket means the
-    *      replacement landed and the aside is stale — drop it.
-    *   2. `_append_tmp` (a crash inside landAppend's
-    *      stage → state-write → move-in window): when the state
-    *      counts MORE rows than the disk holds, the staged part-files
-    *      are exactly the accounted-but-unmoved batch — move them in
-    *      (file-by-file; UUID part names make a partial move-in
-    *      resumable); otherwise the staging is unaccounted (crash
-    *      before the state write) or already applied — discard it.
-    *   3. State/disk reconciliation: a delete that crashed after some
-    *      bucket swaps removed rows the state never counted
-    *      (deleteFrom writes state LAST) — re-point `size` at the
-    *      disk truth and record the discrepancy as dirt, so the
-    *      rebuild policy answers it; re-running the same delete batch
-    *      then converges (the anti-join is idempotent).
-    * Called automatically at rebuild entry (PqLifecycle.rebuild /
-    * TierLifecycle.rebuild — recovery-then-rebuild, the GraphIndex
-    * discipline); serve and append/delete keep REFUSING on the
-    * markers, the loud guard. Returns true when anything was repaired.
-    */
-  def recoverMutation(spark: SparkSession, indexPath: String): Boolean = {
-    val f = fs(spark, indexPath)
-    val root = new Path(indexPath)
-    if (!f.exists(root)) return false
-    var repaired = false
-    f.listStatus(root)
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("_old_cluster_id="))
-      .foreach { st =>
-        val live = new Path(indexPath, st.getPath.getName.stripPrefix("_old_"))
-        if (f.exists(live)) {
-          if (!f.delete(st.getPath, true))
-            sys.error(s"recover: could not drop stale aside ${st.getPath}")
-        } else if (!f.rename(st.getPath, live))
-          sys.error(s"recover: could not restore aside ${st.getPath} -> $live")
-        repaired = true
-      }
-    val tmp = new Path(s"$indexPath/_append_tmp")
-    if (f.exists(tmp)) {
-      val s = status(spark, indexPath)
-      // EXACT-match gate, not a mere size inequality: landAppend's
-      // invariant is that the state grew by precisely the staged batch,
-      // so the staging is "the accounted-but-unmoved batch" only when
-      // state.size − disk == staged rows. A looser (>) gate could land
-      // an UNACCOUNTED batch on top of unrelated size drift (a delete
-      // that crashed after its last swap but before its state write)
-      // and the stream's replay — whose watermark was never recorded —
-      // would then land it AGAIN.
-      val stagedCount =
-        try spark.read.parquet(tmp.toString).count() catch { case _: Throwable => 0L }
-      if (stagedCount > 0 &&
-          s.size - spark.read.parquet(indexPath).count() == stagedCount) {
-        f.listStatus(tmp)
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("cluster_id="))
-          .foreach { d =>
-            val dst = new Path(s"$indexPath/${d.getPath.getName}")
-            if (!f.exists(dst) && !f.mkdirs(dst))
-              sys.error(s"recover: could not create list dir $dst")
-            f.listStatus(d.getPath)
-              .filter(_.getPath.getName.startsWith("part-"))
-              .foreach { file =>
-                if (!f.rename(file.getPath, new Path(dst, file.getPath.getName)))
-                  sys.error(s"recover: rename ${file.getPath} -> $dst failed")
-              }
-          }
-      }
-      if (!f.delete(tmp, true))
-        sys.error(s"recover: could not clear staging dir $tmp")
-      repaired = true
-    }
-    // stale rewrite stagings (a delete/compact that crashed before its
-    // swap started): invisible to readers and overwritten by the next
-    // run either way — dropped here so a recovered tree is clean
-    Seq("_delete_rewrite", "_compact_rewrite").foreach { d =>
-      val p = new Path(s"$indexPath/$d")
-      if (f.exists(p)) {
-        if (!f.delete(p, true))
-          sys.error(s"recover: could not drop stale staging $p")
-        repaired = true
-      }
-    }
-    if (repaired) {
-      val s = status(spark, indexPath)
-      val disk = spark.read.parquet(indexPath).count()
-      if (s.size != disk)
-        writeState(spark, indexPath, s.copy(size = disk, isDirty = true,
-          dirtyCount = s.dirtyCount + math.abs(s.size - disk)))
-    }
-    repaired
-  }
-
-  /** Refuse to operate on an index carrying a half-applied mutation
-    * marker: `_old_cluster_id=N` (a crash between a delete's two swap
-    * renames) or `_append_tmp` (a crash inside an append's stage/move
-    * window). Either way the on-disk lists are inconsistent with the
-    * state file and the only safe recovery is a rebuild (build()'s
-    * overwrite drops the markers along with the stale lists). Called by
-    * every mutation (append/delete) AND every serve path over a
-    * persisted index (query/queryIvfPq) — a half-applied delete would
-    * otherwise silently answer queries minus an entire inverted list.
-    */
-  def checkNoHalfAppliedMutation(spark: SparkSession, indexPath: String): Unit = {
-    liveLists(spark, indexPath)
-    ()
-  }
-
-  /** [[checkNoHalfAppliedMutation]]'s root listing, returned: the
-    * `cluster_id` of every list directory present (empty when the
-    * index does not exist). Serve paths read their probed lists from
-    * it instead of paying Spark's own listing of every list.
-    */
-  private[operators] def liveLists(spark: SparkSession, indexPath: String): Set[Int] = {
-    val f = fs(spark, indexPath)
-    val p = new Path(indexPath)
-    if (!f.exists(p)) Set.empty
-    else {
-      val names = f.listStatus(p).map(_.getPath.getName)
-      val leftover = names
-        .filter(n => n.startsWith("_old_cluster_id=") || n == "_append_tmp")
-      require(leftover.isEmpty,
-        s"index at $indexPath has a half-applied mutation (${leftover.mkString(", ")}); " +
-          "a crash interrupted a partition swap or append landing — rebuild the index")
-      names.filter(_.startsWith("cluster_id="))
-        .map(_.stripPrefix("cluster_id=").toInt).toSet
-    }
-  }
+  def recoverMutation(spark: SparkSession, indexPath: String): Boolean =
+    BucketSwap.recover(spark, BucketSwap.lists(indexPath))
 
   /** Centroids of a persisted index (the coarse quantizer survives the
     * building session).

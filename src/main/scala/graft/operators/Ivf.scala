@@ -641,7 +641,7 @@ object Ivf {
     */
   def queryIndex(spark: SparkSession, indexPath: String, queryVec: Array[Float],
                  k: Int, nprobe: Int): DataFrame = {
-    val live = IndexLifecycle.liveLists(spark, indexPath)
+    val live = BucketSwap.refuse(spark, BucketSwap.lists(indexPath))
     val st = ServingState.ivf(spark, indexPath)
     val probed = st.centroids.zipWithIndex
       .map { case (c, j) =>

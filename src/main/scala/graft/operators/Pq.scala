@@ -802,7 +802,7 @@ object Pq {
                          selector: DataFrame,
                          refineWith: Option[DataFrame] = None,
                          refine: Int = 4): DataFrame = {
-    val live = IndexLifecycle.liveLists(spark, indexPath)
+    val live = BucketSwap.refuse(spark, BucketSwap.lists(indexPath))
     val st = ServingState.pq(spark, indexPath)
     val pm = st.model
     require(queryVec.length == pm.dim,
@@ -1263,8 +1263,8 @@ object Pq {
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       PqMeta(0, VectorMetric.L2, residual = false)
     else {
-      val r = spark.read.schema("m INT, metric INT, residual BOOLEAN")
-        .parquet(p.toString).head()
+      val r = IndexLifecycle.readSidecar(spark, p.toString,
+        "m INT, metric INT, residual BOOLEAN").head
       PqMeta(if (r.isNullAt(0)) 0 else r.getInt(0),
         if (r.isNullAt(1)) VectorMetric.L2 else r.getInt(1),
         !r.isNullAt(2) && r.getBoolean(2))
@@ -1356,7 +1356,7 @@ object Pq {
                  refine: Int = 4): DataFrame = {
     // serving an index whose last delete half-applied would silently
     // drop a whole inverted list — refuse, same guard as mutations
-    val live = IndexLifecycle.liveLists(spark, indexPath)
+    val live = BucketSwap.refuse(spark, BucketSwap.lists(indexPath))
     val st = ServingState.pq(spark, indexPath)
     val pm = st.model
     val centroids = pm.centroids

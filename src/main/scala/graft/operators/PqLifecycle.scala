@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   *     lands them in their cluster partitions; the growth is recorded
   *     as dirt so the dirty-ratio policy decides when the quantizers
   *     retrain.
-  *   - `delete` is the shared partition-rewrite (IndexLifecycle
-  *     .deleteFrom over the `id` column): only affected code lists are
-  *     rewritten and swapped, untouched partitions stay byte-identical.
+  *   - `delete` is the shared partition-rewrite (IndexLifecycle.delete's
+  *     anti-join over the `id` column, landed by a [[BucketSwap]] bucket
+  *     swap): only affected code lists are rewritten and swapped,
+  *     untouched partitions stay byte-identical.
   *
   * Both cost O(changed rows / affected lists), never a corpus pass —
   * and the appended rows are M-byte codes, 32× cheaper to land than
@@ -54,14 +55,14 @@ object PqLifecycle {
     * one (coarse assignment stays in the original space, matching
     * writeIvfPq; only the PQ encode sees rotated vectors) — then land
     * the (cluster_id, id, codes) rows crash-consistently
-    * (IndexLifecycle.landAppend: stage under `_append_tmp`, record
-    * state, move in — a crash leaves a loud marker, never silently
+    * ([[BucketSwap.append]]: stage under `_append_tmp`, record state,
+    * move in — a crash leaves a loud marker, never silently
     * unaccounted rows) and record the growth as dirt. Queries see the
     * new vectors immediately; nothing retrains.
     *
     * `streamBatchId` + `streamId` are the at-least-once guard for
     * foreachBatch callers (D12): both are recorded in the SAME state
-    * write landAppend already does before moving files in, so a
+    * write the landing already does before moving files in, so a
     * replayed batch (sink retry after a completed append but before
     * the checkpoint commit) sees its own stream's watermark >= batchId
     * and NO-OPs instead of silently landing duplicate code rows. The
@@ -74,72 +75,51 @@ object PqLifecycle {
     * one index must not displace each other's entry (a single
     * last-writer pair would re-open the replay hole the moment a
     * second identity touched the index). A crash between the state
-    * write and the move-in stays
-    * behind the loud `_append_tmp` refusal (recovery = rebuild) — the
-    * window that was previously silent duplication is now either a
-    * no-op or a refusal, never unaccounted rows.
+    * write and the move-in stays behind the loud `_append_tmp` refusal
+    * until [[rebuild]]'s recovery moves the accounted batch in — the
+    * window is either a no-op or a refusal, never unaccounted rows.
     */
   def append(newVecs: DataFrame, indexPath: String,
              streamBatchId: Option[Long] = None,
              streamId: Option[String] = None): IndexStatus = {
     val spark = newVecs.sparkSession
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, "append requires a built index (build first)")
-    IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-    // replay no-op AFTER the marker check: a state that records the
-    // batch but still carries _append_tmp is half-moved, not applied.
-    // Per-stream watermark — a fresh checkpoint (new identity) starts
-    // its own numbering and must not be silently dropped, and two
-    // interleaved streams must not displace each other's watermark
-    // (each id keeps its own entry in the map).
-    if (streamBatchId.exists(_ <= s.appliedBatchFor(streamId.getOrElse(""))))
-      return s
+    val tree = BucketSwap.lists(indexPath)
     // the model is frozen between builds: a per-trigger caller (D12)
-    // takes it from the serving state instead of re-reading the sidecars
-    val pm = ServingState.pq(spark, indexPath).model
-    val centroids = pm.centroids
-    val codebooks = pm.codebooks
-    val metric = pm.metric
-    val rotation = pm.rotation
-    val v = Ivf.metricTransform(newVecs, metric).cache()
-    val n = v.count()
-    // two-level-trained indexes assign appends through their persisted
-    // hierarchy — O(√k)/row, same path as the build (flat when absent)
-    val assigned = Ivf.assignToQ(v, centroids, pm.hierarchy)
-      .select(col("cluster_id"), col("neighbor_id").as("id"), col("vec"))
-    val staged =
-      if (pm.residual) {
-        // residual layout: new rows encode their (possibly rotated)
-        // offset from the frozen coarse centroid they just joined
-        val subDim = codebooks(0)(0).length
-        val model = Pq.Model(codebooks.length * subDim, codebooks.length,
-          subDim, codebooks, rotation)
-        Pq.encodeResidualWith(assigned, centroids, model)
-      } else {
-        val encodeInput = rotation match {
-          case Some(r) => graft.functions.RotateFunctions.rotateVector(col("vec"), r)
-          case None => col("vec")
+    // takes it from the serving state instead of re-reading the
+    // sidecars, and a replayed batch reads nothing
+    lazy val pm = ServingState.pq(spark, indexPath).model
+    BucketSwap.append(spark, tree, streamBatchId, streamId)(
+        Ivf.metricTransform(newVecs, pm.metric))(BucketSwap.count) { (v, _, next) =>
+      val centroids = pm.centroids
+      val codebooks = pm.codebooks
+      val rotation = pm.rotation
+      // two-level-trained indexes assign appends through their persisted
+      // hierarchy — O(√k)/row, same path as the build (flat when absent)
+      val assigned = Ivf.assignToQ(v, centroids, pm.hierarchy)
+        .select(col("cluster_id"), col("neighbor_id").as("id"), col("vec"))
+      val staged =
+        if (pm.residual) {
+          // residual layout: new rows encode their (possibly rotated)
+          // offset from the frozen coarse centroid they just joined
+          val subDim = codebooks(0)(0).length
+          val model = Pq.Model(codebooks.length * subDim, codebooks.length,
+            subDim, codebooks, rotation)
+          Pq.encodeResidualWith(assigned, centroids, model)
+        } else {
+          val encodeInput = rotation match {
+            case Some(r) => graft.functions.RotateFunctions.rotateVector(col("vec"), r)
+            case None => col("vec")
+          }
+          assigned.select(col("cluster_id"), col("id"),
+            PqFunctions.pqEncode(encodeInput, codebooks).as("codes"))
         }
-        assigned.select(col("cluster_id"), col("id"),
-          PqFunctions.pqEncode(encodeInput, codebooks).as("codes"))
-      }
-    val grown = s.copy(isDirty = true, dirtyCount = s.dirtyCount + n,
-      size = s.size + n)
-    // LRU-bounded watermark record (IndexStatus.withAppliedBatch): a
-    // long-lived index no longer accumulates one state.json entry per
-    // streaming run forever
-    val next = streamBatchId match {
-      case Some(b) => grown.withAppliedBatch(streamId.getOrElse(""), b)
-      case None => grown
+      BucketSwap.landRows(spark, tree, staged, next)
     }
-    IndexLifecycle.landAppend(spark, indexPath, staged, next)
-    v.unpersist()
-    next
   }
 
   /** Point delete over the code lists: rewrite-and-swap ONLY the
     * affected cluster partitions (IndexLifecycle.deleteFrom — same
-    * anti-join, same rename-aside atomicity, same dirt accounting).
+    * anti-join, same bucket swap, same dirt accounting).
     */
   def delete(deleteIds: DataFrame, indexPath: String): IndexStatus =
     IndexLifecycle.deleteFrom(deleteIds, indexPath, idCol = "id")
@@ -155,14 +135,14 @@ object PqLifecycle {
     * themselves are lossy, so a rebuild by definition starts from the
     * primary store, never from the codes.
     *
-    * Swap protocol (the reference's atomic snapshot replacement,
-    * index_service.py:270-284, expressed as directory renames): the
-    * whole new tree — lists, sidecars, AND its already-written state —
-    * stages at `<path>_rebuild_tmp` while the live index keeps serving
-    * (out-of-band = no downtime); then the live tree moves aside to
-    * `<path>_old_v<n>`, the staged tree renames in, and the aside is
-    * deleted. A crash during staging leaves the live index untouched
-    * (stale staging is overwritten by the next rebuild); a crash
+    * Swap protocol: the shared rebuild skeleton
+    * ([[BucketSwap.rebuild]]) — a crashed mutation is recovered first
+    * (an accounted-but-unmoved streamed batch lands rather than being
+    * lost behind its recorded watermark), the whole new tree — lists,
+    * sidecars, AND its already-written state — stages at
+    * `<path>_rebuild_tmp` while the live index keeps serving
+    * (out-of-band = no downtime), and the tree swap renames it in.
+    * A crash during staging leaves the live index untouched; a crash
     * between the renames leaves BOTH complete trees on disk under loud
     * names — never a half-mixed model. The at-least-once stream
     * watermark map (`appliedStreams`) carries over: a rebuild must not
@@ -173,52 +153,27 @@ object PqLifecycle {
     * `currentVecs` snapshot and the swap would exist only in the tree
     * being replaced — the reference serializes build under its
     * per-library write lock (index_service.py). Rename-based protocols
-    * cannot fully replace that lock: the batch twin NARROWS the window
-    * with two checks — the live state re-read just before the renames
-    * (abort: staged tree discarded, loud retry error), and a second
-    * re-read of the moved-aside tree right after the first rename
-    * (restore: live tree renamed back, staged tree discarded) — so an
-    * in-between mutation is caught unless it lands inside the rename
-    * call itself. Deployments that cannot retry on the loud error must
-    * quiesce writers for the swap, exactly as the reference's lock
-    * does for the whole build.
+    * cannot fully replace that lock: the tree swap NARROWS the window
+    * with two checks (abort before the renames, restore after the
+    * move-aside), so an in-between mutation is caught unless it lands
+    * inside the rename call itself. Deployments that cannot retry on
+    * the loud error must quiesce writers for the swap, exactly as the
+    * reference's lock does for the whole build.
     */
-  def rebuild(currentVecs: DataFrame, indexPath: String): IndexStatus =
-    rebuild(currentVecs, indexPath, () => ())
-
-  /** [[rebuild]] with a staging-complete hook — the test seam that lets
-    * the spec land a concurrent mutation inside the window the
-    * abort-before-swap check guards.
-    */
-  private[graft] def rebuild(currentVecs: DataFrame, indexPath: String,
-                             beforeSwap: () => Unit): IndexStatus = {
+  def rebuild(currentVecs: DataFrame, indexPath: String): IndexStatus = {
     val spark = currentVecs.sparkSession
-    // recovery-then-rebuild (the GraphIndex reconcile discipline): a
-    // crashed mutation's markers are made whole in place — an
-    // accounted-but-unmoved streamed batch lands rather than being
-    // lost behind its recorded watermark — instead of refused; serve
-    // and append/delete keep the loud refusal
-    IndexLifecycle.recoverMutation(spark, indexPath)
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, "rebuild requires a built index (build first)")
-    IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-    val meta = Pq.loadMeta(spark, indexPath)
-    require(meta.m > 0, s"rebuild: $indexPath carries no IVF-PQ `_meta` record")
-    val opq = Pq.loadRotation(spark, indexPath).isDefined
-    val fs = IndexLifecycle.fs(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(s"${indexPath}_rebuild_tmp")
-    fs.delete(tmp, true)
-    val n = Pq.writeIvfPqFrom(currentVecs, tmp.toString, meta.m, meta.metric, opq)
-    val next = IndexStatus("ivfpq", isBuilt = true, isDirty = false, size = n,
-      embeddingDim = s.embeddingDim, builtAt = System.currentTimeMillis(),
-      version = s.version + 1, dirtyCount = 0L, totalVectors = n,
-      appliedStreams = s.appliedStreams)
-    IndexLifecycle.writeState(spark, tmp.toString, next)
-    // shared swap protocol (IndexLifecycle.swapRebuilt): abort check,
-    // rename-aside, post-rename re-check, cleanup — one implementation
-    // for every rebuilt family
-    IndexLifecycle.swapRebuilt(spark, indexPath, tmp, s, beforeSwap)
-    next
+    BucketSwap.rebuild(spark, BucketSwap.lists(indexPath)) { (s, tmp) =>
+      val meta = Pq.loadMeta(spark, indexPath)
+      require(meta.m > 0, s"rebuild: $indexPath carries no IVF-PQ `_meta` record")
+      val opq = Pq.loadRotation(spark, indexPath).isDefined
+      val n = Pq.writeIvfPqFrom(currentVecs, tmp, meta.m, meta.metric, opq)
+      val next = IndexStatus("ivfpq", isBuilt = true, isDirty = false, size = n,
+        embeddingDim = s.embeddingDim, builtAt = System.currentTimeMillis(),
+        version = s.version + 1, dirtyCount = 0L, totalVectors = n,
+        appliedStreams = s.appliedStreams)
+      IndexLifecycle.writeState(spark, tmp, next)
+      next
+    }
   }
 
   /** Distribution-based rebuild signal — A25's drift flags applied as

@@ -21,7 +21,7 @@ import scala.collection.immutable.ListMap
   * tiers (no coarse quantizer), so the partition key exists for
   * MUTATION locality, not probe pruning: deletes rewrite only the
   * buckets holding deleted ids (IndexLifecycle.deleteFrom), appends
-  * land one file per touched bucket (IndexLifecycle.landAppend).
+  * land one file per touched bucket ([[BucketSwap.landRows]]).
   * The reference contract is the lazy/dirty-rebuild index service
   * (app/services/index_service.py:56-198).
   */
@@ -88,53 +88,27 @@ object TierLifecycle {
   /** Incremental add: encode `newVecs` (id, vec — RAW floats) against
     * the FROZEN sidecar model (no retrain: drift only degrades the
     * codes, which the dirty-ratio policy answers with a rebuild) and
-    * land the rows crash-consistently (IndexLifecycle.landAppend).
+    * land the rows crash-consistently ([[BucketSwap.append]]).
     * Growth is dirt against the as-of-build total.
     * `streamBatchId`/`streamId` are the at-least-once replay guard for
     * foreachBatch callers (the PqLifecycle.append contract verbatim):
-    * the per-stream watermark is recorded in the SAME state write
-    * landAppend does before moving files in, so a replayed batch sees
-    * its own stream's watermark >= batchId and NO-OPs before paying
-    * the model load or the encode.
+    * the per-stream watermark is recorded in the SAME state write the
+    * landing does before moving files in, so a replayed batch sees its
+    * own stream's watermark >= batchId and NO-OPs before paying the
+    * model load or the encode.
     */
   def append[M](codec: TierCodec[M], newVecs: DataFrame, indexPath: String,
                 streamBatchId: Option[Long] = None,
                 streamId: Option[String] = None): IndexStatus = {
     val spark = newVecs.sparkSession
-    val s = requireIntact(spark, indexPath, "mutation")
-    if (streamBatchId.exists(_ <= s.appliedBatchFor(streamId.getOrElse(""))))
-      return s
-    val (m, buckets) = codec.readSidecars(spark, indexPath)
-    val v = newVecs.cache()
-    try {
-      val n = v.count()
-      val grown = s.copy(isDirty = true, dirtyCount = s.dirtyCount + n,
-        size = s.size + n)
-      val next = streamBatchId.fold(grown)(
-        grown.withAppliedBatch(streamId.getOrElse(""), _))
-      IndexLifecycle.landAppend(spark, indexPath, v.select(
-        bucketOf(col("id"), buckets).as("cluster_id"), longId,
-        codec.encode(m, col("vec")).as(codec.payload)), next)
-      next
-    } finally v.unpersist()
-  }
-
-  /** The loud precondition every tier operation runs BEFORE touching
-    * its model sidecar (returns the state it read, so a caller pays
-    * ONE status read + ONE marker listing): an unbuilt or half-applied
-    * tree fails with the lifecycle's own message, not an opaque
-    * parquet path error from a missing `_model`. The serve path needs
-    * it too: after a crash between a delete's two swap renames the
-    * bucket's rows live only under an `_old_cluster_id=N` path parquet
-    * readers skip, so a query that skipped this check would silently
-    * answer minus an entire bucket instead of refusing loudly.
-    */
-  private def requireIntact(spark: SparkSession, indexPath: String,
-                            verb: String): IndexStatus = {
-    val s = IndexLifecycle.status(spark, indexPath)
-    require(s.isBuilt, s"$verb requires a built index (build first)")
-    IndexLifecycle.checkNoHalfAppliedMutation(spark, indexPath)
-    s
+    val tree = BucketSwap.lists(indexPath)
+    BucketSwap.append(spark, tree, streamBatchId, streamId)(newVecs)(BucketSwap.count) {
+      (v, _, next) =>
+        val (m, buckets) = codec.readSidecars(spark, indexPath)
+        BucketSwap.landRows(spark, tree, v.select(
+          bucketOf(col("id"), buckets).as("cluster_id"), longId,
+          codec.encode(m, col("vec")).as(codec.payload)), next)
+    }
   }
 
   /** Partition-pruned point delete: unlike a content-assigned layout
@@ -147,7 +121,7 @@ object TierLifecycle {
     */
   def delete(deleteIds: DataFrame, indexPath: String): IndexStatus = {
     val spark = deleteIds.sparkSession
-    requireIntact(spark, indexPath, "mutation")
+    BucketSwap.intact(spark, BucketSwap.lists(indexPath), "delete")
     val buckets = IndexLifecycle.readSidecar(spark, s"$indexPath/_meta",
       "buckets INT").head.getInt(0)
     val hint = deleteIds
@@ -168,7 +142,13 @@ object TierLifecycle {
                queryVec: Array[Float], k: Int,
                refineWith: Option[DataFrame] = None, refine: Int = 8,
                metric: Int = VectorMetric.L2): DataFrame = {
-    requireIntact(spark, indexPath, "query")
+    // the loud precondition BEFORE touching the model sidecar: an
+    // unbuilt or half-applied tree fails with the lifecycle's own
+    // message, not a parquet path error from a missing `_model`; after
+    // a crash inside a delete's bucket swap the bucket's rows live only
+    // under an aside parquet readers skip, so a query that skipped it
+    // would silently answer minus an entire bucket
+    BucketSwap.intact(spark, BucketSwap.lists(indexPath), "query")
     val (m, _) = codec.readSidecars(spark, indexPath)
     require(queryVec.length == codec.dim(m),
       s"query dim ${queryVec.length} != index dim ${codec.dim(m)}")
@@ -200,36 +180,27 @@ object TierLifecycle {
     *
     * The bucket count is re-derived from the new size (√(n/2) growth —
     * a rebuild is exactly when the layout gets to re-level itself),
-    * the whole new tree stages at `<path>_rebuild_tmp` while the live
-    * index keeps serving, and the swap runs the SHARED protocol
-    * (IndexLifecycle.swapRebuilt: abort-on-concurrent-mutation before
-    * and after the move-aside, loud names on every crash window). The
-    * stream watermark map carries over — a rebuild must not reopen
-    * replay windows for an ingest stream running against the tier.
-    * `beforeSwap` is the staging-window test seam.
+    * and the shared rebuild skeleton ([[BucketSwap.rebuild]]) recovers
+    * a crashed mutation first, stages the whole new tree at
+    * `<path>_rebuild_tmp` while the live index keeps serving, and
+    * swaps it in (abort-on-concurrent-mutation before and after the
+    * move-aside, loud names on every crash window). The stream
+    * watermark map carries over — a rebuild must not reopen replay
+    * windows for an ingest stream running against the tier.
     */
-  def rebuild[M](codec: TierCodec[M], currentVecs: DataFrame, indexPath: String,
-                 beforeSwap: () => Unit = () => ()): IndexStatus = {
+  def rebuild[M](codec: TierCodec[M], currentVecs: DataFrame,
+                 indexPath: String): IndexStatus = {
     val spark = currentVecs.sparkSession
-    // recovery-then-precondition (the GraphIndex reconcile discipline):
-    // rebuild is the repair operation, so a crashed mutation's markers
-    // are made whole in place instead of refused; serve, append and
-    // delete keep refusing
-    IndexLifecycle.recoverMutation(spark, indexPath)
-    val s = requireIntact(spark, indexPath, "rebuild")
-    val (old, _) = codec.readSidecars(spark, indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(s"${indexPath}_rebuild_tmp")
-    IndexLifecycle.fs(spark, indexPath).delete(tmp, true)
-    val v = currentVecs.cache()
-    val next =
+    BucketSwap.rebuild(spark, BucketSwap.lists(indexPath)) { (s, tmp) =>
+      val (old, _) = codec.readSidecars(spark, indexPath)
+      val v = currentVecs.cache()
       try {
         val n = v.count()
         val m = codec.retrain(v, old)
         val rows = v.select(col("id"), codec.encode(m, col("vec")).as(codec.payload))
-        land(codec, m, rows, n, tmp.toString, s.version + 1, s.appliedStreams)
+        land(codec, m, rows, n, tmp, s.version + 1, s.appliedStreams)
       } finally v.unpersist()
-    IndexLifecycle.swapRebuilt(spark, indexPath, tmp, s, beforeSwap)
-    next
+    }
   }
 
   /** The lazy-rebuild policy applied at read time (IndexLifecycle
@@ -318,12 +289,12 @@ object TierLifecycle {
   /** A19c driver query: `tier_compact` — the A20 small-files
     * maintenance pass exercised on the flat-tier bucket layout. Every
     * frozen-model append lands ONE part-file per touched bucket
-    * (IndexLifecycle.landAppend — crash-consistent but accretive), so
+    * (BucketSwap.landRows — crash-consistent but accretive), so
     * a continuously-fed SQ8/BQ/PCA tree hits the same small-files wall
     * the IVF lists do: at 100 TB a bucket with thousands of tiny files
     * pays a task + footer read per file on every scan. The shared
-    * compact (IndexLifecycle.compactLayout through the A20 face —
-    * threshold-gated, rename-aside, marker-refusing) answers it
+    * compact (BucketSwap.compact through the A20 face —
+    * threshold-gated, bucket-swapped, marker-refusing) answers it
     * identically: build the SQ8 tree, two appends (every touched
     * bucket now holds >1 part-file), compact at maxFiles=1, and a full
     * read-back per phase proving row conservation — the oracle

@@ -1063,7 +1063,7 @@ object Streams {
     * PqLifecycle.append, which records it in the same state write the
     * landing protocol already does and NO-OPs any batch the state
     * already accounts for — a sink retry after a completed append
-    * (crash between landAppend finishing and the checkpoint commit)
+    * (crash between the append landing and the checkpoint commit)
     * can no longer land duplicate code rows or double-count dirt, the
     * same exactly-once discipline the b<batchId> overwrite protocol
     * gives the D10/D13/D14 stores.

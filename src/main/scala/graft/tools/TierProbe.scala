@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *   - bucket count: √(n/2) growth vs a fixed 16 — rows per bucket,
   *     and therefore the blast radius of a point mutation;
   *   - build: train + encode + bucket-partitioned land wall time;
-  *   - append: frozen-model encode + landAppend (one file per touched
+  *   - append: frozen-model encode + BucketSwap.landRows (one file per touched
   *     bucket) wall time for a 1k batch;
   *   - delete: the bucket-hint PARTITION-PRUNED rewrite vs the
   *     full-scan twin (same batch size, disjoint ids) — the hint's

@@ -583,6 +583,18 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("graph delete reads and rewrites only the deleted ids' buckets: bounded jobs") {
+    withBuiltTree("graft_gspec_deljobs") { tmp =>
+      // every 5th id: a 100-id delete on the 500-vector tree
+      val ids = Tables.embeddings(spark, sf).filter(col("vec_id") % 5 === 0)
+        .select(col("vec_id").as("id"))
+      val jobs = TestSession.jobsOf { GraphIndex.delete(ids, tmp); () }
+      info(s"100-id delete on a 500-vector tree: $jobs jobs")
+      assert(jobs <= 28, s"graph delete ran $jobs jobs")
+      assert(GraphIndex.readVectors(spark, tmp).count() == 400)
+    }
+  }
+
   test("graph delete on an l2 tree: repair scores with the tree's own metric") {
     val tmpDir = java.nio.file.Files.createTempDirectory("graft_gspec_dl2")
     val tmp = s"$tmpDir/g"

@@ -75,6 +75,27 @@ class IndexLifecycleSpec extends AnyFunSuite {
     assert(s3.shouldRebuild(0.1))
   }
 
+  test("a failed append leaves nothing cached, the state unmoved and the index serving") {
+    val path = java.nio.file.Files.createTempDirectory("graft_lc_fail").toString
+    IndexLifecycle.build(corpus(col("vec_id") >= 0), path)
+    val qvec = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") === 0).select("embedding")
+      .head().getSeq[Float](0).toArray
+    val s0 = IndexLifecycle.status(spark, path)
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    import spark.implicits._
+    // a 3-dim vector against 64-dim centroids fails the assignment
+    intercept[Exception] {
+      IndexLifecycle.append(Seq((99999L, Seq(1f, 2f, 3f))).toDF("id", "vec"), path)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+      "a failed append left its batch cached")
+    assert(IndexLifecycle.status(spark, path) == s0, "a failed append moved the state")
+    assert(IndexLifecycle.query(spark, path, qvec, k = 1, nprobe = 64)
+      .head().getLong(0) == 0L, "the index must keep serving")
+    graft.streaming.Streams.deleteTree(java.nio.file.Paths.get(path))
+  }
+
   test("point delete: vector disappears from queries; only affected partitions rewritten") {
     val path = java.nio.file.Files.createTempDirectory("graft_lc").toString
     IndexLifecycle.build(corpus(col("vec_id") >= 0), path)

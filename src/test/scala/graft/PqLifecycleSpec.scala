@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Pq, PqLifecycle}
+import graft.operators.{BucketSwap, IndexLifecycle, Pq, PqLifecycle}
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,6 +36,26 @@ class PqLifecycleSpec extends AnyFunSuite {
       refineWith = None).collect().map(_.getLong(0)).toSet
     assert(top2 == Set(1L, 9999L),
       s"appended copy must rank with its original, got $top2")
+  }
+
+  test("a failed append leaves nothing cached, the state unmoved and the index serving") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_pqlc_fail").toString
+    PqLifecycle.build(spark, sf, path)
+    val v1 = Tables.embeddings(spark, sf).filter(col("vec_id") === 1L)
+      .select(col("embedding")).head().getSeq[Float](0).toArray
+    val s0 = IndexLifecycle.status(spark, path)
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    // a 3-dim vector against 64-dim centroids fails the assignment
+    intercept[Exception] {
+      PqLifecycle.append(Seq((99999L, Seq(1f, 2f, 3f))).toDF("id", "vec"), path)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+      "a failed append left its batch cached")
+    assert(IndexLifecycle.status(spark, path) == s0, "a failed append moved the state")
+    assert(Pq.queryIvfPq(spark, path, v1, k = 1, nprobe = Int.MaxValue, refineWith = None)
+      .count() == 1, "the index must keep serving")
+    Streams.deleteTree(java.nio.file.Paths.get(path))
   }
 
   test("two-level-trained index persists its hierarchy; appends assign through it") {
@@ -271,7 +291,9 @@ class PqLifecycleSpec extends AnyFunSuite {
     // swap — without the abort it would exist only in the tree being
     // replaced and silently vanish
     val ex = intercept[RuntimeException] {
-      PqLifecycle.rebuild(vecs, path, () => { PqLifecycle.append(racer, path); () })
+      Faults.at(path, BucketSwap.Step.TreeSwap) {
+        PqLifecycle.append(racer, path); ()
+      }(PqLifecycle.rebuild(vecs, path))
     }
     assert(ex.getMessage.contains("concurrent mutation"))
     // the live tree (racing append included) is untouched; staging gone

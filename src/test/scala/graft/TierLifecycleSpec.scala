@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Bq, BqCodec, IndexLifecycle, PcaCodec, Sq8Codec, TierCodec, TierLifecycle}
+import graft.operators.{Bq, BqCodec, BucketSwap, IndexLifecycle, PcaCodec, Sq8Codec, TierCodec, TierLifecycle}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -352,11 +352,11 @@ class TierLifecycleSpec extends AnyFunSuite with TierRows {
       import spark.implicits._
       TierLifecycle.build(Sq8Codec(), spark, sf, path)
       val v9 = vecOf(9L)
-      // land a delete inside the staging window via the test seam
+      // land a delete inside the staging window via the step hook
       val e = intercept[RuntimeException] {
-        TierLifecycle.rebuild(Sq8Codec(), raw, path, beforeSwap = () => {
+        Faults.at(path, BucketSwap.Step.TreeSwap) {
           TierLifecycle.delete(Seq(9L).toDF("id"), path); ()
-        })
+        }(TierLifecycle.rebuild(Sq8Codec(), raw, path))
       }
       assert(e.getMessage.contains("concurrent mutation"),
         s"got: ${e.getMessage}")
