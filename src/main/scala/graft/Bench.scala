@@ -57,7 +57,8 @@ object Bench {
     * guaranteed to fit well inside a 2000-char stdout tail. The driver
     * captures only the tail of sbt stdout, and the full JSON line
     * (130+ keys) is longer than that window, so its head was cut off
-    * and BENCH_r05/r06 recorded "parsed": null. This line is printed
+    * and the round-5/6 artifacts recorded "parsed": null (BENCH_r05/r06
+    * in git history, at commit 3ba9126). This line is printed
     * LAST; per-key queries/spread live in the full line above it and
     * in the file named by queries_file.
     */
@@ -99,7 +100,7 @@ object Bench {
   /** Shared session memos as named warmers — timed line items in the
     * bench, plain warmers in the warmup pass.
     */
-  private def memoWarmers(spark: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
+  private[graft] def memoWarmers(spark: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
     "memo_shingle_sets" -> (() => operators.Dedup.warmShingles(spark, dir)),
     // E2's df-ordered prefix table and E3's signature table: memoized
     // per dir (a per-invocation cache leaks for the session — measured
@@ -322,7 +323,8 @@ object Bench {
     // lands in BENCH_FULL_LATEST.json beside the round artifacts: the
     // round-13 verdict found the driver's full per-query map surviving
     // only as a /tmp scratch file (BENCH_r13.json's 2000-char stdout
-    // tail truncates the ~204-line full JSON), so round-over-round
+    // tail, in git history at commit 3ba9126, truncates the ~204-line
+    // full JSON), so round-over-round
     // analysis needs a persisted sibling. The file is clearly labeled
     // as the LATEST run on this host, never the curated median — the
     // two names cannot be confused.
@@ -339,7 +341,8 @@ object Bench {
     // full artifact first (humans + whole-stdout parsers), COMPACT
     // summary as the very last line: the driver keeps only a ~2000-char
     // stdout tail, which beheaded the 130-key full line (BENCH_r05/r06
-    // "parsed": null); the summary always fits the window intact.
+    // "parsed": null, in git history at commit 3ba9126); the summary
+    // always fits the window intact.
     println(json)
     println(compactJson(total, sfDir, runsN, runTotals, passes, errJson, out, calJson))
     spark.stop()

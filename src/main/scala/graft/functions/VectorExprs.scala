@@ -19,6 +19,7 @@ import org.apache.spark.sql.types._
   * with zero-norm pairs pinned to distance 1.0. All arithmetic promotes
   * each element to double before accumulating (bit-compatible with
   * DuckDB's list_distance on DOUBLE[] casts, which the oracles use).
+  * Arrays of different lengths are refused, never truncated.
   */
 object VectorMetric {
   val L2 = 0
@@ -52,7 +53,10 @@ case class VectorDistance(left: Expression, right: Expression, metric: Int)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
+    if (a.numElements() != b.numElements())
+      throw new IllegalArgumentException(
+        s"$prettyName: vector dims ${a.numElements()} != ${b.numElements()}")
+    val n = a.numElements()
     val lf = elemIsFloat(left); val rf = elemIsFloat(right)
     var i = 0
     var acc = 0.0; var na = 0.0; var nb = 0.0
@@ -95,7 +99,11 @@ case class VectorDistance(left: Expression, right: Expression, metric: Int)
         case VectorMetric.Dot => s"${ev.value} = $acc;"
       }
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |if ($a.numElements() != $b.numElements()) {
+         |  throw new IllegalArgumentException(
+         |    "$prettyName: vector dims " + $a.numElements() + " != " + $b.numElements());
+         |}
+         |int $n = $a.numElements();
          |double $acc = 0.0; double $na = 0.0; double $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $x = (double) $a.$lGet($i);

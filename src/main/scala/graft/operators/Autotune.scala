@@ -447,8 +447,12 @@ object Autotune {
                                       indexPath: String): Option[(Long, Long, String)] = {
     val p = new org.apache.hadoop.fs.Path(s"$indexPath/_autotune")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else spark.read.parquet(s"$indexPath/_autotune")
-      .select("nprobe", "refine", "tier").head(1).headOption
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    else IndexLifecycle.readSidecar(spark, p.toString, AutotuneDdl).headOption
+      .map(r => (r.getLong(2), r.getLong(4), r.getString(3)))
   }
+
+  /** The `_autotune` schema [[writeAutotune]] writes ([[annAutotuneTiers]]'s rows). */
+  private val AutotuneDdl =
+    "floor_permille BIGINT, axis_floor_permille BIGINT, nprobe BIGINT, tier STRING, " +
+      "refine BIGINT, cand_per_query BIGINT, bytes_per_vec BIGINT"
 }

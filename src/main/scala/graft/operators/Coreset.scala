@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * batch where sequential greedy would take one — the coverage bound
   * loosens from 2-approx toward 2·(1+ε) as p grows; both variants are
   * shipped so the trade is a measured choice, not a default).
-  * Measured at 25× (tools/CoresetProbe, 50k×64 clustered, 33-center
+  * Measured at 25× (tools/CoresetProbe at commit 3ba9126, 50k×64 clustered, 33-center
   * budget): sequential 32 scans 15.0 s vs batched 4 scans 4.6 s
   * (3.3×), covering radius 6.37 vs 7.18 (1.127×).
   */
@@ -131,7 +131,7 @@ object Coreset {
     * fixed admission radius; deriving r FROM the batch k-center keeps
     * it corpus-calibrated and fully replayable (the oracle re-derives
     * it from the same E55 chain) instead of a magic constant. Measured
-    * (tools/KcProbe): the sf corpora's distances concentrate, so the
+    * (tools/KcProbe at commit 3ba9126): the sf corpora's distances concentrate, so the
     * admitted count stays in single digits across ranks 3-5 — the
     * packing number at any covering-radius-derived r is small there;
     * rank 5 gives the richest non-degenerate coreset (4 / 6 centers at

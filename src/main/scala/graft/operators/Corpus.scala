@@ -338,7 +338,8 @@ object Corpus {
     * aggregate tables. The per-doc distinct count is computed IN-ROW
     * (array_distinct over the doc's own gram array — zero shuffle);
     * the corpus-wide `distinct()` it replaced shuffled every gram
-    * occurrence and was the probe's superlinear term at 25×. Docs
+    * occurrence and was tools/CorpusScaleProbe's superlinear term at
+    * 25× (at commit 3ba9126). Docs
     * with <3 words have no trigrams and drop out on both engines.
     */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
@@ -460,7 +461,8 @@ object Corpus {
     * self-join-on-shingle formulation this HALVES the shuffled volume
     * (one keyed shuffle of the gram table instead of two sides plus
     * join fan-out) at the cost of an object-based set aggregate —
-    * measured locally (CPU-bound, 25× probe) ~20s vs ~16s, but the
+    * measured locally (CPU-bound, 25×, tools/CorpusScaleProbe at commit 3ba9126)
+    * ~20s vs ~16s, but the
     * shuffle half is the half that matters on a network. Per-source
     * vocabulary sizes broadcast. Overlap reported as integer permille
     * ((1000·∩) div ∪) — no float division.
@@ -641,7 +643,7 @@ object Corpus {
     // groupedRowNumber makes three passes over its input (min/max,
     // stage-1 counts, the ranked plan), and each un-pinned pass would
     // re-run the whole bigram-LM pipeline upstream — measured 3× the
-    // key's cost at the 125k probe tier. An eager localCheckpoint is
+    // key's cost at the 125k-doc tier (tools/CorpusScaleProbe at commit 3ba9126). An eager localCheckpoint is
     // the at-scale shape too: materialize the scored table once, rank
     // the materialization (blocks are GC'd with the DataFrame).
     val scored = docs.join(scores, "doc_id")

@@ -706,13 +706,6 @@ object Dedup {
     clusteredComponentsFor(spark, dir); ()
   }
 
-  /** All component-label memos at once (scale probes / tests). */
-  def warmComponents(spark: SparkSession, dir: String): Unit = {
-    warmDocComponents(spark, dir)
-    warmVecComponents(spark, dir)
-    warmClusteredComponents(spark, dir)
-  }
-
   /** Max alternation rounds before declaring non-convergence. The
     * large-star/small-star contraction below converges in O(log² n)
     * rounds REGARDLESS of graph diameter (Kiveris et al. 2014,
@@ -782,7 +775,8 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
     // Round-17 NOTE (examined, deliberately unchanged — see
-    // plans/r17/star_round_{before,after}.txt): re-keying each star
+    // plans/r17/star_round_{before,after}.txt in git history, at
+    // commit 3ba9126): re-keying each star
     // step hash(u)-first (the beamRounds round-16 shape) was built and
     // plan-dumped, and it is a REGRESSION here: the min-aggregate's
     // exchange carries partially-aggregated rows (one per (partition,
@@ -941,7 +935,7 @@ object Dedup {
     * then components + representative-per-group exactly as E33. E33
     * keeps the exact probe-all contract (its oracle is the full
     * all-pairs closure), but probe-all is O(N²) pairs by construction —
-    * the 25× scale probe measured 194 s at 50k vectors where this
+    * the 25× tools/ScaleProbe (at commit 3ba9126) measured 194 s at 50k vectors where this
     * variant's pair volume is Σ cluster² ≈ N²/k (k grows as √N, so
     * pair cost is N^1.5 — the published trade). Deterministic given
     * the trained coarse quantizer, so the dynamic oracle replays
@@ -1820,7 +1814,7 @@ object Dedup {
     * engine), at nprobe = nClusters/2 rather than the directed
     * default nClusters/4: a mutual edge survives only if BOTH
     * directed lookups recover it, so directed recall r compounds to
-    * ~r² on edges (measured by tools/MutualProbe: nc/4 gives 0.41-0.44
+    * ~r² on edges (measured by tools/MutualProbe at commit 3ba9126: nc/4 gives 0.41-0.44
     * mutual recall where the directed floor is ~0.8; nc/2 gives
     * 0.70-0.74 with near-miss quality ≥ 0.999) — the serving config
     * pays 2× the list scans of E6b precisely because the consumer is a
@@ -1839,10 +1833,6 @@ object Dedup {
   /** E37b's serving probe count: half the lists (see above). */
   private def mutualNprobe(spark: SparkSession, dir: String): Int =
     math.max(1, Ivf.defaultK(Tables.embeddingsCount(spark, dir)) / 2)
-
-  /** Probe-only handle on [[mutualize]] (tools/MutualProbe). */
-  private[graft] def mutualizeForProbe(edges: DataFrame): DataFrame =
-    mutualize(edges)
 
   /** Shared E37/E37b symmetrization: one self-join of the O(N·k)
     * skinny directed edge list on the reversed pair key — shuffles k
@@ -1928,7 +1918,7 @@ object Dedup {
     * nprobe CONSTANT keeps the whole build sub-quadratic, which is the
     * entire point of a graph BUILDER (an init at a fixed FRACTION of
     * the lists is itself Θ(N²) and descent could never beat probe-all;
-    * the first DescentProbe run measured exactly that). At the sf-dir
+    * the first tools/DescentProbe run, at commit 3ba9126, measured exactly that). At the sf-dir
     * corpora nc = 16, so 8 = nc/2 — the E37b serving config — and the
     * spec recall floors bind there.
     */
@@ -1954,7 +1944,8 @@ object Dedup {
     *
     * Scale shape: init O(N^1.5 · nprobe/√2), round r costs
     * O(|fresh_r| · R + N · explore) scored pairs — never a probe-all
-    * pass (tools/DescentProbe measures the 25× cost gap and recall).
+    * pass (tools/DescentProbe at commit 3ba9126 measured the 25× cost gap and
+    * recall).
     * Deterministic end to end: the init replays the E6b oracle, caps
     * and merges tie-break on (dist, id), the exploration schedule is
     * integer arithmetic, and duplicate rows carry bit-identical
@@ -2054,7 +2045,7 @@ object Dedup {
             .select(col("src"), col("p.id").as("dst"), col("p.dist").as("dist"))
           // NOTE (round-17): folding this anti-join into the merge
           // checkpoint as an is-old flag join was implemented and
-          // MEASURED AS A REGRESSION (3-rep DescentJobProbe medians:
+          // MEASURED AS A REGRESSION (3-rep tools/DescentJobProbe medians, at commit 3ba9126:
           // cos 8.4→11.8 s, l2 6.8→8.0 s, dot flat — 10 fewer jobs but
           // a heavier critical-path job); the separate anti-join over
           // two cached inputs stays.

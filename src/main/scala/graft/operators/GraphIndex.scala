@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, S
   * role HNSW builds hierarchically) and, for in-corpus queries, the
   * query node's OWN stored adjacency (searching an already-indexed
   * point starts from its links — the HNSW re-insert convention).
-  * Measured on sf0.001 (GraphProbe): the graph's own edges carry
+  * Measured on sf0.001 (tools/GraphProbe at commit 3ba9126): the graph's own edges carry
   * 0.92 recall, pure navigation from the coarse entry saturates at
   * 0.55 (this corpus is near-uniform — the adversarial case for graph
   * navigation, same as the E37c uniform finding), and the seeded beam
@@ -71,7 +71,7 @@ object GraphIndex {
 
   /** Bounded expansion rounds — with the seeded beam (coarse entry ∪
     * own adjacency) round 2 is measured saturation on the sf corpora
-    * (GraphProbe: 0.972 → 0.974 → 0.975 at rounds 1/2/3); GraphSpec
+    * (tools/GraphProbe at commit 3ba9126: 0.972 → 0.974 → 0.975 at rounds 1/2/3); GraphSpec
     * pins the recall floor.
     *
     * The sf0.1 ceiling is the SUBSTRATE, and round 13 measured that
@@ -82,7 +82,7 @@ object GraphIndex {
     * builder ([[refinedGraph]]) closed it from the other side: the
     * worst-kNN-radius fraction exact-refined at a widened probe
     * budget lifts the substrate 0.742 → 0.824 and served recall to
-    * 0.935-0.938 per metric at 1.2× build (tools/RefineProbe), where
+    * 0.935-0.938 per metric at 1.2× build (tools/RefineProbe at commit 3ba9126), where
     * 2.4× of extra descent could not reach 0.9. GraphSpec pins the
     * sf0.1 served floor at 0.9.
     */
@@ -160,7 +160,7 @@ object GraphIndex {
     * the deeper descent wanted. Phase 2 runs under a CONVERGENCE GATE
     * (see [[refinedGraph]]): a descent that converged before its
     * iteration cap skips it — measured at 25× on the clustered corpus
-    * (tools/RefineProbe): the converged fixpoint is already the exact
+    * (tools/RefineProbe at commit 3ba9126): the converged fixpoint is already the exact
     * graph (substrate 1.000) and an ungated phase 2 spent 0.88× of
     * the build re-confirming it.
     */
@@ -243,7 +243,7 @@ object GraphIndex {
                                   metric: Int = DefaultMetric): DataFrame =
     Memo(dir, "graph.refined", (k, metric)) {
       val (g, iters) = Dedup.descentGraph(spark, dir, k, metric)
-      // the convergence gate (measured at 25×, tools/RefineProbe): a
+      // the convergence gate (measured at 25×, tools/RefineProbe at commit 3ba9126): a
       // descent that CONVERGED before its iteration cap found a
       // fixpoint even the exploration schedule stopped improving —
       // on the clustered corpus that fixpoint IS the exact graph
@@ -402,21 +402,21 @@ object GraphIndex {
   }
 
   /** ONE beam round, un-checkpointed — the loop body of [[beamRounds]]
-    * as its own seam so tools/OptPlanProbe can dump the ROUND's
-    * physical plan (the serving keys return checkpointed frames, which
-    * hide the round shape from explain).
+    * (the serving keys return checkpointed frames, which hide the round
+    * shape from explain; tools/OptPlanProbe at commit 3ba9126 dumped
+    * this frame's physical plan).
     *
     * ONE exchange per round (round-16): hash by query_id BEFORE the
     * dedup — HashPartitioning(query_id) satisfies the dedup's
     * ClusteredDistribution(query_id, cand) AND the top-B aggregate's
     * ClusteredDistribution(query_id), so the round's dedup and ranking
     * share a single shuffle instead of paying one each (plan diff:
-    * plans/r16/beam_round_{before,after}.txt — 2 Exchange → 1). Same
-    * rows either way.
+    * `plans/r16/beam_round_{before,after}.txt` in git history, at
+    * commit 3ba9126 — 2 Exchange → 1). Same rows either way.
     */
-  private[graft] def beamRoundFrame(beam: DataFrame, e: DataFrame,
-                                    qvecs: DataFrame, vecs: DataFrame,
-                                    b: Int, metric: Int): DataFrame = {
+  private def beamRoundFrame(beam: DataFrame, e: DataFrame,
+                             qvecs: DataFrame, vecs: DataFrame,
+                             b: Int, metric: Int): DataFrame = {
     val expand = beam.join(e, "cand")
       .select(col("query_id"), col("dst").as("cand"))
     val cands = beam.select("query_id", "cand").union(expand)

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * per-round shuffle).
   * The shortlist itself rides the session exact-edge memo (probe-all
   * = the oracle contract; an nprobe shortlist composes identically).
-  * Measured at 25× (tools/MmrProbe, 50k×64 clustered): the fold costs
+  * Measured at 25× (tools/MmrProbe at commit 3ba9126, 50k×64 clustered): the fold costs
   * 19.8 s on top of an 82.4 s nprobe shortlist build — the diversity
   * rerank is ~24% overhead on the scan that feeds it, not a second
   * index pass.
@@ -72,13 +72,6 @@ object Mmr {
     mmrOverShortlist(spark, dir,
       Ivf.annBatch(spark, dir, c, VectorMetric.Cosine, nprobeOpt = Some(np)), k)
   }
-
-  /** Probe-only face of the fold (tools/MmrProbe times the fold in
-    * isolation against a pre-built shortlist).
-    */
-  private[graft] def mmrOverShortlistForProbe(spark: SparkSession, dir: String,
-                                              shortlist: DataFrame): DataFrame =
-    mmrOverShortlist(spark, dir, shortlist, DefaultK)
 
   /** The pinned (cv, ps) pair tables over a (query_id, neighbor_id)
     * shortlist — built ONCE and shared by however many folds run over

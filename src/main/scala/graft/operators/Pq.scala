@@ -783,8 +783,7 @@ object Pq {
     else {
       val p = new org.apache.hadoop.fs.Path(s"$indexPath/_profile")
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        spark.read.parquet(s"$indexPath/_profile")
-          .agg(sum(col("n_base"))).head().getLong(0)
+        IndexLifecycle.readSidecar(spark, p.toString, ProfileDdl).map(_.getLong(1)).sum
       else spark.read.parquet(indexPath).count()
     }
   }
@@ -1180,6 +1179,9 @@ object Pq {
       centroids)
       .select(col("cluster_id"), col("n").as("n_base"), col("rsum").as("rsum_base"))
       .coalesce(1).write.mode("overwrite").parquet(s"$outPath/_profile")
+
+  /** The `_profile` schema [[writeProfile]] writes. */
+  private[operators] val ProfileDdl = "cluster_id INT, n_base BIGINT, rsum_base BIGINT"
 
   /** The model sidecars of a persisted IVF-PQ tree (shared by the
     * dir-memoized build and the from-frame rebuild).

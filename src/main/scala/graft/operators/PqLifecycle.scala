@@ -4,6 +4,9 @@ import graft.Tables
 import graft.functions.{PqFunctions, VectorMetric}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Lifecycle for the PERSISTED IVF-PQ layout (Pq.writeIvfPq: binary
   * code lists partitioned by cluster_id + centroid/codebook/metric
@@ -196,7 +199,9 @@ object PqLifecycle {
     else {
       val metric = Pq.loadMeta(spark, indexPath).metric
       val centroids = IndexLifecycle.loadCentroids(spark, indexPath)
-      val base = spark.read.parquet(s"$indexPath/_profile")
+      val base = spark.createDataFrame(
+        IndexLifecycle.readSidecar(spark, p.toString, Pq.ProfileDdl).toSeq.asJava,
+        StructType.fromDDL(Pq.ProfileDdl))
       val cur = Pq
         .residualProfileOf(Ivf.metricTransform(currentVecs, metric), centroids,
           Ivf.loadHierarchy(spark, indexPath, centroids))

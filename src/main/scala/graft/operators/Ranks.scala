@@ -42,7 +42,7 @@ object Ranks {
     * fixed-width value-bucket design — a group whose order values all
     * COLLIDE (millions of equal scores) still spreads, because the
     * unique tie column keeps the range key splittable. Measured on the
-    * 125k probe with 90% of docs in one source AND heavily colliding
+    * 125k-doc tools/CorpusScaleProbe (at commit 3ba9126) with 90% of docs in one source AND heavily colliding
     * scores: the bucket design ranked in one straggler task; this one
     * doesn't.
     *

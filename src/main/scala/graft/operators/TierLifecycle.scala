@@ -276,16 +276,6 @@ object TierLifecycle {
     } finally graft.streaming.Streams.deleteTree(tmpDir)
   }
 
-  /** The same delete WITHOUT the bucket hint — the full-scan twin
-    * tools/TierProbe measures [[delete]] against (the probe's
-    * evidence that the hint is the at-scale win, not decoration);
-    * production callers always hint.
-    */
-  private[graft] def deleteUnpruned(deleteIds: DataFrame,
-                                    indexPath: String): IndexStatus =
-    IndexLifecycle.deleteFrom(deleteIds, indexPath, idCol = "id",
-      bucketHint = None)
-
   /** A19c driver query: `tier_compact` — the A20 small-files
     * maintenance pass exercised on the flat-tier bucket layout. Every
     * frozen-model append lands ONE part-file per touched bucket

@@ -6,6 +6,7 @@ import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 
@@ -114,18 +115,7 @@ object Streams {
   private def sinkOf(streamDf: DataFrame, outputMode: String): DataFrame = {
     val spark = streamDf.sparkSession
     val sink = s"graft_stream_sink_${counter.incrementAndGet()}"
-    // Memory-sink harness checkpoints land on tmpfs when available:
-    // the state store fsyncs per-batch delta files into the checkpoint,
-    // and on this virtualized disk that I/O dominated the jobs with
-    // run-to-run swings of 2.8→18.7s on identical inputs. The DURABLE
-    // path (Sources.streamToParquet) still takes an explicit, real
-    // checkpoint dir — only the drain-to-memory harness is ephemeral
-    // by construction, so RAM-backed checkpoints lose nothing.
-    val ckptBase = if (java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get("/dev/shm"))) "/dev/shm" else
-      System.getProperty("java.io.tmpdir")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(ckptBase), "graft_ckpt")
+    val ckpt = tmpCheckpoint()
     val q = streamDf
       .writeStream.format("memory").queryName(sink).outputMode(outputMode)
       .option("checkpointLocation", ckpt.toString)
@@ -469,10 +459,13 @@ object Streams {
 
   // --------------------------------------------------------------- D10
 
-  /** Ephemeral checkpoint dir on tmpfs when available — the same
-    * rationale as the memory-sink harness above (per-batch fsync on
-    * this virtualized disk dominates local runs; the durable path
-    * still takes a real checkpoint).
+  /** Ephemeral checkpoint dir on tmpfs when available: the state
+    * store fsyncs per-batch delta files into the checkpoint, and on a
+    * virtualized disk that I/O dominated the jobs with run-to-run
+    * swings of 2.8→18.7 s on identical inputs. The DURABLE path
+    * (Sources.streamToParquet) still takes an explicit, real
+    * checkpoint dir — only the drain harnesses are ephemeral by
+    * construction, so RAM-backed checkpoints lose nothing.
     */
   private def tmpCheckpoint(): java.nio.file.Path = {
     val base = if (java.nio.file.Files.isDirectory(
@@ -480,6 +473,28 @@ object Streams {
       System.getProperty("java.io.tmpdir")
     java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(base), "graft_ckpt")
+  }
+
+  /** The one foreachBatch sink: run `incoming` through `sink(streamId)`
+    * on a fresh tmpfs checkpoint, hand the started query to `drive`,
+    * then stop it and delete the checkpoint in `finally`. The stream id
+    * is the checkpoint path: stable across restarts from the same
+    * checkpoint (replays no-op), fresh for a new checkpoint (whose
+    * batch ids restart at 0 and must apply). Shared by the driver file
+    * harnesses and the MemoryStream spec harness.
+    */
+  private[graft] def foreachBatchSink[T](incoming: DataFrame,
+                                         sink: String => (DataFrame, Long) => Unit)
+                                        (drive: StreamingQuery => T): T = {
+    val ckpt = tmpCheckpoint()
+    try {
+      val q = incoming.writeStream
+        .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
+          sink(ckpt.toString)(b.toDF(), id))
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try drive(q) finally q.stop()
+    } finally deleteTree(ckpt)
   }
 
   /** Exactly-once landing protocol for the foreachBatch ingest stores
@@ -652,31 +667,6 @@ object Streams {
         "global arg-min assumption no longer holds")
   }
 
-  /** Attach the D10 foreachBatch sink to an incoming (doc_id, text,
-    * source) stream — shared by the driver file harness and the
-    * MemoryStream spec harness.
-    */
-  private[graft] def runDedupIncremental(incoming: DataFrame, store: String,
-                                         out: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path) = {
-    val ckpt = tmpCheckpoint()
-    val q = incoming.writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dedupIncrementalBatch(store, out)(b.toDF(), id))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    (q, ckpt)
-  }
-
-  /** D10 driver entry: streaming twin of E1b — the standing corpus
-    * (doc_id % 5 != 0) seeds the persisted fingerprint store, the
-    * remaining docs arrive through a file-streamed landing zone, and
-    * each micro-batch anti-joins the store before its survivors'
-    * hashes are absorbed. Oracle ≡ E1b's batch SQL over the FINAL
-    * state (the driver landing zone is one file → the stream and the
-    * batch see the same arg-min domain; the cross-batch drop is pinned
-    * by StreamsSpec with explicit multi-batch arrivals).
-    */
   /** D11: streaming quality gate — the E36 classifier applied per
     * micro-batch (stateless per-row arithmetic fused into the stream's
     * scan), rolled up to per-source admission counts with ONE stateful
@@ -802,21 +792,6 @@ object Streams {
         .parquet(s"$store/bands/b$batchId")
     }
 
-  /** Attach the D13 foreachBatch sink — shared by the driver file
-    * harness and the MemoryStream spec harness.
-    */
-  private[graft] def runDedupFuzzy(incoming: DataFrame, store: String,
-                                   out: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path) = {
-    val ckpt = tmpCheckpoint()
-    val q = incoming.writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dedupFuzzyBatch(store, out)(b.toDF(), id))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    (q, ckpt)
-  }
-
   /** D13 driver entry: the standing corpus (doc_id % 5 != 0) seeds the
     * persisted signature+band store, the remaining docs arrive through
     * the file-streamed landing zone, and each micro-batch runs the
@@ -827,11 +802,11 @@ object Streams {
   def streamDedupFuzzy(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_fz")
-    fuzzyIngest(ss, dir, tmp)
-    val result = ss.read.parquet(s"${tmp.resolve("survivors")}/*")
-      .orderBy("doc_id").localCheckpoint(true)
-    deleteTree(tmp)
-    result
+    try {
+      fuzzyIngest(ss, dir, tmp)
+      ss.read.parquet(s"${tmp.resolve("survivors")}/*")
+        .orderBy("doc_id").localCheckpoint(true)
+    } finally deleteTree(tmp)
   }
 
   /** The D13 ingest end-to-end into `tmp` (store + survivors subtrees):
@@ -861,9 +836,7 @@ object Streams {
         options = Map("basePath" -> dir))
       .filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"), col("source"))
-    val (q, ckpt) = runDedupFuzzy(incoming, store, out)
-    try q.processAllAvailable() finally q.stop()
-    deleteTree(ckpt)
+    foreachBatchSink(incoming, _ => dedupFuzzyBatch(store, out))(_.processAllAvailable())
   }
 
   /** The D13b periodical over an accumulated signature store: band-
@@ -927,15 +900,13 @@ object Streams {
   def streamDedupReconcile(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_fzr")
-    fuzzyIngest(ss, dir, tmp)
-    val store = tmp.resolve("store").toString
-    // the no-orphan invariant (every canonical is itself a store
-    // member) is pinned in StreamsSpec, not re-proved per invocation —
-    // the served key stays O(store) pure, no extra anti-join + count
-    val delta = reconcileFuzzyStore(ss, store)
-    val result = delta.localCheckpoint(true)
-    deleteTree(tmp)
-    result
+    try {
+      fuzzyIngest(ss, dir, tmp)
+      // the no-orphan invariant (every canonical is itself a store
+      // member) is pinned in StreamsSpec, not re-proved per invocation —
+      // the served key stays O(store) pure, no extra anti-join + count
+      reconcileFuzzyStore(ss, tmp.resolve("store").toString).localCheckpoint(true)
+    } finally deleteTree(tmp)
   }
 
   // --------------------------------------------------------------- D14
@@ -980,21 +951,6 @@ object Streams {
         .write.mode("overwrite").parquet(s"$store/b$batchId")
     }
 
-  /** Attach the D14 foreachBatch sink — shared by the driver file
-    * harness and the MemoryStream spec harness.
-    */
-  private[graft] def runAttrition(incoming: DataFrame, store: String,
-                                  out: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path) = {
-    val ckpt = tmpCheckpoint()
-    val q = incoming.writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        attritionBatch(store, out)(b.toDF(), id))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    (q, ckpt)
-  }
-
   /** D14 driver entry: the WHOLE corpus arrives through the landing
     * zone (the funnel reports total ingest, so nothing seeds the
     * store), the per-batch core above flags every document, and the
@@ -1011,31 +967,29 @@ object Streams {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_attr")
     val store = tmp.resolve("store").toString
     val out = tmp.resolve("flags").toString
-    docs.filter(lit(false)).select(md5(col("text")).as("text_hash"))
-      .write.mode("overwrite").parquet(s"$store/seed")
-    docs.filter(lit(false))
-      .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"),
-        lit(0L).as("pass_lang"), lit(0L).as("pass_qual"),
-        lit(0L).as("pass_exact"))
-      .write.mode("overwrite").parquet(s"$out/seed")
-    val schema = ss.read.parquet(s"$dir/documents.parq*").schema
-    val incoming = Sources
-      .streamDir(ss, s"$dir/documents.parq*", schema,
-        options = Map("basePath" -> dir))
-      .select(col("doc_id"), col("lang"), col("text"), col("source"))
-    val (q, ckpt) = runAttrition(incoming, store, out)
-    try q.processAllAvailable() finally q.stop()
-    assertSingleLandedBatch(ss, out)
-    val result = ss.read.parquet(s"$out/*")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("pass_lang")).as("n_lang"),
-        sum(col("pass_qual")).as("n_quality"),
-        sum(col("pass_exact")).as("n_exact_canon"))
-      .orderBy("source").localCheckpoint(true)
-    deleteTree(ckpt)
-    deleteTree(tmp)
-    result
+    try {
+      docs.filter(lit(false)).select(md5(col("text")).as("text_hash"))
+        .write.mode("overwrite").parquet(s"$store/seed")
+      docs.filter(lit(false))
+        .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"),
+          lit(0L).as("pass_lang"), lit(0L).as("pass_qual"),
+          lit(0L).as("pass_exact"))
+        .write.mode("overwrite").parquet(s"$out/seed")
+      val schema = ss.read.parquet(s"$dir/documents.parq*").schema
+      val incoming = Sources
+        .streamDir(ss, s"$dir/documents.parq*", schema,
+          options = Map("basePath" -> dir))
+        .select(col("doc_id"), col("lang"), col("text"), col("source"))
+      foreachBatchSink(incoming, _ => attritionBatch(store, out))(_.processAllAvailable())
+      assertSingleLandedBatch(ss, out)
+      ss.read.parquet(s"$out/*")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("pass_lang")).as("n_lang"),
+          sum(col("pass_qual")).as("n_quality"),
+          sum(col("pass_exact")).as("n_exact_canon"))
+        .orderBy("source").localCheckpoint(true)
+    } finally deleteTree(tmp)
   }
 
   // --------------------------------------------------------------- D12
@@ -1076,25 +1030,6 @@ object Streams {
       ()
     }
 
-  /** Attach the D12 foreachBatch sink to an incoming (id, vec) vector
-    * stream — shared by the driver file harness and the MemoryStream
-    * spec harness (which proves cross-batch accumulation, untouched-
-    * partition immutability, and the half-applied-marker refusal).
-    */
-  private[graft] def runIndexAppend(incoming: DataFrame, indexPath: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path) = {
-    val ckpt = tmpCheckpoint()
-    // the checkpoint location IS the stream identity: stable across
-    // restarts from the same checkpoint (replays no-op), fresh for a
-    // new checkpoint (whose batch ids restart at 0 and must apply)
-    val q = incoming.writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        indexAppendBatch(indexPath, ckpt.toString)(b.toDF(), id))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    (q, ckpt)
-  }
-
   /** D12 driver entry: build the persisted IVF-PQ index over the
     * corpus, then stream the arrival set — the first ceil(0.2·n)
     * vectors re-keyed past the corpus (new ids, existing vector
@@ -1130,23 +1065,12 @@ object Streams {
     * PqLifecycleSpec.
     */
   def streamIndexAppend(spark: SparkSession, dir: String): DataFrame =
-    streamIndexAppendTimed(spark, dir, (_, _) => ())
-
-  /** [[streamIndexAppend]] with a phase timer — ONE implementation
-    * serves the driver key (no-op hook) and tools/AppendProbe's
-    * attribution run (the key is the most expensive non-memo bench
-    * line, so its cost must decompose into named phases rather than
-    * read as one 12 s blob).
-    */
-  private[graft] def streamIndexAppendTimed(spark: SparkSession, dir: String,
-                                            onPhase: (String, Double) => Unit): DataFrame =
     streamAppendLifecycle(spark, dir, "graft_stream_idx", "index",
       build = (ss, p) => graft.operators.PqLifecycle.build(ss, dir, p),
-      runSink = runIndexAppend,
+      sink = indexAppendBatch,
       readBack = (ss, p) => ss.read.parquet(p),
       rebuildIdx = (_, current, p) => graft.operators.PqLifecycle.rebuild(current, p),
-      midStream = (_, _) => (),
-      onPhase = onPhase)
+      midStream = (_, _) => ())
 
   /** The ONE harness body behind the three continuous-ingest keys
     * (D12 IVF-PQ / D15 graph / D17 BQ): build → 3-trigger landing-zone
@@ -1156,25 +1080,22 @@ object Streams {
     * the fired policy's out-of-band rebuild → post-rebuild read-back,
     * emitted as the 5-phase state table every caller verifies against
     * [[streamIndexAppendOracleSql]]'s arithmetic. The hooks carry what
-    * is genuinely each family's: the build, the sink, the read-back
-    * frame (raw lists vs the graph's `_vectors`), the rebuild, and the
-    * maintenance step. One body = the phase arithmetic cannot drift
-    * between the three keys that all claim the same oracle.
+    * is genuinely each family's: the build, the per-trigger sink body
+    * (index path, stream id), the read-back frame (raw lists vs the
+    * graph's `_vectors`), the rebuild, and the maintenance step. One
+    * body = the phase arithmetic cannot drift between the three keys
+    * that all claim the same oracle. Each step runs as a
+    * [[graft.Metrics.phase]], so `tools.Profile` splits the key's jobs
+    * by step.
     */
   private def streamAppendLifecycle(spark: SparkSession, dir: String,
       tag: String, idxName: String,
       build: (SparkSession, String) => graft.operators.IndexStatus,
-      runSink: (DataFrame, String) => (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path),
+      sink: (String, String) => (DataFrame, Long) => Unit,
       readBack: (SparkSession, String) => DataFrame,
       rebuildIdx: (SparkSession, DataFrame, String) => graft.operators.IndexStatus,
-      midStream: (SparkSession, String) => Unit,
-      onPhase: (String, Double) => Unit): DataFrame = {
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      onPhase(name, (System.nanoTime() - t0) / 1e9)
-      r
-    }
+      midStream: (SparkSession, String) => Unit): DataFrame = {
+    import graft.Metrics.phase
     val ss = streamingSession(spark)
     val tmpRoot = java.nio.file.Files.createTempDirectory(tag)
     val indexPath = tmpRoot.resolve(idxName).toString
@@ -1183,11 +1104,11 @@ object Streams {
       val n = Tables.embeddingsCount(ss, dir)
       val vecs = Tables.embeddings(ss, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val s1 = timed("build") { build(ss, indexPath) }
+      val s1 = phase("build") { build(ss, indexPath) }
       val d = math.ceil(0.2 * n).toLong
       val arrivals = vecs.filter(col("id") < d)
         .select((col("id") + n).as("id"), col("vec"))
-      timed("landing_write") {
+      phase("landing_write") {
         arrivals
           .repartition(3) // 3 landing files -> 3 triggers -> 3 appends
           .write.mode("overwrite").parquet(landing)
@@ -1195,13 +1116,11 @@ object Streams {
       val schema = ss.read.parquet(landing).schema
       val incoming = Sources.streamDir(ss, landing, schema,
         options = Map("maxFilesPerTrigger" -> "1"))
-      timed("stream_drain_3_appends") {
-        val (q, ckpt) = runSink(incoming, indexPath)
-        try q.processAllAvailable() finally q.stop()
-        deleteTree(ckpt)
+      phase("stream_drain_3_appends") {
+        foreachBatchSink(incoming, sink(indexPath, _))(_.processAllAvailable())
       }
       val s2 = graft.operators.IndexLifecycle.status(ss, indexPath)
-      timed("mid_stream_maintenance") { midStream(ss, indexPath) }
+      phase("mid_stream_maintenance") { midStream(ss, indexPath) }
       def counts(): (Long, Long) = {
         // one scan for both: total + arrivals (count of a non-null
         // conditional ≡ the filtered count) — was two jobs per read-back
@@ -1209,12 +1128,12 @@ object Streams {
         val r = disk.agg(count(lit(1)), count(when(col("id") >= n, lit(1)))).head()
         (r.getLong(0), r.getLong(1))
       }
-      val (total, arrived) = timed("disk_read_back_1") { counts() }
+      val (total, arrived) = phase("disk_read_back_1") { counts() }
       // the drain left should_rebuild = true - run the out-of-band
       // rebuild on the index's current logical contents
-      val s3 = timed("rebuild") {
+      val s3 = phase("rebuild") {
         rebuildIdx(ss, vecs.unionAll(arrivals), indexPath) }
-      val (total2, arrived2) = timed("disk_read_back_2") { counts() }
+      val (total2, arrived2) = phase("disk_read_back_2") { counts() }
       val thr = graft.operators.IndexLifecycle.RebuildThreshold
       import ss.implicits._
       Seq(
@@ -1261,20 +1180,6 @@ object Streams {
       ()
     }
 
-  /** Attach the D17 foreachBatch sink to an incoming (id, vec) stream —
-    * shared by the driver harness and the spec's MemoryStream harness.
-    */
-  private[graft] def runBqAppend(incoming: DataFrame, indexPath: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path) = {
-    val ckpt = tmpCheckpoint()
-    val q = incoming.writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        bqAppendBatch(indexPath, ckpt.toString)(b.toDF(), id))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    (q, ckpt)
-  }
-
   /** D17 driver entry: `stream_bq_append` — D12's continuous-ingest
     * lifecycle applied to the BQ tier, the tree a 100 TB cluster
     * actually holds in RAM (the bit codes are 0.4% of the raw corpus —
@@ -1297,7 +1202,7 @@ object Streams {
   def streamBqAppend(spark: SparkSession, dir: String): DataFrame =
     streamAppendLifecycle(spark, dir, "graft_stream_bq", "index",
       build = (ss, p) => TierLifecycle.build(BqCodec, ss, dir, p),
-      runSink = runBqAppend,
+      sink = bqAppendBatch,
       readBack = (ss, p) => ss.read.parquet(p),
       rebuildIdx = (_, current, p) => TierLifecycle.rebuild(BqCodec, current, p),
       // mid-stream maintenance: each trigger landed one part-file per
@@ -1305,8 +1210,7 @@ object Streams {
       // content-neutral, so the phase-3 read-back passing the shared
       // oracle IS the proof
       midStream = (ss, p) =>
-        { graft.operators.IndexLifecycle.compact(ss, p, maxFiles = 1); () },
-      onPhase = (_, _) => ())
+        { graft.operators.IndexLifecycle.compact(ss, p, maxFiles = 1); () })
 
   /** The D12 arithmetic verbatim — the point: the BQ tier's ingest
     * face speaks the same state machine as the IVF-PQ one.
@@ -1328,20 +1232,6 @@ object Streams {
       ()
     }
 
-  /** Attach the D15 foreachBatch sink to an incoming (id, vec) stream —
-    * shared by the driver harness and the spec's MemoryStream harness.
-    */
-  private[graft] def runGraphAppend(incoming: DataFrame, indexPath: String)
-      : (org.apache.spark.sql.streaming.StreamingQuery, java.nio.file.Path) = {
-    val ckpt = tmpCheckpoint()
-    val q = incoming.writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graphAppendBatch(indexPath, ckpt.toString)(b.toDF(), id))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    (q, ckpt)
-  }
-
   /** D15 driver entry: `stream_graph_append` — D12's continuous-ingest
     * lifecycle applied to the GRAPH index family (A26b's layout): build
     * the persisted partition-local graph, stream the arrival set (first
@@ -1356,19 +1246,9 @@ object Streams {
     * oracle-checked and batch-split invariant by construction.
     */
   def streamGraphAppend(spark: SparkSession, dir: String): DataFrame =
-    streamGraphAppendTimed(spark, dir, (_, _) => ())
-
-  /** [[streamGraphAppend]] with a phase timer — ONE implementation
-    * serves the driver key (no-op hook) and tools/GraphAppendProbe's
-    * attribution run (the key is the most expensive bench line, so its
-    * cost must decompose into named phases rather than read as one
-    * ~29 s blob).
-    */
-  private[graft] def streamGraphAppendTimed(spark: SparkSession, dir: String,
-                                            onPhase: (String, Double) => Unit): DataFrame =
     streamAppendLifecycle(spark, dir, "graft_stream_graph", "graph",
       build = (ss, p) => graft.operators.GraphIndex.build(ss, dir, p),
-      runSink = runGraphAppend,
+      sink = graphAppendBatch,
       // the graph's rows live under `_vectors` (edges are the root tree)
       readBack = (ss, p) => graft.operators.GraphIndex.readVectors(ss, p),
       // the graph rebuild re-derives from its own stored vectors - the
@@ -1378,8 +1258,7 @@ object Streams {
       // per touched vbucket - the D17/D10b precedent on the graph
       // family (content-neutral; the phase-3 read-back proves it)
       midStream = (ss, p) =>
-        { graft.operators.GraphIndex.compact(ss, p, maxFiles = 1); () },
-      onPhase = onPhase)
+        { graft.operators.GraphIndex.compact(ss, p, maxFiles = 1); () })
 
   /** Identical arithmetic to D12's oracle — same arrival fraction,
     * same threshold, same 5 phases (the graph append counts growth the
@@ -1471,19 +1350,13 @@ object Streams {
       val schema = ss.read.parquet(s"$landing/f1").schema
       val incoming = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$landing/f*")
-      val ckpt = tmpCheckpoint()
-      val q = incoming.writeStream
-        .foreachBatch((b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          kcenterBatch(store, r, metric)(b.toDF(), id))
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try {
+      foreachBatchSink(incoming, _ => kcenterBatch(store, r, metric)) { q =>
         q.processAllAvailable()
         land("f2", col("id") > maxId / 3 && col("id") <= 2 * maxId / 3)
         q.processAllAvailable()
         land("f3", col("id") > 2 * maxId / 3)
         q.processAllAvailable()
-      } finally q.stop()
+      }
       val p = new org.apache.hadoop.fs.Path(store)
       val fsy = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
       val landed = fsy.listStatus(p).filter(_.isDirectory)
@@ -1493,7 +1366,7 @@ object Streams {
       // admission order = ascending vec_id (admitted ids strictly
       // increase — see the oracle's theorem note), so the read-back
       // ranks by id
-      val result = ss.read.parquet(s"$store/*")
+      ss.read.parquet(s"$store/*")
         .select(col("id").as("vec_id"), col("dist"))
         .withColumn("rank", row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("vec_id")))
@@ -1501,45 +1374,50 @@ object Streams {
         .select("rank", "vec_id", "dist")
         .orderBy("rank")
         .localCheckpoint(true)
-      deleteTree(ckpt)
-      result
     } finally deleteTree(tmp)
   }
 
+  /** D10 driver entry: streaming twin of E1b — the standing corpus
+    * (doc_id % 5 != 0) seeds the persisted fingerprint store, the
+    * remaining docs arrive through a file-streamed landing zone, and
+    * each micro-batch anti-joins the store before its survivors'
+    * hashes are absorbed. Oracle ≡ E1b's batch SQL over the FINAL
+    * state (the driver landing zone is one file → the stream and the
+    * batch see the same arg-min domain; the cross-batch drop is pinned
+    * by StreamsSpec with explicit multi-batch arrivals).
+    */
   def streamDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark)
     val docs = Tables.documents(ss, dir)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_fp")
     val store = tmp.resolve("store").toString
     val out = tmp.resolve("survivors").toString
-    // seed subdirs: the exactly-once protocol reads stores as globbed
-    // subdirectories (one per landed batch + the seed)
-    docs.filter(col("doc_id") % 5 =!= 0)
-      .select(md5(col("text")).as("text_hash")).distinct()
-      .write.mode("overwrite").parquet(s"$store/seed")
-    // seed the output with its (empty) schema so a survivor-free stream
-    // still reads back as a typed empty result, never a missing path
-    docs.filter(lit(false))
-      .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"))
-      .write.mode("overwrite").parquet(s"$out/seed")
-    // the landing zone is the documents parquet itself (footer-probed
-    // schema, same contract as the events stream)
-    val schema = ss.read.parquet(s"$dir/documents.parq*").schema
-    val incoming = Sources
-      .streamDir(ss, s"$dir/documents.parq*", schema,
-        options = Map("basePath" -> dir))
-      .filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), col("text"), col("source"))
-    val (q, ckpt) = runDedupIncremental(incoming, store, out)
-    try q.processAllAvailable() finally q.stop()
-    assertSingleLandedBatch(ss, out)
-    // pin the (tiny) survivor table into Spark block storage so the
-    // landing-zone temp tree and the RAM-backed checkpoint can be
-    // deleted NOW instead of leaking one set per bench/verify pass
-    val result = ss.read.parquet(s"$out/*").orderBy("doc_id").localCheckpoint(true)
-    deleteTree(ckpt)
-    deleteTree(tmp)
-    result
+    try {
+      // seed subdirs: the exactly-once protocol reads stores as globbed
+      // subdirectories (one per landed batch + the seed)
+      docs.filter(col("doc_id") % 5 =!= 0)
+        .select(md5(col("text")).as("text_hash")).distinct()
+        .write.mode("overwrite").parquet(s"$store/seed")
+      // seed the output with its (empty) schema so a survivor-free stream
+      // still reads back as a typed empty result, never a missing path
+      docs.filter(lit(false))
+        .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"))
+        .write.mode("overwrite").parquet(s"$out/seed")
+      // the landing zone is the documents parquet itself (footer-probed
+      // schema, same contract as the events stream)
+      val schema = ss.read.parquet(s"$dir/documents.parq*").schema
+      val incoming = Sources
+        .streamDir(ss, s"$dir/documents.parq*", schema,
+          options = Map("basePath" -> dir))
+        .filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"), col("source"))
+      foreachBatchSink(incoming, _ => dedupIncrementalBatch(store, out))(_.processAllAvailable())
+      assertSingleLandedBatch(ss, out)
+      // pin the (tiny) survivor table into Spark block storage so the
+      // landing-zone temp tree can be deleted NOW instead of leaking
+      // one per bench/verify pass
+      ss.read.parquet(s"$out/*").orderBy("doc_id").localCheckpoint(true)
+    } finally deleteTree(tmp)
   }
 
   /** D10b driver entry: `stream_dedup_compacted` — D10's incremental
@@ -1573,49 +1451,47 @@ object Streams {
     val store = tmp.resolve("store").toString
     val out = tmp.resolve("survivors").toString
     val landing = tmp.resolve("landing").toString
-    docs.filter(col("doc_id") % 5 =!= 0)
-      .select(md5(col("text")).as("text_hash")).distinct()
-      .write.mode("overwrite").parquet(s"$store/seed")
-    docs.filter(lit(false))
-      .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"))
-      .write.mode("overwrite").parquet(s"$out/seed")
-    val src = docs.filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), col("text"), col("source"))
-    val maxId = src.agg(max(col("doc_id"))).head().getLong(0)
-    // files land SEQUENTIALLY between drains, so their natural
-    // modification times already order the triggers — never back-date
-    // stamps on a LIVE query: if a poll lists a part file in the window
-    // between its rename and a setLastModified, the real wall-clock
-    // mtime poisons the source's max-age watermark and every later
-    // back-dated file is silently ignored as too old (observed as a
-    // one-in-several-runs missing trigger)
-    def land(name: String, pred: org.apache.spark.sql.Column): Unit =
-      src.filter(pred).coalesce(1).write.mode("overwrite").parquet(s"$landing/$name")
-    land("f1", col("doc_id") <= maxId / 3)
-    val schema = ss.read.parquet(s"$landing/f1").schema
-    val incoming = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$landing/f*")
-    val (q, ckpt) = runDedupIncremental(incoming, store, out)
     try {
-      q.processAllAvailable() // trigger 1 committed
-      require(compactStore(ss, store) >= 2,
-        "mid-stream compaction absorbed nothing after trigger 1")
-      land("f2", col("doc_id") > maxId / 3 && col("doc_id") <= 2 * maxId / 3)
-      q.processAllAvailable() // trigger 2 lands against the compacted store
-      require(compactStore(ss, store) >= 2,
-        "mid-stream compaction absorbed nothing after trigger 2")
-      land("f3", col("doc_id") > 2 * maxId / 3)
-      q.processAllAvailable()
-    } finally q.stop()
-    val p = new org.apache.hadoop.fs.Path(out)
-    val fsy = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val landed = fsy.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath.getName).count(_.matches("b\\d+"))
-    require(landed == 3,
-      s"driver entry expects three landed batches, got $landed")
-    val result = ss.read.parquet(s"$out/*").orderBy("doc_id").localCheckpoint(true)
-    deleteTree(ckpt)
-    deleteTree(tmp)
-    result
+      docs.filter(col("doc_id") % 5 =!= 0)
+        .select(md5(col("text")).as("text_hash")).distinct()
+        .write.mode("overwrite").parquet(s"$store/seed")
+      docs.filter(lit(false))
+        .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"))
+        .write.mode("overwrite").parquet(s"$out/seed")
+      val src = docs.filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"), col("source"))
+      val maxId = src.agg(max(col("doc_id"))).head().getLong(0)
+      // files land SEQUENTIALLY between drains, so their natural
+      // modification times already order the triggers — never back-date
+      // stamps on a LIVE query: if a poll lists a part file in the window
+      // between its rename and a setLastModified, the real wall-clock
+      // mtime poisons the source's max-age watermark and every later
+      // back-dated file is silently ignored as too old (observed as a
+      // one-in-several-runs missing trigger)
+      def land(name: String, pred: org.apache.spark.sql.Column): Unit =
+        src.filter(pred).coalesce(1).write.mode("overwrite").parquet(s"$landing/$name")
+      land("f1", col("doc_id") <= maxId / 3)
+      val schema = ss.read.parquet(s"$landing/f1").schema
+      val incoming = ss.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$landing/f*")
+      foreachBatchSink(incoming, _ => dedupIncrementalBatch(store, out)) { q =>
+        q.processAllAvailable() // trigger 1 committed
+        require(compactStore(ss, store) >= 2,
+          "mid-stream compaction absorbed nothing after trigger 1")
+        land("f2", col("doc_id") > maxId / 3 && col("doc_id") <= 2 * maxId / 3)
+        q.processAllAvailable() // trigger 2 lands against the compacted store
+        require(compactStore(ss, store) >= 2,
+          "mid-stream compaction absorbed nothing after trigger 2")
+        land("f3", col("doc_id") > 2 * maxId / 3)
+        q.processAllAvailable()
+      }
+      val p = new org.apache.hadoop.fs.Path(out)
+      val fsy = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
+      val landed = fsy.listStatus(p).filter(_.isDirectory)
+        .map(_.getPath.getName).count(_.matches("b\\d+"))
+      require(landed == 3,
+        s"driver entry expects three landed batches, got $landed")
+      ss.read.parquet(s"$out/*").orderBy("doc_id").localCheckpoint(true)
+    } finally deleteTree(tmp)
   }
 }

@@ -172,7 +172,7 @@ class GraphSpec extends AnyFunSuite {
     // 2,000 near-uniform vectors; 12 iters = 2.4x build -> 0.899
     // served, a measured negative); the round-14 two-phase builder
     // exact-refines the worst-kNN-radius fraction and lifts the
-    // substrate to 0.824 / served to 0.936 (tools/RefineProbe) — this
+    // substrate to 0.824 / served to 0.936 (tools/RefineProbe at commit 3ba9126) — this
     // pins that measurement against regression
     val mean = servedRecall("/root/testdata/sf0.1",
       graft.functions.VectorMetric.Cosine)

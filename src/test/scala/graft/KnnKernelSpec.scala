@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.{VectorFunctions, VectorMetric}
 import graft.operators.{Knn, KnnExec}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -151,28 +150,10 @@ class KnnKernelSpec extends AnyFunSuite {
   }
 
   test("building the frame runs no Spark job") {
-    val group = "knn-kernel-lazy"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull + "")
-    }
     val q = queries(FloatType); val c = corpus()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "build only")
-      val df = try Knn.knn(q, c, 5, VectorMetric.L2)
-               finally spark.sparkContext.clearJobGroup()
-      assert(df.columns.toSeq == Seq("query_id", "neighbor_id", "rank", "dist"))
-      // listener events arrive in order: once a marker job is seen,
-      // any job started while building has been seen too
-      spark.sparkContext.setJobGroup("knn-kernel-marker", "marker")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("knn-kernel-marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("knn-kernel-marker"))
-      assert(!seen.contains(group), s"jobs ran while building: $seen")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val built = graft.Metrics.measure(spark)(Knn.knn(q, c, 5, VectorMetric.L2))
+    assert(built.result.columns.toSeq == Seq("query_id", "neighbor_id", "rank", "dist"))
+    assert(built.total.jobs == 0, s"jobs ran while building: ${built.total}")
   }
 
   private def knnExecs(p: SparkPlan): Seq[KnnExec] = p match {

@@ -101,7 +101,7 @@ class R7OpsSpec extends AnyFunSuite {
     // the exact mutual graph does NOT hold (measured: ~200 substitute
     // edges at sf0.001 under nc/4). Mutuality is a conjunction, so
     // directed recall r compounds to ~r² on edges — which is exactly
-    // why the serving config probes nc/2 (tools/MutualProbe: nc/4 →
+    // why the serving config probes nc/2 (tools/MutualProbe at commit 3ba9126: nc/4 →
     // 0.41-0.44 recall, nc/2 → 0.70-0.74). Pins are the MEASURED
     // floors: recall ≥ 0.65, and ≥ 99% of served edges mutual in the
     // exact top-2k graph (both endpoints genuinely close — the

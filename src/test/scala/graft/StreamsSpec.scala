@@ -194,8 +194,8 @@ class StreamsSpec extends AnyFunSuite {
         "doc_id BIGINT, text STRING, source STRING"))
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$landing/f*")
-    val (q, ckpt) = Streams.runDedupIncremental(incoming, store, out)
-    try q.processAllAvailable() finally { q.stop(); Streams.deleteTree(ckpt) }
+    Streams.foreachBatchSink(incoming, _ => Streams.dedupIncrementalBatch(store, out))(
+      _.processAllAvailable())
     val survivors = spark.read.parquet(s"$out/*").collect()
       .map(r => r.getAs[Long]("doc_id")).toSet
     assert(survivors == Set(100L, 101L, 103L),
@@ -263,8 +263,8 @@ class StreamsSpec extends AnyFunSuite {
         "doc_id BIGINT, lang STRING, text STRING, source STRING"))
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$landing/f*")
-    val (q, ckpt) = Streams.runAttrition(incoming, store, out)
-    try q.processAllAvailable() finally { q.stop(); Streams.deleteTree(ckpt) }
+    Streams.foreachBatchSink(incoming, _ => Streams.attritionBatch(store, out))(
+      _.processAllAvailable())
     def readFlags(): Map[Long, (Long, Long, Long)] =
       spark.read.parquet(s"$out/*").collect()
         .map(r => r.getAs[Long]("doc_id") ->
@@ -322,8 +322,7 @@ class StreamsSpec extends AnyFunSuite {
     val schema = spark.read.parquet(s"$landing/f1").schema
     val incoming = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$landing/f*")
-    val (q, ckpt) = Streams.runIndexAppend(incoming, idxA)
-    try {
+    Streams.foreachBatchSink(incoming, Streams.indexAppendBatch(idxA, _)) { q =>
       q.processAllAvailable() // batch 1 landed
       val snap1 = codeFiles(idxA)
       land("f2", b2, 2000000L)
@@ -335,7 +334,7 @@ class StreamsSpec extends AnyFunSuite {
       // batch 2 landed exactly one new file, in exactly one list dir
       val fresh = after.keySet -- snap1.keySet
       assert(fresh.size == 1, s"expected one new part file, got $fresh")
-    } finally { q.stop(); Streams.deleteTree(ckpt) }
+    }
     // cross-batch accumulation: streamed state == one batch append of
     // the SAME arrival set, and the landed codes are row-identical
     PqLifecycle.append(b1.union(b2), idxB)
@@ -353,11 +352,12 @@ class StreamsSpec extends AnyFunSuite {
       java.nio.file.Paths.get(idxA).resolve("_append_tmp"))
     val incoming2 = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$landing/f*")
-    val (q2, ckpt2) = Streams.runIndexAppend(incoming2, idxA) // fresh ckpt → re-reads f1
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
+    // a fresh checkpoint → re-reads f1
+    val ex = Streams.foreachBatchSink(incoming2, Streams.indexAppendBatch(idxA, _)) { q2 =>
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
     }
-    q2.stop(); Streams.deleteTree(ckpt2)
     def causes(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
         .map(c => Option(c.getMessage).getOrElse("")).toSeq
@@ -555,8 +555,8 @@ class StreamsSpec extends AnyFunSuite {
         "doc_id BIGINT, text STRING, source STRING"))
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$landing/f*")
-    val (q, ckpt) = Streams.runDedupFuzzy(incoming, store, out)
-    try q.processAllAvailable() finally { q.stop(); Streams.deleteTree(ckpt) }
+    Streams.foreachBatchSink(incoming, _ => Streams.dedupFuzzyBatch(store, out))(
+      _.processAllAvailable())
     val survivors = spark.read.parquet(s"$out/*").collect()
       .map(_.getAs[Long]("doc_id")).toSet
     assert(survivors == Set(101L, 200L, 103L),

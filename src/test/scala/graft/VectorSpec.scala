@@ -1,8 +1,13 @@
 package graft
 
-import graft.functions.{FakeEmbedding, TopKBuffer, VectorFunctions, VectorMetric}
+import graft.functions.{FakeEmbedding, TopKBuffer, VectorDistance, VectorFunctions, VectorMetric}
 import graft.operators.Knn
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,5 +64,27 @@ class VectorSpec extends AnyFunSuite {
     assert(FakeEmbedding.embed("x", 64).length == 64)
     assert(FakeEmbedding.embed("Mixed CASE  ", 8).toSeq ==
       FakeEmbedding.embed("mixed case", 8).toSeq)
+  }
+
+  // both evaluation paths of the distance kernel: the interpreted
+  // nullSafeEval and the generated code a whole-stage plan runs
+  private val distancePaths: Seq[(String, Expression => InternalRow => Double)] = Seq(
+    "interpreted" -> (e => row => e.eval(row).asInstanceOf[Double]),
+    "codegen" -> (e => row => GenerateUnsafeProjection.generate(Seq(e)).apply(row).getDouble(0)))
+
+  for ((metricName, metric, same) <- Seq(("l2", VectorMetric.L2, 0.0),
+         ("cosine", VectorMetric.Cosine, 0.0), ("dot", VectorMetric.Dot, 5.0));
+       (path, eval) <- distancePaths) {
+    test(s"vector_distance refuses mismatched dimensions ($metricName, $path)") {
+      val t = ArrayType(FloatType, containsNull = false)
+      val e = VectorDistance(BoundReference(0, t, nullable = false),
+        BoundReference(1, t, nullable = false), metric)
+      def row(a: Array[Float], b: Array[Float]) =
+        InternalRow(ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+      val ex = intercept[IllegalArgumentException](
+        eval(e)(row(Array(1f, 2f, 3f), Array(1f, 2f))))
+      assert(ex.getMessage == "vector_distance: vector dims 3 != 2")
+      assert(math.abs(eval(e)(row(Array(1f, 2f), Array(1f, 2f))) - same) < 1e-12)
+    }
   }
 }
