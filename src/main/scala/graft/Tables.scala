@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Schema'd readers for the driver-generated testdata tables.
   *
@@ -12,8 +14,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * streaming surface.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `name` of `dir`, read under its memoised schema: a warm read runs
+    * no schema-inference job (a bare `spark.read.parquet` runs one per
+    * call).
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, dir, name, path)).parquet(path)
+  }
+
+  /** The inferred schema of the table at `path`, memoised per (dir,
+    * table) and stamped by a driver-side listing of the table's files
+    * (path, length, mtime) and the nanos-as-long read flag
+    * ([[events]]), so a table rewritten in place is inferred afresh
+    * even without [[invalidate]]. The one schema-less read in this
+    * file; a missing table fails here with Spark's own error.
+    */
+  private def schemaOf(spark: SparkSession, dir: String, name: String,
+                       path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stamp = if (!fs.exists(p)) Nil else {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      files.result().sorted
+    }
+    val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    Memo(dir, "tables.schema", (name, nanosAsLong, stamp))(spark.read.parquet(path).schema)
+  }
 
   /** Spread a scan across all cores before a CPU-heavy per-row stage.
     *

@@ -190,7 +190,8 @@ case class AdcDistance(child: Expression, table: Array[Array[Double]],
   * clusters' nprobe tables ride as ONE reference object indexed by the
   * probe ordinal (nprobe × M × 256 doubles — ~1 MB at nprobe 64,
   * driver-built per query); each candidate row carries its ordinal
-  * (from a broadcast cluster_id → ordinal map) and costs M lookups,
+  * (its cluster_id's position in the probe list, computed in the same
+  * projection) and costs M lookups,
   * exactly [[AdcDistance]]'s budget. One scan, one codegen'd kernel —
   * the alternative (a union of nprobe single-table branches) grows the
   * physical plan linearly in nprobe.

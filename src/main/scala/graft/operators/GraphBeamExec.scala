@@ -1,14 +1,15 @@
 package graft.operators
 
 import graft.functions.{TopKBuffer, VectorMetric}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BindReferences, BoundReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, BindReferences, BoundReference, GenericInternalRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** One bucket of a partition-local persisted graph, as a serving task
   * holds it: the members sorted by id (so a local index orders ties
@@ -203,6 +204,33 @@ private[graft] object GraphKernel {
     }
     cur
   }
+
+  /** The ranked merge of the bucket tasks' candidates, each `(query
+    * index, neighbor ids, distances)` over one bucket: per query id
+    * (`qids` maps the index) its k best by (dist, id), as output rows
+    * (query_id, neighbor_id, rank[, dist]) in (query_id, rank) order.
+    * A query with no candidate emits no row.
+    */
+  def ranked(qids: Array[Long], k: Int, withDist: Boolean,
+             cands: Iterator[(Int, Array[Long], Array[Double])]): Iterator[InternalRow] = {
+    val byQuery = scala.collection.mutable.TreeMap.empty[Long, TopKBuffer]
+    cands.foreach { case (q, ids, ds) =>
+      val buf = byQuery.getOrElseUpdate(qids(q), new TopKBuffer(k))
+      var j = 0
+      while (j < ids.length) { buf.insert(ds(j), ids(j)); j += 1 }
+    }
+    val types = Array[DataType](LongType, LongType, IntegerType) ++
+      (if (withDist) Array[DataType](DoubleType) else Array.empty[DataType])
+    val proj = UnsafeProjection.create(types)
+    val out = new GenericInternalRow(types.length)
+    byQuery.iterator.flatMap { case (qid, buf) =>
+      buf.sorted.iterator.zipWithIndex.map { case ((d, id), r) =>
+        out.setLong(0, qid); out.setLong(1, id); out.setInt(2, r + 1)
+        if (withDist) out.setDouble(3, d)
+        proj(out)
+      }
+    }
+  }
 }
 
 /** The query batch as every beam task reads it: ids, widened vectors
@@ -215,41 +243,50 @@ private[graft] final case class GraphQueryBlock(ids: Array[Long], live: Array[Bo
                                                 mat: Array[Double], norms: Array[Double],
                                                 order: Array[Array[Int]])
 
-/** Logical face of the partition-local graph search: for each query
-  * and each bucket of `index`, at most k `(query_id, neighbor_id,
-  * dist)` rows found by the in-memory beam. `neighborId` and `dist`
-  * are produced here; `queryId` (bigint) passes through.
+/** Logical face of the partition-local graph search: the ranked top-k
+  * of each query over every bucket of `index`, as (query_id,
+  * neighbor_id, rank[, dist]) rows in (query_id, rank) order.
+  * `neighborId`, `rank` and `dist` are produced here; `queryId`
+  * (bigint) passes through. Without `dist` the node emits no distance
+  * column, so a caller that drops it needs no projection above it.
   */
 case class GraphBeam(child: LogicalPlan, queryId: Attribute, qvec: Attribute,
-                     neighborId: Attribute, dist: Attribute,
+                     neighborId: Attribute, rank: Attribute, dist: Option[Attribute],
                      index: ServingState.GraphState, k: Int, width: Int,
                      rounds: Int) extends UnaryNode {
-  override def output: Seq[Attribute] = Seq(queryId, neighborId, dist)
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(neighborId, dist))
+  override def output: Seq[Attribute] = Seq(queryId, neighborId, rank) ++ dist
+  override def producedAttributes: AttributeSet = AttributeSet(Seq(neighborId, rank) ++ dist)
   override protected def withNewChildInternal(c: LogicalPlan): GraphBeam = copy(child = c)
 }
 
 /** Runs the beam of every query over every bucket of a pinned graph
-  * tree, one task per bucket partition.
+  * tree, one task per bucket partition, and merges the buckets'
+  * answers into each query's ranked top-k.
   *
   * The query batch is collected on the driver (a local batch, the
   * serving case, is already there, so this runs no job), unpacked
   * once into a dense double matrix with each query's coarse-list
   * order, and reaches the tasks as one broadcast variable. Each task
-  * runs [[GraphKernel.beam]] for every query over its bucket and emits
-  * at most k candidates per (query, bucket); the caller's
-  * TopKByDistance merge ranks them. A query whose dimension differs
-  * from a bucket's fails the task with the reference's error.
+  * runs [[GraphKernel.beam]] for every query over its bucket and
+  * yields at most k candidates per (query, bucket); [[GraphKernel.ranked]]
+  * merges them by (dist, id). Collected, the bucket tasks run as one
+  * job and the merge runs on the driver over at most buckets×k
+  * candidates per query; feeding a larger plan, the candidates move
+  * to one partition and merge there (TakeOrderedAndProjectExec's
+  * shape), so both paths return the same rows. A query whose
+  * dimension differs from a bucket's fails the task with the
+  * reference's error.
   */
 case class GraphBeamExec(child: SparkPlan, queryId: Attribute, qvec: Attribute,
-                         neighborId: Attribute, dist: Attribute,
+                         neighborId: Attribute, rank: Attribute, dist: Option[Attribute],
                          index: ServingState.GraphState, k: Int, width: Int,
                          rounds: Int) extends UnaryExecNode {
 
-  override def output: Seq[Attribute] = Seq(queryId, neighborId, dist)
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(neighborId, dist))
-  override def outputPartitioning: Partitioning =
-    UnknownPartitioning(index.buckets.getNumPartitions)
+  override def output: Seq[Attribute] = Seq(queryId, neighborId, rank) ++ dist
+  override def producedAttributes: AttributeSet = AttributeSet(Seq(neighborId, rank) ++ dist)
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def outputOrdering: Seq[SortOrder] =
+    Seq(SortOrder(queryId, Ascending), SortOrder(rank, Ascending))
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numQueries" -> SQLMetrics.createMetric(sparkContext, "number of queries broadcast"),
@@ -302,21 +339,22 @@ case class GraphBeamExec(child: SparkPlan, queryId: Attribute, qvec: Attribute,
     GraphQueryBlock(ids, live, dims, offs, mat, norms, order)
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
+  /** The broadcast batch and the bucket tasks' candidates: per (query,
+    * bucket) at most k, as (query index, neighbor ids, distances).
+    */
+  private[graft] def candidates(): (Broadcast[GraphQueryBlock],
+                                    RDD[(Int, Array[Long], Array[Double])]) = {
     val nQueries = longMetric("numQueries")
     val qs = sparkContext.broadcast(block(child.executeCollect()))
     nQueries += qs.value.ids.length
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(nQueries))
-    val outTypes = output.map(_.dataType).toArray
     val (k, width, rounds, metric) = (this.k, this.width, this.rounds, index.metric)
     val numScored = longMetric("numScored")
     val numCandidates = longMetric("numCandidates")
     val kernelTime = longMetric("kernelTime")
-    index.buckets.mapPartitions { buckets =>
+    qs -> index.buckets.mapPartitions { buckets =>
       val blk = qs.value
-      val proj = UnsafeProjection.create(outTypes)
-      val out = new GenericInternalRow(3)
       buckets.flatMap { b =>
         val t0 = System.nanoTime()
         val sc = new GraphKernel.Scratch(b.size)
@@ -331,16 +369,25 @@ case class GraphBeamExec(child: SparkPlan, queryId: Attribute, qvec: Attribute,
         kernelTime += System.nanoTime() - t0
         numScored += sc.scored
         numCandidates += found.iterator.filter(_ != null).map(_.size.toLong).sum
-        Iterator.range(0, found.length).filter(found(_) != null).flatMap { q =>
-          val buf = found(q)
-          Iterator.range(0, buf.size).map { j =>
-            out.setLong(0, blk.ids(q)); out.setLong(1, b.ids(buf.ids(j).toInt))
-            out.setDouble(2, buf.dists(j))
-            proj(out)
+        Iterator.range(0, found.length).filter(q => found(q) != null && found(q).size > 0)
+          .map { q =>
+            val buf = found(q)
+            (q, Array.tabulate(buf.size)(j => b.ids(buf.ids(j).toInt)), buf.dists.take(buf.size))
           }
-        }
       }
     }
+  }
+
+  override def executeCollect(): Array[InternalRow] = executeQuery {
+    val (qs, cands) = candidates()
+    GraphKernel.ranked(qs.value.ids, k, dist.isDefined, cands.collect().iterator)
+      .map(_.copy()).toArray
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val (qs, cands) = candidates()
+    val (k, withDist) = (this.k, dist.isDefined)
+    cands.repartition(1).mapPartitions(it => GraphKernel.ranked(qs.value.ids, k, withDist, it))
   }
 
   override protected def withNewChildInternal(c: SparkPlan): GraphBeamExec = copy(child = c)

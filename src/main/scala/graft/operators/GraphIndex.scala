@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StructType}
 
 /** Graph-based ANN SERVING + lifecycle — the production index family
   * (HNSW / NSG / DiskANN lineage) over the E37c NN-Descent kNN graph:
@@ -55,8 +55,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, S
   * structure), `_meta` (k, buckets, metric, layout) and the shared
   * lifecycle `_state`. Serving ([[queryGraphBatch]]) pins one row per
   * bucket and runs [[GraphBeamExec]]: each task beam-searches its
-  * bucket in memory for the broadcast query batch, and TopKByDistance
-  * merges at most k rows per (query, bucket). Arrivals LINK INSIDE
+  * bucket in memory for the broadcast query batch, and the node merges
+  * at most k rows per (query, bucket) into each query's top-k, on the
+  * driver when collected. Arrivals LINK INSIDE
   * THEIR BUCKET: a new vector's k out-edges are its exact top-k among
   * the bucket's existing vectors, reverse edges land on those members
   * capped at R = 2k by distance, and ONLY the touched buckets rewrite
@@ -1364,26 +1365,25 @@ object GraphIndex {
   }
 
   /** Serve a PERSISTED graph tree for an out-of-corpus (id, vec) query
-    * batch: every bucket beam-searches its own graph for the batch in
-    * one task ([[GraphBeamExec]]), and the (query_id, rank)-ordered
-    * top-k merges the buckets' answers. The tree opens once per
-    * session ([[ServingState]]), so a warm call reads nothing from
-    * disk and runs two jobs: the beam + merge exchange, and the
-    * ranking. A query id that is also a stored id never returns
-    * itself.
+    * batch: (query_id, neighbor_id, rank) in (query_id, rank) order.
+    * Every bucket beam-searches its own graph for the batch in one task
+    * ([[GraphBeamExec]]), and the buckets' answers merge into each
+    * query's top-k by (dist, id). The tree opens once per session
+    * ([[ServingState]]), so a warm call reads nothing from disk and,
+    * collected, runs one job: the bucket tasks, merged on the driver.
+    * A query id that is also a stored id never returns itself.
     */
   def queryGraphBatch(spark: SparkSession, indexPath: String,
                       queries: DataFrame, k: Int): DataFrame = {
     BucketSwap.refuseProbe(spark, BucketSwap.graph(indexPath))
-    serve(ServingState.graph(spark, indexPath), queries, k).drop("dist")
+    serve(ServingState.graph(spark, indexPath), queries, k, withDist = false)
   }
 
-  /** [[queryGraphBatch]] over an open tree, with the distance column:
-    * (query_id, neighbor_id, rank, dist). Building the frame runs no
-    * job.
+  /** [[queryGraphBatch]] over an open tree: (query_id, neighbor_id,
+    * rank, dist), or without `dist`. Building the frame runs no job.
     */
   private[graft] def serve(st: ServingState.GraphState, queries: DataFrame,
-                           k: Int): DataFrame = {
+                           k: Int, withDist: Boolean = true): DataFrame = {
     require(k > 0, "k must be positive")
     val q = queries.select(col("id").cast("bigint").as("query_id"), col("vec").as("qvec"))
       .queryExecution.analyzed
@@ -1393,18 +1393,10 @@ object GraphIndex {
       case _ => false
     }, s"queryGraphBatch: vec must be array<float> or array<double>, got ${qvec.dataType.simpleString}")
     val nid = AttributeReference("neighbor_id", LongType, nullable = false)()
-    val dist = AttributeReference("dist", DoubleType, nullable = false)()
+    val rank = AttributeReference("rank", IntegerType, nullable = false)()
+    val dist = Option.when(withDist)(AttributeReference("dist", DoubleType, nullable = false)())
     ColumnBridge.frame(queries.sparkSession,
-        GraphBeam(q, queryId, qvec, nid, dist, st, k, beamWidth(k), BeamRounds))
-      // one partition for the merge: the top-k, its ranking and the
-      // (query_id, rank) order then share this one exchange
-      .repartition(1)
-      .groupBy(col("query_id"))
-      .agg(VectorFunctions.topKByDistance(col("dist"), col("neighbor_id"), k).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("query_id"), col("nn.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.dist").as("dist"))
-      .orderBy("query_id", "rank")
+      GraphBeam(q, queryId, qvec, nid, rank, dist, st, k, beamWidth(k), BeamRounds))
   }
 
   /** A26h: `graph_stats` — the A14/A23 stats face for the graph

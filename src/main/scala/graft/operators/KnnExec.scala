@@ -39,7 +39,7 @@ object KnnStrategy extends SparkStrategy {
       KnnExec(planLater(j.corpus), planLater(j.queries), j.neighborId, j.vec,
         j.queryId, j.qvec, j.dist, j.k, j.metric, j.excludeSelf) :: Nil
     case g: GraphBeam =>
-      GraphBeamExec(planLater(g.child), g.queryId, g.qvec, g.neighborId, g.dist,
+      GraphBeamExec(planLater(g.child), g.queryId, g.qvec, g.neighborId, g.rank, g.dist,
         g.index, g.k, g.width, g.rounds) :: Nil
     case _ => Nil
   }

@@ -532,8 +532,8 @@ object Pq {
     * handling exists exactly once. The shortlist pass scans only codes
     * (M bytes/candidate, bounded top-k·refine as TakeOrdered); the
     * optional refine re-ranks the shortlist with the TRUE metric
-    * distance over raw vectors — at 100 TB that is k·refine point
-    * reads against the primary store instead of a float-vector scan.
+    * distance over raw vectors — k·refine point lookups by id against
+    * the primary store ([[refineTail]]) instead of a float-vector scan.
     * `refine <= 1` (or refineWith = None) is pure compressed-domain.
     */
   private def adcCore(codesDf: DataFrame, codebooks: Array[Array[Array[Float]]],
@@ -550,26 +550,47 @@ object Pq {
     val table = adcTable(codebooks, q0, metric)
     val adist = PqFunctions.adcDistance(col("codes"), table,
       takeSqrt = metric != VectorMetric.Dot)
-    val shortlist = codesDf
-      .select(col("neighbor_id"), adist.as("dist"))
-      .orderBy(col("dist"), col("neighbor_id"))
-      .limit(k * math.max(1, refine))
-    refineTail(shortlist, rawQuery, k, refine, metric, refineWith)
+    refineTail(shortlistOf(codesDf.select(col("neighbor_id"), adist.as("dist")), k, refine),
+      rawQuery, k, refine, metric, refineWith)
   }
 
-  /** The exact-refine tail every compressed point query shares: re-rank
-    * the (neighbor_id, dist) shortlist with the TRUE metric over raw
-    * vectors when a refine source is given, else serve the compressed
-    * ranking directly.
+  /** The k·refine best (neighbor_id, dist) candidates by (dist, id). */
+  private def shortlistOf(cands: DataFrame, k: Int, refine: Int): DataFrame =
+    cands.orderBy(col("dist"), col("neighbor_id")).limit(k * math.max(1, refine))
+
+  /** Residual-layout candidates of the `probed` lists as (neighbor_id,
+    * dist). A row's probe ordinal — the position of its `cluster_id`
+    * in `probed`, which indexes the per-list ADC `tables` — is
+    * computed inside the expression, so no ordinal table is joined;
+    * rows of other lists are dropped.
+    */
+  private def residualCandidates(codes: DataFrame, probed: Seq[Int],
+                                 tables: Array[Array[Array[Double]]],
+                                 metric: Int): DataFrame = {
+    val ord = (array_position(typedlit(probed), col("cluster_id")) - 1).cast("int")
+    codes.filter(col("cluster_id").isInCollection(probed))
+      .select(col("id").as("neighbor_id"), PqFunctions.adcDistanceMulti(ord, col("codes"),
+        tables, takeSqrt = metric != VectorMetric.Dot).as("dist"))
+  }
+
+  /** The exact-refine tail every compressed point query shares. With a
+    * refine source, the (neighbor_id, dist) shortlist's ids are
+    * collected (one job) and only those rows of the source are re-read
+    * — an id-set filter the scan pushes down, so Parquet skips row
+    * groups by id — and re-ranked with the TRUE metric over raw
+    * vectors (one more job when the result is collected). Without one,
+    * the compressed ranking is served directly. Building the refined
+    * frame runs the shortlist job. Ids are unique in an index; a
+    * duplicated id is re-ranked once.
     */
   private def refineTail(shortlist: DataFrame, rawQuery: Array[Float],
                          k: Int, refine: Int, metric: Int,
                          refineWith: Option[DataFrame]): DataFrame =
     refineWith match {
       case Some(vecs) if refine > 1 =>
+        val ids = shortlist.select(col("neighbor_id")).collect().map(_.get(0))
         val exact = Ivf.distCol(metric, col("vec"), typedlit(rawQuery.toSeq))
-        shortlist.select(col("neighbor_id"))
-          .join(vecs, "neighbor_id")
+        vecs.filter(col("neighbor_id").isInCollection(ids))
           .select(col("neighbor_id"), exact.as("dist"))
           .orderBy(col("dist"), col("neighbor_id"))
           .limit(k)
@@ -627,15 +648,8 @@ object Pq {
         s"query dim ${queryVec.length} != corpus dim ${model.dim}")
       val tables = residualAdcTables(centroids, probed, model.codebooks,
         model.rotation, metricQuery(queryVec, metric), metric)
-      import spark.implicits._
-      val ordDf = broadcast(probed.zipWithIndex.toDF("cluster_id", "probe_ord"))
-      val adist = PqFunctions.adcDistanceMulti(col("probe_ord"), col("codes"),
-        tables, takeSqrt = metric != VectorMetric.Dot)
-      val shortlist = encodeResidual(spark, dir, m, metric, opq)
-        .join(ordDf, "cluster_id")
-        .select(col("id").as("neighbor_id"), adist.as("dist"))
-        .orderBy(col("dist"), col("neighbor_id"))
-        .limit(k * math.max(1, refine))
+      val shortlist = shortlistOf(residualCandidates(
+        encodeResidual(spark, dir, m, metric, opq), probed, tables, metric), k, refine)
       refineTail(shortlist, queryVec, k, refine, metric,
         Some(refineSource(spark, dir)))
     } else {
@@ -756,16 +770,10 @@ object Pq {
       val probed = probeIds(centroids, metricQuery(queryVec, metric), npEff, metric)
       val tables = residualAdcTables(centroids, probed, model.codebooks,
         model.rotation, metricQuery(queryVec, metric), metric)
-      import spark.implicits._
-      val ordDf = broadcast(probed.zipWithIndex.toDF("cluster_id", "probe_ord"))
-      val adist = PqFunctions.adcDistanceMulti(col("probe_ord"), col("codes"),
-        tables, takeSqrt = metric != VectorMetric.Dot)
-      val shortlist = encodeResidual(spark, dir, m, metric, opq)
-        .join(ordDf, "cluster_id")
-        .join(sel, Seq("id"), "left_semi") // the selector, inside the scan
-        .select(col("id").as("neighbor_id"), adist.as("dist"))
-        .orderBy(col("dist"), col("neighbor_id"))
-        .limit(k * math.max(1, refine))
+      val shortlist = shortlistOf(residualCandidates(
+        encodeResidual(spark, dir, m, metric, opq)
+          .join(sel, Seq("id"), "left_semi"), // the selector, inside the scan
+        probed, tables, metric), k, refine)
       refineTail(shortlist, queryVec, k, refine, metric,
         Some(refineSource(spark, dir)))
     }
@@ -833,16 +841,8 @@ object Pq {
         if (pm.residual) {
           val tables = residualAdcTables(pm.centroids, probed, pm.codebooks,
             pm.rotation, metricQuery(queryVec, pm.metric), pm.metric)
-          import spark.implicits._
-          val ordDf = broadcast(probed.zipWithIndex.toDF("cluster_id", "probe_ord"))
-          val adist = PqFunctions.adcDistanceMulti(col("probe_ord"), col("codes"),
-            tables, takeSqrt = pm.metric != VectorMetric.Dot)
-          val shortlist = pruned
-            .join(ordDf, "cluster_id")
-            .join(sel, Seq("id"), "left_semi")
-            .select(col("id").as("neighbor_id"), adist.as("dist"))
-            .orderBy(col("dist"), col("neighbor_id"))
-            .limit(k * math.max(1, refine))
+          val shortlist = shortlistOf(residualCandidates(
+            pruned.join(sel, Seq("id"), "left_semi"), probed, tables, pm.metric), k, refine)
           refineTail(shortlist, queryVec, k, refine, pm.metric, refSrc)
         } else {
           val codesDf = pruned
@@ -1352,6 +1352,14 @@ object Pq {
     queryIvfPq(spark, indexPath, queryVec, k, np, refineWith, rf)
   }
 
+  /** Point query against a PERSISTED IVF-PQ tree, opened once per
+    * session ([[ServingState]]): the probed lists' codes,
+    * partition-pruned, rank by ADC into a k·refine shortlist; with
+    * `refineWith` (an embeddings-shaped table: vec_id, embedding) the
+    * shortlist re-ranks exactly ([[refineTail]]). A warm call runs one
+    * job per data pass: the codes pass, and the raw-vector pass when
+    * it refines.
+    */
   def queryIvfPq(spark: SparkSession, indexPath: String,
                  queryVec: Array[Float], k: Int, nprobe: Int,
                  refineWith: Option[DataFrame] = None,
@@ -1377,16 +1385,9 @@ object Pq {
       // ranked by the per-cluster-shifted ADC tables
       val tables = residualAdcTables(centroids, probed, codebooks, rotation,
         metricQuery(queryVec, metric), metric)
-      import spark.implicits._
-      val ordDf = broadcast(probed.zipWithIndex.toDF("cluster_id", "probe_ord"))
-      val adist = PqFunctions.adcDistanceMulti(col("probe_ord"), col("codes"),
-        tables, takeSqrt = metric != VectorMetric.Dot)
-      val shortlist =
-        ServingState.probedLists(spark, indexPath, st.listSchema, live, probed)
-        .join(ordDf, "cluster_id")
-        .select(col("id").as("neighbor_id"), adist.as("dist"))
-        .orderBy(col("dist"), col("neighbor_id"))
-        .limit(k * math.max(1, refine))
+      val shortlist = shortlistOf(residualCandidates(
+        ServingState.probedLists(spark, indexPath, st.listSchema, live, probed),
+        probed, tables, metric), k, refine)
       refineTail(shortlist, queryVec, k, refine, metric, refSrc)
     } else {
       val codesDf =

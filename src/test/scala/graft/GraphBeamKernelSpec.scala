@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.VectorMetric
+import graft.functions.{VectorFunctions, VectorMetric}
 import graft.operators.{GraphBeamExec, GraphIndex, Knn, ServingState}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * complete), the served answer must equal a brute-force top-k over
   * the whole tree bit for bit — ids, ranks and distances — so the
   * in-task arithmetic, the (dist, id) ties and the cross-bucket merge
-  * are all pinned. Each tree is built once for the suite.
+  * are all pinned. The node's own ranked merge must also equal the
+  * exchange + TopKByDistance merge it replaced, on the collect path
+  * and inside larger plans. Each tree is built once for the suite.
   */
 class GraphBeamKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSession.spark
@@ -77,10 +79,48 @@ class GraphBeamKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** (query_id, neighbor_id, rank, distance bits), sorted. */
   private def rows(df: DataFrame): Seq[(Long, Long, Int, Long)] =
+    inOrder(df).sortBy(t => (t._1, t._3))
+
+  /** (query_id, neighbor_id, rank, distance bits), as collected. */
+  private def inOrder(df: DataFrame): Seq[(Long, Long, Int, Long)] =
     df.select("query_id", "neighbor_id", "rank", "dist").collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
-      .sortBy(t => (t._1, t._3))
+
+  /** The bucket tasks' candidates of a served frame, as (query_id,
+    * neighbor_id, dist) rows.
+    */
+  private def candidates(served: DataFrame): DataFrame = {
+    val exec = served.queryExecution.executedPlan.collectFirst { case g: GraphBeamExec => g }
+      .getOrElse(fail(s"no GraphBeamExec in ${served.queryExecution.executedPlan}"))
+    val (qs, cands) = exec.candidates()
+    val qids = qs.value.ids
+    import spark.implicits._
+    cands.collect().toSeq
+      .flatMap { case (q, ids, ds) => ids.indices.map(j => (qids(q), ids(j), ds(j))) }
+      .toDF("query_id", "neighbor_id", "dist")
+  }
+
+  /** The merge the node replaced, kept as the reference: every
+    * candidate moved to one partition, TopKByDistance per query, its
+    * array exploded into ranks, (query_id, rank) order.
+    */
+  private def exchangeMerge(cands: DataFrame): DataFrame =
+    cands.repartition(1)
+      .groupBy(col("query_id"))
+      .agg(VectorFunctions.topKByDistance(col("dist"), col("neighbor_id"), k).as("nn"))
+      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
+      .select(col("query_id"), col("nn.id").as("neighbor_id"),
+        (col("pos") + 1).cast("int").as("rank"), col("nn.dist").as("dist"))
+      .orderBy("query_id", "rank")
+
+  /** [[queries]] plus a query whose id is a stored id (it must not
+    * return itself) and a second grid query.
+    */
+  private def mixedBatch: DataFrame = {
+    import spark.implicits._
+    queries.union(Seq((17L, corpusVecs(17).toSeq), (2001L, Seq.fill(Dim)(0.5f))).toDF("id", "vec"))
+  }
 
   test("matches a brute-force top-k bit for bit under L2 and cosine; zero-norm is 1.0 under cosine") {
     for (m <- Seq(VectorMetric.L2, VectorMetric.Cosine)) {
@@ -148,13 +188,13 @@ class GraphBeamKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("plan: one GraphBeamExec over the broadcast batch, no exchange but the merge") {
     val p = tree(VectorMetric.L2)
     val df = GraphIndex.serve(ServingState.graph(spark, p), queries, k)
-    df.collect()
+    // the bucket tasks are the one job; the merge runs on the driver
+    assert(TestSession.jobsOf(df.collect()) == 1)
     val nodes = collectPlan(df.queryExecution.executedPlan)
     val execs = nodes.collect { case g: GraphBeamExec => g }
     assert(execs.size == 1, df.queryExecution.executedPlan.toString)
     val exchanges = nodes.collect { case e: Exchange => e }
-    assert(exchanges.size == 1 && !exchanges.head.nodeName.contains("Broadcast"),
-      s"the merge must be the only exchange: $exchanges")
+    assert(exchanges.isEmpty, s"the merge is the node's own, not an exchange: $exchanges")
     val text = df.queryExecution.executedPlan.toString
     assert(!text.contains("NestedLoopJoin") && !text.contains("CartesianProduct"), text)
     val ms = execs.head.metrics
@@ -162,6 +202,49 @@ class GraphBeamKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nb = GraphIndex.readTreeMeta(spark, p).buckets
     assert(ms("numCandidates").value > 0 && ms("numCandidates").value <= 6L * k * nb)
     assert(ms("numScored").value > 0 && ms("kernelTime").value > 0)
+  }
+
+  test("the ranked merge equals the exchange + TopKByDistance merge bit for bit, every metric") {
+    var cutTies = 0
+    for (m <- Seq(VectorMetric.L2, VectorMetric.Cosine, VectorMetric.Dot)) {
+      val served = GraphIndex.serve(ServingState.graph(spark, tree(m)), mixedBatch, k)
+      val got = inOrder(served)
+      assert(got == got.sortBy(t => (t._1, t._3)), s"metric $m: rows out of (query_id, rank) order")
+      val cands = candidates(served)
+      assert(got == inOrder(exchangeMerge(cands)), s"metric $m")
+      assert(got.map(_._1).distinct.size == 8, s"metric $m: every query answered")
+      assert(got.forall(r => r._1 != r._2), s"metric $m: a stored query returned itself")
+      // exact distance ties at the k cut: a candidate left out at the
+      // k-th distance, so only the id order decides
+      val kept = got.groupBy(_._1).map { case (q, rs) => q -> (rs.map(_._2).toSet, rs.last._4) }
+      cutTies += cands.collect().count { c =>
+        val (ids, kth) = kept(c.getLong(0))
+        !ids(c.getLong(1)) && java.lang.Double.doubleToRawLongBits(c.getDouble(2)) == kth
+      }
+    }
+    assert(cutTies > 0, "the batch must tie at the k cut somewhere")
+    info(s"candidates left out at their query's k-th distance: $cutTies")
+  }
+
+  test("inside a larger plan the node returns the same rows: count, a join, a filtered-graph selector") {
+    val p = tree(VectorMetric.L2)
+    val st = ServingState.graph(spark, p)
+    val served = GraphIndex.serve(st, mixedBatch, k)
+    val want = rows(exchangeMerge(candidates(served)))
+    assert(served.count() == want.size)
+    val tags = mixedBatch.select(col("id").as("query_id"), (col("id") % 3).as("tag"))
+    val joined = served.join(tags, "query_id")
+    assert(rows(joined) == want)
+    assert(joined.select("tag").collect().length == want.size)
+    import spark.implicits._
+    // the served neighbours as the selector of a filtered query: the
+    // frame feeds a semi-join, a capped count and a sampled count
+    val q = queries.filter(col("id") === 1000L)
+    val viaPlan = GraphIndex.queryGraphBatchFiltered(spark, p, q, k,
+      GraphIndex.queryGraphBatch(spark, p, mixedBatch, k).select(col("neighbor_id").as("id")))
+    val viaRows = GraphIndex.queryGraphBatchFiltered(spark, p, q, k,
+      want.map(_._2).distinct.toDF("id"))
+    assert(viaPlan.collect().toSeq == viaRows.collect().toSeq)
   }
 
   test("building the frame runs no Spark job") {

@@ -90,4 +90,20 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offenders.isEmpty,
       s"hand-rolled listeners: ${offenders.mkString(", ")}; count jobs through graft.Metrics")
   }
+
+  test("no schema inference in Tables: every read outside its schema helper declares a schema") {
+    val f = new java.io.File("src/main/scala/graft/Tables.scala")
+    assert(f.isFile, s"run from the repository root (no ${f.getAbsolutePath})")
+    val src = java.nio.file.Files.readString(f.toPath)
+    // the one helper that infers: its body runs up to the next
+    // two-space-indented closing brace
+    val helper = "(?s)\\n  private def schemaOf\\(.*?\\n  }\\n".r
+    assert(helper.findAllIn(src).size == 1, "Tables.schemaOf is the one schema-resolving helper")
+    val rest = helper.replaceAllIn(src, "\n")
+    // a read whose builder chain names no .schema(…) before the format
+    val bare = "\\.read((?!\\.schema\\()[^\\n;])*\\.(parquet|load|format)\\(".r
+    val offenders = rest.linesIterator.filter(l => bare.findFirstIn(l).isDefined).toSeq
+    assert(offenders.isEmpty,
+      s"Tables reads without a declared schema (one inference job per call): $offenders")
+  }
 }

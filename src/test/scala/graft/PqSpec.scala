@@ -114,9 +114,8 @@ class PqSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(refined.length == 10)
     // the probe scan is partition-pruned to the probed cluster dirs
-    // (traverse AQE wrappers: the residual path's ordinal broadcast
-    // join makes the plan adaptive, which hides the scan from a
-    // plain executedPlan.collect)
+    // (traverse AQE wrappers, should a plan turn adaptive: they hide
+    // the scan from a plain executedPlan.collect)
     val res = Pq.queryIvfPq(spark, path, q, 10, nprobe, refineWith = None)
     res.collect()
     def allScans(p: org.apache.spark.sql.execution.SparkPlan)
@@ -266,7 +265,13 @@ class PqSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(got.toSeq == inSession)
     // the selector must NARROW candidates, never break partition
-    // pruning: the probed code scan still carries the cluster_id filter
+    // pruning: the probed code scan still carries the cluster_id filter.
+    // A refined call collects its shortlist before it returns, so the
+    // scan is read from the same call unrefined, whose result frame is
+    // that shortlist query (same selector, probes and scan); the
+    // refined frame reads only the shortlist's ids
+    val shortlistPlan = Pq.queryIvfPqFiltered(spark, path, q, 10, nprobe = 4, selector)
+    assert(shortlistPlan.collect().map(_.getLong(0)).toSet.subsetOf(allowed))
     def allScans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -276,10 +281,109 @@ class PqSpec extends AnyFunSuite {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
       case other => other.children.flatMap(allScans)
     }
-    val scans = allScans(res.queryExecution.executedPlan)
+    val scans = allScans(shortlistPlan.queryExecution.executedPlan)
     assert(scans.exists(_.metadata.get("PartitionFilters")
       .exists(_.contains("cluster_id"))),
       "no cluster_id partition filter in the FILTERED persisted probe scan")
+    assert(allScans(res.queryExecution.executedPlan)
+      .exists(_.metadata.get("PushedFilters").exists(_.contains("In(vec_id"))),
+      "the refine scan must read the shortlist's ids only")
+  }
+
+  test("refineTail equals the shortlist join it replaced, bit for bit: every caller and metric, ties at the cut") {
+    import graft.functions.{VectorFunctions, VectorMetric}
+    import org.apache.spark.sql.DataFrame
+    // sf0.001's first 150 vectors, each stored three times (ids 3i,
+    // 3i+1, 3i+2): copies share their codes, so compressed distances tie
+    // in blocks of a multiple of 3 rows and the k·refine = 40 cut (not
+    // a multiple of 3) always splits a tied block
+    val root = java.nio.file.Files.createTempDirectory("graft_pq_ties")
+    val dir = root.resolve("corpus").toString
+    try {
+      import spark.implicits._
+      all.take(150).toSeq.zipWithIndex
+        .flatMap { case ((_, v), i) => (0 until 3).map(c => (3L * i + c, v.toSeq)) }
+        .toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      val (k, refine, nprobe) = (10, 4, 8)
+      val kr = k * refine
+      val q = all(300)._2
+      val src = Tables.embeddings(spark, dir)
+        .select(col("vec_id").as("neighbor_id"), col("embedding").as("vec"))
+      // whole groups only, so the selector keeps the ties
+      val sel = src.filter((col("neighbor_id") / 3).cast("long") % 2 === 0)
+        .select(col("neighbor_id").as("id"))
+      def bits(df: DataFrame): Seq[(Long, Long)] = df.collect().toSeq
+        .map(r => (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+      def exact(metric: Int) = {
+        val qv = org.apache.spark.sql.functions.typedlit(q.toSeq)
+        metric match {
+          case VectorMetric.L2 => VectorFunctions.l2Distance(col("vec"), qv)
+          case VectorMetric.Cosine => VectorFunctions.cosineDistance(col("vec"), qv)
+          case VectorMetric.Dot => -VectorFunctions.dotProduct(col("vec"), qv)
+        }
+      }
+      // the formulation refineTail replaced: the shortlist shuffle-
+      // joined with the whole refine source, re-ranked exactly
+      def joinRefined(shortlist: DataFrame, metric: Int): Seq[(Long, Long)] = bits(
+        shortlist.select(col("neighbor_id")).join(src, "neighbor_id")
+          .select(col("neighbor_id"), exact(metric).as("dist"))
+          .orderBy(col("dist"), col("neighbor_id")).limit(k))
+      val emb = Some(Tables.embeddings(spark, dir))
+      for (metric <- Seq(VectorMetric.L2, VectorMetric.Cosine, VectorMetric.Dot)) {
+        val tree = root.resolve(s"tree-$metric").toString
+        Pq.writeIvfPq(spark, dir, tree, metric = metric)
+        // (caller, its refined answer, its compressed ranking at width w
+        // — at w = k·refine exactly the shortlist the refine reads)
+        val callers: Seq[(String, () => DataFrame, Int => DataFrame, Boolean)] = Seq(
+          ("flat", () => Pq.topK(spark, dir, q, k, refine = refine, metric = metric),
+            w => Pq.topK(spark, dir, q, w, refine = 1, metric = metric), true),
+          ("flat OPQ", () => Pq.topK(spark, dir, q, k, refine = refine, metric = metric, opq = true),
+            w => Pq.topK(spark, dir, q, w, refine = 1, metric = metric, opq = true), true),
+          ("IVF-PQ residual", () => Pq.ivfPqTopK(spark, dir, q, k, nprobe, refine = refine,
+            metric = metric),
+            w => Pq.ivfPqTopK(spark, dir, q, w, nprobe, refine = 1, metric = metric), true),
+          ("IVF-PQ raw", () => Pq.ivfPqTopK(spark, dir, q, k, nprobe, refine = refine,
+            metric = metric, residual = false),
+            w => Pq.ivfPqTopK(spark, dir, q, w, nprobe, refine = 1, metric = metric,
+              residual = false), true),
+          ("persisted", () => Pq.queryIvfPq(spark, tree, q, k, nprobe, emb, refine),
+            w => Pq.queryIvfPq(spark, tree, q, w, nprobe, None, 1), true),
+          // the filtered policy depends on k·refine, so only w = kr
+          // replays the refined call's probes
+          ("in-session filtered", () => Pq.ivfPqTopKFiltered(spark, dir, q, k, nprobe, sel,
+            refine = refine, metric = metric),
+            w => Pq.ivfPqTopKFiltered(spark, dir, q, w, nprobe, sel, refine = 1,
+              metric = metric), false),
+          ("persisted filtered", () => Pq.queryIvfPqFiltered(spark, tree, q, k, nprobe, sel,
+            emb, refine),
+            w => Pq.queryIvfPqFiltered(spark, tree, q, w, nprobe, sel, None, 1), false))
+        for ((name, refined, ranking, wide) <- callers) {
+          val got = bits(refined())
+          assert(got.size == k, s"$name, metric $metric")
+          assert(got == joinRefined(ranking(kr), metric), s"$name, metric $metric")
+          if (wide) {
+            val d = bits(ranking(kr + 1)).map(_._2)
+            assert(d.size == kr + 1 && d(kr - 1) == d(kr),
+              s"$name, metric $metric: no compressed-distance tie at the k·refine cut")
+          }
+        }
+      }
+      // the refine scan reads the source through an id-set filter the
+      // Parquet scan carries
+      val res = Pq.queryIvfPq(spark, root.resolve(s"tree-${VectorMetric.L2}").toString,
+        q, k, nprobe, emb, refine)
+      res.collect()
+      val pushed = res.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains("embeddings")) =>
+          s.metadata.getOrElse("PushedFilters", "")
+      }
+      assert(pushed.size == 1 && pushed.head.contains("In(vec_id"),
+        s"the refine scan must push the shortlist's id set: $pushed")
+    } finally {
+      Memo.invalidate(dir)
+      graft.streaming.Streams.deleteTree(root)
+    }
   }
 
   test("SDC batch ANN: k rows per query, compressed-domain recall floor vs exact") {
