@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import scala.collection.concurrent.TrieMap
@@ -17,9 +18,9 @@ import scala.collection.concurrent.TrieMap
   *     same time, so a build may run nested builds or fan out
   *     concurrent jobs that use other memos. A build that throws
   *     leaves no entry, and the next call retries.
-  *   - Dropping an entry releases it: every DataFrame in the value
-  *     (also inside a tuple, an Option or a collection) is
-  *     unpersisted, and a [[tree]] is deleted.
+  *   - Dropping an entry releases it: every DataFrame and broadcast
+  *     in the value (also inside a tuple, an Option or a collection)
+  *     is unpersisted, and a [[tree]] is deleted.
   *   - Entries hold what was built from the dir's data at build time.
   *     Whoever changes a corpus dir calls [[invalidate]] for it
   *     (IndexLifecycle.build does, given `corpusDir`).
@@ -105,6 +106,7 @@ object Memo {
 
   private def release(v: Any): Unit = v match {
     case ds: Dataset[_] => ds.unpersist(); ()
+    case b: Broadcast[_] => b.unpersist(); ()
     case TempTree(root, _) =>
       operators.ServingState.drop(root)
       scala.util.Try(deleteTree(root))

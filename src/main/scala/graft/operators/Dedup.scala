@@ -777,7 +777,8 @@ object Dedup {
     // Round-17 NOTE (examined, deliberately unchanged — see
     // plans/r17/star_round_{before,after}.txt in git history, at
     // commit 3ba9126): re-keying each star
-    // step hash(u)-first (the beamRounds round-16 shape) was built and
+    // step hash(u)-first (the round-16 shape of the session beam loop,
+    // GraphIndex.beamRoundFrame in git history at commit 5b35fe6) was built and
     // plan-dumped, and it is a REGRESSION here: the min-aggregate's
     // exchange carries partially-aggregated rows (one per (partition,
     // u)) and its result BROADCASTS into the rewiring join, so the

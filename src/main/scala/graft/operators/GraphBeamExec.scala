@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * their coarse lists, and the symmetrised in-bucket adjacency as CSR
   * over local indices. `lists` maps each coarse list present in the
   * bucket to its members (`listStart` is CSR over `listMembers`).
+  * The session graph keys hold their whole corpus as one such bucket
+  * (GraphIndex.sessionGraph).
   */
 final case class GraphBucket(bucket: Int, ids: Array[Long], dim: Int,
                              vecs: Array[Float], norms: Array[Double],
@@ -81,11 +83,12 @@ object GraphBucket {
   }
 }
 
-/** The in-task arithmetic of the partition-local graph: VectorDistance's
-  * exact arithmetic as KnnExec runs it (a member is widened element by
-  * element, accumulated in element order; cosine zero-norm ⇒ 1.0; dot
-  * ranks by −a·b), and TopKBuffers over LOCAL indices, whose order is
-  * the id order, so (dist, id) ties break as everywhere else.
+/** The in-task arithmetic of every graph beam, the persisted tree's
+  * and the session graph keys': VectorDistance's exact arithmetic as
+  * KnnExec runs it (a member is widened element by element,
+  * accumulated in element order; cosine zero-norm ⇒ 1.0; dot ranks by
+  * −a·b), and TopKBuffers over LOCAL indices, whose order is the id
+  * order, so (dist, id) ties break as everywhere else.
   */
 private[graft] object GraphKernel {
 
@@ -139,13 +142,15 @@ private[graft] object GraphKernel {
         .map { case (d, j) => (b.ids(m), b.ids(j.toInt), d) }
     }
 
-  /** Per-task scratch for [[beam]]: a distance cache and a per-round
-    * seen mark, each valid while its tag matches.
+  /** Per-task scratch for [[beam]]: a distance cache, a per-round
+    * seen mark and a per-query pooled mark, each valid while its tag
+    * matches.
     */
   final class Scratch(m: Int) {
     val dist = new Array[Double](m)
     val distTag = new Array[Int](m)
     val roundTag = new Array[Int](m)
+    lazy val poolTag = new Array[Int](m)
     private var tag = 0
     def next(): Int = { tag += 1; tag }
     var scored = 0L
@@ -156,17 +161,22 @@ private[graft] object GraphKernel {
     * that has members here (`order`: every list, nearest first); then
     * `rounds` rounds each take beam ∪ neighbours(beam), score them
     * exactly and keep the best `width`, the last round the best `k`.
-    * The member whose id is `self` never enters. Returns local
-    * indices with their distances.
+    * `seed` (local indices) joins the first round's beam untruncated,
+    * so round 1 expands the entry's best `width` ∪ the seed; it runs
+    * even when no list of `order` has members here. The member whose
+    * id is `self` never enters. With `allow`, the answer is instead
+    * the best `k` of the allowed members offered in any round (the
+    * pool). Returns local indices with their distances.
     */
   def beam(metric: Int, b: GraphBucket, sc: Scratch, q: Array[Double], qOff: Int,
            qNorm: Double, self: Long, order: Array[Int], width: Int, k: Int,
-           rounds: Int): TopKBuffer = {
+           rounds: Int, seed: Array[Int] = Array.emptyIntArray,
+           allow: Option[java.util.BitSet] = None): TopKBuffer = {
     var li = -1; var o = 0
     while (li < 0 && o < order.length) {
       li = java.util.Arrays.binarySearch(b.lists, order(o)); o += 1
     }
-    if (li < 0) return new TopKBuffer(k)
+    if (li < 0 && seed.isEmpty) return new TopKBuffer(k)
     val qTag = sc.next()
     def score(m: Int): Double =
       if (sc.distTag(m) == qTag) sc.dist(m)
@@ -175,12 +185,16 @@ private[graft] object GraphKernel {
         sc.dist(m) = d; sc.distTag(m) = qTag; sc.scored += 1
         d
       }
+    val allowed = allow.orNull
+    val pool = if (allowed == null) null else new TopKBuffer(k)
     var cur = new TopKBuffer(width)
-    var j = b.listStart(li)
-    while (j < b.listStart(li + 1)) {
-      val m = b.listMembers(j)
-      if (b.ids(m) != self) cur.insert(score(m), m)
-      j += 1
+    if (li >= 0) {
+      var j = b.listStart(li)
+      while (j < b.listStart(li + 1)) {
+        val m = b.listMembers(j)
+        if (b.ids(m) != self) cur.insert(score(m), m)
+        j += 1
+      }
     }
     var r = 1
     while (r <= rounds) {
@@ -189,20 +203,24 @@ private[graft] object GraphKernel {
       def offer(m: Int): Unit =
         if (sc.roundTag(m) != rTag && b.ids(m) != self) {
           sc.roundTag(m) = rTag
-          next.insert(score(m), m)
+          val d = score(m)
+          next.insert(d, m)
+          if (pool != null && allowed.get(m) && sc.poolTag(m) != qTag) {
+            sc.poolTag(m) = qTag; pool.insert(d, m)
+          }
         }
-      var x = 0
-      while (x < cur.size) {
-        val m = cur.ids(x).toInt
+      def expand(m: Int): Unit = {
         offer(m)
         var e = b.adjStart(m)
         while (e < b.adjStart(m + 1)) { offer(b.adj(e)); e += 1 }
-        x += 1
       }
+      var x = 0
+      while (x < cur.size) { expand(cur.ids(x).toInt); x += 1 }
+      if (r == 1) { x = 0; while (x < seed.length) { expand(seed(x)); x += 1 } }
       cur = next
       r += 1
     }
-    cur
+    if (pool == null) cur else pool
   }
 
   /** The ranked merge of the bucket tasks' candidates, each `(query

@@ -4,6 +4,7 @@ import graft.{Memo, Tables}
 import graft.functions.{VectorFunctions, VectorMetric}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -16,31 +17,30 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
   * E37c BUILDS the graph; this module SERVES through it and maintains
   * it as a persisted index.
   *
-  * Serving (`graph_topk`) is best-first beam search re-expressed as a
-  * BATCH operator: instead of a per-query priority queue (which does
-  * not distribute), every query advances one bounded expansion round
-  * at a time — beam ∪ neighbors(beam) through one join against the
-  * SYMMETRIZED edge table (reverse edges double navigability for free;
-  * HNSW/NSG graphs are undirected for the same reason), exact
-  * re-score, keep top-B per query by the family's (dist, id) tie
-  * contract — for a FIXED number of rounds. Fixed rounds + fixed beam
-  * make the search fully deterministic and oracle-replayable (the
-  * rounds unroll as materialized CTEs, the knnGraphDescentOracleSql
-  * pattern); per-query convergence detection would buy little and
-  * cost replayability. The beam SEEDS from two places: the coarse
-  * quantizer (the session IVF index at a CONSTANT 1-list probe — the
-  * DiskANN entry recipe; the coarse index plays the "upper layer"
-  * role HNSW builds hierarchically) and, for in-corpus queries, the
-  * query node's OWN stored adjacency (searching an already-indexed
-  * point starts from its links — the HNSW re-insert convention).
-  * Measured on sf0.001 (tools/GraphProbe at commit 3ba9126): the graph's own edges carry
+  * Serving (`graph_topk`) is a bounded beam search: every query
+  * advances a fixed number of expansion rounds — beam ∪ neighbors(beam)
+  * over the SYMMETRIZED graph (reverse edges double navigability for
+  * free; HNSW/NSG graphs are undirected for the same reason), exact
+  * re-score, keep top-B by the family's (dist, id) tie contract. Fixed
+  * rounds + fixed beam make the search fully deterministic and
+  * oracle-replayable (the rounds unroll as materialized CTEs, the
+  * knnGraphDescentOracleSql pattern); per-query convergence detection
+  * would buy little and cost replayability. The beam SEEDS from two
+  * places: the coarse quantizer (the session IVF index at a CONSTANT
+  * 1-list probe — the DiskANN entry recipe; the coarse index plays the
+  * "upper layer" role HNSW builds hierarchically) and, for in-corpus
+  * queries, the query node's OWN stored adjacency (searching an
+  * already-indexed point starts from its links — the HNSW re-insert
+  * convention). Measured on sf0.001 (tools/GraphProbe at commit 3ba9126): the graph's own edges carry
   * 0.92 recall, pure navigation from the coarse entry saturates at
   * 0.55 (this corpus is near-uniform — the adversarial case for graph
   * navigation, same as the E37c uniform finding), and the seeded beam
   * reaches 0.97 — the expansion genuinely recovers neighbors the
-  * stored adjacency misses. Cost per round is O(N·B·deg) skinny pair
-  * rows through joins keyed on query_id/cand — no broadcast of
-  * anything corpus-sized, no per-query driver work.
+  * stored adjacency misses. The session keys hold the corpus as one
+  * broadcast [[GraphBucket]] ([[sessionGraph]], bounded by
+  * [[SessionGraphMaxRows]]) and run [[GraphKernel.beam]] for every
+  * vector in one job ([[sessionBeam]]); the persisted tree below runs
+  * the same kernel per bucket.
   *
   * The persisted layout (`writeGraphTree`) is PARTITION-LOCAL, the
   * REPOSE shape (distributed top-k from partition-local indexes plus
@@ -273,10 +273,10 @@ object GraphIndex {
   def warmRefinedGraph(spark: SparkSession, dir: String,
                        metric: Int = DefaultMetric): Unit = {
     refinedGraph(spark, dir, metric = metric).count()
-    // the symmetrized expansion memo is part of the served substrate
-    // (round-17) — warm it on the same attributable line so the serving
-    // keys measure serving, not the one-time symmetrize
-    symmetrizedGraph(spark, dir, metric = metric)
+    // the session graph the serving keys run on is part of the served
+    // substrate: built on the same attributable line, so the serving
+    // keys measure serving
+    sessionGraph(spark, dir, metric = metric)
     ()
   }
 
@@ -346,140 +346,95 @@ object GraphIndex {
 
   // ------------------------------------------------------------ serving
 
-  /** (src, dst) → the symmetrized (undirected) expansion table. */
-  private def symmetrize(edges: DataFrame): DataFrame =
-    edges.select("src", "dst")
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .dropDuplicates("src", "dst")
-
-  /** Per-(dir, k, metric) session memo of the SYMMETRIZED refined
-    * graph (round-17): every serving face expands through this table —
-    * the entry seed and each beam round re-paid symmetrize's union +
-    * dedup shuffle per job (the eager per-round checkpoints make every
-    * round its own job), and the tune grid's four concurrent configs
-    * each re-paid it again. It derives deterministically from the
-    * refined-graph memo, is warmed by the same memo_refined_graph*
-    * bench lines, and drops with the memo it shadows.
+  /** Most vectors a session graph key serves. The session graph is one
+    * [[GraphBucket]] over the whole corpus, broadcast to every kernel
+    * task: about 300 B per 64-dim vector at k = 5 (the vector, its id,
+    * norm and coarse list, about 2k symmetrised edges, its entry list),
+    * so about 80 MB at this bound. A session key over a larger corpus
+    * refuses; the persisted partition-local tree ([[build]],
+    * [[queryGraphBatch]]) is the path that scales.
     */
-  private[graft] def symmetrizedGraph(spark: SparkSession, dir: String,
-                                      k: Int = 5,
-                                      metric: Int = DefaultMetric): DataFrame =
-    Memo(dir, "graph.symmetrized", (k, metric))(Memo.cached(
-      symmetrize(refinedGraph(spark, dir, k, metric).select("src", "dst"))))
+  val SessionGraphMaxRows: Int = 1 << 18
 
-  /** Batch beam search over an edge frame: every corpus vector's
-    * top-k via [[BeamRounds]] bounded expansions of the seeded beam
-    * (coarse-probe entry ∪ the query node's own symmetrized
-    * adjacency). `edges` is directed (src, dst); scoring is exact
-    * under the family metric against the corpus — the graph only
-    * PROPOSES candidates, so a stale or approximate edge can cost
-    * recall but never a wrong distance.
+  /** The session graph of a corpus: every vector in one [[GraphBucket]]
+    * (vectors, coarse lists from the session IVF assignment, the
+    * refined graph's symmetrised adjacency), each member's entry list
+    * by local index (-1: none), and the two broadcast once.
     */
-  private[graft] def beamTopk(spark: SparkSession, dir: String,
-                              k: Int,
-                              metric: Int = DefaultMetric,
-                              rounds: Int = BeamRounds,
-                              bOverride: Option[Int] = None): DataFrame = {
-    val b = bOverride.getOrElse(beamWidth(k))
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("id"), col("embedding").as("cv"))
-    // the memoized symmetrized expansion (round-17): the entry seed and
-    // EVERY beam round previously re-evaluated the union + dedup
-    // shuffle behind symmetrize because each round's eager checkpoint
-    // is its own job — rounds + 1 evaluations of the same O(N·k) skinny
-    // table per serving call, times the tune grid's concurrent configs
-    val sym = symmetrizedGraph(spark, dir, k, metric)
-    // entry: the nearest coarse list's best B per query (exact within
-    // the probed list, rides the session IVF memo, excludes self) ∪
-    // the query's own stored links
-    // no seed dedup (round-16): round 1 of beamRounds dedups the
-    // (beam ∪ expansion) union anyway, so a duplicate seed row can
-    // never reach scoring — the seed's own dedup paid one extra
-    // exchange + aggregate for rows the next job re-deduped
-    val entry = Ivf.annBatch(spark, dir, b, metric, nprobeOpt = Some(EntryNprobe))
-      .select(col("query_id"), col("neighbor_id").as("cand"))
-      .union(sym.select(col("src").as("query_id"), col("dst").as("cand")))
-    beamRounds(entry, sym, vecs, k, b, metric = metric, rounds = rounds)
-  }
+  private[graft] final case class SessionGraph(bucket: GraphBucket, entry: Array[Int],
+                                               shared: Broadcast[(GraphBucket, Array[Int])])
 
-  /** ONE beam round, un-checkpointed — the loop body of [[beamRounds]]
-    * (the serving keys return checkpointed frames, which hide the round
-    * shape from explain; tools/OptPlanProbe at commit 3ba9126 dumped
-    * this frame's physical plan).
-    *
-    * ONE exchange per round (round-16): hash by query_id BEFORE the
-    * dedup — HashPartitioning(query_id) satisfies the dedup's
-    * ClusteredDistribution(query_id, cand) AND the top-B aggregate's
-    * ClusteredDistribution(query_id), so the round's dedup and ranking
-    * share a single shuffle instead of paying one each (plan diff:
-    * `plans/r16/beam_round_{before,after}.txt` in git history, at
-    * commit 3ba9126 — 2 Exchange → 1). Same rows either way.
+  /** The session graph of (dir, k, metric), built once: one
+    * [[GraphBucket.assemble]] over the corpus with [[refinedGraph]]'s
+    * edges (assemble symmetrises them and drops self-edges), and per
+    * member the coarse list [[Ivf.annBatch]] probes for it at
+    * [[EntryNprobe]] — the same probe selection, through the session
+    * hierarchy if the index has one. Warmed by the memo_refined_graph*
+    * bench lines. Refuses a corpus over [[SessionGraphMaxRows]].
     */
-  private def beamRoundFrame(beam: DataFrame, e: DataFrame,
-                             qvecs: DataFrame, vecs: DataFrame,
-                             b: Int, metric: Int): DataFrame = {
-    val expand = beam.join(e, "cand")
-      .select(col("query_id"), col("dst").as("cand"))
-    val cands = beam.select("query_id", "cand").union(expand)
-      .filter(col("cand") =!= col("query_id"))
-      .repartition(col("query_id"))
-      .dropDuplicates("query_id", "cand")
-    val scored = cands
-      .join(qvecs, "query_id")
-      .join(vecs.select(col("id").as("cand"), col("cv")), "cand")
-      .select(col("query_id"), col("cand"),
-        Ivf.distCol(metric, col("qv"), col("cv")).as("dist"))
-    scored.groupBy("query_id")
-      .agg(VectorFunctions.topKByDistance(col("dist"), col("cand"), b).as("nn"))
-      .select(col("query_id"), explode(col("nn")).as("p"))
-      .select(col("query_id"), col("p.id").as("cand"), col("p.dist").as("dist"))
-  }
-
-  /** The session round loop: `beam0` (query_id, cand) expands through
-    * `edges` for [[BeamRounds]] rounds, scored against the corpus
-    * `vecs` ((id, cv)) on both sides; returns the final ranked top-k
-    * in (query_id, rank) order.
-    */
-  private[graft] def beamRounds(beam0: DataFrame, edges: DataFrame,
-                                vecs: DataFrame, k: Int, b: Int,
-                                metric: Int = DefaultMetric,
-                                rounds: Int = BeamRounds): DataFrame = {
-    require(rounds >= 1, s"beamRounds needs at least one round, got $rounds")
-    val qvecs = vecs.select(col("id").as("query_id"), col("cv").as("qv"))
-    val e = edges.select(col("src").as("cand"), col("dst"))
-    var beam = beam0
-    var cur: DataFrame = null
-    var r = 0
-    while (r < rounds - 1) {
-      // eager checkpoint per intermediate round: the loop otherwise
-      // re-executes the whole prefix each round (the descentGraph
-      // lesson)
-      val next = beamRoundFrame(beam, e, qvecs, vecs, b, metric)
-        .localCheckpoint(true)
-      // superseded rounds release their blocks promptly (the
-      // descentRounds hygiene; abandoned checkpoints only go with GC)
-      if (cur != null) cur.unpersist()
-      cur = next
-      beam = cur.select("query_id", "cand")
-      r += 1
+  private[graft] def sessionGraph(spark: SparkSession, dir: String, k: Int = 5,
+                                  metric: Int = DefaultMetric): SessionGraph =
+    Memo(dir, "graph.session", (k, metric)) {
+      val n = Tables.embeddingsCount(spark, dir)
+      if (n > SessionGraphMaxRows)
+        sys.error(s"the session graph of $dir would hold $n vectors, over " +
+          s"$SessionGraphMaxRows: persist a graph tree (GraphIndex.build) and serve it instead")
+      val (assign, cents) = Ivf.indexFor(spark, dir)
+      val vecs = Tables.embeddings(spark, dir)
+        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val members = vecs.join(assign.select("id", "cluster_id"), "id").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
+      val edges = refinedGraph(spark, dir, k, metric).select("src", "dst").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val b = GraphBucket.assemble(0, members, edges, dir)
+      val entry = Array.fill(b.size)(-1)
+      Ivf.probeSelect(vecs.select(col("id").as("query_id"), col("vec").as("qvec")),
+          cents, EntryNprobe, metric,
+          hier = Ivf.hierarchyFor(dir, Ivf.defaultK(n), VectorMetric.L2))
+        .select("query_id", "probe_cluster").collect()
+        .foreach { r =>
+          val j = java.util.Arrays.binarySearch(b.ids, r.getLong(0))
+          if (j >= 0) entry(j) = r.getInt(1)
+        }
+      SessionGraph(b, entry, spark.sparkContext.broadcast((b, entry)))
     }
-    // the FINAL round fuses with the ranking aggregate (round-17): its
-    // frame ends hash-partitioned by query_id, which the top-k ranking
-    // reuses, so checkpointing the B-wide beam only to immediately
-    // re-aggregate it was one extra job + one extra wide cache per
-    // serving call. Same rows; only the job boundary moves.
-    val lastFrame = beamRoundFrame(beam, e, qvecs, vecs, b, metric)
-    // pin the SMALL ranked output — per-call storage is O(N·k) rows,
-    // not O(N·B·rounds)
-    val ranked = lastFrame.groupBy("query_id")
-      .agg(VectorFunctions.topKByDistance(col("dist"), col("cand"), k).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("query_id"), col("nn.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"))
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true)
-    if (cur != null) cur.unpersist()
-    ranked
+
+  /** Every corpus vector's beam over the session graph at (rounds,
+    * width), in one Spark job: the members split into
+    * defaultParallelism contiguous slices, and each task runs
+    * [[GraphKernel.beam]] per member of its slice — the member as the
+    * query (itself excluded), its entry list, its own adjacency as the
+    * seed. With `allow` (local indices) the answer is the pool's best
+    * k among the allowed members. Rows (query_id, neighbor_id, rank,
+    * dist) in (query_id, rank) order; a member with no candidate emits
+    * none. Once the session graph is built, building the frame runs no
+    * job.
+    */
+  private[graft] def sessionBeam(spark: SparkSession, dir: String, k: Int, metric: Int,
+                                 rounds: Int, width: Int,
+                                 allow: Option[java.util.BitSet] = None): DataFrame = {
+    require(rounds >= 1, s"the graph beam needs at least one round, got $rounds")
+    val g = sessionGraph(spark, dir, k, metric)
+    val shared = g.shared
+    val n = g.bucket.size
+    val slices = math.max(1, math.min(n, spark.sparkContext.defaultParallelism))
+    val rows = spark.sparkContext.parallelize(0 until slices, slices).mapPartitions { ss =>
+      val (b, entry) = shared.value
+      val sc = new GraphKernel.Scratch(b.size)
+      ss.flatMap { s =>
+        Iterator.range((s.toLong * n / slices).toInt, ((s + 1).toLong * n / slices).toInt)
+          .flatMap { m =>
+            val order = if (entry(m) < 0) Array.emptyIntArray else Array(entry(m))
+            val seed = java.util.Arrays.copyOfRange(b.adj, b.adjStart(m), b.adjStart(m + 1))
+            GraphKernel.beam(metric, b, sc, GraphKernel.widened(b, m), 0, b.norms(m), b.ids(m),
+                order, width, k, rounds, seed, allow)
+              .sorted.iterator.zipWithIndex
+              .map { case ((d, j), r) => (b.ids(m), b.ids(j.toInt), r + 1, d) }
+          }
+      }
+    }
+    import spark.implicits._
+    rows.toDF("query_id", "neighbor_id", "rank", "dist")
   }
 
   /** Driver query: `graph_topk` (cosine) / `graph_topk_l2` (l2) —
@@ -492,7 +447,7 @@ object GraphIndex {
     */
   def graphTopk(spark: SparkSession, dir: String, k: Int = 5,
                 metric: Int = DefaultMetric): DataFrame =
-    beamTopk(spark, dir, k, metric)
+    graphTopkAt(spark, dir, k, metric, BeamRounds, beamWidth(k))
 
   /** graph_topk oracle: the converged-graph replay (the FULL descent
     * unroll, nested as a derived table — DuckDB allows WITH at any
@@ -627,7 +582,7 @@ object GraphIndex {
     */
   private[graft] def graphTopkAt(spark: SparkSession, dir: String, k: Int,
                                  metric: Int, rounds: Int, b: Int): DataFrame =
-    beamTopk(spark, dir, k, metric, rounds = rounds, bOverride = Some(b))
+    sessionBeam(spark, dir, k, metric, rounds, b).select("query_id", "neighbor_id", "rank")
 
   /** The metrics the graph tier serves (and therefore tunes): the
     * sidecar carries one measured pick per member, so `graph_topk_l2`
@@ -653,16 +608,16 @@ object GraphIndex {
       val exact = Ivf.exactEdges(spark, dir, k, metric)
         .select("query_id", "neighbor_id")
       val nq = Tables.embeddingsCount(spark, dir)
-      // shared substrate once, BEFORE the concurrent configs race its
-      // memo (a miss under concurrency would serialize on the build
+      // shared session graph once, BEFORE the concurrent configs race
+      // its memo (a miss under concurrency would serialize on the build
       // lock anyway — warming it here keeps the measurement honest)
-      refinedGraph(spark, dir, k, metric)
+      sessionGraph(spark, dir, k, metric)
       // the four configs are independent measurements over frozen
       // shared inputs (guide §2.6: overlap independent jobs) — each
-      // config's beam chain is a sequential round loop whose tiny jobs
-      // leave most cores idle, so running the configs concurrently
-      // backfills the scheduler without changing any measured count
-      // (hits are deterministic counts, not wall-clock)
+      // config's kernel job and hit count are short, so running the
+      // configs concurrently backfills the scheduler without changing
+      // any measured count (hits are deterministic counts, not
+      // wall-clock)
       Overlap.all(TuneGrid.map { case (rounds, mult) => () =>
         val b = beamWidth(k) * mult
         val hits = graphTopkAt(spark, dir, k, metric, rounds, b)
@@ -938,11 +893,10 @@ object GraphIndex {
                         selector: DataFrame,
                         metric: Int = DefaultMetric): DataFrame = {
     val sel = selector.select(col("id"))
-    val kr = Pq.filteredExactMax(k, 4)
+    val pass = selectorPass(sel, Pq.filteredExactMax(k, 4))
     lazy val n = Tables.embeddingsCount(spark, dir)
-    lazy val fEst = Pq.estimatedSelectorSize(sel, kr)
-    lazy val widen = (n + fEst - 1) / fEst
-    if (Pq.selectorStarved(sel, kr)) {
+    lazy val widen = (n + pass.fEst - 1) / pass.fEst
+    if (pass.starved) {
       // exact pre-filter: f ≤ k·4 survivors broadcast against every
       // query, ranked by the family's cosine metric
       val vecs = Tables.embeddings(spark, dir)
@@ -965,7 +919,7 @@ object GraphIndex {
       // it as given, so the selector is not re-counted)
       val (_, cents) = Ivf.indexFor(spark, dir, metric)
       val npEff = Pq.widenedNprobe(
-        math.max(1, Ivf.defaultK(n) / 4), n, fEst, cents.length)
+        math.max(1, Ivf.defaultK(n) / 4), n, pass.fEst, cents.length)
       Pq.resBatch(spark, dir, k, nprobeOpt = Some(npEff), metric = metric,
         refine = 4, selector = Some(sel))
     } else {
@@ -978,66 +932,31 @@ object GraphIndex {
       // argument is unchanged — the pool's matching mass at
       // selectivity f/n matches the unfiltered TUNED pool
       val (tRounds, tBeam) = graphTunedOperatingPoint(spark, dir, k, metric)
-      val bEff = (tBeam * widen).toInt
-      // the memoized symmetrized expansion (round-17, the beamTopk
-      // note): the entry seed and every widened round otherwise re-pay
-      // symmetrize's union + dedup per job
-      val sym = symmetrizedGraph(spark, dir, k, metric)
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id").as("id"), col("embedding").as("cv"))
-      val entry = Ivf.annBatch(spark, dir, bEff, metric,
-          nprobeOpt = Some(EntryNprobe))
-        .select(col("query_id"), col("neighbor_id").as("cand"))
-        .union(sym.select(col("src").as("query_id"), col("dst").as("cand")))
-        .dropDuplicates("query_id", "cand")
-      val qvecs = vecs.select(col("id").as("query_id"), col("cv").as("qv"))
-      val e = sym.select(col("src").as("cand"), col("dst"))
-      var beam = entry
-      val pools = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      (1 to tRounds).foreach { _ =>
-        val expand = beam.join(e, "cand")
-          .select(col("query_id"), col("dst").as("cand"))
-        val cands = beam.select("query_id", "cand").union(expand)
-          .filter(col("cand") =!= col("query_id"))
-          // one exchange for the round (round-17, the beamRoundFrame
-          // shape): hash by query_id serves the dedup here AND — the
-          // checkpoint preserves partitioning — the beam-prune
-          // aggregate below
-          .repartition(col("query_id"))
-          .dropDuplicates("query_id", "cand")
-        // the SCORED frame is the round's pool contribution — pinned,
-        // the pruned beam derives from it cheaply
-        val scored = cands
-          .join(qvecs, "query_id")
-          .join(vecs.select(col("id").as("cand"), col("cv")), "cand")
-          .select(col("query_id"), col("cand"),
-            Ivf.distCol(metric, col("qv"), col("cv")).as("dist"))
-          .localCheckpoint(true)
-        pools += scored
-        beam = scored.groupBy("query_id")
-          .agg(VectorFunctions
-            .topKByDistance(col("dist"), col("cand"), bEff).as("nn"))
-          .select(col("query_id"), explode(col("nn")).as("p"))
-          .select(col("query_id"), col("p.id").as("cand"))
+      val ids = sessionGraph(spark, dir, k, metric).bucket.ids
+      val allow = new java.util.BitSet(ids.length)
+      pass.ids.foreach { id =>
+        val j = java.util.Arrays.binarySearch(ids, id)
+        if (j >= 0) allow.set(j)
       }
-      val pool = pools.reduce(_.unionAll(_))
-        // one exchange (round-17): hash(query_id) serves the dedup and
-        // the final ranking aggregate (the broadcast semi-join between
-        // them preserves partitioning)
-        .repartition(col("query_id"))
-        .dropDuplicates("query_id", "cand") // identical dists either way
-      val ranked = pool
-        .join(sel.withColumnRenamed("id", "cand"), Seq("cand"), "left_semi")
-        .groupBy("query_id")
-        .agg(VectorFunctions.topKByDistance(col("dist"), col("cand"), k).as("nn"))
-        .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
-        .select(col("query_id"), col("nn.id").as("neighbor_id"),
-          (col("pos") + 1).cast("int").as("rank"))
-        .orderBy("query_id", "rank")
-        .localCheckpoint(true)
-      pools.foreach(_.unpersist())
-      ranked
+      sessionBeam(spark, dir, k, metric, tRounds, (tBeam * widen).toInt, Some(allow))
+        .select("query_id", "neighbor_id", "rank")
     }
+  }
+
+  /** One collect of a selector's ids, and the filtered policy read off
+    * them: starved (f ≤ kr, [[Pq.selectorStarved]]'s decision) and the
+    * size estimate ([[Pq.estimatedSelectorSize]]'s sample and floor).
+    * The engine's branch, its allow-set and the oracle generator's
+    * branch all come from this one pass; a session selector is bounded
+    * by the session corpus.
+    */
+  private[graft] final case class SelectorPass(ids: Array[Long], starved: Boolean, fEst: Long)
+
+  private[graft] def selectorPass(sel: DataFrame, kr: Long): SelectorPass = {
+    val rows = sel.select(col("id").cast("bigint")).collect()
+    val ids = rows.filterNot(_.isNullAt(0)).map(_.getLong(0))
+    SelectorPass(ids, rows.length <= kr,
+      Pq.estimatedSize(ids.count(Pq.inSelectorSample).toLong, kr))
   }
 
   /** Driver query: `graph_topk_filtered` — the A4 label predicate
@@ -1154,11 +1073,10 @@ object GraphIndex {
   private def filteredOracleSql(spark: SparkSession, dir: String, k: Int,
                                 sel: DataFrame,
                                 pred: String => String): String = {
-    val kr = Pq.filteredExactMax(k, 4)
+    val pass = selectorPass(sel, Pq.filteredExactMax(k, 4))
     lazy val n = Tables.embeddingsCount(spark, dir)
-    lazy val fEst = Pq.estimatedSelectorSize(sel, kr)
-    lazy val widen = (n + fEst - 1) / fEst
-    if (Pq.selectorStarved(sel, kr))
+    lazy val widen = (n + pass.fEst - 1) / pass.fEst
+    if (pass.starved)
       s"""SELECT query_id, neighbor_id,
          |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS INTEGER) AS rank
          |FROM (
@@ -1171,7 +1089,7 @@ object GraphIndex {
     else if (widen > MaxBeamWiden) {
       val (_, cents) = Ivf.indexFor(spark, dir, DefaultMetric)
       val npEff = Pq.widenedNprobe(
-        math.max(1, Ivf.defaultK(n) / 4), n, fEst, cents.length)
+        math.max(1, Ivf.defaultK(n) / 4), n, pass.fEst, cents.length)
       Pq.resBatchOracleSqlImpl(spark, dir, k, npOverride = Some(npEff),
         candJoin = s"\n  JOIN embeddings fe ON fe.vec_id = a.vec_id AND ${pred("fe")}",
         metric = DefaultMetric, refine = 4)
@@ -1408,18 +1326,19 @@ object GraphIndex {
     * and the repair-link delete re-caps at R). Rows: (degree,
     * n_nodes), exact integers, one per occupied degree level — the
     * same histogram shape as E43/E54's dashboards, so it composes
-    * with them on the operator's index-health page. Cost: the memoized
-    * descent graph + two map-side-combined aggregates over the O(N·k)
-    * skinny edge list; nothing corpus-sized moves.
+    * with them on the operator's index-health page. Cost: none past
+    * the session graph — a member's degree is its CSR row length there
+    * (assemble symmetrises and drops self-edges; the refined graph has
+    * none), so the histogram runs no job.
     */
   def graphStats(spark: SparkSession, dir: String, k: Int = 5,
                  metric: Int = DefaultMetric): DataFrame = {
-    symmetrizedGraph(spark, dir, k, metric)
-      .groupBy(col("src"))
-      .agg(count(lit(1)).as("degree"))
-      .groupBy(col("degree"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("degree")
+    import spark.implicits._
+    val b = sessionGraph(spark, dir, k, metric).bucket
+    (0 until b.size).map(m => b.adjStart(m + 1) - b.adjStart(m)).filter(_ > 0)
+      .groupBy(identity).toSeq.sortBy(_._1)
+      .map { case (d, ms) => (d.toLong, ms.size.toLong) }
+      .toDF("degree", "n_nodes")
   }
 
   /** graph_stats oracle: the refined-builder replay (descent CTEs +
@@ -1580,7 +1499,8 @@ object GraphIndex {
         val recapped = edges.join(touched, Seq("src"), "left_semi")
           .union(reverse)
           // shared exchange: hash by src serves both the dedup and the
-          // R-cap aggregate (the beamRounds round-16 shape)
+          // R-cap aggregate (the session beam loop's round-16 shape,
+          // in git history at commit 5b35fe6)
           .repartition(col("src"))
           .dropDuplicates("src", "dst")
           .groupBy("src")
@@ -1701,7 +1621,8 @@ object GraphIndex {
         .join(del, col("dst") === col("del_id"), "left_anti")
       val repaired = keptOfTouched.union(repairs)
         // shared exchange: hash by src serves both the dedup and the
-        // R-cap aggregate (the beamRounds round-16 shape)
+        // R-cap aggregate (the session beam loop's round-16 shape,
+        // in git history at commit 5b35fe6)
         .repartition(col("src"))
         .dropDuplicates("src", "dst")
         .groupBy("src")

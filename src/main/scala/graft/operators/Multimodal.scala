@@ -31,13 +31,23 @@ object Multimodal {
 
   // ---- little-endian byte plumbing (Column-level, codegen'd) ----
 
-  /** Low byte `i` of an int column as 2 hex chars. */
-  private def hexByte(c: Column, i: Int): Column =
-    lpad(hex(shiftright(c.cast("int"), 8 * i).bitwiseAND(0xFF)), 2, "0")
+  /** Int column → n-byte (n ≤ 4) little-endian binary: the low n
+    * bytes swapped arithmetically into one long, whose big-endian hex
+    * (zero-padded to n bytes) is the little-endian encoding. One
+    * hex/unhex per field keeps the header expression small enough for
+    * whole-stage codegen.
+    */
+  private def le(c: Column, nBytes: Int): Column = {
+    require(nBytes >= 1 && nBytes <= 4, s"an int has 4 bytes, not $nBytes")
+    val v = c.cast("int").cast("long")
+    val swapped = (0 until nBytes)
+      .map(i => shiftleft(shiftright(v, 8 * i).bitwiseAND(0xFF), 8 * (nBytes - 1 - i)))
+      .reduce(_ + _)
+    unhex(lpad(hex(swapped), 2 * nBytes, "0"))
+  }
 
-  /** Int column → n-byte little-endian binary. */
-  private def le(c: Column, nBytes: Int): Column =
-    unhex(concat((0 until nBytes).map(i => hexByte(c, i)): _*))
+  /** n zero bytes. */
+  private def zeros(nBytes: Int): Column = lit(new Array[Byte](nBytes))
 
   /** Parse an n-byte little-endian field at 1-based `offset`. */
   private def leParse(payload: Column, offset: Int, nBytes: Int): Column =
@@ -70,7 +80,7 @@ object Multimodal {
     // (40) + width + height + planes/bpp; pixel "data" = document bytes
     val bmp = concat(ascii4("BM"), le(bodyLen + 54, 4), le(lit(0), 4),
       le(lit(54), 4), le(lit(40), 4), le(width, 4), le(height, 4),
-      le(lit(1), 2), le(lit(24), 2), le(lit(0), 24), col("body"))
+      le(lit(1), 2), le(lit(24), 2), zeros(24), col("body"))
     // canonical 44-byte PCM WAVE header
     val byteRate = sampleRate * nChannels * 2
     val wav = concat(ascii4("RIFF"), le(bodyLen + 36, 4), ascii4("WAVE"),
@@ -80,10 +90,12 @@ object Multimodal {
     // compact custom video container: magic + width + frame count
     val gvid = concat(ascii4("GV01"), le(vWidth, 4), le(nFrames, 4), col("body"))
 
+    // generated (a one-element explode), so a filter on a parsed field
+    // cannot inline this whole expression into each payload reference
     d.select(col("doc_id"), (col("doc_id") % 3).cast("int").as("media_kind"),
-      when(col("doc_id") % 3 === 0, bmp)
+      explode(array(when(col("doc_id") % 3 === 0, bmp)
         .when(col("doc_id") % 3 === 1, wav)
-        .otherwise(gvid).as("payload"))
+        .otherwise(gvid))).as("payload"))
   }
 
   // ---- the E11 driver query: parse the containers back ----

@@ -708,7 +708,7 @@ object Pq {
     * rows, so the policy branch never pays a full selector scan —
     * min(f, kr+1) ≤ kr ⟺ f ≤ kr, the decision is exact.
     */
-  private[operators] def selectorStarved(sel: DataFrame, kr: Long): Boolean =
+  private[graft] def selectorStarved(sel: DataFrame, kr: Long): Boolean =
     sel.limit(kr.toInt + 1).count() <= kr
 
   /** Selector-size ESTIMATE for the probe-widening ratio: a
@@ -727,11 +727,21 @@ object Pq {
     * catalog statistics skips even the sample by sizing its own
     * selector.
     */
-  private[operators] def estimatedSelectorSize(sel: DataFrame, kr: Long): Long =
-    math.max(kr + 1,
-      SelectorSampleStride.toLong *
-        sel.filter(pmod(pmod(pmod(col("id"), lit(1L << 31)) * lit(48271L),
-          lit((1L << 31) - 1)), lit(SelectorSampleStride)) === 0).count())
+  private[graft] def estimatedSelectorSize(sel: DataFrame, kr: Long): Long =
+    estimatedSize(
+      sel.filter(pmod(pmod(pmod(col("id"), lit(1L << 31)) * lit(48271L),
+        lit((1L << 31) - 1)), lit(SelectorSampleStride)) === 0).count(), kr)
+
+  /** [[estimatedSelectorSize]] from the count of sampled ids. */
+  private[operators] def estimatedSize(sampled: Long, kr: Long): Long =
+    math.max(kr + 1, SelectorSampleStride.toLong * sampled)
+
+  /** Whether one id is in [[estimatedSelectorSize]]'s sample: the same
+    * MINSTD step, on the driver.
+    */
+  private[graft] def inSelectorSample(id: Long): Boolean =
+    Math.floorMod(Math.floorMod(Math.floorMod(id, 1L << 31) * 48271L, (1L << 31) - 1),
+      SelectorSampleStride.toLong) == 0
 
   /** Filtered IVF-PQ top-k over the in-session residual layout:
     * `selector` is the allowed-id frame (one `id` column — the

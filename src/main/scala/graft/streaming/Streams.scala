@@ -681,7 +681,7 @@ object Streams {
     */
   def streamQualityFilter(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark)
-    val schema = ss.read.parquet(s"$dir/documents.parq*").schema
+    val schema = Tables.documents(ss, dir).schema
     val incoming = Sources
       .streamDir(ss, s"$dir/documents.parq*", schema,
         options = Map("basePath" -> dir))
@@ -830,7 +830,7 @@ object Streams {
       .write.mode("overwrite").parquet(s"$store/bands/seed")
     docs.filter(lit(false)).select(col("doc_id"), col("source"))
       .write.mode("overwrite").parquet(s"$out/seed")
-    val schema = ss.read.parquet(s"$dir/documents.parq*").schema
+    val schema = docs.schema
     val incoming = Sources
       .streamDir(ss, s"$dir/documents.parq*", schema,
         options = Map("basePath" -> dir))
@@ -975,7 +975,7 @@ object Streams {
           lit(0L).as("pass_lang"), lit(0L).as("pass_qual"),
           lit(0L).as("pass_exact"))
         .write.mode("overwrite").parquet(s"$out/seed")
-      val schema = ss.read.parquet(s"$dir/documents.parq*").schema
+      val schema = docs.schema
       val incoming = Sources
         .streamDir(ss, s"$dir/documents.parq*", schema,
           options = Map("basePath" -> dir))
@@ -1403,9 +1403,9 @@ object Streams {
       docs.filter(lit(false))
         .select(col("doc_id"), col("source"), md5(col("text")).as("text_hash"))
         .write.mode("overwrite").parquet(s"$out/seed")
-      // the landing zone is the documents parquet itself (footer-probed
-      // schema, same contract as the events stream)
-      val schema = ss.read.parquet(s"$dir/documents.parq*").schema
+      // the landing zone is the documents parquet itself, streamed
+      // under the schema Tables memoises for it
+      val schema = docs.schema
       val incoming = Sources
         .streamDir(ss, s"$dir/documents.parq*", schema,
           options = Map("basePath" -> dir))

@@ -78,6 +78,18 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the stream's micro-batch jobs carry the drain phase")
   }
 
+  test("no schema inference of a corpus table in Streams: its streams take the schema Tables memoises") {
+    val f = new java.io.File("src/main/scala/graft/streaming/Streams.scala")
+    assert(f.isFile, s"run from the repository root (no ${f.getAbsolutePath})")
+    // a read of a table under the corpus dir whose builder chain names
+    // no .schema(…) before the format: one inference job per call
+    val bare = "\\.read((?!\\.schema\\()[^\\n;])*\\.(parquet|load|format)\\(s\"\\$dir/".r
+    val offenders = java.nio.file.Files.readString(f.toPath).linesIterator
+      .filter(l => bare.findFirstIn(l).isDefined).toSeq
+    assert(offenders.isEmpty,
+      s"Streams reads a corpus table without a declared schema (one inference job per call): $offenders")
+  }
+
   test("no listener outside graft.Metrics: no other main or test source names Spark's listener type") {
     val needle = "Spark" + "Listener" // split so this file does not match itself
     def files(f: java.io.File): Seq[java.io.File] =

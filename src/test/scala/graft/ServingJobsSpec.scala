@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * once a tree is open, a call runs one job per data pass — IVF and
   * IVF-PQ one over the probed lists, IVF-PQ with exact refine one more
   * over the refine source (whose schema is memoised too), the graph one
-  * over its buckets, merged on the driver — and no schema inference,
+  * over its buckets, merged on the driver, the session graph keys one
+  * over the broadcast session graph — and no schema inference,
   * sidecar reload, listing of every list or re-symmetrised adjacency.
   * A change that brings back a per-call metadata job or an extra merge
   * stage fails here.
@@ -116,6 +117,22 @@ class ServingJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       GraphIndex.queryGraphBatch(spark, p, graphQuery, 10).collect().toSeq)
     // the bucket tasks; their answers merge on the driver
     assert(warm <= 1, s"warm queryGraphBatch ran $warm jobs")
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  test("GraphIndex.graphTopk over sf0.001: a warm call runs at most 1 job") {
+    val (_, warm) = coldWarm(() => GraphIndex.graphTopk(spark, sf).collect().toSeq)
+    // the kernel tasks over the broadcast session graph
+    assert(warm <= 1, s"warm graphTopk ran $warm jobs")
+  }
+
+  test("GraphIndex.graphTopkFiltered (label selector) over sf0.001: a warm call runs at most 2 jobs") {
+    val sel = Tables.embeddings(spark, sf).filter(col("label").isin(2, 5, 7))
+      .select(col("vec_id").as("id"))
+    val (_, warm) = coldWarm(() => GraphIndex.graphTopkFiltered(spark, sf, 5, sel).collect().toSeq)
+    // the selector pass, then the kernel tasks
+    assert(warm <= 2, s"warm graphTopkFiltered ran $warm jobs")
   }
 
   test("GraphIndex.queryGraphBatchFiltered: a warm call runs at most 10 jobs") {
