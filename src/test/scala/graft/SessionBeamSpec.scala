@@ -250,8 +250,10 @@ object SessionBeamSpec {
     * served them: DataFrame rounds of join → dedup exchange → exact
     * re-score → top-B aggregate over the symmetrised refined graph,
     * seeded by the nprobe = 1 IVF entry ∪ each query's own adjacency,
-    * and the filtered key's pooled copy of it. Only the eager
-    * per-round checkpoints are left out; they never changed a row.
+    * and the filtered key's pooled copy of it. The entry and the
+    * loop's eager per-round checkpoints become [[reroot]]: the same
+    * lineage cut (each round's plan stays one round deep, so no task
+    * binary grows with the rounds) without pinning an RDD.
     */
   object Reference {
 
@@ -260,6 +262,10 @@ object SessionBeamSpec {
       case VectorMetric.Cosine => VectorFunctions.cosineDistance(a, b)
       case VectorMetric.Dot    => -VectorFunctions.dotProduct(a, b)
     }
+
+    /** `df` re-rooted on its collected rows. */
+    private def reroot(df: DataFrame): DataFrame =
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
     /** (src, dst) → the symmetrized (undirected) expansion table. */
     private def symmetrize(edges: DataFrame): DataFrame =
@@ -309,6 +315,7 @@ object SessionBeamSpec {
       Ivf.annBatch(spark, dir, b, metric, nprobeOpt = Some(GraphIndex.EntryNprobe))
         .select(col("query_id"), col("neighbor_id").as("cand"))
         .union(sym.select(col("src").as("query_id"), col("dst").as("cand")))
+        .transform(reroot)
 
     /** `beamTopk` → `beamRounds`: `rounds` rounds at width `b`, the
       * final top-k ranked.
@@ -319,7 +326,7 @@ object SessionBeamSpec {
       var beam = entry(spark, dir, b, metric, sym)
       val scored = (1 to rounds).map { r =>
         val s = scoredRound(beam, e, qvecs, vecs, metric)
-        if (r < rounds) beam = topB(s, b).select("query_id", "cand")
+        if (r < rounds) beam = reroot(topB(s, b).select("query_id", "cand"))
         s
       }
       val ranked = topB(scored.last, b).groupBy("query_id")
@@ -339,7 +346,7 @@ object SessionBeamSpec {
       val (sym, vecs, qvecs, e) = substrate(spark, dir, k, metric)
       var beam = entry(spark, dir, bEff, metric, sym).dropDuplicates("query_id", "cand")
       val pools = (1 to rounds).map { _ =>
-        val s = scoredRound(beam, e, qvecs, vecs, metric)
+        val s = reroot(scoredRound(beam, e, qvecs, vecs, metric))
         beam = topB(s, bEff).select("query_id", "cand")
         s
       }
